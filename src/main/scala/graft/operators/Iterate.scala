@@ -228,6 +228,7 @@ object Iterate {
       if (i == 0) e.unpersist()
       freeFrame(prev) // superseded frame: the new ranks are materialized
     }
+    if (iters == 0) e.unpersist() // no superstep ran to release it
     ew.unpersist(); verts.unpersist()
     ranks
   }
@@ -1192,7 +1193,10 @@ object Iterate {
       max(col("deg") * (col("deg") - 1) / 2).as("max_triplets"))
     vm.select(
       col("n_vertices"),
-      col("n_edges"),
+      // an empty or self-loop-only graph has no degree rows, so Σdeg is
+      // NULL; Gelly reports 0 edges. The ratios below read the raw NULL and
+      // stay NULL there rather than dividing 0 by 0 vertices.
+      coalesce(col("n_edges"), lit(0L)).as("n_edges"),
       (col("n_edges").cast("double") * 2.0 / col("n_vertices").cast("double"))
         .as("avg_degree"),
       (col("n_edges").cast("double") /

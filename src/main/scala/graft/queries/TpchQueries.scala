@@ -36,9 +36,15 @@ object TpchQueries {
   private val BaseTables =
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
-  private def runSql(text: String): Q = (s, dir) => {
-    BaseTables.foreach(t => Tables.load(s, dir, t).createOrReplaceTempView(t))
-    s.sql(text)
+  /** Registers only the base tables the text names as a whole word: a
+    * false match merely registers an extra view, and a miss fails loudly at
+    * analysis. */
+  private def runSql(text: String): Q = {
+    val named = BaseTables.filter(t => s"(?i)\\b$t\\b".r.findFirstIn(text).isDefined)
+    (s, dir) => {
+      named.foreach(t => Tables.load(s, dir, t).createOrReplaceTempView(t))
+      s.sql(text)
+    }
   }
 
   /** Exact money sum: Σ round(expr·10^dp) in BIGINT, divided back once —

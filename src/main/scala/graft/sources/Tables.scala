@@ -1,8 +1,11 @@
 package graft.sources
 
+import scala.collection.concurrent.TrieMap
+import scala.util.Try
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Star-schema loaders.
   *
@@ -11,6 +14,18 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * registration + `flink-formats/flink-parquet` input format), re-expressed
   * as Spark DataSource V2 parquet reads so Catalyst gets predicate pushdown
   * and column pruning for free.
+  *
+  * Each session infers a table's parquet schema once. Inference is a Spark
+  * job per `spark.read.parquet`, and a file's schema cannot change while its
+  * files do not, so [[load]] memoises the inferred `StructType` per session
+  * (held weakly: a new session pays the cold load again). The key is the
+  * path, the name, length and modification time of every file under it
+  * (Hadoop `FileSystem` status), and the session confs that change what
+  * inference returns (`InferenceConfs`); a path keeps only its latest
+  * entry. A hit reads with the memoised schema, which launches no job; a
+  * path whose status cannot be read is inferred every time. Only the schema is kept, never a DataFrame: every
+  * load is a fresh relation with fresh attribute IDs, so self-joins of one
+  * table stay correct, and the normalisation below runs on every load.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -28,8 +43,47 @@ object Tables {
     * is skipped (guard below). */
   private val computeHeavy = Set("documents", "embeddings")
 
+  /** Session confs that change the schema parquet inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  /** (files under a path, `InferenceConfs` values) */
+  private type FileIdentity = (Seq[(String, Long, Long)], Seq[Option[String]])
+
+  /** session -> path -> the identity the schema was inferred at, and the
+    * schema; a rewrite replaces the path's entry */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, (FileIdentity, StructType)]]()
+
+  /** (name, length, modification time) of every file under `path`, or None
+    * when the file system cannot say. */
+  private def fileStatus(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+    Try {
+      val p = new Path(path)
+      val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (files.hasNext) {
+        val f = files.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      out.result().sorted
+    }.toOption
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val identity = fileStatus(spark, path).map(files =>
+      (files, InferenceConfs.map(spark.conf.getOption)))
+    val memo = schemas.synchronized(schemas.computeIfAbsent(spark, _ => TrieMap.empty))
+    val raw = memo.get(path).collect { case (id, schema) if identity.contains(id) => schema } match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        identity.foreach(id => memo.put(path, (id, df.schema)))
+        df
+    }
     // Spark 4 cannot read parquet TIMESTAMP(NANOS) natively; sessions set
     // spark.sql.legacy.parquet.nanosAsLong=true, which surfaces `ts` as long
     // nanos. Convert back to a microsecond timestamp (`div` keeps 64-bit
@@ -57,7 +111,7 @@ object Tables {
       acc.withColumn(f.name, col(f.name).cast(TimestampType))
     }
     val p = spark.sparkContext.defaultParallelism
-    if (computeHeavy(name) && new java.io.File(s"$dir/$name.parquet").isFile)
+    if (computeHeavy(name) && new java.io.File(path).isFile)
       df.repartition(p) // single-file scan: spread expression work
     else df
   }

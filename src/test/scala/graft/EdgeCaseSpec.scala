@@ -96,6 +96,27 @@ class EdgeCaseSpec extends AnyFunSuite with SparkTest {
     assert(r == Map(1L -> 0.5, 2L -> 0.5), s"symmetric 2-cycle must stay uniform: $r")
   }
 
+  test("pageRank with iters = 0 releases every frame it persisted") {
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val r = Iterate.pageRank(edges, "src", "dst", iters = 0)
+    assert(r.collect().map(_.getDouble(1)).toSet == Set(0.333333333))
+    // the result itself is a local checkpoint: release it like the caller would
+    r.queryExecution.logical.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    }
+    val left = spark.sparkContext.getPersistentRDDs.filter(kv => !before(kv._1))
+    assert(left.isEmpty, left.values.map(_.toDebugString).mkString("\n"))
+  }
+
+  test("vertexMetrics on an empty or self-loop-only graph reports 0 edges") {
+    Seq(Seq.empty[(Long, Long)], Seq((1L, 1L), (2L, 2L))).foreach { es =>
+      val m = Iterate.vertexMetrics(es.toDF("src", "dst"), "src", "dst").head()
+      assert(m.get(m.fieldIndex("n_edges")) == 0L, s"$es: $m") // NULL fails
+    }
+  }
+
   test("ssspWorkset == sssp round-for-round, with early exit on an empty frontier") {
     val edges = Seq((1L, 2L, 1.0), (2L, 3L, 0.5), (3L, 2L, 0.25), (4L, 5L, 2.0))
       .toDF("src", "dst", "w")

@@ -395,6 +395,12 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTest {
       assert(new java.io.File(dir).listFiles != null &&
         new java.io.File(dir).listFiles.nonEmpty,
         "no checkpoint files written — reliable path did not engage")
-    } finally spark.conf.set("graft.iterate.reliableCheckpoint", "false")
+    } finally {
+      spark.conf.set("graft.iterate.reliableCheckpoint", "false")
+      // SparkContext has no way to unset the checkpoint dir, so the shared
+      // session keeps pointing here; the flag above keeps later suites off
+      // the reliable path, and the files themselves go now.
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 }

@@ -35,6 +35,33 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("a warm Tables.load infers no schema: it launches no Spark job") {
+    val sc = spark.sparkContext
+    Tables.load(spark, sfDir, "orders") // cold, unless an earlier test warmed it
+    sc.setJobGroup("graft-warm-load", "second load of one table")
+    try Tables.load(spark, sfDir, "orders") finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("graft-warm-load").isEmpty)
+  }
+
+  test("Tables.load re-infers a table whose files were rewritten") {
+    val d = tmp()
+    val region = Tables.load(spark, sfDir, "region")
+    region.write.parquet(s"$d/region.parquet")
+    assert(!Tables.load(spark, d, "region").columns.contains("extra"))
+    region.withColumn("extra", org.apache.spark.sql.functions.lit(1))
+      .write.mode("overwrite").parquet(s"$d/region.parquet")
+    val back = Tables.load(spark, d, "region")
+    assert(back.columns.contains("extra"))
+    assert(back.count() == region.count())
+  }
+
+  test("two loads of one table are distinct relations with fresh attribute IDs") {
+    def ids() = Tables.load(spark, sfDir, "nation").queryExecution.analyzed.output
+      .map(_.exprId).toSet
+    val (a, b) = (ids(), ids())
+    assert(a.nonEmpty && (a intersect b).isEmpty, s"shared exprIds: ${a intersect b}")
+  }
+
   test("csv/json/text round-trip") {
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     val d = tmp()
