@@ -1,7 +1,7 @@
 #!/bin/bash
 # Local loop: run Verify at sf0.01 then the DuckDB compare (mirrors driver).
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/graft_verify}
 rm -rf "$OUT"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Optimization-round tooling: run one declared query (warm rep + timed rep)
@@ -11,12 +10,7 @@ object Profile {
     val only = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val b0 = SparkEntry.localSession(cpus)
     // ad-hoc A/B confs: SPARK_GRAFT_EXTRA_CONF="k=v,k=v"
     val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(_.split(","))
       .getOrElse(Array.empty).filter(_.contains("="))

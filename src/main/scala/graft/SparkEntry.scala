@@ -5,6 +5,19 @@ import graft.queries.{AnalyticsQueries, FunctionQueries, LlmQueries, LlmQueries2
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
+  /** The local session builder shared by every entry point (Bench, Verify,
+    * Profile, PlanDump and the test suites): `local[cpus]` with one shuffle
+    * partition per core, UTC session time, TIMESTAMP(NANOS) parquet read as
+    * longs (see `sources.Tables.load`) and the UI off. Callers add their
+    * own confs and call `getOrCreate()`. */
+  def localSession(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.queries("q05_multi_join")(spark, "/root/testdata/sf0.001")

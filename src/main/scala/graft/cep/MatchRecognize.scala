@@ -102,14 +102,14 @@ object MatchRecognize {
   private val UnitMs = Map("SECOND" -> 1000L, "MINUTE" -> 60000L,
     "HOUR" -> 3600000L, "DAY" -> 86400000L)
 
-  /** One parsed PATTERN element. Nested groups carry their intermediate
-    * closing levels as `midSeqs` — innermost level first, ANY depth (r20,
+  /** One parsed PATTERN element. A nested group at ANY depth carries its
+    * innermost sub-sequence as `inner2Seq`, its intermediate closing levels
+    * as `midSeqs` — innermost level first, empty at depth 1 (r20,
     * replacing the fixed midSeq/mid2Seq/mid3Seq trio: the walk has been
-    * depth-parametric since r18, only the parse representation capped at
-    * four) — with the outer tail steps in `seq`. */
+    * depth-parametric since r18) — and its outer tail steps in `seq`. A
+    * plain sequence group has `seq` only. */
   private case class PatternVar(name: String, quant: Option[String],
                                 alts: Seq[String] = Nil, seq: Seq[String] = Nil,
-                                innerSeq: Seq[String] = Nil,
                                 innerStar: Boolean = false,
                                 inner2Seq: Seq[String] = Nil,
                                 midSeqs: Seq[Seq[String]] = Nil,
@@ -130,9 +130,9 @@ object MatchRecognize {
     * expansion (which indexes the per-row vsum/vcnt snapshots): a
     * divergence between the two would silently read another column's
     * running values. */
-  private def nestedKeepOrder(innerSeq: Seq[String], seq: Seq[String],
+  private def nestedKeepOrder(g: PatternVar,
       bindByVar: Map[String, Seq[String]]): Seq[(String, String)] =
-    (innerSeq ++ seq).filter(bindByVar.contains)
+    (g.inner2Seq ++ g.midSeqs.flatten ++ g.seq).filter(bindByVar.contains)
       .flatMap(sv => bindByVar(sv).map(sv -> _))
 
   /** Member VALUE measure → the bindGroup running-aggregate column
@@ -302,13 +302,8 @@ object MatchRecognize {
           s"nested group requires the outer '+' or '*' quantifier " +
             s"(got '$q' in PATTERN ($s))")
         val name = (inner ++ levels.flatten).mkString("_")
-        out += (if (levels.size == 1)
-          // depth 1 ((I...)+ T...)+ keeps the historical innerSeq slot
-          PatternVar(name, Some(q.toString), Nil, levels.head, inner,
-            innerStar = istar)
-        else
-          PatternVar(name, Some(q.toString), Nil, levels.last, Nil,
-            innerStar = istar, inner2Seq = inner, midSeqs = levels.init))
+        out += PatternVar(name, Some(q.toString), Nil, levels.last,
+          innerStar = istar, inner2Seq = inner, midSeqs = levels.init)
         p = ws(p1)
       } else simpleRx.findPrefixMatchOf(s.subSequence(p, s.length)) match {
         case Some(g) =>
@@ -465,7 +460,7 @@ object MatchRecognize {
     // bound C) — reject by name across every bindable identifier
     locally {
       val allNames = vars.flatMap(v => v.name +: (v.alts ++ v.seq ++
-        v.innerSeq ++ v.inner2Seq ++ v.midSeqs.flatten))
+        v.inner2Seq ++ v.midSeqs.flatten))
       val dups = allNames.groupBy(identity).collect {
         case (n, occ) if occ.size > 1 => n }
       require(dups.isEmpty,
@@ -748,10 +743,10 @@ object MatchRecognize {
       require(pos(a) < groupPos,
         s"DEFINE $v references $a, which is not bound earlier in the PATTERN")
       val pv = spec.vars(pos(a))
-      // seq/innerSeq excluded explicitly: a BARE group (quant None since
-      // r15) would otherwise pass and die later as an unresolved column
+      // groups excluded explicitly: a BARE group (quant None since r15)
+      // would otherwise pass and die later as an unresolved column
       require(pv.alts.isEmpty && pv.quant.isEmpty && pv.seq.isEmpty &&
-          pv.innerSeq.isEmpty && pv.inner2Seq.isEmpty && pv.midSeqs.isEmpty,
+          pv.inner2Seq.isEmpty,
         s"DEFINE $v references $a: relative references need a plain, unquantified variable")
     }
     def rewritePlain(s: String): String = RefRx.replaceAllIn(s, m =>
@@ -851,14 +846,12 @@ object MatchRecognize {
             s"alternation branch $b cannot use relative references")
           b -> c
         }
-        val seqSubs = (v.inner2Seq ++ v.midSeqs.flatten ++
-            v.innerSeq ++ v.seq).map { sv =>
+        val seqSubs = (v.inner2Seq ++ v.midSeqs.flatten ++ v.seq).map { sv =>
           val c = compiledPred(spec, sv, i)
-          // ONE-LEVEL nested group members pass through: tail members
-          // lower onto bindTailResidual (r16), inner members get the
-          // specific per-anchor-table rejection in the lowering walk
-          require(c._2.isEmpty || v.innerSeq.nonEmpty ||
-              v.inner2Seq.nonEmpty,
+          // nested group members pass through: closing-level members
+          // lower onto bindTailResidual (r16), inner members onto
+          // bindInnerResidual (r17) in the lowering walk
+          require(c._2.isEmpty || v.inner2Seq.nonEmpty,
             s"group sub-variable $sv cannot use relative references")
           sv -> c
         }
@@ -941,7 +934,7 @@ object MatchRecognize {
     // variables and would be ambiguous)
     val groupOf: Map[String, PatternVar] = spec.vars.filter(_.seq.nonEmpty)
       .flatMap(g => (g.name +: (g.inner2Seq ++ g.midSeqs.flatten ++
-        g.innerSeq ++ g.seq)).map(_ -> g)).toMap
+        g.seq)).map(_ -> g)).toMap
     spec.measures.filter(m => groupOf.contains(m.varName)).foreach { m =>
       require(m.field == "ts" || m.varName != groupOf(m.varName).name,
         s"value measures over a sequence group must address a member " +
@@ -960,38 +953,33 @@ object MatchRecognize {
         val rd = selfRuns(v.name)
         pat = pat.followedByRun(v.name, rd.pre, rd.colName, rd.accept, rd.offset)
       } else if (v.inner2Seq.nonEmpty) {
-        // DEPTH-2 nested group (((I...)+ M...)+ T...)+ — two levels of
-        // flink-cep GroupPattern composition; the chain carries boundary
-        // timestamps, outer/mid/inner repetition counts and (r16 late
-        // adds) bindGroup running value aggregates + materialized ALL
-        // ROWS rows, both folded through the two pending levels.
-        // INNER members MAY be iterative too (r17, lifting the last
-        // residual rejection): the m49 per-distinct-threshold-tuple
-        // sub-match parametrization is depth-agnostic — the innermost
-        // compile is the same at every depth
+        // nested group at ANY depth — ((I...)+ T...)+, (((I...)+ M...)+
+        // T...)+, ... — flink-cep GroupPattern composed recursively; the
+        // chain carries boundary timestamps, per-level repetition counts,
+        // bindGroup running value aggregates and materialized ALL ROWS
+        // rows, folded through every pending level.
+        // INNER members MAY be iterative (r17): the m49
+        // per-distinct-threshold-tuple sub-match parametrization is
+        // depth-agnostic — the innermost compile is the same at every depth
         val innerResiduals2: Seq[(String, (String, String, String))] =
           v.inner2Seq.flatMap { sv =>
             if (compiled(sv)._2.isEmpty) None
             else Some(sv -> parseTailResidual(spec, sv))
           }
-        // OUTER TAIL members MAY be iterative (r16 — the m40 recipe at
-        // depth 2) and MID/MID2 members too (r17): the same single-
-        // relative-conjunct contract, lowered onto Pattern.bindTailResidual
-        // — the mid's satisfying scan is shared between its binding and
-        // the inner-chain punctuation, the tail convention one level down
+        // CLOSING-level members MAY be iterative (r16 — flink-cep
+        // IterativeCondition.java:65 inside a GroupPattern; mids r17): ONE
+        // relative conjunct of the shape `T.col <op> <arithmetic over
+        // earlier plain bindings>` lowers onto Pattern.bindTailResidual —
+        // a closer's satisfying scan is shared between its binding and the
+        // punctuation of the chain below it. Other shapes are named errors
         val tailResiduals2: Seq[(String, (String, String, String))] =
           (v.midSeqs.flatten ++ v.seq).flatMap { sv =>
             if (compiled(sv)._2.isEmpty) None
             else Some(sv -> parseTailResidual(spec, sv))
           }
-        // ALL ROWS composes with member VALUE measures (r18, lifting the
-        // r16 one-level-only mutual exclusion — per-row vsum/vcnt
-        // snapshots now fold through every pending level) and with
-        // DEPTH-3 groups (r18 — the row struct carries the level-2
-        // `mids2` running count)
-        // DEPTH 2/3/4 all lower onto the ONE depth-parametric walk (r18):
-        // the closing levels are the non-empty mid level lists, innermost
-        // first, with the outer tails last
+        // EVERY depth lowers onto the ONE depth-parametric walk: the
+        // closing levels are the mid level lists, innermost first, with
+        // the outer tails last
         val closingLevels =
           (v.midSeqs :+ v.seq)
             .map(_.map(sv => sv -> compiled(sv)._1))
@@ -1008,64 +996,15 @@ object MatchRecognize {
         // member VALUE measures (r16): the SHARED order derivation — the
         // engine's groupKeep sequence (members in declaration order, each
         // member's columns in bindByVar order)
-        nestedKeepOrder(v.inner2Seq ++ v.midSeqs.flatten,
-            v.seq, bindByVar)
+        nestedKeepOrder(v, bindByVar)
           .foreach { case (sv, c) => pat = pat.bindGroup(sv, c) }
-        // composite ORDER BY (r17, the former depth-2 named rejection):
+        // composite ORDER BY (r16/r17, the former named rejections):
         // equal-ts candidates' values argmin by (ties..., value) at every
         // nesting level — membership and succession stay time-level, the
         // one-level group convention
         if (spec.orderTies.nonEmpty) pat = pat.tieBreak(spec.orderTies: _*)
         // ALL ROWS (r16): the walk materializes every committed bound
         // event with running (reps, mids, subs) counts
-        if (spec.allRows) pat = pat.materializeNestedRows()
-        pat = if (v.quant.contains("*")) pat.zeroOrMore() else pat.oneOrMore()
-      } else if (v.innerSeq.nonEmpty) {
-        // NESTED group ((I...)+ T...)+ — one level of flink-cep
-        // GroupPattern-in-GroupPattern; the chain carries boundary
-        // timestamps, outer/inner repetition counts, and (r15) bindGroup
-        // running value aggregates over inner AND tail members
-        // INNER members MAY be iterative too (r17, lifting the named
-        // rejection): the same single-relative-conjunct contract lowers
-        // onto Pattern.bindInnerResidual — the sub-match compile is
-        // parametrized by the anchor frame's distinct threshold tuples
-        // and the walk selects each anchor's own sub array
-        val innerResiduals: Seq[(String, (String, String, String))] =
-          v.innerSeq.flatMap { sv =>
-            if (compiled(sv)._2.isEmpty) None
-            else Some(sv -> parseTailResidual(spec, sv))
-          }
-        // TAIL members MAY be iterative (r16 — flink-cep
-        // IterativeCondition.java:65 inside a GroupPattern): ONE relative
-        // conjunct of the shape `T.col <op> <arithmetic over earlier
-        // plain bindings>` lowers onto Pattern.bindTailResidual — the
-        // threshold evaluates per anchor, the walk scans each tail to
-        // its first satisfying candidate. Other shapes are named errors.
-        val tailResiduals: Seq[(String, (String, String, String))] =
-          v.seq.flatMap { sv =>
-            if (compiled(sv)._2.isEmpty) None
-            else Some(sv -> parseTailResidual(spec, sv))
-          }
-        pat = pat.followedByNestedGroup(v.name,
-          v.innerSeq.map(sv => sv -> compiled(sv)._1),
-          v.seq.map(sv => sv -> compiled(sv)._1),
-          innerOptional = v.innerStar)
-        tailResiduals.foreach { case (sv, (c, op, rhs)) =>
-          pat = pat.bindTailResidual(sv, c, op, expr(rhs))
-        }
-        innerResiduals.foreach { case (sv, (c, op, rhs)) =>
-          pat = pat.bindInnerResidual(sv, c, op, expr(rhs))
-        }
-        // SHARED order derivation (nestedKeepOrder) — the engine's
-        // groupKeep sequence must equal the ALL ROWS snapshot indexing
-        nestedKeepOrder(v.innerSeq, v.seq, bindByVar)
-          .foreach { case (sv, c) => pat = pat.bindGroup(sv, c) }
-        // composite ORDER BY (r16, the former named rejection — nested
-        // chains bind member values since r15): equal-ts candidates'
-        // values argmin by (ties..., value); membership and succession
-        // stay time-level, the one-level group convention
-        if (spec.orderTies.nonEmpty) pat = pat.tieBreak(spec.orderTies: _*)
-        // ALL ROWS needs each bound event + running counts on the match row
         if (spec.allRows) pat = pat.materializeNestedRows()
         pat = if (v.quant.contains("*")) pat.zeroOrMore() else pat.oneOrMore()
       } else if (v.seq.nonEmpty) {
@@ -1233,14 +1172,16 @@ object MatchRecognize {
         } else if (groupOf.contains(m.varName)) {
           val g = groupOf(m.varName)
           if (g.inner2Seq.nonEmpty) {
-            // DEPTH-2 nested group (((I...)+ M...)+ T...)+: the chain
-            // binds (first repetition's first inner binding, last
-            // repetition's final tail binding, outer / level-1 / inner
-            // repetition counts). Each outer repetition binds every
-            // OUTER tail exactly once (COUNT(T.ts) = outer count), each
-            // level-1 repetition every MID step once (COUNT(M.ts) =
-            // total level-1 count) and each inner sub-sequence every
-            // INNER member once (COUNT(I.ts) = total inner count).
+            // nested group at any depth: the chain binds (first
+            // repetition's first inner binding, last repetition's final
+            // tail binding, outer / per-level / inner repetition counts).
+            // Each outer repetition binds every OUTER tail exactly once
+            // (COUNT(T.ts) = outer count), each level-l repetition every
+            // level-l MID step once (COUNT(M.ts) = total level-l count)
+            // and each inner sub-sequence every INNER member once
+            // (COUNT(I.ts) = total inner count). Member VALUE measures
+            // are bindGroup's running aggregates, folded per COMPLETED
+            // repetition — the one-level group chain's column naming
             if (m.field != "ts") memberValueMeasure(g.name, m)
             else m.fn match {
               case Some("COUNT") if g.inner2Seq.contains(m.varName) =>
@@ -1255,58 +1196,17 @@ object MatchRecognize {
               case Some("COUNT") => col(s"${g.name}_n")
               case Some("FIRST") =>
                 require(m.varName == g.name || m.varName == g.inner2Seq.head,
-                  s"FIRST(${m.varName}.ts): the depth-2 chain materializes " +
-                    s"the first repetition's FIRST inner binding only " +
-                    s"(${g.inner2Seq.head})")
-                // inner '*': the first repetition may be MID-ONLY, so the
-                // boundary is not necessarily an inner binding
-                require(!g.innerStar || m.varName == g.name,
-                  s"FIRST(${m.varName}.ts): with an inner '*' the first " +
-                    "repetition may start at a mid step — use " +
-                    s"FIRST(${g.name}.ts) for the group boundary")
-                col(s"${g.name}_first_ts")
-              case Some("LAST") =>
-                require(m.varName == g.name || m.varName == g.seq.last,
-                  s"LAST(${m.varName}.ts): the depth-2 chain materializes " +
-                    s"the last repetition's FINAL outer-tail binding only " +
-                    s"(${g.seq.last})")
-                col(s"${g.name}_last_ts")
-              case other => sys.error(s"depth-2 nested group ${g.name}: " +
-                s"FIRST/LAST/COUNT only over timestamps (got " +
-                s"${other.getOrElse("a bare reference")})")
-            }
-          } else if (g.innerSeq.nonEmpty) {
-            // nested group ((I...)+ T...)+: the chain binds (first
-            // repetition's first inner binding, last repetition's final
-            // tail binding, outer repetition count, total inner
-            // sub-sequence count). Each outer repetition binds every tail
-            // member exactly once (COUNT(T.ts) = outer count) and each
-            // inner sub-sequence binds every inner member exactly once
-            // (COUNT(I.ts) = total inner count).
-            if (m.field != "ts") {
-              // member VALUE measures over the nested chain (r15, the
-              // former named rejection) — bindGroup's running aggregates,
-              // folded per COMPLETED repetition (inner members bind once
-              // per sub-sequence, tails once per repetition); the column
-              // naming is the one-level group chain's, so the lowering IS
-              // the shared helper
-              memberValueMeasure(g.name, m)
-            } else m.fn match {
-              case Some("COUNT") if g.innerSeq.contains(m.varName) =>
-                col(s"${g.name}_inner_n")
-              case Some("COUNT") => col(s"${g.name}_n")
-              case Some("FIRST") =>
-                require(m.varName == g.name || m.varName == g.innerSeq.head,
                   s"FIRST(${m.varName}.ts): the nested chain materializes " +
                     s"the first repetition's FIRST inner binding only " +
-                    s"(${g.innerSeq.head})")
-                // inner '*': the first repetition may be TAIL-ONLY, so the
-                // group boundary is not necessarily an inner binding —
-                // only the group-level spelling stays truthful
+                    s"(${g.inner2Seq.head})")
+                // inner '*': the first repetition may be closer-only, so
+                // the boundary is not necessarily an inner binding — only
+                // the group-level spelling stays truthful
                 require(!g.innerStar || m.varName == g.name,
                   s"FIRST(${m.varName}.ts): with an inner '*' the first " +
-                    "repetition may start at a tail — use " +
-                    s"FIRST(${g.name}.ts) for the group boundary")
+                    "repetition may start at " +
+                    (if (g.midSeqs.isEmpty) "a tail" else "a mid step") +
+                    s" — use FIRST(${g.name}.ts) for the group boundary")
                 col(s"${g.name}_first_ts")
               case Some("LAST") =>
                 require(m.varName == g.name || m.varName == g.seq.last,
@@ -1431,24 +1331,14 @@ object MatchRecognize {
                             compiled: Map[String, (Column, Option[Column], Seq[(String, String)])],
                             bindByVar: Map[String, Seq[String]]): DataFrame = {
     val runVs = spec.vars.filter(v => v.quant.exists(isRunQ))
-    val nested2Vs = spec.vars.filter(_.inner2Seq.nonEmpty)
-    if (nested2Vs.nonEmpty) {
-      require(nested2Vs.size == 1 && spec.vars.count(_.seq.nonEmpty) == 1,
-        "ALL ROWS PER MATCH supports one depth-2 nested group (no other " +
-          "groups)")
-      require(!runVs.exists(v => v.seq.isEmpty),
-        "ALL ROWS PER MATCH: a depth-2 nested group does not compose with " +
-          "plain '+'/'*' runs in the same pattern")
-      return allRowsNested2(spec, matches0, nested2Vs.head, bindByVar)
-    }
-    val nestedVs = spec.vars.filter(_.innerSeq.nonEmpty)
+    val nestedVs = spec.vars.filter(_.inner2Seq.nonEmpty)
     if (nestedVs.nonEmpty) {
       require(nestedVs.size == 1 && spec.vars.count(_.seq.nonEmpty) == 1,
         "ALL ROWS PER MATCH supports one nested group (no other groups)")
       require(!runVs.exists(v => v.seq.isEmpty),
         "ALL ROWS PER MATCH: a nested group does not compose with plain " +
           "'+'/'*' runs in the same pattern")
-      return allRowsNested(spec, matches0, bounds, nestedVs.head, bindByVar)
+      return allRowsNested2(spec, matches0, nestedVs.head, bindByVar)
     }
     val groupVs = spec.vars.filter(_.seq.nonEmpty)
     if (groupVs.nonEmpty) {
@@ -1547,150 +1437,14 @@ object MatchRecognize {
       .select(spec.partitionBy.map(col) ++ rowCols.map(n => col(s"__r.$n").as(n)): _*)
   }
 
-  /** [[allRowsOutput]]'s NESTED-GROUP expansion — ALL ROWS over
-    * `((B C)+ V)+` (reference StreamExecMatch emits member rows for ANY
-    * pattern shape): the chain walk already materialized every bound event
-    * with its classifier and running repetition counts
-    * (`Pattern.materializeNestedRows`, `<g>_rows` = (ts, cls, reps,
-    * subs)), so the expansion is one generator over the match row — no
-    * join, no window. Supported measures: plain unquantified PREFIX
-    * variables (running-null before their row), CLASSIFIER(),
-    * MATCH_NUMBER(), running COUNT over a tail member or the group (outer
-    * repetitions as of the row) and over the FINAL inner member (inner
-    * sub-sequences as of the row); everything else is a named error. The
-    * nested group must be the final pattern element. */
-  private def allRowsNested(spec: Spec, matches0: DataFrame,
-                            bounds: Map[String, (Int, Int)],
-                            g: PatternVar,
-                            bindByVar: Map[String, Seq[String]]): DataFrame = {
-    // groupKeep order — the lowering's bindGroup call order — indexes the
-    // per-row vsum/vcnt running-value snapshots (SHARED derivation)
-    val gkIdx: Map[(String, String), Int] =
-      nestedKeepOrder(g.innerSeq, g.seq, bindByVar).zipWithIndex.toMap
-    require(spec.vars.last.name == g.name,
-      "ALL ROWS over a nested group: the nested group must be the FINAL " +
-        "pattern element")
-    val pre = spec.vars.init
-    pre.foreach(v => require(v.quant.isEmpty && v.alts.isEmpty && v.seq.isEmpty,
-      "ALL ROWS over a nested group composes with plain unquantified " +
-        s"prefix variables only (got ${v.name})"))
-    val mnAliases = spec.measures.filter(_.fn.contains("MATCH_NUMBER")).map(_.alias)
-    val matches = if (mnAliases.isEmpty) matches0 else {
-      val mnWindow = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("key"))
-        .orderBy(matches0.columns.filter(_.endsWith("_ts")).map(col).toIndexedSeq: _*)
-      mnAliases.foldLeft(matches0)((df, a) =>
-        df.withColumn(s"__mn_$a", row_number().over(mnWindow).cast("long")))
-    }
-    val finalInner = g.innerSeq.last
-    val preIdx: Map[String, Int] = pre.map(_.name).zipWithIndex.toMap
-    def isMember(v: String): Boolean =
-      v == g.name || g.innerSeq.contains(v) || g.seq.contains(v)
-    // running count columns ride each materialized row; u = prefix row
-    // index (pre.size on member rows) gates prefix-variable visibility
-    def measureAt(m: Measure, u: Int, r: Option[Column]): Column =
-      if (m.fn.contains("MATCH_NUMBER")) col(s"__mn_${m.alias}")
-      else if (m.fn.contains("CLASSIFIER"))
-        r.map(_.getField("cls")).getOrElse(lit(pre(u).name))
-      else if (isMember(m.varName)) {
-        if (m.field != "ts") {
-          // running VALUE measures (r15; MIN/MAX r18; FIRST/LAST r19):
-          // each materialized row carries per-(member, col) running
-          // snapshots AS OF the row — SUM/COUNT/AVG via vsum/vcnt,
-          // extremes via vmin/vmax, positional FIRST/LAST via the
-          // (value, bound)-pair-resolved vfst/vlst
-          val gi = gkIdx.getOrElse((m.varName, m.field), sys.error(
-            s"ALL ROWS nested value measure ${m.varName}.${m.field}: no " +
-              "bound value column materialized for it"))
-          val sumAt = r.map(rr => element_at(rr.getField("vsum"), gi + 1))
-            .getOrElse(lit(null).cast("double"))
-          val cntAt = r.map(rr => element_at(rr.getField("vcnt"), gi + 1))
-            .getOrElse(lit(0L))
-          m.fn match {
-            case Some("SUM") => sumAt
-            case Some("COUNT") => cntAt
-            case Some("AVG") => sumAt / cntAt
-            // running MIN/MAX snapshots (r18, per-row value rejection
-            // lifted); running FIRST/LAST (r19, the LAST one lifted): the
-            // walk carries a (value, positional bind count) pair per
-            // member, so a null first binding freezes FIRST correctly —
-            // the former impossibility objection ("positional semantics
-            // include null bindings, which a nullable double cannot carry
-            // unambiguously") was answered by carrying nullability
-            // SEPARATELY in the walk state; the emitted column is the
-            // resolved value
-            case Some("MIN") =>
-              r.map(rr => element_at(rr.getField("vmin"), gi + 1))
-                .getOrElse(lit(null).cast("double"))
-            case Some("MAX") =>
-              r.map(rr => element_at(rr.getField("vmax"), gi + 1))
-                .getOrElse(lit(null).cast("double"))
-            case Some("FIRST") =>
-              r.map(rr => element_at(rr.getField("vfst"), gi + 1))
-                .getOrElse(lit(null).cast("double"))
-            case Some("LAST") =>
-              r.map(rr => element_at(rr.getField("vlst"), gi + 1))
-                .getOrElse(lit(null).cast("double"))
-            case other => sys.error(s"ALL ROWS over nested group " +
-              s"${g.name}: running SUM/COUNT/AVG/MIN/MAX/FIRST/LAST are " +
-              "the member VALUE measures — got " +
-              s"${other.getOrElse("a bare reference")}" +
-              s"(${m.varName}.${m.field})")
-          }
-        } else {
-        require(m.fn.contains("COUNT"),
-          s"ALL ROWS over nested group ${g.name}: running COUNT is the " +
-            s"only member TIMESTAMP measure (got " +
-            s"${m.fn.getOrElse("a bare reference")}(${m.varName}." +
-            s"${m.field}))")
-        if (m.varName != g.name && g.innerSeq.contains(m.varName)) {
-          require(m.varName == finalInner,
-            s"COUNT(${m.varName}.ts): running inner counts materialize " +
-              s"for the FINAL inner member only ($finalInner)")
-          r.map(_.getField("subs")).getOrElse(lit(0L))
-        } else {
-          // reps counts COMPLETED repetitions — only the FINAL tail's
-          // running count equals it on every row
-          require(m.varName == g.name || m.varName == g.seq.last,
-            s"COUNT(${m.varName}.ts): running tail counts materialize " +
-              s"for the FINAL tail member only (${g.seq.last})")
-          r.map(_.getField("reps")).getOrElse(lit(0L))
-        }
-        }
-      } else {
-        val i = preIdx.getOrElse(m.varName,
-          sys.error(s"unknown variable ${m.varName}"))
-        require(m.fn.isEmpty || m.fn.contains("FIRST") || m.fn.contains("LAST"),
-          s"prefix variable ${m.varName}: bare/FIRST/LAST only (got " +
-            s"${m.fn.get})")
-        // running semantics: a later prefix variable is null before its row
-        if (i <= u) col(s"${m.varName}_${m.field}")
-        else when(lit(false), col(s"${m.varName}_${m.field}"))
-      }
-    val prefixStructs = pre.zipWithIndex.map { case (v, u) =>
-      struct((lit(v.name).as("cls") +: col(s"${v.name}_ts").as("ts") +:
-        spec.measures.map(m => measureAt(m, u, None).as(m.alias))): _*)
-    }
-    val memberRows = transform(col(s"${g.name}_rows"), r =>
-      struct((r.getField("cls").as("cls") +: r.getField("ts").as("ts") +:
-        spec.measures.map(m => measureAt(m, pre.size, Some(r)).as(m.alias))): _*))
-    val rowCols = Seq("cls", "ts") ++ spec.measures.map(_.alias)
-    matches
-      .select(keyOut(spec) :+
-        explode(concat(array(prefixStructs: _*), memberRows)).as("__r"): _*)
-      .select(spec.partitionBy.map(col) ++
-        rowCols.map(n => col(s"__r.$n").as(n)): _*)
-  }
-
-  /** [[allRowsOutput]]'s DEPTH-2+ expansion — ALL ROWS over
-    * `(((B C)+ V)+ W)+` and deeper (r16; depth-3+ and member value
-    * snapshots r18; reference StreamExecMatch emits member rows for ANY
-    * pattern shape): the walk materialized every COMMITTED bound event
-    * with its classifier and running counts
-    * (`Pattern.materializeNestedRows`: `<g>_rows` = (ts, cls, reps,
-    * [mids3, mids2,] mids, subs[, vsum, vcnt]) — rows of rejected
-    * speculations at any level and uncommitted outer attempts were
-    * discarded in the walk), so the expansion is one generator over the
+  /** [[allRowsOutput]]'s NESTED-GROUP expansion at ANY depth — ALL ROWS
+    * over `((B C)+ V)+`, `(((B C)+ V)+ W)+` and deeper (reference
+    * StreamExecMatch emits member rows for ANY pattern shape): the walk
+    * materialized every COMMITTED bound event with its classifier and
+    * running counts (`Pattern.materializeNestedRows`: `<g>_rows` = (ts,
+    * cls, reps, [.., mids2, mids,] subs[, value snapshots]) — rows of
+    * rejected speculations at any level and uncommitted outer attempts
+    * were discarded in the walk), so the expansion is one generator over the
     * match row. Supported measures: plain unquantified PREFIX variables,
     * CLASSIFIER(), MATCH_NUMBER(), running COUNT over an outer-tail
     * member or the group (outer repetitions as of the row), over the
@@ -1698,25 +1452,23 @@ object MatchRecognize {
     * repetitions as of the row) and over the FINAL inner member (inner
     * sub-sequences as of the row), and — under bound member values —
     * running SUM/COUNT/AVG/MIN/MAX/FIRST/LAST member value measures via
-    * the per-row snapshots (the depth-1 recipe; FIRST/LAST r19 — the
-    * (value, bound)-pair resolution freezes a null first binding
-    * correctly). The group must be the final pattern element. */
+    * the per-row snapshots (FIRST/LAST r19 — the (value, bound)-pair
+    * resolution freezes a null first binding correctly). The group must
+    * be the final pattern element. */
   private def allRowsNested2(spec: Spec, matches0: DataFrame,
                              g: PatternVar,
                              bindByVar: Map[String, Seq[String]]): DataFrame = {
     // groupKeep order — the lowering's bindGroup call order — indexes the
     // per-row vsum/vcnt running-value snapshots (SHARED derivation)
     val gkIdx: Map[(String, String), Int] =
-      nestedKeepOrder(g.inner2Seq ++ g.midSeqs.flatten,
-          g.seq, bindByVar)
-        .zipWithIndex.toMap
+      nestedKeepOrder(g, bindByVar).zipWithIndex.toMap
     require(spec.vars.last.name == g.name,
-      "ALL ROWS over a depth-2 nested group: the group must be the FINAL " +
+      "ALL ROWS over a nested group: the nested group must be the FINAL " +
         "pattern element")
     val pre = spec.vars.init
     pre.foreach(v => require(v.quant.isEmpty && v.alts.isEmpty && v.seq.isEmpty,
-      "ALL ROWS over a depth-2 nested group composes with plain " +
-        s"unquantified prefix variables only (got ${v.name})"))
+      "ALL ROWS over a nested group composes with plain unquantified " +
+        s"prefix variables only (got ${v.name})"))
     val mnAliases = spec.measures.filter(_.fn.contains("MATCH_NUMBER")).map(_.alias)
     val matches = if (mnAliases.isEmpty) matches0 else {
       val mnWindow = org.apache.spark.sql.expressions.Window
@@ -1736,10 +1488,10 @@ object MatchRecognize {
         r.map(_.getField("cls")).getOrElse(lit(pre(u).name))
       else if (isMember(m.varName)) {
         if (m.field != "ts") {
-          // running VALUE measures (r18, the depth-1 recipe at depth 2+):
-          // each materialized row carries per-(member, col) vsum/vcnt
-          // snapshots AS OF the row — running SUM/COUNT/AVG semantics;
-          // running MIN/MAX/FIRST/LAST are not materialized per row
+          // running VALUE measures (r15; MIN/MAX r18; FIRST/LAST r19):
+          // each materialized row carries per-(member, col) running
+          // snapshots AS OF the row — SUM/COUNT/AVG via vsum/vcnt,
+          // extremes via vmin/vmax, positional FIRST/LAST via vfst/vlst
           val gi = gkIdx.getOrElse((m.varName, m.field), sys.error(
             s"ALL ROWS nested value measure ${m.varName}.${m.field}: no " +
               "bound value column materialized for it"))
@@ -1766,7 +1518,7 @@ object MatchRecognize {
             case Some("LAST") =>
               r.map(rr => element_at(rr.getField("vlst"), gi + 1))
                 .getOrElse(lit(null).cast("double"))
-            case other => sys.error(s"ALL ROWS over depth-2 nested group " +
+            case other => sys.error(s"ALL ROWS over nested group " +
               s"${g.name}: running SUM/COUNT/AVG/MIN/MAX/FIRST/LAST are " +
               "the member VALUE measures — got " +
               s"${other.getOrElse("a bare reference")}" +
@@ -1774,7 +1526,7 @@ object MatchRecognize {
           }
         } else {
         require(m.fn.contains("COUNT"),
-          s"ALL ROWS over depth-2 nested group ${g.name}: running COUNT " +
+          s"ALL ROWS over nested group ${g.name}: running COUNT " +
             s"is the only member TIMESTAMP measure (got " +
             s"${m.fn.getOrElse("a bare reference")}(${m.varName}.ts))")
         if (g.inner2Seq.contains(m.varName)) {
@@ -1794,9 +1546,11 @@ object MatchRecognize {
           r.map(_.getField(if (l == 1) "mids" else s"mids$l"))
             .getOrElse(lit(0L))
         } else {
+          // reps counts COMPLETED outer repetitions — only the FINAL
+          // tail's running count equals it on every row
           require(m.varName == g.name || m.varName == g.seq.last,
             s"COUNT(${m.varName}.ts): running outer counts materialize " +
-              s"for the FINAL outer-tail member only (${g.seq.last})")
+              s"for the FINAL tail member only (${g.seq.last})")
           r.map(_.getField("reps")).getOrElse(lit(0L))
         }
         }
@@ -2566,9 +2320,8 @@ object MatchRecognize {
   //     → cepPatternRun
   //   S (B C ...)+ U / (B C ...)* → cepPatternGroup (valueSubIdx for ONE
   //       member's value aggregates)
-  //   S ((I ...)+ T)+ → cepPatternNestedGroup
-  //   S (((I ...)+ M)+ T)+ → cepPatternNested2Group (valueInnerIdx)
-  //   depth 3 / 4 → cepPatternNested3Group / cepPatternNestedNGroup
+  //   S ((I ...)+ T)+, S (((I ...)+ M)+ T)+, ... (any depth)
+  //     → cepPatternNestedNGroup
   //
   // PREDICATE PACKING: the twins take Event => Boolean closures, but the
   // DEFINE bodies are arbitrary Spark SQL boolean expressions — so they are
@@ -2832,8 +2585,7 @@ object MatchRecognize {
       spec.vars.zipWithIndex.flatMap { case (v, i) =>
         val names = if (selfRuns.contains(v.name)) Nil
           else (if (v.alts.isEmpty && v.seq.isEmpty) Seq(v.name) else Nil) ++
-            v.alts ++ v.inner2Seq ++ v.midSeqs.flatten ++
-            v.innerSeq ++ v.seq
+            v.alts ++ v.inner2Seq ++ v.midSeqs.flatten ++ v.seq
         names.map { n =>
           val (pre, residual, refs) = compiledPred(spec, n, i)
           if (residual.nonEmpty) { residVars += n; residRefs ++= refs.map(_._2) }
@@ -2937,8 +2689,8 @@ object MatchRecognize {
     val vars = spec.vars
     val first = vars.head
     def isPlainVar(v: PatternVar): Boolean =
-      v.alts.isEmpty && v.seq.isEmpty && v.innerSeq.isEmpty &&
-        v.inner2Seq.isEmpty && !selfRuns.contains(v.name)
+      v.alts.isEmpty && v.seq.isEmpty && v.inner2Seq.isEmpty &&
+        !selfRuns.contains(v.name)
     def linearQuant(v: PatternVar): Boolean = v.quant match {
       case None | Some("?") => true
       case Some(q) => q.startsWith("{") && !q.endsWith(",}")
@@ -2946,11 +2698,11 @@ object MatchRecognize {
     // bare (reluctant-collapsed) sequence groups are inline sub-sequences:
     // expand the members into plain linear steps before classification
     val expanded: Seq[PatternVar] = vars.flatMap {
-      case v if v.seq.nonEmpty && v.innerSeq.isEmpty && v.inner2Seq.isEmpty &&
+      case v if v.seq.nonEmpty && v.inner2Seq.isEmpty &&
         v.quant.isEmpty => v.seq.map(PatternVar(_, None))
       case v => Seq(v)
     }
-    val nestedVar = expanded.find(v => v.innerSeq.nonEmpty || v.inner2Seq.nonEmpty)
+    val nestedVar = expanded.find(_.inner2Seq.nonEmpty)
     // iterative-step closures for the linear twin: each step's bitmask
     // pre-filter AND (when the var carries a relative DEFINE) its residual
     // threshold evaluated over the PRIOR bound values — the m06-class
@@ -3335,7 +3087,7 @@ object MatchRecognize {
     else if (expanded.size == 3 && isPlainVar(expanded.head) &&
         expanded.head.quant.isEmpty && isPlainVar(expanded(2)) &&
         expanded(2).quant.isEmpty && expanded(1).seq.nonEmpty &&
-        expanded(1).innerSeq.isEmpty && expanded(1).inner2Seq.isEmpty &&
+        expanded(1).inner2Seq.isEmpty &&
         expanded(1).quant.exists(q => q == "+" || q == "*")) {
       val Seq(s0, g, u) = expanded
       require(!spec.skipPastLast, "AFTER MATCH SKIP PAST LAST ROW on a " +
@@ -3416,15 +3168,13 @@ object MatchRecognize {
       levelLists.foreach(l => require(l.size == 1,
         s"streaming nested group ${g.name}: one closing step per level " +
           s"(got ${l.mkString(" ")})"))
-      val innerMembers = if (g.inner2Seq.nonEmpty) g.inner2Seq else g.innerSeq
+      val innerMembers = g.inner2Seq
       val innerIdx = innerMembers.zipWithIndex.toMap
       val depth = levelLists.size // 1 = ((I..)+ T)+, 2 = (((I..)+ M)+ T)+, ...
       val closers = levelLists.map(_.head)
       val closerOfVar: Map[String, Int] = closers.zipWithIndex.toMap
-      // value measures (r19): ANY member — inner or closer — at depth >= 2
-      // rides the depth-N twin's bindValues (the batch bindGroup surface);
-      // depth 1 keeps the named rejection (the N twin starts at two
-      // closing levels)
+      // value measures (r19): ANY member — inner or closer — at ANY depth
+      // rides the N twin's bindValues (the batch bindGroup surface)
       val valMembers = spec.measures.collect {
         case m if m.field != "ts" && !m.fn.contains("CLASSIFIER") &&
           !spec.absentVars.contains(m.varName) &&
@@ -3436,13 +3186,8 @@ object MatchRecognize {
         s"value measure over $n: streaming nested-group values bind GROUP " +
           "members (inner members and closers), not the anchor or the " +
           "group name"))
-      require(spec.allRows || depth >= 2 || valMembers.isEmpty,
-        s"streaming nested group ${g.name}: final value measures need " +
-          "depth >= 2 (the depth-N twin's bindValues surface; counts and " +
-          "boundaries only at depth 1 — per-row snapshots under ALL ROWS " +
-          "work at every depth)")
       // iterative (relative) DEFINEs on group members (r20): anchor-relative
-      // thresholds ride the nested twins' per-partial threshold — inner
+      // thresholds ride the N twin's per-partial threshold — inner
       // members and closers at any depth; references past the anchor stay
       // named rejections inside anchorRes
       val nResid = residVars.toSet
@@ -3460,44 +3205,35 @@ object MatchRecognize {
         if (nResid.intersect(closers.toSet).isEmpty) Nil
         else closers.map(n =>
           if (nResid.contains(n)) anchorRes(n, s0.name) else passRes)
-      // member index in the twins' vsnap / member_vals arrays: inner
+      // member index in the twin's vsnap / member_vals arrays: inner
       // members first, then the closers in level order
       def memberVIdx(n: String): Int =
         innerIdx.getOrElse(n, innerMembers.size + closerOfVar(n))
+      // ONE twin at every depth. Under ALL ROWS it materializes every
+      // committed bound event with its classifier and running per-level
+      // counts (the batch <g>_rows payload) and, for value measures, the
+      // running per-member (sum/min/max/first/last/cnt) snapshots AS OF
+      // the row (r20, the m56 batch surface on the stream); otherwise it
+      // binds the final per-member value aggregates (`member_vals`)
+      val useVals = valMembers.nonEmpty
+      // slots first: tagged() packs only the slots registered before it
+      val firstP = slotPred(s0.name)
+      val innerPreds = innerMembers.map(slotPred)
+      val closerPreds = closers.map(slotPred)
+      val mdf: DataFrame = StreamOps.cepPatternNestedNGroup(tagged(), wmDelay,
+        firstP, innerPreds, closerPreds, withinMs, maxPartials,
+        innerOptional = g.innerStar,
+        materializeRows = spec.allRows, innerNames = innerMembers,
+        closerNames = closers, bindValues = useVals && !spec.allRows,
+        rowValues = useVals && spec.allRows, thresholdOf = thrOf,
+        innerRes = innerResCl, closerRes = closerResCl).toDF()
+      // closer level l's count in `level_counts`, which lists the
+      // intermediate levels OUTERMOST FIRST (1-based position depth-1-l)
+      def levelCount(counts: Column, l: Int): Column =
+        element_at(counts, depth - 1 - l)
       if (spec.allRows) {
-        // ALL ROWS over a final nested group: the twins materialize every
-        // committed bound event with its classifier and running per-level
-        // counts (the batch <g>_rows payload) — the expansion is one
-        // generator over the match row, plus the synthesized prefix row
-        // per-row VALUE snapshots (r20, the m56 batch surface on the
-        // stream): the twins' materialized rows carry running per-member
-        // (sum/min/max/first/last/cnt) snapshots AS OF the row
-        val useVals = valMembers.nonEmpty
-        val onN = depth >= 3 || (depth == 2 && (useVals || nResid.nonEmpty))
-        val innerPreds = innerMembers.map(slotPred)
-        val firstP = slotPred(s0.name)
-        val closerPreds = closers.map(slotPred)
-        val mdf: DataFrame =
-          if (onN) StreamOps.cepPatternNestedNGroup(tagged(), wmDelay, firstP,
-            innerPreds, closerPreds, withinMs, maxPartials,
-            innerOptional = g.innerStar, materializeRows = true,
-            innerNames = innerMembers, closerNames = closers,
-            rowValues = useVals, thresholdOf = thrOf,
-            innerRes = innerResCl, closerRes = closerResCl).toDF()
-          else depth match {
-          case 1 => StreamOps.cepPatternNestedGroup(tagged(), wmDelay, firstP,
-            innerPreds, closerPreds.head, withinMs, maxPartials,
-            materializeRows = true, innerNames = innerMembers,
-            tailName = closers.head, innerOptional = g.innerStar,
-            rowValues = useVals, thresholdOf = thrOf, innerRes = innerResCl,
-            tailRes = if (nResid.contains(closers.head))
-              anchorRes(closers.head, s0.name) else null).toDF()
-          case _ => StreamOps.cepPatternNested2Group(tagged(), wmDelay, firstP,
-            innerPreds, closerPreds.head, closerPreds(1), withinMs,
-            maxPartials, materializeRows = true, innerNames = innerMembers,
-            midName = closers.head, tailName = closers(1),
-            innerOptional = g.innerStar).toDF()
-        }
+        // the ALL ROWS expansion is one generator over the match row, plus
+        // the synthesized prefix row
         val finalInner = innerMembers.last
         // running count of the member's own unit as of the row — the
         // batch final-member conventions (only the FINAL member of a unit
@@ -3507,9 +3243,8 @@ object MatchRecognize {
             r.map(_.getField("reps")).getOrElse(lit(0L))
           else closerOfVar.get(n) match {
             case Some(l) =>
-              if (!onN) r.map(_.getField("mids")).getOrElse(lit(0L))
-              else r.map(rr => element_at(rr.getField("level_counts"),
-                depth - 1 - l)).getOrElse(lit(0L))
+              r.map(rr => levelCount(rr.getField("level_counts"), l))
+                .getOrElse(lit(0L))
             case None =>
               require(n == finalInner,
                 s"COUNT($n.ts): running inner counts materialize for the " +
@@ -3527,7 +3262,7 @@ object MatchRecognize {
             col("first_ts")
           } else if (mm.field != "ts" && valMembers.contains(mm.varName)) {
             // running VALUE snapshots per row (r20, the batch m56 recipe):
-            // resolved from the twins' per-row vsnap member aggregates;
+            // resolved from the twin's per-row vsnap member aggregates;
             // null / 0 on the synthesized prefix row (the batch convention)
             val mv = r.map(rr => element_at(rr.getField("vsnap"),
               memberVIdx(mm.varName) + 1))
@@ -3566,7 +3301,6 @@ object MatchRecognize {
           .select(spec.partitionBy.map(col) ++
             rowCols.map(n => col(s"__r.$n").as(n)): _*)
       }
-      val useNVals = valMembers.nonEmpty
       def tsBoundary(mm: Measure): Column = mm.fn match {
         case Some("FIRST") =>
           require(mm.varName == g.name || mm.varName == innerMembers.head,
@@ -3585,47 +3319,12 @@ object MatchRecognize {
           "FIRST/LAST/COUNT only over nested-group timestamps")
       }
       // COUNT columns: tail closes outer reps; intermediate closers one
-      // level each; any inner member counts sub-sequences. The N-twin
-      // route (depth 4, or any bindValues depth) reads level_counts
-      // (intermediate levels OUTERMOST FIRST: closer level l sits at
-      // 1-based position depth-1-l); the fixed-depth twins name them.
-      // residuals at depth >= 2 also need the N twin (the fixed depth-2/3
-      // twins carry no per-partial threshold)
-      val onNTwin = useNVals || depth >= 4 || (nResid.nonEmpty && depth >= 2)
+      // level each; any inner member counts sub-sequences
       def countCol(n: String): Column =
         if (n == closers.last) col("n_reps")
-        else if (onNTwin) closerOfVar.get(n) match {
-          case Some(l) => element_at(col("level_counts"), depth - 1 - l)
-          case None => col("n_inner")
-        }
         else closerOfVar.get(n) match {
-          case Some(1) => col("n_mids2")
-          case Some(0) if depth >= 2 => col("n_mids")
-          case _ => col("n_inner")
-        }
-      val innerPreds = innerMembers.map(slotPred)
-      val firstP = slotPred(s0.name)
-      val closerPreds = closers.map(slotPred)
-      val mdf: DataFrame =
-        if (onNTwin && depth >= 2)
-          StreamOps.cepPatternNestedNGroup(tagged(), wmDelay, firstP,
-            innerPreds, closerPreds, withinMs, maxPartials,
-            innerOptional = g.innerStar, bindValues = useNVals,
-            thresholdOf = thrOf, innerRes = innerResCl,
-            closerRes = closerResCl).toDF()
-        else depth match {
-          case 1 => StreamOps.cepPatternNestedGroup(tagged(), wmDelay, firstP,
-            innerPreds, closerPreds.head, withinMs, maxPartials,
-            innerOptional = g.innerStar,
-            thresholdOf = thrOf, innerRes = innerResCl,
-            tailRes = if (nResid.contains(closers.head))
-              anchorRes(closers.head, s0.name) else null).toDF()
-          case 2 => StreamOps.cepPatternNested2Group(tagged(), wmDelay, firstP,
-            innerPreds, closerPreds.head, closerPreds(1), withinMs, maxPartials,
-            innerOptional = g.innerStar).toDF()
-          case _ => StreamOps.cepPatternNested3Group(tagged(), wmDelay, firstP,
-            innerPreds, closerPreds.head, closerPreds(1), closerPreds(2),
-            withinMs, maxPartials, innerOptional = g.innerStar).toDF()
+          case Some(l) => levelCount(col("level_counts"), l)
+          case None => col("n_inner")
         }
       measureOut(mdf, lit(closers.last)) { mm =>
         mm.varName match {

@@ -37,22 +37,20 @@ final case class Step(name: String, pred: Column, reps: Int = 1,
                       runOffset: Int = 1,
                       groupRows: Boolean = false,
                       tieCols: Seq[String] = Nil,
-                      innerGroup: Seq[(String, Column)] = Nil,
                       minRun: Int = 1,
                       anyBranch: Boolean = false,
                       combinations: Boolean = false,
                       maxComb: Int = 20,
                       innerOpt: Boolean = false,
-                      // depth-N nested group (followedByNested{2,3,N}Group):
-                      // `inner2` is the INNERMOST quantified sub-sequence and
-                      // `closings` its closing-step levels in level order —
-                      // closings(0) closes each LEVEL-1 repetition (the
-                      // "mids"), closings(1) each level-2 repetition, ...,
-                      // closings.last each OUTER repetition (the tails).
-                      // Depth = closings.size >= 2; depth 1 uses
-                      // innerGroup + group instead. (r18 — one field per
-                      // nesting level replaced the mid2/mid2b/tail2 triple
-                      // whose off-by-one naming invited index bugs.)
+                      // nested group at any depth (followedByNested{,2,3,N}
+                      // Group): `inner2` is the INNERMOST quantified
+                      // sub-sequence and `closings` its closing-step levels
+                      // in level order — closings(0) closes each LEVEL-1
+                      // repetition (the "mids"), closings(1) each level-2
+                      // repetition, ..., closings.last each OUTER repetition
+                      // (the tails). Depth = closings.size >= 1. (r18 — one
+                      // field per nesting level replaced the mid2/mid2b/tail2
+                      // triple whose off-by-one naming invited index bugs.)
                       inner2: Seq[(String, Column)] = Nil,
                       closings: Seq[Seq[(String, Column)]] = Nil,
                       tailRes: Seq[(String, String, String, Column)] = Nil,
@@ -126,7 +124,8 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * such guard and simply blows up. */
   def allowCombinations(maxCombinationMembers: Int = 20): Pattern = {
     require(steps.size == 2 && steps.last.oneOrMore &&
-      steps.last.group.isEmpty && !steps.last.opt && !steps.last.consec &&
+      steps.last.group.isEmpty && steps.last.inner2.isEmpty &&
+      !steps.last.opt && !steps.last.consec &&
       steps.last.keep.isEmpty && steps.last.until.isEmpty &&
       steps.last.alts.isEmpty && steps.last.minRun == 1,
       "allowCombinations() requires the two-step begin(A) -> " +
@@ -434,16 +433,15 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * (outer repetition count) and `<name>_inner_n` (total inner
     * sub-sequence count across all outer repetitions).
     *
-    * Lowering: the inner sub-group compiles ONCE to the per-key sub-match
-    * table of [[followedByGroup]] (one row per first-inner-step event with
+    * Lowering: the depth-1 case of [[followedByNestedNGroup]] — one
+    * closing level holding the tails. The inner sub-group compiles ONCE to
+    * the per-key sub-match table (one row per first-inner-step event with
     * its earliest completion via keyed min-binding joins — completion
     * MONOTONE in start), tail candidates are per-step pre-filtered (key,
     * ts) tables, and the two-level chain walk is one cogroup over (prefix
-    * matches × pre-reduced candidates) per key — parallel in the key
-    * space, per-key state bounded by the key's sub-match + tail candidate
-    * counts, with binary-searched sorted arrays inside the walk.
-    * [[bindGroup]]/[[materializeGroupRows]]/[[tieBreak]] do not compose
-    * with nested groups (named errors). */
+    * matches × pre-reduced candidates) per key. [[bindGroup]],
+    * [[tieBreak]], the residual binders and [[materializeNestedRows]]
+    * compose; [[materializeGroupRows]] is a named error. */
   /** `innerOptional` (r15, upgrading the former inner-`*` named
     * rejection): the inner sub-group may repeat ZERO times inside a
     * repetition — `((I...)* T...)+` (reference GroupPattern composes an
@@ -466,11 +464,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
       "the nested group needs at least one tail step after the inner " +
         "sub-group (a tail-less ((A B)+)+ collapses to (A B)+ — use " +
         "followedByGroup)")
-    new Pattern(steps :+ Step(name,
-      (inner.map(_._2) ++ tail.map(_._2)).reduce(_ || _),
-      group = tail.toVector, innerGroup = inner.toVector,
-      innerOpt = innerOptional),
-      notStep, windowMs, skipPastLast, skipTo)
+    followedByNestedNGroup(name, inner, Seq(tail), innerOptional)
   }
 
   /** DEPTH-2 nested group — TWO levels of group-in-group composition,
@@ -571,9 +565,12 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * generalized). `closingLevels(l)` holds level-(l+1)'s closing steps:
     * `closingLevels(0)` (the "mids") closes each LEVEL-1 repetition,
     * `closingLevels.last` (the outer tails) each OUTER repetition; depth =
-    * `closingLevels.size`. Semantics recurse the [[followedByNested2Group]]
-    * rule uniformly: a level-l repetition is a greedy chain of level-(l−1)
-    * repetitions (level-0 = one inner sub-sequence) punctuated by the
+    * `closingLevels.size` >= 1 — [[followedByNestedGroup]],
+    * [[followedByNested2Group]] and [[followedByNested3Group]] are this
+    * method at depth 1, 2 and 3. Semantics recurse the
+    * [[followedByNestedGroup]] rule uniformly: a level-l repetition is a
+    * greedy chain of level-(l−1) repetitions (level-0 = one inner
+    * sub-sequence) punctuated by the
     * earliest first-level-l-closer candidate, then level-l's closing steps
     * bound sequentially — reluctant close and greedy-no-backtracking at
     * EVERY level, the next repetition anchoring strictly after the
@@ -601,9 +598,8 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     require(inner.size >= 2,
       "the innermost sub-group needs at least two steps (a single-variable " +
         "inner '+' is a plain run — use followedByNestedGroup)")
-    require(closingLevels.size >= 2,
-      "a depth-N nested group needs at least TWO closing levels (depth 1 " +
-        "is followedByNestedGroup)")
+    require(closingLevels.nonEmpty,
+      "a nested group needs at least one closing level")
     require(closingLevels.forall(_.nonEmpty),
       "every closing level needs at least one step — a level with no " +
         "closing step collapses to the next-shallower depth: drop the " +
@@ -642,7 +638,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     // ride the tail candidate rows, and the two-level walk folds completed
     // repetitions into the same running sum/min/max/first/last/cnt state
     // the one-level chain keeps
-    require((steps.last.innerGroup ++ steps.last.group ++ steps.last.inner2 ++
+    require((steps.last.group ++ steps.last.inner2 ++
         steps.last.closings.flatten)
         .exists(_._1 == member),
       s"bindGroup($member): not a member of group ${steps.last.name}")
@@ -684,13 +680,11 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * same member (the per-(key, ts) reduction differs). */
   def bindTailResidual(member: String, valueCol: String, op: String,
                        threshold: Column): Pattern = {
-    require(steps.nonEmpty && (steps.last.innerGroup.nonEmpty ||
-        steps.last.inner2.nonEmpty),
+    require(steps.nonEmpty && steps.last.inner2.nonEmpty,
       "bindTailResidual() requires followedByNestedGroup()/" +
         "followedByNested2Group()/followedByNested3Group()/" +
         "followedByNestedNGroup() as the last step")
-    require((steps.last.group ++ steps.last.closings.flatten)
-        .exists(_._1 == member),
+    require(steps.last.closings.flatten.exists(_._1 == member),
       s"bindTailResidual($member): not a CLOSING-level member of nested " +
         s"group ${steps.last.name} (INNER members take bindInnerResidual)")
     require(Set("<", "<=", ">", ">=")(op),
@@ -728,11 +722,10 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * [[bindTailResidual]]). */
   def bindInnerResidual(member: String, valueCol: String, op: String,
                         threshold: Column): Pattern = {
-    require(steps.nonEmpty && (steps.last.innerGroup.nonEmpty ||
-        steps.last.inner2.nonEmpty),
+    require(steps.nonEmpty && steps.last.inner2.nonEmpty,
       "bindInnerResidual() requires followedByNestedGroup()/" +
         "followedByNested2Group()/followedByNested3Group() as the last step")
-    require((steps.last.innerGroup ++ steps.last.inner2).exists(_._1 == member),
+    require(steps.last.inner2.exists(_._1 == member),
       s"bindInnerResidual($member): not an INNER member of nested group " +
         s"${steps.last.name} (mid/tail members take bindTailResidual)")
     require(Set("<", "<=", ">", ">=")(op),
@@ -787,8 +780,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * ABSORB time and commit with the outer repetition, exactly like the
     * running counts. */
   def materializeNestedRows(): Pattern = {
-    require(steps.nonEmpty && (steps.last.innerGroup.nonEmpty ||
-        steps.last.inner2.nonEmpty),
+    require(steps.nonEmpty && steps.last.inner2.nonEmpty,
       "materializeNestedRows() requires followedByNestedGroup()/" +
         "followedByNested2Group()/followedByNested3Group()/" +
         "followedByNestedNGroup() as the last step")
@@ -797,11 +789,13 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
   }
 
   def materializeGroupRows(): Pattern = {
-    require(steps.nonEmpty && steps.last.group.nonEmpty,
-      "materializeGroupRows() requires followedByGroup() as the last step")
-    require(steps.last.innerGroup.isEmpty,
+    // nested groups first: their steps carry no `group`, and the named
+    // error must point at the nested-group surface
+    require(steps.isEmpty || steps.last.inner2.isEmpty,
       "materializeGroupRows() does not compose with followedByNestedGroup()" +
         " — use materializeNestedRows()")
+    require(steps.nonEmpty && steps.last.group.nonEmpty,
+      "materializeGroupRows() requires followedByGroup() as the last step")
     new Pattern(steps.init :+ steps.last.copy(groupRows = true),
       notStep, windowMs, skipPastLast, skipTo)
   }
@@ -934,8 +928,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     require(windowMs.nonEmpty, "call within(...) before detectWithTimeouts")
     require(notStep.isEmpty && !skipPastLast && skipTo.isEmpty &&
       steps.forall(s => s.reps == 1 && !s.opt && !s.oneOrMore &&
-        s.alts.isEmpty && s.group.isEmpty && s.innerGroup.isEmpty &&
-        s.inner2.isEmpty &&
+        s.alts.isEmpty && s.group.isEmpty && s.inner2.isEmpty &&
         s.runOn.isEmpty && !s.strict && s.until.isEmpty &&
         !s.anyBranch && !s.combinations),
       "detectWithTimeouts() supports linear plain followedBy patterns " +
@@ -1526,15 +1519,12 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
           .drop("__rseg")
         prevTs = col(s"${s.name}_last_ts")
       } else if (s.inner2.nonEmpty) {
-        // --- DEPTH-N nested group (...((I...)+ L1...)+ L2...)+ ... LD...)+
-        // (followedByNested{2,3,N}Group): the one-level walk's recursion,
-        // made depth-PARAMETRIC in r18 — the former per-depth probe pair
-        // (r1After/rep2After) and its depth-2-vs-3 dispatch collapse into
-        // ONE recursive level probe, which is what closes the old
-        // depth >= 4 named error. The innermost sub-group lowers to the
-        // same declarative sub-match table, every closing level's
-        // candidates are pre-filtered (key, ts) tables, and the
-        // (depth+1)-level chain walks per key inside ONE cogroup: a
+        // --- nested group at ANY depth (...((I...)+ L1...)+ ... LD...)+
+        // (followedByNested{,2,3,N}Group; depth 1 is ((I...)+ T...)+):
+        // ONE recursive level probe serves every depth. The innermost
+        // sub-group lowers to the same declarative sub-match table, every
+        // closing level's candidates are pre-filtered (key, ts) tables,
+        // and the (depth+1)-level chain walks per key inside ONE cogroup: a
         // level-l repetition is a greedy chain of level-(l-1) repetitions
         // (level 0 = one inner sub-match) punctuated by the earliest
         // SATISFYING first-level-l-closer candidate, then the level-l
@@ -2201,522 +2191,6 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
         }(org.apache.spark.sql.Encoders.row(outSchema))
         out = chained.toDF().drop("__gprev", "__gwend")
           .drop(resByStep2.keys.map(j => s"__tres$j").toSeq: _*)
-          .drop(s.innerRes.indices.map(r => s"__ires$r"): _*)
-        prevTs = if (s.opt) coalesce(col(s"${s.name}_last_ts"), prevTs)
-                 else col(s"${s.name}_last_ts")
-      } else if (s.innerGroup.nonEmpty) {
-        // --- NESTED group ((I...)+ T...)+ (followedByNestedGroup): the
-        // inner sub-group lowers to the followedByGroup sub-match table
-        // (start event + earliest completion via min-join chains —
-        // completion MONOTONE in start), tail candidates are per-step
-        // pre-filtered (key, ts) tables, and the two-level chain walks per
-        // key inside ONE cogroup: each outer repetition anchors at the
-        // earliest inner-sub start strictly after the previous repetition's
-        // end, absorbs the greedy-maximal inner chain that fits the MATCH
-        // window (true window end, not a per-repetition span bound), then
-        // binds the tails sequentially; a tail that cannot bind in-window
-        // ends the chain with the repetitions already completed (the
-        // greedy-no-backtracking group convention).
-        require(s.oneOrMore,
-          s"nested group ${s.name}: quantify with oneOrMore()/zeroOrMore() " +
-            "(an unquantified ((I...)+ T...) is expressible as " +
-            "followedByGroup(I...).oneOrMore() + plain tail steps)")
-        // bindInnerResidual (r17): an anchor-relative condition on an
-        // INNER member makes the whole sub-match table anchor-dependent.
-        // Parametrize the compile by the DISTINCT per-key threshold
-        // tuples of the anchor frame (one chain per distinct tuple, not
-        // per anchor), pre-reduce each residual member's candidates to
-        // per-(key, ts) op-appropriate extremes ("any candidate at this
-        // ts satisfies" = one comparison), and let the walk select each
-        // anchor's own sub array by its tuple. Threshold equality is
-        // exact: both sides evaluate the SAME Catalyst expression on the
-        // same anchor rows.
-        val iRes = new InnerResCompile(s.innerRes)
-        val hasIRes = iRes.has
-        // the anchor frame feeds BOTH the anchor side and (via the tuple
-        // table) the candidate side of the cogroup. Deliberately NOT
-        // persisted — see the depth-N branch's A/B note: double
-        // evaluation of the anchor prefix is ~0.1 s here, while the
-        // leak-free persist (eager localCheckpoint + unpersist) measured
-        // 1.4x and a never-released persist pins memory for the
-        // application lifetime (the r17 advice item).
-        val thrTable = if (!hasIRes) null else iRes.thrTable(out)
-        // inner sub-match table: one row per first-inner-step event with
-        // its earliest completion (span-bounded by win: any sub-sequence
-        // usable from any anchor has end - start < win); under inner
-        // residuals, one row per (first event, threshold tuple) with the
-        // earliest SATISFYING completion (shared compile — see
-        // compileInnerSubs/InnerResCompile)
-        var (isubs, prevSub) = compileInnerSubs(s.innerGroup, iRes, thrTable,
-          events, key, ts, win)
-        // bindGroup VALUE measures through the nested chain (r15, the
-        // former named rejection): per bound (member, col) a per-(key, ts)
-        // min-value table — the engine's equal-ts (value) min tie-break,
-        // cast to double for O(1) running state. INNER members join onto
-        // the sub-match table at their bound time; TAIL members ride their
-        // candidate rows. The walk folds values of COMPLETED repetitions
-        // only (a failed attempt's values are discarded with it — the
-        // greedy-no-backtracking convention).
-        val innerNames0 = s.innerGroup.map(_._1)
-        val gkInner = s.groupKeep.zipWithIndex.filter {
-          case ((m, _), _) => innerNames0.contains(m) }
-        val gkTailsByStep: Map[Int, Seq[((String, String), Int)]] =
-          s.group.zipWithIndex.map { case ((tn, _), j) =>
-            j -> s.groupKeep.zipWithIndex.filter { case ((m, _), _) => m == tn }
-          }.toMap
-        // ONE aggregate + join per MEMBER (all its kept columns together)
-        // — per-(member, column) joins would rescan the event table and
-        // reshuffle once per extra column. Equal-ts candidates: (value)
-        // min by default, (ties..., value) argmin under a composite
-        // ORDER BY tiebreak (r16 — the one-level group convention)
-        def nestedValAgg(c: String, as0: String): Column =
-          Pattern.tieMinAgg(c, s.tieCols).as(as0)
-        gkInner.groupBy(_._1._1).foreach { case (m, entries) =>
-          val im = innerNames0.indexOf(m)
-          val boundTs = if (im == 0) col("__gb") else col(s"__ge${im - 1}")
-          val aggs = entries.map { case ((_, c), i) => nestedValAgg(c, s"__nv$i") }
-          val vt = events.filter(s.innerGroup(im)._2)
-            .groupBy(key.as("__vk"), ts.as("__vts"))
-            .agg(aggs.head, aggs.tail: _*)
-          isubs = isubs.join(vt, col("__gk") === col("__vk") &&
-              boundTs === col("__vts"))
-            .drop("__vk", "__vts")
-        }
-        // tagged candidate union: inner sub-matches (tag 0, start + end +
-        // per-member binding times + inner bound values) and each tail
-        // step's pre-filtered candidates (tag j+1, ts + that tail's bound
-        // values) — pre-reduced per step, never raw unfiltered events
-        val memTs: Seq[Column] = col("__gb") +:
-          (0 until s.innerGroup.size - 1).map(j => col(s"__ge$j"))
-        val innerValsCol: Column =
-          if (gkInner.isEmpty) lit(null).cast("array<double>")
-          else array(gkInner.map { case (_, i) => col(s"__nv$i") }: _*)
-        // bindTailResidual tails: per (key, ts) the OP-APPROPRIATE value
-        // extreme (max for >/>=, min for </<=) — "any candidate at this
-        // ts satisfies the per-anchor threshold" is then one comparison
-        // in the walk
-        val resByTail: Map[Int, (String, String)] = s.tailRes.map {
-          case (m, c, op, _) => s.group.indexWhere(_._1 == m) -> ((c, op))
-        }.toMap
-        // tag-0 rows carry the sub's threshold tuple under inner
-        // residuals (the walk selects each anchor's own subs by it);
-        // tail rows carry null
-        val thrsCol: Column = iRes.thrsCol
-        val nullThrs = lit(null).cast("array<double>").as("__thrs")
-        val tagged = s.group.zipWithIndex.foldLeft(
-          isubs.select(col("__gk"), lit(0).as("__tag"),
-            col("__gb").as("__t1"), prevSub.as("__t2"),
-            array(memTs: _*).as("__mems"), innerValsCol.as("__vals"),
-            thrsCol.as("__thrs"))) {
-          case (acc, ((_, p), j)) =>
-            val tks = gkTailsByStep(j)
-            val cand = resByTail.get(j) match {
-              case Some((c, op)) =>
-                val agg0 = if (op == ">" || op == ">=")
-                  max(col(c).cast("double")) else min(col(c).cast("double"))
-                events.filter(p).groupBy(key.as("__gk"), ts.as("__t1"))
-                  .agg(agg0.as("__tvres"))
-                  .select(col("__gk"), lit(j + 1).as("__tag"), col("__t1"),
-                    lit(null).cast("timestamp").as("__t2"),
-                    lit(null).cast("array<timestamp>").as("__mems"),
-                    array(col("__tvres")).as("__vals"), nullThrs)
-              case None if tks.isEmpty => events.filter(p).select(key.as("__gk"),
-                lit(j + 1).as("__tag"), ts.as("__t1"),
-                lit(null).cast("timestamp").as("__t2"),
-                lit(null).cast("array<timestamp>").as("__mems"),
-                lit(null).cast("array<double>").as("__vals"), nullThrs)
-              case None =>
-                // tail member values tie-steer too (one shared builder —
-                // the r16 review caught this copy still on plain min)
-                val aggs = tks.map { case ((_, c), i) =>
-                  nestedValAgg(c, s"__tv$i") }
-                events.filter(p).groupBy(key.as("__gk"), ts.as("__t1"))
-                  .agg(aggs.head, aggs.tail: _*)
-                  .select(col("__gk"), lit(j + 1).as("__tag"), col("__t1"),
-                    lit(null).cast("timestamp").as("__t2"),
-                    lit(null).cast("array<timestamp>").as("__mems"),
-                    array(tks.map { case (_, i) => col(s"__tv$i") }: _*).as("__vals"),
-                    nullThrs)
-            }
-            acc.unionByName(cand)
-        }
-        // per-anchor residual thresholds: Columns over EARLIER bound
-        // columns, evaluated once on the anchor frame
-        val outRes = s.tailRes.foldLeft(out) { case (d, (m, _, _, thr)) =>
-          d.withColumn(s"__tres${s.group.indexWhere(_._1 == m)}",
-            thr.cast("double"))
-        }
-        // inner-residual thresholds on the anchor frame too — the SAME
-        // expressions the thrTable distinct'd, so the walk's tuple lookup
-        // compares bitwise-identical doubles
-        val outResI = iRes.anchorThrs(outRes, "__ires")
-        val anch = outResI.withColumn("__gprev", prevTs)
-          .withColumn("__gwend", col(startTs) + win)
-        val aSchema = anch.schema
-        val keyIdx = aSchema.fieldIndex("__k")
-        val prevIdx = aSchema.fieldIndex("__gprev")
-        val wendIdx = aSchema.fieldIndex("__gwend")
-        val rowsFields = if (!s.groupRows) Nil else {
-          val base = Seq(
-            org.apache.spark.sql.types.StructField("ts",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("cls",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("reps",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("subs",
-              org.apache.spark.sql.types.LongType))
-          // bindGroup + materializeNestedRows: per row the RUNNING
-          // per-(member, col) sum + non-null count AS OF the row
-          val valRows = if (s.groupKeep.isEmpty) Nil else Seq(
-            org.apache.spark.sql.types.StructField("vsum",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType, true)),
-            org.apache.spark.sql.types.StructField("vcnt",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.LongType, false)),
-            // running MIN/MAX snapshots (r18, lifting the last per-row
-            // value named rejection): null-ignoring, like the aggregates
-            org.apache.spark.sql.types.StructField("vmin",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType, true)),
-            org.apache.spark.sql.types.StructField("vmax",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType, true)),
-            // running positional FIRST/LAST snapshots (r19, lifting the
-            // final per-row value named rejection): the walk tracks a
-            // (value, bound) pair per member — a NULL first binding
-            // freezes FIRST correctly
-            org.apache.spark.sql.types.StructField("vfst",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType, true)),
-            org.apache.spark.sql.types.StructField("vlst",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType, true)))
-          Seq(org.apache.spark.sql.types.StructField(s"${s.name}_rows",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.StructType(base ++ valRows), false)))
-        }
-        // the one-level bindGroup naming (shared builder), so the
-        // MEASURES lowering is shared too
-        val valFields = Pattern.groupValFields(s.name, s.groupKeep)
-        val outSchema = org.apache.spark.sql.types.StructType(
-          aSchema.fields ++ Seq(
-            org.apache.spark.sql.types.StructField(s"${s.name}_first_ts",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField(s"${s.name}_last_ts",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField(s"${s.name}_n",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField(s"${s.name}_inner_n",
-              org.apache.spark.sql.types.LongType)) ++ valFields ++ rowsFields)
-        val strEnc = org.apache.spark.sql.Encoders.STRING
-        val anchKV = anch.groupByKey(r => Pattern.keyString(r.get(keyIdx)))(strEnc)
-        val candKV = tagged.groupByKey(r => Pattern.keyString(r.get(0)))(strEnc)
-        val optGroup = s.opt
-        val nTails = s.group.size
-        val matRows = s.groupRows
-        val innerOptFlag = s.innerOpt
-        val innerNames = s.innerGroup.map(_._1)
-        val tailNames = s.group.map(_._1)
-        val sName = s.name
-        // primitive copies for the closure: groupKeep positions per source
-        val gkN = s.groupKeep.size
-        val gkInnerPos = gkInner.map(_._2).toArray
-        val gkTailPos = Array.tabulate(nTails)(j => gkTailsByStep(j).map(_._2).toArray)
-        // bindTailResidual: per tail an op code (0 none, 1 <, 2 <=, 3 >,
-        // 4 >=) and the anchor-frame field index of its threshold column
-        val resOps: Array[Int] = Array.tabulate(nTails)(j =>
-          resByTail.get(j).map(_._2 match {
-            case "<" => 1; case "<=" => 2; case ">" => 3; case _ => 4
-          }).getOrElse(0))
-        val resThrIdx: Array[Int] = Array.tabulate(nTails)(j =>
-          if (resOps(j) != 0) aSchema.fieldIndex(s"__tres$j") else -1)
-        // rows carry running value snapshots when BOTH surfaces are on;
-        // per inner member j: (index into the sub's __vals array, gk pos)
-        val rowVals = matRows && gkN > 0
-        val gkInnerByMember: Array[Array[(Int, Int)]] =
-          Array.tabulate(innerNames.size)(j =>
-            gkInner.zipWithIndex.collect {
-              case (((m, _), gi), vi) if m == innerNames(j) => (vi, gi)
-            }.toArray)
-        // bindInnerResidual: the anchor-frame field indexes of the
-        // threshold tuple (closure copies — the walk selects each
-        // anchor's sub array by its tuple)
-        val hasIResW = hasIRes
-        val iResThrIdx: Array[Int] = Array.tabulate(s.innerRes.size)(r =>
-          aSchema.fieldIndex(s"__ires$r"))
-        val chained = anchKV.cogroup(candKV) { (_, as, cs) =>
-          val all = Pattern.boundedRows(cs, maxPK,
-            s"nested group ${sName} two-level chain walk")
-          // inner sub-matches sorted by start (+ member binding times for
-          // materializeNestedRows, + inner bound values for bindGroup);
-          // per-tail sorted candidate (time, values) —
-          // full-precision Timestamp comparisons throughout
-          val subsAll = all.filter(_.getInt(1) == 0)
-            .map(r => (Pattern.tsOf(r, 2), Pattern.tsOf(r, 3),
-              if (matRows) r.getSeq[Any](4).map(Pattern.anyToTs) else null,
-              if (gkInnerPos.length > 0) Pattern.dblsOf(r, 5) else null,
-              if (hasIResW) Pattern.dblsOf(r, 6).toList else null))
-          // per-threshold-tuple sorted sub arrays (one entry total when
-          // no inner residual is bound)
-          val emptySubs = Array.empty[(java.sql.Timestamp, java.sql.Timestamp,
-            Seq[java.sql.Timestamp], Array[java.lang.Double])]
-          def sorted(xs: Array[(java.sql.Timestamp, java.sql.Timestamp,
-              Seq[java.sql.Timestamp], Array[java.lang.Double],
-              List[java.lang.Double])]) =
-            xs.map(x => (x._1, x._2, x._3, x._4))
-              .sortWith((p, q) => p._1.before(q._1))
-          val subsDefault = if (hasIResW) emptySubs else sorted(subsAll)
-          val subsByThr: Map[List[java.lang.Double], Array[(java.sql.Timestamp,
-              java.sql.Timestamp, Seq[java.sql.Timestamp],
-              Array[java.lang.Double])]] =
-            if (!hasIResW) Map.empty
-            else subsAll.groupBy(_._5).map { case (k, xs) => k -> sorted(xs) }
-          val tails = Array.tabulate(nTails) { j =>
-            all.filter(_.getInt(1) == j + 1).map(r => (Pattern.tsOf(r, 2),
-              if (gkTailPos(j).length > 0 || resOps(j) != 0)
-                Pattern.dblsOf(r, 5) else null))
-              .sortWith((p, q) => p._1.before(q._1))
-          }
-          def tailAfter(j: Int, t: java.sql.Timestamp): Int = {
-            val arr = tails(j)
-            var lo = 0; var hi = arr.length
-            while (lo < hi) { val mid = (lo + hi) >>> 1
-              if (arr(mid)._1.after(t)) hi = mid else lo = mid + 1 }
-            lo
-          }
-          as.flatMap { a =>
-            val tau = Pattern.tsOf(a, prevIdx)
-            val wEnd = Pattern.tsOf(a, wendIdx)
-            // bindInnerResidual: this anchor's sub array is the one
-            // compiled for ITS threshold tuple (exact-double lookup — both
-            // sides evaluated the same expression on the same rows); a
-            // null threshold has no compiled chain (SQL 3VL: never binds)
-            val subs = if (!hasIResW) subsDefault else {
-              var anyNull = false
-              var k: List[java.lang.Double] = Nil
-              var r = iResThrIdx.length - 1
-              while (r >= 0) {
-                if (a.isNullAt(iResThrIdx(r))) { anyNull = true; k = null :: k }
-                else k = java.lang.Double.valueOf(a.getDouble(iResThrIdx(r))) :: k
-                r -= 1
-              }
-              if (anyNull) emptySubs else subsByThr.getOrElse(k, emptySubs)
-            }
-            // index of the first sub strictly after t (binary search)
-            def subAfter(t: java.sql.Timestamp): Int = {
-              var lo = 0; var hi = subs.length
-              while (lo < hi) { val mid = (lo + hi) >>> 1
-                if (subs(mid)._1.after(t)) hi = mid else lo = mid + 1 }
-              lo
-            }
-            var lastEnd = tau
-            var first: java.sql.Timestamp = null
-            var n = 0L; var innerTot = 0L; var done = false
-            // bindGroup running state (the one-level chain's shape): folded
-            // bindTailResidual: the anchor's thresholds (null = the
-            // referenced binding is null -> never binds, SQL 3VL), and
-            // the satisfying-scan binding: first candidate strictly
-            // after t whose per-ts value extreme satisfies the op —
-            // punctuation and binding share this, so the tail can only
-            // punctuate where it can bind
-            val resThr: Array[java.lang.Double] = Array.tabulate(nTails)(j =>
-              if (resThrIdx(j) < 0 || a.isNullAt(resThrIdx(j))) null
-              else java.lang.Double.valueOf(a.getDouble(resThrIdx(j))))
-            def tailBind(j: Int, t: java.sql.Timestamp): Int = {
-              var x = tailAfter(j, t)
-              if (resOps(j) != 0) {
-                val arr = tails(j); val thr = resThr(j)
-                def sat(v: java.lang.Double): Boolean =
-                  thr != null && v != null && (resOps(j) match {
-                    case 1 => v < thr; case 2 => v <= thr
-                    case 3 => v > thr; case _ => v >= thr
-                  })
-                while (x < arr.length &&
-                    !sat(if (arr(x)._2 == null) null else arr(x)._2(0))) x += 1
-              }
-              x
-            }
-            // per COMPLETED repetition from the attempt's pending list —
-            // a failed attempt's values are discarded with its rows
-            val vSum = new Array[java.lang.Double](gkN)
-            val vMin = new Array[java.lang.Double](gkN)
-            val vMax = new Array[java.lang.Double](gkN)
-            val vFirst = new Array[java.lang.Double](gkN)
-            val vLast = new Array[java.lang.Double](gkN)
-            val vCnt = new Array[Long](gkN)
-            val vSeen = new Array[Boolean](gkN)
-            // materializeNestedRows: per bound event (ts, cls, reps, subs)
-            // — flushed per COMPLETED repetition, a failed attempt's rows
-            // are discarded
-            val allRows = if (matRows)
-              scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-            else null
-            while (!done) {
-              // next outer repetition: the earliest inner-sub start
-              // strictly after the previous repetition's end (inner
-              // completion monotone in start: if it cannot complete
-              // in-window, no later start can either)
-              val i0 = subAfter(lastEnd)
-              val subAvail = i0 < subs.length && !subs(i0)._2.after(wEnd)
-              // innerOptional: the repetition may bind the tails ALONE —
-              // tail-first when the earliest first-tail candidate does not
-              // come strictly after the earliest completable sub (the same
-              // earliest-completion rule that punctuates the inner chain;
-              // ties favor the tail)
-              val tx0 = tailBind(0, lastEnd)
-              val t0Avail = tx0 < tails(0).length &&
-                !tails(0)(tx0)._1.after(wEnd)
-              val tailFirst = innerOptFlag && t0Avail &&
-                (!subAvail || !subs(i0)._2.before(tails(0)(tx0)._1))
-              if (!subAvail && !tailFirst) done = true
-              else {
-                val repRows = if (matRows)
-                  scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-                else null
-                // the attempt's bound values in binding order — folded into
-                // the running state only if the repetition COMPLETES
-                val pendVals = if (gkN > 0)
-                  scala.collection.mutable.ArrayBuffer.empty[(Int, java.lang.Double)]
-                else null
-                // per-row RUNNING value snapshots (bindGroup + ALL ROWS):
-                // rep-local copies seeded from the committed totals — a
-                // failed repetition's snapshots die with its rows
-                val repSum = if (rowVals) vSum.clone() else null
-                val repCnt = if (rowVals) vCnt.clone() else null
-                val repMin = if (rowVals) vMin.clone() else null
-                val repMax = if (rowVals) vMax.clone() else null
-                // positional FIRST/LAST (r19): (value, bound) pairs seeded
-                // from the committed state — nullability rides repSeen, so
-                // a null first binding stays frozen
-                val repFst = if (rowVals) vFirst.clone() else null
-                val repLst = if (rowVals) vLast.clone() else null
-                val repSeen = if (rowVals) vSeen.clone() else null
-                def applyVal(gi: Int, v: java.lang.Double): Unit = {
-                  if (!repSeen(gi)) { repFst(gi) = v; repSeen(gi) = true }
-                  repLst(gi) = v
-                  if (v != null) {
-                    repCnt(gi) += 1
-                    repSum(gi) = if (repSum(gi) == null) v
-                                 else java.lang.Double.valueOf(repSum(gi) + v)
-                    repMin(gi) = Pattern.nmin(repMin(gi), v)
-                    repMax(gi) = Pattern.nmax(repMax(gi), v)
-                  }
-                }
-                def rowOf(ts0: java.sql.Timestamp, cls: String, reps0: Long,
-                          subs0: Long): org.apache.spark.sql.Row =
-                  if (!rowVals) org.apache.spark.sql.Row(ts0, cls, reps0, subs0)
-                  else org.apache.spark.sql.Row(ts0, cls, reps0, subs0,
-                    repSum.toVector, repCnt.toVector,
-                    repMin.toVector, repMax.toVector,
-                    repFst.toVector, repLst.toVector)
-                // a sub's member rows: running counts AS OF each row (the
-                // final member completes the sub, so it counts it); value
-                // snapshots include the row's OWN contribution
-                def subRows(idx: Int, kAfter: Long): Unit = if (matRows) {
-                  val mems = subs(idx)._3
-                  var j = 0
-                  while (j < mems.length) {
-                    if (rowVals) {
-                      val contrib = gkInnerByMember(j)
-                      var p = 0
-                      while (p < contrib.length) {
-                        applyVal(contrib(p)._2, subs(idx)._4(contrib(p)._1))
-                        p += 1
-                      }
-                    }
-                    repRows += rowOf(mems(j), innerNames(j),
-                      n, innerTot + kAfter - (if (j == mems.length - 1) 0 else 1))
-                    j += 1
-                  }
-                }
-                def subVals(idx: Int): Unit = if (gkInnerPos.length > 0) {
-                  val vs = subs(idx)._4
-                  var p = 0
-                  while (p < gkInnerPos.length) {
-                    pendVals += ((gkInnerPos(p), vs(p))); p += 1
-                  }
-                }
-                // inner chain bounded by the first tail opportunity: absorb
-                // the next sub-match only if it completes strictly BEFORE
-                // the earliest first-tail candidate after the current chain
-                // end (the tail punctuates repetitions — reluctant close).
-                // A tail-first repetition (innerOptional) skips the chain:
-                // k stays 0 and the tails bind directly after lastEnd.
-                var e = lastEnd; var k = 0L
-                var repFirst: java.sql.Timestamp = null
-                if (!tailFirst) {
-                  e = subs(i0)._2; k = 1L; repFirst = subs(i0)._1
-                  subRows(i0, 1L); subVals(i0)
-                  var more = true
-                  while (more) {
-                    val nx = subAfter(e)
-                    val tx = tailBind(0, e)
-                    val tCand = if (tx < tails(0).length &&
-                        !tails(0)(tx)._1.after(wEnd)) tails(0)(tx)._1 else null
-                    if (nx >= subs.length || subs(nx)._2.after(wEnd) ||
-                        (tCand != null && !subs(nx)._2.before(tCand))) more = false
-                    else { e = subs(nx)._2; k += 1; subRows(nx, k); subVals(nx) }
-                  }
-                }
-                // tail bindings: earliest candidate strictly after the
-                // previous binding, all within the match window
-                var t = e; var ok = true; var ti = 0
-                while (ok && ti < nTails) {
-                  val x = tailBind(ti, t)
-                  if (x >= tails(ti).length || tails(ti)(x)._1.after(wEnd)) ok = false
-                  else {
-                    t = tails(ti)(x)._1
-                    if (repFirst == null) repFirst = t
-                    // ONE loop feeds both accumulations (snapshot + the
-                    // commit fold's pending list) so they cannot diverge;
-                    // snapshots apply BEFORE the row (own contribution)
-                    if (gkTailPos(ti).length > 0) {
-                      val tvs = tails(ti)(x)._2
-                      var p = 0
-                      while (p < gkTailPos(ti).length) {
-                        val gi = gkTailPos(ti)(p)
-                        if (rowVals) applyVal(gi, tvs(p))
-                        pendVals += ((gi, tvs(p)))
-                        p += 1
-                      }
-                    }
-                    // only the FINAL tail completes the repetition — a
-                    // mid-sequence tail row's reps must not count it yet
-                    // (the same final-member-counts convention inner rows
-                    // follow)
-                    if (matRows) repRows += rowOf(t, tailNames(ti),
-                      n + (if (ti == nTails - 1) 1 else 0), innerTot + k)
-                    ti += 1
-                  }
-                }
-                if (!ok) done = true
-                else {
-                  if (n == 0) first = repFirst
-                  lastEnd = t; n += 1; innerTot += k
-                  if (matRows) allRows ++= repRows
-                  if (gkN > 0) Pattern.commitPending(pendVals,
-                    vSum, vMin, vMax, vFirst, vLast, vCnt, vSeen)
-                }
-              }
-            }
-            val rowsCols: Seq[Any] = if (matRows) Seq(allRows.toSeq) else Nil
-            val valCols: Seq[Any] = (0 until gkN).flatMap(j =>
-              Seq(vSum(j), vMin(j), vMax(j), vFirst(j), vLast(j), vCnt(j)))
-            // ((...)+ ...)* (opt): an empty chain keeps the match row with
-            // null boundaries and count 0 — the zeroOrMore convention
-            if (n == 0 && !optGroup) Iterator.empty
-            else if (n == 0) Iterator.single(org.apache.spark.sql.Row.fromSeq(
-              a.toSeq ++ Seq(null, null, 0L, 0L) ++
-                (0 until gkN).flatMap(_ => Seq(null, null, null, null, null, 0L)) ++
-                (if (matRows) Seq(Seq.empty) else Nil)))
-            else Iterator.single(org.apache.spark.sql.Row.fromSeq(
-              a.toSeq ++ Seq(first, lastEnd, n, innerTot) ++ valCols ++ rowsCols))
-          }
-        }(org.apache.spark.sql.Encoders.row(outSchema))
-        out = chained.toDF().drop("__gprev", "__gwend")
-          .drop(resByTail.keys.map(j => s"__tres$j").toSeq: _*)
           .drop(s.innerRes.indices.map(r => s"__ires$r"): _*)
         prevTs = if (s.opt) coalesce(col(s"${s.name}_last_ts"), prevTs)
                  else col(s"${s.name}_last_ts")

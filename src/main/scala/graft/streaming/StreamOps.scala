@@ -190,63 +190,22 @@ case class TwoRunMatch(user_id: Long, first_ts: Timestamp,
                        r1_first_ts: Timestamp, r1_last_ts: Timestamp, r1_n: Long,
                        r2_first_ts: Timestamp, r2_last_ts: Timestamp, r2_n: Long,
                        last_ts: Timestamp)
-// nested group ((I...)+ T)+ partial (the m33 batch shape): current inner
-// sub-step index + in-progress/completed sub bookkeeping, chain boundaries
-// and outer/inner counts — O(1) state per partial. The tail-punctuated walk
-// needs NO held closes: the close event is INSIDE the repetition, so every
-// absorb-vs-close decision is immediate in event-time order (a sub-match
-// completing before the next tail event was, by arrival order, absorbed
-// first — exactly the batch rule "absorb while completing strictly before
-// the first tail opportunity")
-// one materialized bound event of the nested chain (ts in epoch ms inside
-// state, Timestamp on the output row): classifier + running counts as of
-// the row — the batch `<g>_rows` struct
-case class NestRow(ms: Long, cls: String, reps: Long, subs: Long,
-                   v: Double = 0.0)
-case class NestPartial(firstMs: Long, gFirstMs: Long = -1L, subIdx: Int = 0,
-                       curStartMs: Long = -1L, inSubLastMs: Long = -1L,
-                       lastCompMs: Long = -1L, curSubs: Long = 0L,
-                       reps: Long = 0L, innerTot: Long = 0L,
-                       lastTailMs: Long = -1L,
-                       // materializeRows buffers: the in-progress sub's
-                       // member rows (discarded if the sub never
-                       // completes), the current repetition's completed-sub
-                       // rows (discarded if the repetition never closes),
-                       // and the match's committed rows — window-bounded
-                       curSubRows: List[NestRow] = Nil,
-                       curRepRows: List[NestRow] = Nil,
-                       doneRows: List[NestRow] = Nil,
-                       // iterative (relative) residual threshold — the
-                       // anchor's value, read once when the partial opens
-                       // (the NestIterPartial design, generalized r20)
-                       thr: Double = 0.0)
-case class NestAcc(partials: List[NestPartial], buf: List[BufEv] = Nil)
-// vsnap (r20, per-row value snapshots under ALL ROWS): one running
-// (sum/min/max/first/last/cnt) aggregate per tracked member AS OF the row —
-// computed at emit over the committed row list (the batch commit-at-absorb
-// discipline makes that exactly the walk's snapshot: discarded speculations
-// never enter the committed list)
+// Nested-group output rows of the depth-specific entry points — thin
+// renamings of the depth-N twin's NestNMatch / NestNOutRow (one state
+// machine serves every depth; see cepPatternNestedNGroup). vsnap (r20,
+// per-row value snapshots under ALL ROWS): one running
+// (sum/min/max/first/last/cnt) aggregate per tracked member AS OF the row
 case class NestOutRow(ts: Timestamp, cls: String, reps: Long, subs: Long,
                       vsnap: Seq[Nest2Vals] = Nil)
 case class NestMatch(user_id: Long, first_ts: Timestamp, grp_first_ts: Timestamp,
                      grp_last_ts: Timestamp, n_reps: Long, n_inner: Long,
                      rows: Seq[NestOutRow] = Nil,
                      skey: String = "")
-// DEPTH-2 nested group (((I...)+ M)+ T)+ partial (the m39 batch shape):
-// the depth-1 NestPartial plus ONE more level of bookkeeping — completed
-// level-1 repetitions in the current outer repetition (curMids /
-// lastMidMs) and the current outer repetition's accumulated sub count
-// (curRepInner) — still O(1) state per partial. Every close is INSIDE its
-// repetition, so the walk stays causal with NO held closes at either
-// level (the depth-1 argument applied recursively). Row buffers mirror
-// the discard hierarchy: in-progress sub < current level-1 repetition <
-// current outer repetition < committed.
-case class Nest2Row(ms: Long, cls: String, reps: Long, mids: Long, subs: Long)
-// running value aggregates of ONE designated inner member (the batch
-// bindGroup twin at depth 2): (sum, min, max, first, last, cnt) — merged
-// through the same two pending levels as the counts (sub -> level-1
-// pending at completion, level-1 -> outer pending at the mid close,
-// outer -> committed at the tail close; discards mirror the row buffers)
+// running value aggregates of ONE tracked member: (sum, min, max, first,
+// last, cnt) — merged through the same pending levels as the counts (sub ->
+// level-1 pending at completion, level-l -> level-(l+1) pending at the
+// level-l close, outer -> committed at the tail close; discards mirror the
+// row buffers)
 // NULL member values ride the NaN channel (r20, the batch null
 // conventions on the stream): a NaN binding contributes to the POSITIONAL
 // first/last and the bind count `bnd`, but not to sum/min/max/cnt —
@@ -275,22 +234,6 @@ case class Nest2Vals(sum: Option[Double] = None, mn: Option[Double] = None,
                              case (a, b) => a.orElse(b) },
       first, later.last, cnt + later.cnt, bnd + later.bnd)
 }
-case class Nest2Partial(firstMs: Long, gFirstMs: Long = -1L, subIdx: Int = 0,
-                        curStartMs: Long = -1L, inSubLastMs: Long = -1L,
-                        lastCompMs: Long = -1L, curSubs: Long = 0L,
-                        lastMidMs: Long = -1L, curMids: Long = 0L,
-                        curRepInner: Long = 0L,
-                        reps: Long = 0L, midTot: Long = 0L, innerTot: Long = 0L,
-                        lastTailMs: Long = -1L,
-                        curSubRows: List[Nest2Row] = Nil,
-                        curRepRows: List[Nest2Row] = Nil,
-                        curORows: List[Nest2Row] = Nil,
-                        doneRows: List[Nest2Row] = Nil,
-                        curSubVal: Option[Double] = None,
-                        p1Vals: Nest2Vals = Nest2Vals(),
-                        oVals: Nest2Vals = Nest2Vals(),
-                        cVals: Nest2Vals = Nest2Vals())
-case class Nest2Acc(partials: List[Nest2Partial], buf: List[BufEv] = Nil)
 case class Nest2OutRow(ts: Timestamp, cls: String, reps: Long, mids: Long,
                        subs: Long)
 case class Nest2Match(user_id: Long, first_ts: Timestamp,
@@ -301,21 +244,22 @@ case class Nest2Match(user_id: Long, first_ts: Timestamp,
                       v_max: Option[Double] = None, v_first: Option[Double] = None,
                       v_last: Option[Double] = None, v_cnt: Long = 0L,
                       skey: String = "")
-// DEPTH-3 nested group match — emitted by cepPatternNested3Group, which
-// delegates to the depth-parametric cepPatternNestedNGroup (one state
-// machine; this is just the named-columns output shape)
 case class Nest3Match(user_id: Long, first_ts: Timestamp,
                       grp_first_ts: Timestamp, grp_last_ts: Timestamp,
                       n_reps: Long, n_mids2: Long, n_mids: Long, n_inner: Long,
                       skey: String = "")
-// DEPTH-N nested group partial (the followedByNestedNGroup twin): the
-// per-level bookkeeping held as sequences — accs(l) = counts of units
-// 0..l inside the CURRENT in-progress level-(l+1) repetition (unit-0 =
+// nested group partial at ANY depth (the followedByNested{,2,3,N}Group
+// twin): the per-level bookkeeping held as sequences — accs(l) = counts of
+// units 0..l inside the CURRENT in-progress level-(l+1) repetition (unit-0 =
 // inner subs; accs(l)(l) is the completed-child count the level-(l+1)
 // closer needs), lastClose(l) = the last unit-l close inside it, tot =
 // committed totals per unit (tot.last = outer repetitions). State stays
-// O(depth) per partial.
-// one materialized bound event of the depth-N chain: classifier + running
+// O(depth) per partial. Every close is INSIDE its repetition, so every
+// absorb-vs-close decision is immediate in event-time order — NO held
+// closes at any level (a child completing before the next closer was, by
+// arrival order, absorbed first: the batch rule "absorb while completing
+// strictly before the first closer opportunity").
+// one materialized bound event of the chain: classifier + running
 // counts as of the row, INNERMOST FIRST internally (counts(j) = unit-j
 // total; the output row reverses to the batch outermost-first order)
 case class NestNRow(ms: Long, cls: String, counts: List[Long],
@@ -331,8 +275,8 @@ case class NestNPartial(firstMs: Long, gFirstMs: Long = -1L, subIdx: Int = 0,
                         lastTailMs: Long = -1L,
                         // materializeRows (r19): rowBufs(0) = the
                         // in-progress sub's rows, rowBufs(l) = the current
-                        // level-l repetition's rows — the depth-2 twin's
-                        // discard hierarchy, depth-parametric; newest-first
+                        // level-l repetition's rows — the discard
+                        // hierarchy, depth-parametric; newest-first
                         rowBufs: List[List[NestNRow]] = Nil,
                         doneRows: List[NestNRow] = Nil,
                         // bindValues (r19): per pending level, one running
@@ -351,17 +295,6 @@ case class NestNMatch(user_id: Long, first_ts: Timestamp,
                       rows: Seq[NestNOutRow] = Nil,
                       member_vals: Seq[Nest2Vals] = Nil,
                       skey: String = "")
-// iterative-INNER nested group ((I...)+ T)+ partial with a PER-PARTIAL
-// residual threshold (the m49 batch shape on the stream): the anchor's
-// threshold tuple is known the moment its partial opens — ONE double per
-// partial is the whole extra state
-case class NestIterPartial(firstMs: Long, thr: Double,
-                           gFirstMs: Long = -1L, subIdx: Int = 0,
-                           curStartMs: Long = -1L, inSubLastMs: Long = -1L,
-                           lastCompMs: Long = -1L, curSubs: Long = 0L,
-                           reps: Long = 0L, innerTot: Long = 0L,
-                           lastTailMs: Long = -1L)
-case class NestIterAcc(partials: List[NestIterPartial], buf: List[BufEv] = Nil)
 // timed-out-partials pattern state: one partial per first-step event, the
 // bound step timestamps newest-first — O(steps) per partial
 case class TimeoutPartial(firstMs: Long, bound: List[Long])
@@ -2056,52 +1989,26 @@ object StreamOps {
 
   /** Streaming NESTED group `S ((I...)+ T)+` — the twin of
     * `Pattern.followedByNestedGroup` (the m33 batch shape; reference
-    * flink-cep GroupPattern composing recursively). The tail PUNCTUATES
+    * flink-cep GroupPattern composing recursively), and the depth-1 case of
+    * [[cepPatternNestedNGroup]] (one closing level holding the tail): this
+    * entry point only renames the N twin's fields. The tail PUNCTUATES
     * repetitions: each outer repetition is one-or-more complete inner
-    * sub-sequences followed by the tail event, and the batch rule — absorb
-    * the next sub-match only while it completes strictly BEFORE the first
-    * tail opportunity — is exactly arrival order over the
-    * watermark-finalized event-time prefix (a sub completing first was
-    * absorbed first; a tail arriving first closes the repetition and
-    * discards any in-progress sub). So the walk needs NO held closes and
-    * O(1) state per partial: sub-step index, current repetition's
-    * completed-sub count, chain boundaries, outer/inner totals. A tail
-    * with no completed sub in the current repetition is skipped
-    * (skip-till-next), matching the batch tail-binds-after-the-chain rule.
-    * The match finalizes at window expiry (a longer chain could form until
-    * then); emission carries first/last boundaries plus outer and
-    * total-inner repetition counts — the batch `<g>_first_ts/_last_ts/_n/
-    * _inner_n` columns. Under `materializeRows` (the batch
-    * `materializeNestedRows` twin) the match additionally carries every
-    * bound event as (ts, cls, running reps, running subs): the in-progress
-    * sub's rows are discarded if a tail closes the repetition first, and a
-    * repetition's rows commit only when its tail binds — exactly the batch
-    * never-emit-a-failed-repetition rule; state stays window-bounded.
-    * Equal-timestamp completion-vs-close resolves by
-    * the (ms, type, tie, value) processing order (the established twin
-    * convention; batch uses strict time inequalities). maxPartials cap,
-    * watermark pruning and event-time eviction as in [[cepPatternGroup]]. */
-  /** `innerOptional` (r15) — the `((I...)* T)+` twin of the batch
-    * `followedByNestedGroup(innerOptional = true)`: a tail may close a
-    * ZERO-sub repetition (strictly after the previous tail / the anchor),
-    * discarding any in-progress sub — in arrival order this IS the batch
-    * tail-first rule (the tail arrived before the first sub completed);
-    * the group's first boundary is then that tail. EQUAL-timestamp
-    * sub-completion vs tail resolves by the (ms, type, tie, value)
-    * processing order — the established twin convention (batch ties
-    * favor the tail via its strict inequalities); same-ms corpora can
-    * diverge there, as with every other cep twin. */
-  /** `rowValues` (r20): each materialized row additionally carries the
-    * running per-member value snapshots AS OF the row (`vsnap`, indexed
-    * inner members then the tail) — computed at emit over the committed
-    * row list, which the batch commit-at-absorb discipline makes exactly
-    * the walk's snapshot. `thresholdOf`/`innerRes`/`tailRes` (r20, the
-    * [[cepPatternNestedGroupIter]] design generalized): iterative
-    * (relative) residual conditions against the match's OWN anchor — the
-    * threshold is read once when the partial opens, and a member/tail
-    * candidate must additionally satisfy its residual against it
-    * (reference flink-cep IterativeCondition.java composes with every
-    * quantifier). */
+    * sub-sequences followed by the tail event — absorb the next sub-match
+    * only while it completes strictly BEFORE the first tail opportunity. A
+    * tail with no completed sub in the current repetition is skipped
+    * (skip-till-next) unless `innerOptional` (the `((I...)* T)+` twin: a
+    * zero-sub close is the batch tail-first repetition, and the group's
+    * first boundary is then that tail). The match finalizes at window
+    * expiry and carries first/last boundaries plus outer and total-inner
+    * repetition counts — the batch `<g>_first_ts/_last_ts/_n/_inner_n`
+    * columns. `materializeRows` (the batch `materializeNestedRows` twin)
+    * adds every committed bound event as (ts, cls, running reps, running
+    * subs), and `rowValues` the running per-member value snapshots AS OF
+    * the row (`vsnap`, indexed inner members then the tail).
+    * `thresholdOf`/`innerRes`/`tailRes` (r20): iterative (relative)
+    * residual conditions against the match's OWN anchor — the threshold is
+    * read once when the partial opens (reference flink-cep
+    * IterativeCondition.java composes with every quantifier). */
   def cepPatternNestedGroup(events: Dataset[Event], watermark: String,
                             firstPred: Event => Boolean,
                             innerPreds: Seq[Event => Boolean],
@@ -2116,174 +2023,28 @@ object StreamOps {
                             thresholdOf: Event => Double = null,
                             innerRes: Seq[(Event, Double) => Boolean] = Nil,
                             tailRes: (Event, Double) => Boolean = null): Dataset[NestMatch] = {
-    require(innerPreds.size >= 2, "the inner sub-group needs at least two steps")
-    require(!materializeRows || innerNames.size == innerPreds.size,
-      "materializeRows needs one classifier name per inner step")
-    require(!rowValues || materializeRows,
-      "rowValues rides the materialized rows")
-    require(innerRes.isEmpty || innerRes.size == innerPreds.size,
-      "innerRes needs one residual (or pass-through) per inner step")
-    require((innerRes.isEmpty && tailRes == null) || thresholdOf != null,
-      "residual conditions need thresholdOf")
     implicit val outEnc = Encoders.product[NestMatch]
-    implicit val accEnc = Encoders.product[NestAcc]
-    implicit val keyEnc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    val memberIdx: Map[String, Int] =
-      if (!rowValues) Map.empty else (innerNames :+ tailName).zipWithIndex.toMap
-    tsWatermarked(events, watermark)
-      .groupByKey(e => (e.user_id, e.skey))
-      .flatMapGroupsWithState[NestAcc, NestMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (gkey: (Long, String), rows: Iterator[Event], state: GroupState[NestAcc]) =>
-          val userId = gkey._1
-          var partials = state.getOption.map(_.partials).getOrElse(Nil)
-          val out = Seq.newBuilder[NestMatch]
-          def emit(p: NestPartial): Unit =
-            out += NestMatch(userId, new Timestamp(p.firstMs),
-              new Timestamp(p.gFirstMs), new Timestamp(p.lastTailMs),
-              p.reps, p.innerTot,
-              if (!materializeRows) Nil
-              else if (!rowValues) p.doneRows.reverse.map(r =>
-                NestOutRow(new Timestamp(r.ms), r.cls, r.reps, r.subs))
-              else {
-                var cur = Vector.fill(memberIdx.size)(Nest2Vals())
-                p.doneRows.reverse.map { r =>
-                  val i = memberIdx(r.cls)
-                  cur = cur.updated(i, cur(i).add(r.v))
-                  NestOutRow(new Timestamp(r.ms), r.cls, r.reps, r.subs, cur)
-                }
-              })
-          val wm = state.getCurrentWatermarkMs()
-          val buf0 = state.getOption.map(_.buf).getOrElse(Nil) ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (readyB, held) = buf0.partition(_.ms < wm)
-          readyB.map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
-            .sortBy(e => (e.ts.getTime, e.event_type, tieOf(e), e.value)).foreach { e =>
-            val t = e.ts.getTime
-            partials = partials.flatMap { p =>
-              if (t > p.firstMs + withinMs) {
-                // window expired: the chain is final — completed
-                // repetitions emit, an in-progress one is discarded
-                if (p.reps >= 1) emit(p)
-                None
-              } else {
-                // the next binding must be strictly after: the previous
-                // tail (repetition anchor), the last completed sub (chain
-                // extension), or the in-progress sub's last bound step
-                val anchor =
-                  if (p.subIdx > 0) p.inSubLastMs
-                  else if (p.curSubs > 0) p.lastCompMs
-                  else math.max(p.lastTailMs, p.firstMs)
-                if (p.subIdx < innerPreds.size && innerPreds(p.subIdx)(e) &&
-                    (innerRes.isEmpty || innerRes(p.subIdx)(e, p.thr)) &&
-                    t > anchor) {
-                  if (p.subIdx == innerPreds.size - 1) {
-                    // inner sub-sequence completes: absorb into the chain;
-                    // the final member's row counts the sub it completes
-                    // (row buffers are newest-first; emit reverses)
-                    val firstOfMatch = p.reps == 0 && p.curSubs == 0
-                    val repRows =
-                      if (!materializeRows) Nil
-                      else NestRow(t, innerNames.last, p.reps,
-                        p.innerTot + p.curSubs + 1, e.value) ::
-                        (p.curSubRows ::: p.curRepRows)
-                    Some(p.copy(
-                      gFirstMs = if (firstOfMatch) p.curStartMs else p.gFirstMs,
-                      lastCompMs = t, curSubs = p.curSubs + 1,
-                      subIdx = 0, curStartMs = -1L, inSubLastMs = -1L,
-                      curSubRows = Nil, curRepRows = repRows))
-                  } else if (p.subIdx == 0)
-                    Some(p.copy(subIdx = 1, curStartMs = t, inSubLastMs = t,
-                      curSubRows = if (!materializeRows) Nil
-                        else List(NestRow(t, innerNames.head, p.reps,
-                          p.innerTot + p.curSubs, e.value))))
-                  else Some(p.copy(subIdx = p.subIdx + 1, inSubLastMs = t,
-                    curSubRows = if (!materializeRows) Nil
-                      else NestRow(t, innerNames(p.subIdx), p.reps,
-                        p.innerTot + p.curSubs, e.value) :: p.curSubRows))
-                } else if (tailPred(e) &&
-                    (tailRes == null || tailRes(e, p.thr)) &&
-                    (p.curSubs >= 1 || innerOptional) &&
-                    t > (if (p.curSubs >= 1) p.lastCompMs
-                         else math.max(p.lastTailMs, p.firstMs))) {
-                  // the tail closes the repetition; an in-progress sub is
-                  // discarded (the batch next-repetition anchor is strictly
-                  // after this tail, so its start can never be reused).
-                  // innerOptional: a ZERO-sub close is the batch tail-first
-                  // repetition — the group's first boundary is this tail
-                  // when nothing bound before it
-                  Some(p.copy(reps = p.reps + 1,
-                    gFirstMs = if (p.reps == 0 && p.curSubs == 0) t
-                               else p.gFirstMs,
-                    innerTot = p.innerTot + p.curSubs, lastTailMs = t,
-                    curSubs = 0L, subIdx = 0, curStartMs = -1L,
-                    inSubLastMs = -1L, lastCompMs = -1L,
-                    curSubRows = Nil, curRepRows = Nil,
-                    doneRows = if (!materializeRows) Nil
-                      else NestRow(t, tailName, p.reps + 1,
-                        p.innerTot + p.curSubs, e.value) ::
-                        (p.curRepRows ::: p.doneRows)))
-                } else Some(p)
-              }
-            }
-            if (firstPred(e))
-              partials = (NestPartial(t,
-                thr = if (thresholdOf == null) 0.0 else thresholdOf(e))
-                :: partials).take(maxPartials)
-          }
-          // strict: expiry is final only once the watermark strictly
-          // passes the window end (an event AT the end may be buffered)
-          val (expired, alive) = partials.partition(_.firstMs + withinMs < wm)
-          expired.foreach(p => if (p.reps >= 1) emit(p))
-          partials = alive
-          if (partials.isEmpty && held.isEmpty) state.remove()
-          else {
-            state.update(NestAcc(partials, held))
-            state.setTimeoutTimestamp(math.max(wm + 1,
-              (partials.map(_.firstMs + withinMs) ++ held.map(_.ms)).min))
-          }
-          if (gkey._2.isEmpty) out.result().iterator
-          else out.result().map(_.copy(skey = gkey._2)).iterator
-      }
+    cepPatternNestedNGroup(events, watermark, firstPred, innerPreds,
+      Seq(tailPred), withinMs, maxPartials, tieOf, innerOptional,
+      materializeRows, innerNames, Seq(tailName), rowValues = rowValues,
+      thresholdOf = thresholdOf, innerRes = innerRes,
+      closerRes = if (tailRes == null) Nil else Seq(tailRes))
+      .map(m => NestMatch(m.user_id, m.first_ts, m.grp_first_ts,
+        m.grp_last_ts, m.n_reps, m.n_inner,
+        m.rows.map(r => NestOutRow(r.ts, r.cls, r.reps, r.subs, r.vsnap)),
+        m.skey))
   }
 
   /** Streaming DEPTH-2 nested group `S (((I...)+ M)+ T)+` — the twin of
-    * `Pattern.followedByNested2Group` (the m39 batch shape; reference
-    * flink-cep GroupPattern.java:30 composes recursively ON STREAMS —
-    * NFA.java runs on DataStream — so the depth-2 walk belongs on the
-    * stream too; r18, closing the r17 verdict's top reference-fidelity
-    * gap). The depth-1 [[cepPatternNestedGroup]] causality argument
-    * applies RECURSIVELY: the batch rule at every level — absorb the next
-    * child repetition only while it completes strictly BEFORE the
-    * earliest first-closer candidate — is exactly arrival order over the
-    * watermark-finalized event-time prefix (a child completing first was
-    * absorbed first; a closer arriving first closes its level and
-    * discards the in-progress child). So the walk needs NO held closes at
-    * either level and O(1) state per partial: sub-step index, the current
-    * level-1 repetition's completed-sub count, the current outer
-    * repetition's completed-level-1 count and accumulated subs, chain
-    * boundaries, committed totals. A mid with no completed sub in the
-    * current level-1 repetition is skipped (skip-till-next) unless
-    * `innerOptional` (the `(((I...)* M)+ T)+` twin: a zero-sub close IS
-    * the batch mid-first repetition); a tail with no completed level-1
-    * repetition in the current outer repetition is skipped. The match
-    * finalizes at window expiry (a longer chain could form until then);
-    * emission carries first/last boundaries plus outer / level-1 /
-    * total-inner counts — the batch `<g>_first_ts/_last_ts/_n/_mid_n/
-    * _inner_n` columns. Under `materializeRows` (the batch
-    * `materializeNestedRows` twin at depth 2) the match additionally
-    * carries every bound event as (ts, cls, running reps, mids, subs),
-    * with the row-buffer DISCARD HIERARCHY mirroring the repetition
-    * levels: an in-progress sub's rows die at a mid close, the current
-    * level-1 repetition's rows die at a tail close, a level-1
-    * repetition's rows commit into the outer attempt at its mid close,
-    * and the outer attempt's rows commit only when its tail binds —
-    * exactly the batch never-emit-a-failed-repetition rule at every
-    * level; state stays window-bounded. Equal-timestamp decisions resolve
-    * by the (ms, type, tie, value) processing order (the established twin
-    * convention; batch uses strict time inequalities). maxPartials cap,
-    * watermark pruning and event-time eviction as in
-    * [[cepPatternNestedGroup]]. */
+    * `Pattern.followedByNested2Group` (the m39 batch shape; r18). The
+    * depth-2 case of [[cepPatternNestedNGroup]]: this entry point names the
+    * level-1 count (`n_mids`, `mids` per row) and, when `valueInnerIdx >=
+    * 0`, exposes THAT inner step's running value aggregates over committed
+    * structure (`v_sum` .. `v_cnt`, the batch bindGroup twin at depth 2) —
+    * a sub's value enters the level-1 pending state at the sub's
+    * completion, a level-1 repetition's at its mid close, and the outer
+    * attempt's only at the tail close; discards mirror the count discards
+    * at every level. */
   def cepPatternNested2Group(events: Dataset[Event], watermark: String,
                              firstPred: Event => Boolean,
                              innerPreds: Seq[Event => Boolean],
@@ -2297,164 +2058,21 @@ object StreamOps {
                              tieOf: Event => Double = _.value,
                              innerOptional: Boolean = false,
                              valueInnerIdx: Int = -1): Dataset[Nest2Match] = {
-    require(innerPreds.size >= 2, "the inner sub-group needs at least two steps")
-    require(!materializeRows || innerNames.size == innerPreds.size,
-      "materializeRows needs one classifier name per inner step")
-    // valueInnerIdx >= 0: the batch bindGroup twin at depth 2 — running
-    // value aggregates of THAT inner step's bound value across COMMITTED
-    // structure: a sub's value enters the level-1 pending state at the
-    // sub's completion, a level-1 repetition's at its mid close, and the
-    // outer attempt's only at the tail close — discards mirror the count
-    // discards at every level
     require(valueInnerIdx < innerPreds.size,
       s"valueInnerIdx $valueInnerIdx out of range")
     implicit val outEnc = Encoders.product[Nest2Match]
-    implicit val accEnc = Encoders.product[Nest2Acc]
-    implicit val keyEnc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    tsWatermarked(events, watermark)
-      .groupByKey(e => (e.user_id, e.skey))
-      .flatMapGroupsWithState[Nest2Acc, Nest2Match](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (gkey: (Long, String), rows: Iterator[Event], state: GroupState[Nest2Acc]) =>
-          val userId = gkey._1
-          var partials = state.getOption.map(_.partials).getOrElse(Nil)
-          val out = Seq.newBuilder[Nest2Match]
-          def emit(p: Nest2Partial): Unit =
-            out += Nest2Match(userId, new Timestamp(p.firstMs),
-              new Timestamp(p.gFirstMs), new Timestamp(p.lastTailMs),
-              p.reps, p.midTot, p.innerTot,
-              if (!materializeRows) Nil
-              else p.doneRows.reverse.map(r =>
-                Nest2OutRow(new Timestamp(r.ms), r.cls, r.reps, r.mids, r.subs)),
-              p.cVals.sum, p.cVals.mn, p.cVals.mx, p.cVals.first,
-              p.cVals.last, p.cVals.cnt)
-          val wm = state.getCurrentWatermarkMs()
-          val buf0 = state.getOption.map(_.buf).getOrElse(Nil) ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (readyB, held) = buf0.partition(_.ms < wm)
-          readyB.map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
-            .sortBy(e => (e.ts.getTime, e.event_type, tieOf(e), e.value)).foreach { e =>
-            val t = e.ts.getTime
-            partials = partials.flatMap { p =>
-              if (t > p.firstMs + withinMs) {
-                // window expired: the chain is final — completed outer
-                // repetitions emit, in-progress state at any level is
-                // discarded
-                if (p.reps >= 1) emit(p)
-                None
-              } else {
-                // the next inner binding must be strictly after: the
-                // in-progress sub's last step, the last completed sub
-                // (chain extension), the previous level-1 repetition's
-                // mid (new level-1 repetition), or the previous tail /
-                // the anchor (new outer repetition)
-                val subAnchor =
-                  if (p.subIdx > 0) p.inSubLastMs
-                  else if (p.curSubs > 0) p.lastCompMs
-                  else if (p.curMids > 0) p.lastMidMs
-                  else math.max(p.lastTailMs, p.firstMs)
-                if (p.subIdx < innerPreds.size && innerPreds(p.subIdx)(e) &&
-                    t > subAnchor) {
-                  // the designated value member binds at its own step
-                  val sv = if (p.subIdx == valueInnerIdx) Some(e.value)
-                           else p.curSubVal
-                  if (p.subIdx == innerPreds.size - 1) {
-                    // inner sub-sequence completes: absorb into the
-                    // current level-1 repetition's chain (row buffers are
-                    // newest-first; emit reverses); the sub's designated
-                    // value folds into the level-1 pending state NOW
-                    val gF = if (p.gFirstMs < 0) p.curStartMs else p.gFirstMs
-                    val subRows =
-                      if (!materializeRows) Nil
-                      else Nest2Row(t, innerNames.last, p.reps,
-                        p.midTot + p.curMids,
-                        p.innerTot + p.curRepInner + p.curSubs + 1) ::
-                        p.curSubRows
-                    Some(p.copy(gFirstMs = gF, lastCompMs = t,
-                      curSubs = p.curSubs + 1,
-                      subIdx = 0, curStartMs = -1L, inSubLastMs = -1L,
-                      curSubRows = Nil,
-                      curRepRows = subRows ::: p.curRepRows,
-                      curSubVal = None,
-                      p1Vals = sv.fold(p.p1Vals)(p.p1Vals.add)))
-                  } else if (p.subIdx == 0)
-                    Some(p.copy(subIdx = 1, curStartMs = t, inSubLastMs = t,
-                      curSubVal = sv,
-                      curSubRows = if (!materializeRows) Nil
-                        else List(Nest2Row(t, innerNames.head, p.reps,
-                          p.midTot + p.curMids,
-                          p.innerTot + p.curRepInner + p.curSubs))))
-                  else Some(p.copy(subIdx = p.subIdx + 1, inSubLastMs = t,
-                    curSubVal = sv,
-                    curSubRows = if (!materializeRows) Nil
-                      else Nest2Row(t, innerNames(p.subIdx), p.reps,
-                        p.midTot + p.curMids,
-                        p.innerTot + p.curRepInner + p.curSubs) :: p.curSubRows))
-                } else if (midPred(e) && (p.curSubs >= 1 || innerOptional) &&
-                    t > (if (p.curSubs >= 1) p.lastCompMs
-                         else if (p.curMids > 0) p.lastMidMs
-                         else math.max(p.lastTailMs, p.firstMs))) {
-                  // the mid closes the level-1 repetition; an in-progress
-                  // sub is discarded. innerOptional: a ZERO-sub close is
-                  // the batch mid-first repetition — the group's first
-                  // boundary is this mid when nothing bound before it
-                  val gF = if (p.gFirstMs < 0) t else p.gFirstMs
-                  val midRow =
-                    if (!materializeRows) Nil
-                    else List(Nest2Row(t, midName, p.reps,
-                      p.midTot + p.curMids + 1,
-                      p.innerTot + p.curRepInner + p.curSubs))
-                  Some(p.copy(gFirstMs = gF, curMids = p.curMids + 1,
-                    lastMidMs = t,
-                    curRepInner = p.curRepInner + p.curSubs,
-                    curSubs = 0L, subIdx = 0, curStartMs = -1L,
-                    inSubLastMs = -1L, lastCompMs = -1L,
-                    curSubRows = Nil, curRepRows = Nil,
-                    curORows = if (!materializeRows) Nil
-                      else (midRow ::: p.curRepRows) ::: p.curORows,
-                    curSubVal = None,
-                    p1Vals = Nest2Vals(),
-                    oVals = p.oVals.merge(p.p1Vals)))
-                } else if (tailPred(e) && p.curMids >= 1 && t > p.lastMidMs) {
-                  // the tail closes the outer repetition; the in-progress
-                  // level-1 repetition (completed subs included) is
-                  // discarded — the batch chain ends at the last ABSORBED
-                  // level-1 repetition's mid
-                  Some(p.copy(reps = p.reps + 1,
-                    midTot = p.midTot + p.curMids,
-                    innerTot = p.innerTot + p.curRepInner,
-                    lastTailMs = t,
-                    curMids = 0L, curRepInner = 0L, lastMidMs = -1L,
-                    curSubs = 0L, subIdx = 0, curStartMs = -1L,
-                    inSubLastMs = -1L, lastCompMs = -1L,
-                    curSubRows = Nil, curRepRows = Nil, curORows = Nil,
-                    doneRows = if (!materializeRows) Nil
-                      else (Nest2Row(t, tailName, p.reps + 1,
-                        p.midTot + p.curMids,
-                        p.innerTot + p.curRepInner) :: p.curORows) :::
-                        p.doneRows,
-                    curSubVal = None, p1Vals = Nest2Vals(),
-                    oVals = Nest2Vals(),
-                    cVals = p.cVals.merge(p.oVals)))
-                } else Some(p)
-              }
-            }
-            if (firstPred(e))
-              partials = (Nest2Partial(t) :: partials).take(maxPartials)
-          }
-          // strict: expiry is final only once the watermark strictly
-          // passes the window end (an event AT the end may be buffered)
-          val (expired, alive) = partials.partition(_.firstMs + withinMs < wm)
-          expired.foreach(p => if (p.reps >= 1) emit(p))
-          partials = alive
-          if (partials.isEmpty && held.isEmpty) state.remove()
-          else {
-            state.update(Nest2Acc(partials, held))
-            state.setTimeoutTimestamp(math.max(wm + 1,
-              (partials.map(_.firstMs + withinMs) ++ held.map(_.ms)).min))
-          }
-          if (gkey._2.isEmpty) out.result().iterator
-          else out.result().map(_.copy(skey = gkey._2)).iterator
+    val bindValues = valueInnerIdx >= 0
+    cepPatternNestedNGroup(events, watermark, firstPred, innerPreds,
+      Seq(midPred, tailPred), withinMs, maxPartials, tieOf, innerOptional,
+      materializeRows, innerNames, Seq(midName, tailName),
+      bindValues = bindValues)
+      .map { m =>
+        val v = if (bindValues) m.member_vals(valueInnerIdx) else Nest2Vals()
+        Nest2Match(m.user_id, m.first_ts, m.grp_first_ts, m.grp_last_ts,
+          m.n_reps, m.level_counts.head, m.n_inner,
+          m.rows.map(r => Nest2OutRow(r.ts, r.cls, r.reps,
+            r.level_counts.head, r.subs)),
+          v.sum, v.mn, v.mx, v.first, v.last, v.cnt, m.skey)
       }
   }
 
@@ -2483,12 +2101,15 @@ object StreamOps {
         m.n_inner, skey = m.skey))
   }
 
-  /** Streaming DEPTH-N nested group — the twin of the depth-parametric
-    * `Pattern.followedByNestedNGroup` (r18: the batch walk takes ANY
-    * nesting depth, so the stream side must too, or the twin convention
-    * re-opens one depth up every round). `closerPreds(l)` closes each
-    * level-(l+1) repetition, outermost last — depth = `closerPreds.size`
-    * (>= 2; depth 1 is [[cepPatternNestedGroup]]). The causality argument
+  /** Streaming nested group at ANY depth — the twin of the
+    * depth-parametric `Pattern.followedByNestedNGroup` (r18: the batch walk
+    * takes ANY nesting depth, so the stream side must too, or the twin
+    * convention re-opens one depth up every round). `closerPreds(l)` closes
+    * each level-(l+1) repetition, outermost last — depth =
+    * `closerPreds.size` >= 1. This is the ONE nested-group state machine:
+    * [[cepPatternNestedGroup]], [[cepPatternNested2Group]],
+    * [[cepPatternNested3Group]] and [[cepPatternNestedGroupIter]] only
+    * rename its fields. The causality argument
     * is depth-inductive: every close is inside its repetition, so
     * absorb-vs-close at EVERY level is immediate in arrival order over
     * the watermark-finalized prefix — no held closes, O(depth) state per
@@ -2503,7 +2124,8 @@ object StreamOps {
     * mid_n` column order) and the total inner count, at window expiry.
     * `materializeRows` (r19) emits every committed bound event with its
     * classifier and running per-level counts via the per-level row-buffer
-    * discard hierarchy (the depth-2 twin's convention, depth-parametric);
+    * discard hierarchy (in-progress sub < each in-progress level <
+    * committed);
     * `bindValues` (r19) carries one running (sum/min/max/first/last/cnt)
     * aggregate per member — inner members then closers — per pending
     * level, merged and discarded exactly like the counts (the batch
@@ -2528,9 +2150,8 @@ object StreamOps {
                              innerRes: Seq[(Event, Double) => Boolean] = Nil,
                              closerRes: Seq[(Event, Double) => Boolean] = Nil): Dataset[NestNMatch] = {
     require(innerPreds.size >= 2, "the inner sub-group needs at least two steps")
-    require(closerPreds.size >= 2,
-      "a depth-N nested group needs at least TWO closing levels (depth 1 " +
-        "is cepPatternNestedGroup)")
+    require(closerPreds.nonEmpty,
+      "a nested group needs at least one closing level")
     require(!materializeRows || (innerNames.size == innerPreds.size &&
       closerNames.size == closerPreds.size),
       "materializeRows needs one classifier name per inner step and per closer")
@@ -2644,8 +2265,7 @@ object StreamOps {
                 // plus the in-progress accumulations from the CLOSED unit
                 // up (accs(closeLvl-1) is the unit this close absorbs;
                 // units inside deeper in-progress repetitions are
-                // discarded by it) — the depth-2 twin's per-row counts,
-                // depth-parametric
+                // discarded by it)
                 def rowCounts(closeLvl: Int, inc: Boolean): List[Long] =
                   (0 to nD).toList.map { j =>
                     val acc = (math.max(closeLvl - 1, j) until nD)
@@ -2782,93 +2402,28 @@ object StreamOps {
 
   /** Streaming nested group with an ITERATIVE INNER residual — the twin of
     * `Pattern.followedByNestedGroup(...).bindInnerResidual(...)` (the m49
-    * batch shape on the stream; r18 stretch, VERDICT r17 item 8): an inner
-    * member's acceptance is relative to the match's OWN anchor —
-    * `thresholdOf` reads the threshold off the partial-opening event ONCE
-    * (NaN = a null anchor binding: SQL 3VL, the partial never binds any
-    * sub), and `innerPreds` take (event, threshold). Where the batch
-    * compile parametrizes the shared sub-match table by DISTINCT threshold
-    * tuples, the stream needs none of that machinery: each partial simply
-    * CARRIES its own threshold — one double of state — and evaluates the
-    * residual inline, because the per-key walk is already per-anchor.
-    * Everything else (causal absorb-vs-close, skip-till-next tails,
-    * expiry finalization, maxPartials) is [[cepPatternNestedGroup]]
-    * verbatim. */
+    * batch shape on the stream; r18): an inner member's acceptance is
+    * relative to the match's OWN anchor — `thresholdOf` reads the
+    * threshold off the partial-opening event ONCE (NaN = a null anchor
+    * binding: SQL 3VL, the partial never binds any sub), and `innerPreds`
+    * take (event, threshold). Where the batch compile parametrizes the
+    * shared sub-match table by DISTINCT threshold tuples, the stream needs
+    * none of that: each partial CARRIES its own threshold, so this is
+    * [[cepPatternNestedGroup]] with the predicates moved into `innerRes`. */
   def cepPatternNestedGroupIter(events: Dataset[Event], watermark: String,
                                 firstPred: Event => Boolean,
                                 thresholdOf: Event => Double,
                                 innerPreds: Seq[(Event, Double) => Boolean],
                                 tailPred: Event => Boolean, withinMs: Long,
                                 maxPartials: Int = 256,
-                                tieOf: Event => Double = _.value): Dataset[NestMatch] = {
-    require(innerPreds.size >= 2, "the inner sub-group needs at least two steps")
-    implicit val outEnc = Encoders.product[NestMatch]
-    implicit val accEnc = Encoders.product[NestIterAcc]
-    implicit val keyEnc = Encoders.scalaLong
-    tsWatermarked(events, watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[NestIterAcc, NestMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[NestIterAcc]) =>
-          var partials = state.getOption.map(_.partials).getOrElse(Nil)
-          val out = Seq.newBuilder[NestMatch]
-          def emit(p: NestIterPartial): Unit =
-            out += NestMatch(userId, new Timestamp(p.firstMs),
-              new Timestamp(p.gFirstMs), new Timestamp(p.lastTailMs),
-              p.reps, p.innerTot)
-          val wm = state.getCurrentWatermarkMs()
-          val buf0 = state.getOption.map(_.buf).getOrElse(Nil) ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (readyB, held) = buf0.partition(_.ms < wm)
-          readyB.map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
-            .sortBy(e => (e.ts.getTime, e.event_type, tieOf(e), e.value)).foreach { e =>
-            val t = e.ts.getTime
-            partials = partials.flatMap { p =>
-              if (t > p.firstMs + withinMs) {
-                if (p.reps >= 1) emit(p)
-                None
-              } else {
-                val anchor =
-                  if (p.subIdx > 0) p.inSubLastMs
-                  else if (p.curSubs > 0) p.lastCompMs
-                  else math.max(p.lastTailMs, p.firstMs)
-                // NaN threshold: no inner step ever binds (SQL 3VL — the
-                // anchor's referenced binding was null)
-                if (!p.thr.isNaN && p.subIdx < innerPreds.size &&
-                    innerPreds(p.subIdx)(e, p.thr) && t > anchor) {
-                  if (p.subIdx == innerPreds.size - 1) {
-                    val firstOfMatch = p.reps == 0 && p.curSubs == 0
-                    Some(p.copy(
-                      gFirstMs = if (firstOfMatch) p.curStartMs else p.gFirstMs,
-                      lastCompMs = t, curSubs = p.curSubs + 1,
-                      subIdx = 0, curStartMs = -1L, inSubLastMs = -1L))
-                  } else if (p.subIdx == 0)
-                    Some(p.copy(subIdx = 1, curStartMs = t, inSubLastMs = t))
-                  else Some(p.copy(subIdx = p.subIdx + 1, inSubLastMs = t))
-                } else if (tailPred(e) && p.curSubs >= 1 && t > p.lastCompMs) {
-                  Some(p.copy(reps = p.reps + 1,
-                    innerTot = p.innerTot + p.curSubs, lastTailMs = t,
-                    curSubs = 0L, subIdx = 0, curStartMs = -1L,
-                    inSubLastMs = -1L, lastCompMs = -1L))
-                } else Some(p)
-              }
-            }
-            if (firstPred(e))
-              partials = (NestIterPartial(t, thresholdOf(e)) :: partials)
-                .take(maxPartials)
-          }
-          val (expired, alive) = partials.partition(_.firstMs + withinMs < wm)
-          expired.foreach(p => if (p.reps >= 1) emit(p))
-          partials = alive
-          if (partials.isEmpty && held.isEmpty) state.remove()
-          else {
-            state.update(NestIterAcc(partials, held))
-            state.setTimeoutTimestamp(math.max(wm + 1,
-              (partials.map(_.firstMs + withinMs) ++ held.map(_.ms)).min))
-          }
-          out.result().iterator
-      }
-  }
+                                tieOf: Event => Double = _.value): Dataset[NestMatch] =
+    cepPatternNestedGroup(events, watermark, firstPred,
+      innerPreds.map(_ => (_: Event) => true), tailPred, withinMs,
+      maxPartials, tieOf = tieOf, thresholdOf = thresholdOf,
+      // NaN threshold: no inner step ever binds (SQL 3VL — the anchor's
+      // referenced binding was null)
+      innerRes = innerPreds.map(f =>
+        (e: Event, thr: Double) => !thr.isNaN && f(e, thr)))
 
   /** Streaming physical-lag enrichment — the MATCH_RECOGNIZE `PREV(V.col,
     * n)` navigation twin (the m27/m28 batch lowering precomputes the same

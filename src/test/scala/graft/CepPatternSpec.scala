@@ -1482,6 +1482,54 @@ class CepPatternSpec extends AnyFunSuite with SparkTest {
     assert(streaming2 == batch2 &&
       batch2 == Set((4L, at(2), at(20), 2L, 2L, 2L)),
       s"streaming2=$streaming2 batch2=$batch2")
+    // depth 1 through the N entry points: ONE closing level is the
+    // ((I...)+ T)+ shape of followedByNestedGroup / cepPatternNestedGroup
+    // (key 5: two punctuated reps, a tail with no sub skipped, a dangling
+    // sub; key 6: a tail before any sub skipped)
+    val all1 = Seq(
+      (5L, at(0), "s"), (5L, at(2), "b"), (5L, at(4), "c"), (5L, at(6), "b"),
+      (5L, at(8), "c"), (5L, at(10), "v"), (5L, at(12), "v"), (5L, at(14), "b"),
+      (5L, at(16), "c"), (5L, at(18), "v"), (5L, at(20), "b"),
+      (6L, at(0), "s"), (6L, at(2), "v"), (6L, at(4), "b"), (6L, at(6), "c"),
+      (6L, at(8), "v"))
+    val inner1 = Seq("b" -> ($"event_type" === "b"), "c" -> ($"event_type" === "c"))
+    val tail1 = Seq("v" -> ($"event_type" === "v"))
+    def batch1(p: Pattern) = p.oneOrMore().within(HOUR)
+      .detect(all1.toDF("user_id", "ts", "event_type"), $"user_id", $"ts")
+      .select($"key", $"g_first_ts", $"g_last_ts", $"g_n", $"g_inner_n")
+      .as[(Long, Timestamp, Timestamp, Long, Long)].collect().toSet
+    val viaN1 = batch1(Pattern.begin("s", $"event_type" === "s")
+      .followedByNestedNGroup("g", inner1, Seq(tail1)))
+    val via1 = batch1(Pattern.begin("s", $"event_type" === "s")
+      .followedByNestedGroup("g", inner1, tail1))
+    assert(viaN1 == via1 && via1 == Set(
+      (5L, at(2), at(18), 2L, 3L), (6L, at(4), at(8), 1L, 1L)),
+      s"viaN1=$viaN1 via1=$via1")
+    def stream1(name: String,
+                mk: org.apache.spark.sql.Dataset[StreamOps.Event] =>
+                  org.apache.spark.sql.DataFrame) = {
+      val in1 = MemoryStream[graft.streaming.Event]
+      val q1 = mk(in1.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      in1.addData(all1.map { case (u, ts, t) => StreamOps.Event(u, ts, t, 0.0) })
+      q1.processAllAvailable()
+      in1.addData(StreamOps.Event(99L, at(600), "zzz", 0.0)); q1.processAllAvailable()
+      in1.addData(StreamOps.Event(99L, at(610), "zzz", 0.0)); q1.processAllAvailable()
+      q1.stop()
+      spark.table(name)
+        .select($"user_id", $"grp_first_ts", $"grp_last_ts", $"n_reps", $"n_inner")
+        .as[(Long, Timestamp, Timestamp, Long, Long)].collect().toSet
+    }
+    val streamN1 = stream1("s_nestn1_parity", ds =>
+      StreamOps.cepPatternNestedNGroup(ds, "2 hours", _.event_type == "s",
+        Seq(_.event_type == "b", _.event_type == "c"),
+        Seq(_.event_type == "v"), HOUR).toDF())
+    val streamD1 = stream1("s_nest1_parity", ds =>
+      StreamOps.cepPatternNestedGroup(ds, "2 hours", _.event_type == "s",
+        Seq(_.event_type == "b", _.event_type == "c"),
+        _.event_type == "v", HOUR).toDF())
+    assert(streamN1 == streamD1 && streamD1 == via1,
+      s"streamN1=$streamN1 streamD1=$streamD1 batch=$via1")
   }
 
   test("materializeNestedRows + bindGroup at DEPTH 3 (r18): per-row " +

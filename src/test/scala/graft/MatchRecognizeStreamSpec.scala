@@ -336,6 +336,29 @@ class MatchRecognizeStreamSpec extends AnyFunSuite with SparkTest {
           ev(2, 26, "cart", 9.0), ev(2, 30, "purchase"))))
   }
 
+  // --- depth-1 nested group with final value measures (the N twin) ---
+  test("stream parity: S ((B C)+ V)+ depth-1 nested group with final " +
+       "value measures") {
+    parity("mrs_nest1_vals",
+      """MATCH_RECOGNIZE (
+        |  PARTITION BY user_id ORDER BY ts
+        |  MEASURES S.ts AS signup_ts, COUNT(V.ts) AS n_reps,
+        |           COUNT(B.ts) AS n_inner, SUM(B.value) AS sum_b,
+        |           LAST(V.value) AS last_v
+        |  PATTERN (S ((B C)+ V)+)
+        |  WITHIN INTERVAL '4' HOUR
+        |  DEFINE S AS event_type = 'signup', B AS event_type = 'click',
+        |         C AS event_type = 'view', V AS event_type = 'error'
+        |)""".stripMargin,
+      Seq(
+        Seq(ev(1, 0, "signup"), ev(1, 2, "click", 1.0), ev(1, 4, "view"),
+          ev(1, 6, "click", 2.0), ev(1, 8, "view"), ev(1, 10, "error", 5.0)),
+        Seq(ev(1, 12, "click", 3.0), ev(1, 14, "view"),
+          ev(1, 16, "error", 7.0)),
+        Seq(ev(2, 20, "signup"), ev(2, 22, "click", 4.0), ev(2, 24, "view"),
+          ev(2, 26, "error", 9.0))))
+  }
+
   // --- ALL ROWS PER MATCH: linear static explode with running measures ---
   test("stream parity: ALL ROWS over a plain linear pattern with running " +
        "value measures and CLASSIFIER()") {

@@ -5,14 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Shared local session for all suites (getOrCreate ⇒ one JVM-wide session). */
 trait SparkTest {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.localSession("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
