@@ -3,7 +3,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 
 /** Optimization-round tooling: run one declared query (warm rep + timed rep)
   * with a listener that prints per-job wall time and per-stage task totals —
-  * the "where does the time go" breakdown the UI would show, in text.
+  * the "where does the time go" breakdown the UI would show, in text — and
+  * what the timed rep left cached (the bench and `Verify` clear it).
   * Args: <nameSubstring>. Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS. */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -56,7 +57,11 @@ object Profile {
       val t = (System.nanoTime() - t0) / 1e9
       record = false
       Thread.sleep(500)
+      val leftMb = spark.sparkContext.getRDDStorageInfo
+        .map(i => i.memSize + i.diskSize).sum / 1e6
       println(s"==== $name  total ${"%.3f".format(t)} s ====")
+      println(f"left cached: ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs, " +
+        f"$leftMb%.2f MB")
       lines.forEach(l => println(l))
       lines.clear()
       spark.catalog.clearCache()

@@ -9,51 +9,45 @@ import graft.operators.Relational.topNPerGroup
   * IterativeDataSet.java): a driver-side fixpoint loop over DataFrames,
   * with each step a declarative plan.
   *
-  * Scale notes: per-step results that feed the next step are persisted (and
-  * the previous step unpersisted) so lineage stays O(1) deep — the Spark
-  * equivalent of Flink's iteration feedback edge. Centroid sets are tiny and
-  * broadcast; only the point set shuffles, once per step, on the cell id.
+  * Scale notes: per-step results that feed the next step are cached or cut
+  * in a [[CacheScope]] (and the previous step freed) so lineage stays O(1)
+  * deep — the Spark equivalent of Flink's iteration feedback edge. Centroid
+  * sets are tiny and broadcast; only the point set shuffles, once per step,
+  * on the cell id.
   */
 object Iterate {
 
   private def sqDist(a: Column, b: Column): Column =
     Similarity.dot(a, a) - lit(2.0) * Similarity.dot(a, b) + Similarity.dot(b, b)
 
-  /** Free the block-store footprint of a SUPERSEDED eager-localCheckpoint
-    * frame. `Dataset.unpersist` goes through the cache manager, which never
-    * saw a checkpoint, so a replaced frame's blocks are otherwise freed only
-    * by GC/ContextCleaner — slow enough under memory pressure that stale
-    * frames from one query inflate the next query's spill behavior. The
-    * frame must never be read again after this call: a local-checkpointed
-    * RDD's persisted blocks are its only materialization. */
-  private def freeFrame(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
+  /** A loop's edge frame, cached in `s`: (src, dst) longs (+ `w` double),
+    * distinct, pre-partitioned on src ONCE so each superstep's join shuffles
+    * only the small state side, not the edges. */
+  private def loopEdges(s: CacheScope, edges: DataFrame, srcCol: String, dstCol: String,
+                        wCol: Option[String] = None): DataFrame =
+    s.keep(edges.select(Seq(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")) ++ wCol.map(col(_).cast("double").as("w")): _*)
+      .distinct().repartition(col("src")))
 
-  /** The iteration loops' lineage cut: `localCheckpoint` by default — the
-    * committed convention, right for the bench and for clusters that accept
-    * a job restart on executor loss — or a RELIABLE `checkpoint` when the
-    * session opts in, because local-checkpoint blocks live only in executor
-    * storage and a lost executor mid-loop fails the job (truncated lineage
-    * cannot be recomputed). Opt-in = BOTH a SparkContext checkpoint dir
-    * (`sc.setCheckpointDir(hdfs://...)`) and
-    * `spark.conf.set("graft.iterate.reliableCheckpoint", "true")` — the
-    * explicit flag keeps sessions that set a checkpoint dir for other
-    * reasons on the default path, so bench numbers stay comparable. Notes
-    * for the reliable path: a lazy cut is computed once by the action that
-    * first consumes it and once more by the checkpoint file write (Spark's
-    * documented reliable-checkpoint shape); checkpoint FILES are reclaimed
-    * only with `spark.cleaner.referenceTracking.cleanCheckpoints=true` or
-    * at application end. */
-  private def cut(df: DataFrame, eager: Boolean): DataFrame = {
-    val ss = df.sparkSession
-    if (ss.conf.get("graft.iterate.reliableCheckpoint", "false").toBoolean &&
-        ss.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager)
-    else df.localCheckpoint(eager)
-  }
+  /** Simple undirected edges: (u, v) with u < v, distinct, no self-loops. */
+  private def canonicalEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(least(col(srcCol), col(dstCol)).as("u"),
+      greatest(col(srcCol), col(dstCol)).as("v")).filter(col("u") =!= col("v")).distinct()
+
+  /** Per-vertex degree of a (u, v) pair frame, in one tagged-explode pass. */
+  private def degrees(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(col("u"), col("v"))).as("id"))
+      .groupBy("id").agg(count(lit(1)).as("deg"))
+
+  /** (id, od, indeg) of a directed (src, dst) frame in ONE tagged-explode
+    * aggregate (r20, guide §2.4: separate out/in aggregates scanned it
+    * twice and cost their consumer two keyed joins). */
+  private def inOutDegrees(de: DataFrame): DataFrame =
+    de.select(explode(array(
+        struct(col("src").as("id"), lit(1L).as("od"), lit(0L).as("ind")),
+        struct(col("dst").as("id"), lit(0L).as("od"), lit(1L).as("ind")))).as("x"))
+      .groupBy(col("x.id").as("id"))
+      .agg(sum(col("x.od")).as("od"), sum(col("x.ind")).as("indeg"))
 
   /** Centroids after `iters` Lloyd mean-updates over an (id, vec) DataFrame:
     * (cid, cv) with cid 0..k-1. Deterministic: centroids initialize from the
@@ -61,9 +55,9 @@ object Iterate {
     * 6 dp — distributed partial-sum order varies run-to-run (and
     * engine-to-engine), rounding pins the fixpoint. */
   def kmeansCentroids(points: DataFrame, idCol: String, vecCol: String,
-                      k: Int, iters: Int): DataFrame = {
-    val pts = points.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                      k: Int, iters: Int): DataFrame = CacheScope { s =>
+    val pts = s.keep(points.select(col(idCol).as("id"),
+      col(vecCol).cast("array<double>").as("v")))
     var centroids = pts.orderBy("id").limit(k)
       .select((row_number().over(org.apache.spark.sql.expressions.Window.orderBy("id")) - 1)
         .cast("int").as("cid"), col("v").as("cv"))
@@ -71,11 +65,10 @@ object Iterate {
     (0 until iters).foreach { _ =>
       val assign = pts.crossJoin(broadcast(centroids))
         .select(col("id"), col("v"), col("cid"), sqDist(col("v"), col("cv")).as("d2"))
-      val best = topNPerGroup(assign, Seq(col("id")), Seq(col("d2"), col("cid")), 1)
-        .select(col("id"), col("v"), col("cid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      best.count() // materialize before unpersisting the feedback edge
-      if (prevBest != null) prevBest.unpersist()
+      val best = s.keep(topNPerGroup(assign, Seq(col("id")), Seq(col("d2"), col("cid")), 1)
+        .select(col("id"), col("v"), col("cid")))
+      best.count() // materialize before freeing the feedback edge
+      if (prevBest != null) s.free(prevBest)
       prevBest = best
       // new centroid = element-wise mean of members (posexplode + re-collect)
       centroids = best
@@ -84,9 +77,7 @@ object Iterate {
         .groupBy("cid").agg(array_sort(collect_list(struct(col("dim"), col("mx")))).as("pairs"))
         .select(col("cid"), expr("transform(pairs, p -> p.mx)").as("cv"))
     }
-    if (prevBest != null) { centroids = cut(centroids, eager = true); prevBest.unpersist() }
-    pts.unpersist()
-    centroids
+    if (iters > 0) s.cut(centroids, eager = true) else centroids
   }
 
   /** Lloyd's k-means over an (id, array<double> v) DataFrame.
@@ -115,19 +106,19 @@ object Iterate {
     *    the logical plan. `persist` alone caches data but Catalyst still
     *    re-analyzes the whole accumulated tree, and `labels` is referenced
     *    twice per step, so the un-truncated plan doubles each iteration
-    *    (driver OOM by ~iteration 20 regardless of data size). On a real
-    *    cluster swap `localCheckpoint` for `checkpoint` with an HDFS dir if
-    *    executor loss must be survivable mid-loop.
+    *    (driver OOM by ~iteration 20 regardless of data size). A session
+    *    that must survive executor loss mid-loop opts into reliable
+    *    checkpoints (see [[CacheScope.cut]]).
     *  - a path-halving hop (label := label of my label) after each
     *    propagation step gives pointer-jumping convergence in O(log diameter)
     *    rounds instead of O(diameter) — chains collapse exponentially fast. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 25,
-                          localThreshold: Long = 500000L): DataFrame = {
+                          localThreshold: Long = 500000L): DataFrame = CacheScope { s =>
     // materialize the caller's edge pipeline ONCE — it appears in both union
     // branches, and an un-materialized (possibly expensive) plan would be
     // evaluated twice when sym is first computed
-    val e0 = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), eager = true)
+    val e0 = s.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), eager = true)
     // Small-graph fast path, same contract as autoBroadcastJoinThreshold:
     // below the threshold the edge list fits comfortably on the driver, and
     // one union-find pass beats 2·log(diameter) shuffle rounds of the
@@ -137,12 +128,16 @@ object Iterate {
     // the boxed HashMap the union-find keeps (~100 B per edge incl. Tuple2
     // boxing ⇒ ~50 MB, safe in a default 1 GB driver); raise it only with
     // driver memory to match.
-    if (e0.count() <= localThreshold) return localUnionFind(e0)
-    val sym = e0
+    if (e0.count() <= localThreshold) localUnionFind(e0)
+    else distributedComponents(s, e0, maxIters)
+  }
+
+  /** The distributed min-label fixpoint of [[connectedComponents]]. */
+  private def distributedComponents(s: CacheScope, e0: DataFrame, maxIters: Int): DataFrame = {
+    val sym = s.keep(e0
       .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = cut(sym.select(col("src").as("id")).distinct()
+      .distinct())
+    var labels = s.cut(sym.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id")), eager = true)
     var converged = false
     var iter = 0
@@ -163,15 +158,14 @@ object Iterate {
       // probe join+count job used to be two (the probe join ran anyway;
       // it is now inside the same frame). `labels` stays a one-deep
       // projection of the checkpointed RDD, so lineage depth is unchanged.
-      val wide = cut(halved.join(labels.withColumnRenamed("comp", "old"), "id"),
+      val wide = s.cut(halved.join(labels.withColumnRenamed("comp", "old"), "id"),
         eager = false)
       val changed = wide.filter(col("comp") < col("old")).count()
-      freeFrame(labels) // superseded frame: wide is materialized, count done
+      s.free(labels) // superseded frame: wide is materialized, count done
       labels = wide.select(col("id"), col("comp"))
       converged = changed == 0
       iter += 1
     }
-    sym.unpersist()
     labels.select(col("id"), col("comp").as("component"))
   }
 
@@ -187,49 +181,36 @@ object Iterate {
     * order (and a SQL oracle's sum order) cannot drift the fixpoint; callers
     * round the final output coarser (e.g. 6 dp).
     *
-    * Scale: edges/outdeg persist once and every step is one keyed equi-join
+    * Scale: edges/outdeg are cached once and every step is one keyed equi-join
     * + keyed agg (shuffle on vertex id only); the per-step eager
     * `localCheckpoint` truncates lineage exactly as in
     * [[connectedComponents]], so plan depth is O(1) in the iteration count. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, damping: Double = 0.85,
-               interRoundDp: Int = 9): DataFrame = {
-    // edges are pre-partitioned on src ONCE: every iteration's contribution
-    // join shuffles only the (small) rank table, the edge side reads the
-    // cached partitioning — without this, the dominant edge shuffle repeats
-    // per superstep
-    val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct().repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+               interRoundDp: Int = 9): DataFrame = CacheScope { s =>
+    val e = loopEdges(s, edges, srcCol, dstCol)
+    val verts = s.keep(e.select(explode(array(col("src"), col("dst"))).as("id")).distinct())
     val n = verts.count()
-    // out-degree is joined onto the edges ONCE, before the loop (r20,
-    // guide §2.4): the former per-superstep `.join(outd, "src")` paid a
-    // co-partitioned-but-real hash join plus the outd re-aggregation every
-    // iteration; the odeg column rides the persisted edge frame instead
-    // (the i23/vertexCentric convention), so each superstep is exactly one
-    // keyed join + one aggregate. Same src partitioning — no new exchange.
-    val ew = e.join(e.groupBy("src").agg(count(lit(1)).as("odeg")), "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = cut(verts.select(col("id"),
+    // out-degree rides the cached edge frame, joined ONCE before the loop
+    // (r20, guide §2.4), so each superstep is exactly one keyed join + one
+    // aggregate. Same src partitioning — no new exchange.
+    val ew = s.keep(e.join(e.groupBy("src").agg(count(lit(1)).as("odeg")), "src"))
+    var ranks = s.cut(verts.select(col("id"),
       round(lit(1.0) / lit(n), interRoundDp).as("rank")), eager = true)
     (0 until iters).foreach { i =>
       val prev = ranks
       val contrib = ew.join(ranks.withColumnRenamed("id", "rid"), col("src") === col("rid"))
         .select(col("dst").as("id"), (col("rank") / col("odeg")).as("c"))
-      ranks = cut(verts.join(contrib.groupBy("id").agg(sum(col("c")).as("s")), Seq("id"), "left")
+      ranks = s.cut(verts.join(contrib.groupBy("id").agg(sum(col("c")).as("s")), Seq("id"), "left")
         .select(col("id"),
           round(lit(1.0 - damping) / lit(n) + lit(damping) * coalesce(col("s"), lit(0.0)),
             interRoundDp).as("rank")), eager = true)
       // the first superstep's checkpoint materialized ew (edges + odeg) —
       // from here on `e` is dead weight at 2× edge-set memory (r21, guide
-      // §5: unpersist when done, not at loop end)
-      if (i == 0) e.unpersist()
-      freeFrame(prev) // superseded frame: the new ranks are materialized
+      // §5: free when done, not at loop end)
+      if (i == 0) s.free(e)
+      s.free(prev) // superseded frame: the new ranks are materialized
     }
-    if (iters == 0) e.unpersist() // no superstep ran to release it
-    ew.unpersist(); verts.unpersist()
     ranks
   }
 
@@ -250,13 +231,10 @@ object Iterate {
     * label) then max_by per dst — no windows, no sorts), eager lineage
     * truncation per round. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct().repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = cut(verts.select(col("id"), col("id").as("lab")), eager = true)
+                       iters: Int): DataFrame = CacheScope { s =>
+    val e = loopEdges(s, edges, srcCol, dstCol)
+    val verts = s.keep(e.select(explode(array(col("src"), col("dst"))).as("id")).distinct())
+    var labels = s.cut(verts.select(col("id"), col("id").as("lab")), eager = true)
     (0 until iters).foreach { _ =>
       val prev = labels
       val freq = e.join(labels.select(col("id").as("lid"), col("lab")),
@@ -270,10 +248,9 @@ object Iterate {
           when(col("toplab").isNull, col("lab"))
             .when(col("fstar") === 1, greatest(col("lab"), col("toplab")))
             .otherwise(col("toplab")).as("lab"))
-      labels = cut(labels, eager = true)
-      freeFrame(prev)
+      labels = s.cut(labels, eager = true)
+      s.free(prev)
     }
-    e.unpersist(); verts.unpersist()
     labels
   }
 
@@ -316,11 +293,11 @@ object Iterate {
   def jaccardIndex(edges: DataFrame, srcCol: String, dstCol: String,
                    minShared: Long = 1L,
                    broadcastDegThreshold: Long = 10000000L,
-                   groupSpanSize: Int = 64): DataFrame = {
+                   groupSpanSize: Int = 64): DataFrame = CacheScope { s =>
     require(groupSpanSize >= 1, s"groupSpanSize must be >= 1 (got $groupSpanSize)")
-    val n = edges.select(col(srcCol).as("id"), col(dstCol).as("nb")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the count materializes the persisted incidence (which both the degree
+    val n = s.pin(edges.select(col(srcCol).as("id"), col(dstCol).as("nb")).distinct(),
+      "jaccardIndex.incidence")
+    // the count materializes the cached incidence (which both the degree
     // agg and the pair join need anyway) and GUARDS the degree broadcast —
     // a hard hint on a billion-vertex degree table would throw past
     // maxBroadcastTableBytes; above the threshold the join shuffles and
@@ -330,17 +307,15 @@ object Iterate {
     val fits = nIncidence <= broadcastDegThreshold
     // BOTH degree tables — per-id (the u/v degrees of the output) and
     // per-neighbor (the span spread) — out of ONE tagged-explode pass over
-    // the persisted incidence (r21, guide §2.4: the former three aggregate
-    // evaluations — deg built once per differently-renamed broadcast side
-    // plus the separate nbSpans agg — collapse into one cached table).
-    // Keyed by the UNION of the two id spaces; the per-position counts
-    // stay separate columns, so overlapping id spaces cannot mix.
-    val dstats = n.select(explode(array(
+    // the cached incidence (r21, guide §2.4), keyed by the UNION of the two
+    // id spaces; the per-position counts stay separate columns, so
+    // overlapping id spaces cannot mix.
+    val dstats = s.pin(n.select(explode(array(
         struct(col("id").as("k"), lit(1L).as("dc"), lit(0L).as("nc")),
         struct(col("nb").as("k"), lit(0L).as("dc"), lit(1L).as("nc")))).as("x"))
       .groupBy(col("x.k").as("k"))
-      .agg(sum(col("x.dc")).as("deg"), sum(col("x.nc")).as("nbdeg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(sum(col("x.dc")).as("deg"), sum(col("x.nc")).as("nbdeg")),
+      "jaccardIndex.degrees")
     // alias-only wrappers (the r20 orientedAdjacency convention): every
     // broadcast below canonicalizes to the SAME dstats plan, so the
     // degree build is shared instead of one build per renamed side
@@ -417,11 +392,11 @@ object Iterate {
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
                  minShared: Long = 1L,
                  broadcastDegThreshold: Long = 10000000L,
-                 groupSpanSize: Int = 64): DataFrame = {
+                 groupSpanSize: Int = 64): DataFrame = CacheScope { s =>
     require(groupSpanSize >= 1, s"groupSpanSize must be >= 1 (got $groupSpanSize)")
-    val n = edges.select(col(srcCol).as("id"), col(dstCol).as("nb")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materializes the persisted incidence + GUARDS the weight broadcast
+    val n = s.pin(edges.select(col(srcCol).as("id"), col(dstCol).as("nb")).distinct(),
+      "adamicAdar.incidence")
+    // materializes the cached incidence + GUARDS the weight broadcast
     // (the jaccardIndex/triangleCounts guarded-hint convention)
     val nIncidence = n.count()
     // common-neighbor degree -> exact scaled per-term weight
@@ -477,13 +452,10 @@ object Iterate {
     * once, per superstep two keyed joins + two hash aggregates + two
     * scalar norms riding broadcasts, eager lineage truncation. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct().repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var scores = cut(verts.select(col("id"), lit(1.0).as("hub"), lit(0.0).as("auth")),
+           iters: Int): DataFrame = CacheScope { s =>
+    val e = loopEdges(s, edges, srcCol, dstCol)
+    val verts = s.keep(e.select(explode(array(col("src"), col("dst"))).as("id")).distinct())
+    var scores = s.cut(verts.select(col("id"), lit(1.0).as("hub"), lit(0.0).as("auth")),
       eager = true)
     (0 until iters).foreach { _ =>
       val prev = scores
@@ -491,34 +463,29 @@ object Iterate {
           col("src") === col("sid"))
         .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("raw"))
       // raw frames feed TWO consumers (the norm scalar and the next stage)
-      // — persist within the superstep or every consumer re-runs the
-      // upstream joins (persist, not a lineage cut: the cache keeps plan
+      // — cache within the superstep or every consumer re-runs the
+      // upstream joins (a cache, not a lineage cut: the cache keeps plan
       // STATISTICS, so the e-side join can still broadcast the score side;
       // a checkpoint's LogicalRDD has none — measured ~8% slower here).
       // The L2 norm is ONE double: the head() rides the same action that
-      // materializes the persist, and the scalar is inlined as a literal
+      // materializes the cache, and the scalar is inlined as a literal
       // (r20). The auth column rides the h-side frame (r21, guide §2.4):
-      // the former separate auth persist and the superstep-final hub⋈auth
-      // join are gone — round(raw / lit(nrm), 9) over the identical IEEE
-      // doubles, so results are bit-identical.
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val a1 = verts.join(araw, Seq("id"), "left")
-        .select(col("id"), coalesce(col("raw"), lit(0.0)).as("araw")).persist(lvl)
+      // round(raw / lit(nrm), 9) over the same IEEE doubles.
+      val a1 = s.keep(verts.join(araw, Seq("id"), "left")
+        .select(col("id"), coalesce(col("raw"), lit(0.0)).as("araw")))
       val anorm = a1.agg(sqrt(sum(col("araw") * col("araw")))).head().getDouble(0)
       val hraw = e.join(a1.select(col("id").as("aid"),
             round(col("araw") / lit(anorm), 9).as("av")),
           col("dst") === col("aid"))
         .groupBy(col("src").as("id")).agg(sum(col("av")).as("raw"))
-      val h1 = a1.join(hraw, Seq("id"), "left")
+      val h1 = s.keep(a1.join(hraw, Seq("id"), "left")
         .select(col("id"), coalesce(col("raw"), lit(0.0)).as("hraw"),
-          round(col("araw") / lit(anorm), 9).as("auth")).persist(lvl)
+          round(col("araw") / lit(anorm), 9).as("auth")))
       val hnorm = h1.agg(sqrt(sum(col("hraw") * col("hraw")))).head().getDouble(0)
-      scores = cut(h1.select(col("id"),
+      scores = s.cut(h1.select(col("id"),
         round(col("hraw") / lit(hnorm), 9).as("hub"), col("auth")), eager = true)
-      a1.unpersist(); h1.unpersist()
-      freeFrame(prev)
+      s.free(a1); s.free(h1); s.free(prev)
     }
-    e.unpersist(); verts.unpersist()
     scores
   }
 
@@ -535,14 +502,10 @@ object Iterate {
     * pre-partitioned on src once, each round one keyed join + keyed min,
     * eager lineage truncation per round. */
   def sssp(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-           sourceId: Long, iters: Int): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), col(wCol).cast("double").as("w"))
-      .distinct().repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    var dist = cut(verts.select(col("id"),
+           sourceId: Long, iters: Int): DataFrame = CacheScope { s =>
+    val e = loopEdges(s, edges, srcCol, dstCol, Some(wCol))
+    val verts = e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
+    var dist = s.cut(verts.select(col("id"),
       when(col("id") === sourceId, lit(0.0)).otherwise(lit(null).cast("double")).as("dist")),
       eager = true)
     (0 until iters).foreach { _ =>
@@ -550,11 +513,10 @@ object Iterate {
       val relaxed = e.join(dist.filter(col("dist").isNotNull)
           .select(col("id").as("rid"), col("dist").as("d0")), col("src") === col("rid"))
         .select(col("dst").as("id"), (col("d0") + col("w")).as("dist"))
-      dist = cut(dist.union(relaxed).groupBy("id").agg(min(col("dist")).as("dist")),
+      dist = s.cut(dist.union(relaxed).groupBy("id").agg(min(col("dist")).as("dist")),
         eager = true)
-      freeFrame(prev)
+      s.free(prev)
     }
-    e.unpersist()
     dist
   }
 
@@ -570,19 +532,14 @@ object Iterate {
     * Same substrate: edges pre-partitioned once, eager lineage truncation;
     * early-exit when the frontier empties. */
   def ssspWorkset(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-                  sourceId: Long, iters: Int): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), col(wCol).cast("double").as("w"))
-      .distinct().repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    var dist = cut(verts.select(col("id"),
+                  sourceId: Long, iters: Int): DataFrame = CacheScope { s =>
+    val e = loopEdges(s, edges, srcCol, dstCol, Some(wCol))
+    val verts = e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
+    var dist = s.cut(verts.select(col("id"),
       when(col("id") === sourceId, lit(0.0)).otherwise(lit(null).cast("double")).as("dist")),
       eager = true)
     // workset: (id, dist) rows improved last round — initially the source,
-    // a lazy one-deep filter of the checkpointed dist (r21: the former
-    // eager localCheckpoint of the same rows was a whole extra job)
+    // a lazy one-deep filter of the checkpointed dist (no cut of its own)
     var frontier = dist.filter(col("dist").isNotNull)
     var frontierNonEmpty = !frontier.isEmpty
     var i = 0
@@ -596,11 +553,9 @@ object Iterate {
       // the joined frame feeds BOTH next and frontier — cut ONCE (r20),
       // and the cut is LAZY (r21, guide §1.2/§5): the next round's
       // emptiness probe is the count() below, which is also the action
-      // that materializes the checkpoint — the eager checkpoint plus a
-      // separate isEmpty probe per round were two jobs for one. next/
-      // frontier stay lazy one-deep projections of the checkpointed frame,
-      // so lineage depth is still O(1) per round.
-      val joined = cut(dist.join(relaxed, Seq("id"), "left"), eager = false)
+      // that materializes the checkpoint, so a round is one job. next/
+      // frontier stay lazy one-deep projections of the checkpointed frame.
+      val joined = s.cut(dist.join(relaxed, Seq("id"), "left"), eager = false)
       frontier = joined.filter(col("nd").isNotNull &&
           (col("dist").isNull || col("nd") < col("dist")))
         .select(col("id"), col("nd").as("dist"))
@@ -610,10 +565,9 @@ object Iterate {
       // the new joined frame is materialized; the old round's is dead
       // (prevDist/prevFrontier both wrap the SAME checkpointed RDD — the
       // second free is a no-op)
-      freeFrame(prevDist); freeFrame(prevFrontier)
+      s.free(prevDist); s.free(prevFrontier)
       i += 1
     }
-    e.unpersist()
     dist
   }
 
@@ -662,7 +616,7 @@ object Iterate {
     *
     * Scale shape — the engine's iteration conventions baked in so custom
     * algorithms inherit them: edges pre-partitioned on the source ONCE
-    * and persisted; per superstep one keyed join + one hash aggregate +
+    * and cached; per superstep one keyed join + one hash aggregate +
     * the update projection; `localCheckpoint` per superstep with eager
     * predecessor freeing (lineage stays O(1) deep regardless of round
     * count). `VertexCentricSpec` re-derives SSSP and connected
@@ -675,15 +629,14 @@ object Iterate {
                     message: Int => Column, merge: Column,
                     update: Int => Column, maxSupersteps: Int,
                     haltOnFixpoint: Boolean = true,
-                    updateAlways: Boolean = false): DataFrame = {
+                    updateAlways: Boolean = false): DataFrame = CacheScope { s =>
     val reserved = Seq("state", "msg", "__vid", "__prev", "__n")
     // Spark resolves columns case-insensitively by default — so must this
     edges.columns.filter(c => reserved.contains(c.toLowerCase)).foreach(c =>
       sys.error(s"vertexCentric: edge column '$c' collides with a reserved " +
         s"name (${reserved.mkString(", ")}) — rename it before iterating"))
-    val e = edges.repartition(col(srcCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var wide = cut(vertices
+    val e = s.keep(edges.repartition(col(srcCol)))
+    var wide = s.cut(vertices
       .select(col(idCol).as("id"), col(stateCol).as("state")), eager = true)
     var k = 0
     var fixed = false
@@ -712,17 +665,16 @@ object Iterate {
       val probe = haltOnFixpoint && k < maxSupersteps - 1
       val updated = wide.select(col("id"), col("state"))
         .join(inbox, Seq("id"), "left_outer")
-      wide = cut(
+      wide = s.cut(
         if (probe) updated.select(col("id"), newState.as("state"),
           col("state").as("__prev"))
         else updated.select(col("id"), newState.as("state")),
         eager = !probe)
       if (probe)
         fixed = wide.filter(!(col("state") <=> col("__prev"))).count() == 0L
-      freeFrame(prev)
+      s.free(prev)
       k += 1
     }
-    e.unpersist()
     wide.select(col("id"), col("state"))
   }
 
@@ -778,28 +730,22 @@ object Iterate {
     * instead of Σ deg² (which a hub vertex makes quadratic). All equi-joins
     * — shuffles on vertex/edge keys only, no cartesian. */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
-                     broadcastClosureThreshold: Long = 10000000L): DataFrame = {
+                     broadcastClosureThreshold: Long = 10000000L): DataFrame =
+    CacheScope(triangleCountsIn(_, edges, srcCol, dstCol, broadcastClosureThreshold))
+
+  /** [[triangleCounts]] with its cached frames registered in `s`. */
+  private def triangleCountsIn(s: CacheScope, edges: DataFrame, srcCol: String,
+                               dstCol: String, broadcastClosureThreshold: Long): DataFrame = {
     // the canonical edge set feeds the degree count AND the orientation,
-    // and the oriented set feeds both wedge sides AND the closure —
-    // persist both or the upstream dedup/self-join re-runs per consumer
-    val e = edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the count materializes the persisted canonical set (which every
+    // and the oriented set feeds both wedge sides AND the closure
+    val e = s.pin(canonicalEdges(edges, srcCol, dstCol), "triangleCounts.edges")
+    // the count materializes the cached canonical set (which every
     // downstream consumer needs anyway) and gates the closure broadcast
     val nEdges = e.count()
     // deg feeds the two orientation joins AND the per-vertex tail — four
-    // differently-keyed/broadcast consumers whose exchanges cannot share, so
-    // un-persisted it was re-aggregated per consumer (profiled as 2-4
-    // identical 64-task agg stages per query at sf0.1). Vertex-sized longs:
-    // persisting it is cheap where persisting the array-valued adjacency was
-    // measured slower (r14 note below). Same session-lifetime convention as
-    // `e` above.
-    val deg = e.select(explode(array(col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tris = wedgeTriangles(e, deg, nEdges, broadcastClosureThreshold)
+    // differently-keyed/broadcast consumers whose exchanges cannot share
+    val deg = s.pin(degrees(e), "triangleCounts.degrees")
+    val tris = wedgeTriangles(s, e, deg, nEdges, broadcastClosureThreshold)
     perVertexTriangles(tris, "x", "y", "z", deg)
   }
 
@@ -848,10 +794,10 @@ object Iterate {
     * plain path keeps the builtin; the flagged census path needs the
     * custom expression for its two-sided flag carry — see
     * [[flaggedTriangles]].) */
-  private def wedgeTriangles(e: DataFrame, deg: DataFrame, nEdges: Long,
+  private def wedgeTriangles(s: CacheScope, e: DataFrame, deg: DataFrame, nEdges: Long,
                              broadcastClosureThreshold: Long): DataFrame = {
     val (oriented, adj, adjBc) =
-      orientedAdjacency(e, deg, nEdges, broadcastClosureThreshold, flagged = false)
+      orientedAdjacency(s, e, deg, nEdges, broadcastClosureThreshold, flagged = false)
     wedgeJoin(oriented, adj, adjBc)
       .select(col("x"), col("y"),
         explode(array_intersect(col("__nu"), col("__nv"))).as("z"))
@@ -898,17 +844,12 @@ object Iterate {
     * table → the degree-oriented edge set and the per-vertex sorted
     * out-adjacency array (`dst`, or `dst·4 + fl` with the canonical pair
     * flags packed into the low bits when `flagged`). `oriented` is
-    * persisted (it feeds the adjacency aggregate AND the probe side).
-    * The adjacency is NOT: its shuffle is deduped by exchange reuse, and
-    * only the post-shuffle merge aggregate + sort runs once per consumer
-    * — persisting it instead was MEASURED SLOWER (i17 9.0 → 10.7 s at
-    * sf0.1: block-store writes of |V| array rows cost more than the
-    * duplicated merge agg they save).
+    * cached (it feeds the adjacency aggregate AND the probe side).
     *
     * The degree table is vertex-sized (≤ 2·|E| rows) — broadcast into the
     * orientation joins under the guarded threshold (measured ~30× on the
     * orientation at sf0.1: the edge set stops shuffling twice). */
-  private def orientedAdjacency(e: DataFrame, deg: DataFrame, nEdges: Long,
+  private def orientedAdjacency(s: CacheScope, e: DataFrame, deg: DataFrame, nEdges: Long,
                                 broadcastClosureThreshold: Long,
                                 flagged: Boolean): (DataFrame, DataFrame, Boolean) = {
     // The broadcast side is the VERTEX-sized degree table, not the edge
@@ -917,7 +858,7 @@ object Iterate {
     // the edge-count proxy alone dropped the hint — the r16 triage; the
     // broadcast is worth ~12% end-to-end there, min-of-3). Past the free
     // edge-count fast path, ONE shuffle-free approx-distinct pass over
-    // the persisted edge set (HLL partials, no exchange — an exact
+    // the cached edge set (HLL partials, no exchange — an exact
     // deg.count() shuffle was measured to eat the entire gain) decides
     // against the 2×threshold row bound the edge proxy already tolerated
     // in its worst case (|V| ≤ 2|E|); the 5% HLL error is hint-slack, not
@@ -950,29 +891,21 @@ object Iterate {
       (col("du") === col("dv") && col("u") < col("v"))
     val src = when(uFirst, col("u")).otherwise(col("v"))
     val dst = when(uFirst, col("v")).otherwise(col("u"))
-    val oriented = (if (flagged)
+    val oriented = s.pin(if (flagged)
         // fl packs the CANONICAL (u<v) flags — fw·2 + bw — so the value is
         // orientation-independent and decodes the same way on every side
         ed.select(src.cast("long").as("src"), dst.cast("long").as("dst"),
           (col("fw") * 2 + col("bw")).cast("long").as("fl"))
-      else ed.select(src.as("src"), dst.as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else ed.select(src.as("src"), dst.as("dst")), "triangleCounts.oriented")
     val adjElem = if (flagged) col("dst") * 4 + col("fl") else col("dst")
     val adjBc = nEdges <= broadcastClosureThreshold
     val adj0 = oriented.groupBy(col("src"))
       .agg(sort_array(collect_list(adjElem)).as("nbrs"))
     // Under the broadcast gate the aggregate feeds TWO BroadcastExchange
-    // builds that do NOT share a runtime stage (verified on the executed
-    // census plan: two full shuffle+merge+sort builds per wedge pass), so
-    // the vertex-sized adjacency is persisted and each build scans the
-    // cache (r21, guide §5). Above the gate the keyed joins DO share the
-    // aggregate's exchange via reuse — there the persist was measured
-    // SLOWER (r20: i17 9.0 → 10.7 s; block-store writes of |V| array rows
-    // cost more than the duplicated merge agg they save), so it stays
-    // un-persisted on that path.
-    val adj = if (adjBc)
-      adj0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else adj0
+    // builds that do NOT share a runtime stage, so the adjacency is cached;
+    // above it the keyed joins share the aggregate's exchange via reuse
+    // (see the exception list in [[CacheScope]])
+    val adj = if (adjBc) s.pin(adj0, "triangleCounts.adjacency") else adj0
     // adjacency broadcast gate (consumed by [[wedgeJoin]]): the adjacency
     // payload is |E| packed longs, so the EDGE-count threshold is the right
     // guard for it (10 M default ⇒ ~80 MB) — reuse the caller's closure
@@ -998,10 +931,10 @@ object Iterate {
     * pair's flags ride the oriented edge row, and the former 3
     * triangle⋈pair shuffle joins (each |T| rows against |E| pairs)
     * disappear entirely, with no auxiliary lookup structure at all. */
-  private def flaggedTriangles(pairs: DataFrame, deg: DataFrame, nEdges: Long,
-                               broadcastClosureThreshold: Long): DataFrame = {
+  private def flaggedTriangles(s: CacheScope, pairs: DataFrame, deg: DataFrame,
+                               nEdges: Long, broadcastClosureThreshold: Long): DataFrame = {
     val (oriented, adj, adjBc) =
-      orientedAdjacency(pairs, deg, nEdges, broadcastClosureThreshold, flagged = true)
+      orientedAdjacency(s, pairs, deg, nEdges, broadcastClosureThreshold, flagged = true)
     wedgeJoin(oriented, adj, adjBc)
       .select(col("x"), col("y"), col("fl").as("flxy"),
         // packed match: (z << 4) | (flags of {x,z} << 2) | flags of {y,z}
@@ -1051,8 +984,8 @@ object Iterate {
     * two keyed equi-joins (shuffle on vertex id, the natural edge
     * partitioning) and one hash aggregate on (srcRep, dstRep, value) —
     * the broadcast exchange of the group table is REUSED across both
-    * joins, so nothing is persisted and nothing leaks into the cache.
-    * No iteration, no cartesian, no window.
+    * joins, and nothing is cached (see [[CacheScope]]). No iteration, no
+    * cartesian, no window.
     *
     * @param broadcastGroupBytesThreshold max ESTIMATED bytes (plan statistics)
     *   of the group aggregate for which a hard broadcast hint is planned */
@@ -1067,13 +1000,8 @@ object Iterate {
     val est = groups.queryExecution.optimizedPlan.stats.sizeInBytes
     val groupsSide =
       if (est <= broadcastGroupBytesThreshold) broadcast(groups) else groups
-    // the id→representative mapping feeds BOTH endpoint joins, whose build
-    // sides do not share a runtime stage — un-persisted, the vertex distinct
-    // + group attach ran once per endpoint (r21, the edgeMetrics/deg
-    // convention: vertex-sized rows, cheap to cache)
     val mapping = v.join(groupsSide, Seq("vv"))
       .select(col("id"), col("rep"), col("vv"), col("gsize"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val e = edges.select(col(srcCol).cast("long").as("es"),
       col(dstCol).cast("long").as("ed"), col(evCol).as("ev"))
     e.join(mapping.select(col("id").as("es"), col("rep").as("src"),
@@ -1124,13 +1052,10 @@ object Iterate {
     * (sum+max per (dst, label), then one max_by per dst), eager lineage
     * truncation per round. Output: (id, community, score). */
   def communityDetection(edges: DataFrame, srcCol: String, dstCol: String,
-                         iters: Int, delta: Double = 0.5): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct().repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    var state = cut(verts.select(col("id"), col("id").as("lab"), lit(1000000L).as("sc6")),
+                         iters: Int, delta: Double = 0.5): DataFrame = CacheScope { s =>
+    val e = loopEdges(s, edges, srcCol, dstCol)
+    val verts = e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
+    var state = s.cut(verts.select(col("id"), col("id").as("lab"), lit(1000000L).as("sc6")),
       eager = true)
     (1 to iters).foreach { k =>
       val dec = Math.round(delta * 1e6 / k) // driver-side literal, both engines
@@ -1152,10 +1077,9 @@ object Iterate {
             .when(col("wlab") === col("lab"), col("wbest"))
             .otherwise(col("wbest") - lit(dec)).as("sc62"))
         .select(col("id"), col("lab2").as("lab"), col("sc62").as("sc6"))
-      state = cut(state, eager = true)
-      freeFrame(prev)
+      state = s.cut(state, eager = true)
+      s.free(prev)
     }
-    e.unpersist()
     state.select(col("id"), col("lab").as("community"),
       (col("sc6").cast("double") / lit(1000000.0)).as("score"))
   }
@@ -1174,17 +1098,10 @@ object Iterate {
     * degree hash-agg, one global agg — the same two-level tree any
     * engine bottoms out at; nothing quadratic anywhere. */
   def vertexMetrics(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one cached pass (tagged explode) instead of a two-select union
-    val deg = e.select(explode(array(col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = degrees(canonicalEdges(edges, srcCol, dstCol))
     // n_edges = Σdeg/2 off the SAME degree table (r21, guide §2.4): every
-    // canonical edge contributes exactly 2 to Σdeg, so the former separate
-    // count pass over `e` and the crossJoin stitching it back are gone —
-    // one aggregate tree total. Σdeg is even, the division exact.
+    // canonical edge contributes exactly 2 to Σdeg, so one aggregate tree
+    // suffices. Σdeg is even, the division exact.
     val vm = deg.agg(
       count(lit(1)).as("n_vertices"),
       (sum(col("deg")) / 2).cast("long").as("n_edges"),
@@ -1224,18 +1141,11 @@ object Iterate {
     * AQE decides it fits; forcing it would break at 10⁹ vertices), two
     * hash aggregates. No wedge join — this is the o(triangle-listing)
     * CHEAP estimator the reference positions it as. */
-  def edgeMetrics(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def edgeMetrics(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = CacheScope { s =>
+    val e = s.pin(canonicalEdges(edges, srcCol, dstCol), "edgeMetrics.edges")
     // deg feeds BOTH endpoint joins, whose broadcast builds do not share an
-    // exchange — un-persisted, the explode+agg ran twice (r21, profiled as
-    // two identical-size exchange writes per query; the triangleCounts deg
-    // convention: vertex-sized longs, cheap to cache)
-    val deg = e.select(explode(array(col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // exchange
+    val deg = s.pin(degrees(e), "edgeMetrics.degrees")
     // every incident edge from each endpoint's perspective
     val both = e.select(col("u").as("a"), col("v").as("b"))
       .union(e.select(col("v").as("a"), col("u").as("b")))
@@ -1283,8 +1193,8 @@ object Iterate {
     clusteringStatsOf(triangleCounts(edges, srcCol, dstCol))
 
   /** The shared-wedge-pass clustering bundle: `triangles` is the
-    * [[triangleCounts]] per-vertex table (PERSISTED — call
-    * `triangles.unpersist()` when done), `stats` the [[clusteringStats]]
+    * [[triangleCounts]] per-vertex table (CACHED — call `unpersist()`
+    * when done), `stats` the [[clusteringStats]]
     * row aggregated FROM it, `census` the [[directedClusteringStats]] row
     * when the bundle came from a directed graph. Running several
     * clustering analytics used to cost one wedge join EACH — the bundle
@@ -1292,11 +1202,10 @@ object Iterate {
   final case class ClusteringBundle(triangles: DataFrame, stats: DataFrame,
                                     census: Option[DataFrame],
                                     interim: Seq[DataFrame] = Nil) {
-    /** Frees the persisted per-vertex table AND the bundle's interim
-      * frames (the directed bundle persists the classified triangle
-      * listing, corner aggregate, pair table, vertex stats, and edge set
-      * for the shared wedge pass — without freeing them here each bundle
-      * call would leak cached frames for the session lifetime).
+    /** Frees the cached per-vertex table AND the bundle's interim
+      * frames (every frame the bundle's [[CacheScope]] cached for the
+      * shared wedge pass — without freeing them here each bundle call
+      * would leak cached frames for the session lifetime).
       *
       * CAVEAT — Spark's cache is keyed by CANONICALIZED PLAN: two bundles
       * built over canonically identical edges share cache entries, so
@@ -1322,14 +1231,15 @@ object Iterate {
   /** UNDIRECTED [[ClusteringBundle]]: triangle counts + clustering stats
     * from one wedge pass over the simple undirected graph. */
   def clusteringBundle(edges: DataFrame, srcCol: String, dstCol: String,
-                       broadcastClosureThreshold: Long = 10000000L): ClusteringBundle = {
-    val perVertex = triangleCounts(edges, srcCol, dstCol, broadcastClosureThreshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ClusteringBundle(perVertex, clusteringStatsOf(perVertex), None)
-  }
+                       broadcastClosureThreshold: Long = 10000000L): ClusteringBundle =
+    CacheScope.handOver { s =>
+      val perVertex = s.keep(
+        triangleCountsIn(s, edges, srcCol, dstCol, broadcastClosureThreshold))
+      ClusteringBundle(perVertex, clusteringStatsOf(perVertex), None, interim = s.frames)
+    }
 
   /** [[clusteringStats]] from an ALREADY-COMPUTED [[triangleCounts]] table
-    * — the aggregation alone, so a persisted per-vertex triangle table
+    * — the aggregation alone, so a cached per-vertex triangle table
     * (see [[clusteringBundle]]) serves both analytics from one wedge
     * pass. */
   def clusteringStatsOf(perVertexTriangleCounts: DataFrame): DataFrame = {
@@ -1398,17 +1308,15 @@ object Iterate {
     *    one IEEE division of exact integers.
     *
     * Scale shape: everything is keyed equi-joins + hash aggregates off the
-    * one persisted pair table; the triangle core reuses the guarded-
+    * one cached pair table; the triangle core reuses the guarded-
     * broadcast wedge join. Output: ONE row — (n_vertices, n_uni_edges,
     * n_bi_edges, global_cc, avg_cc, t003, t012, t102, t021d, t021u,
     * t021c, t111d, t111u, t030t, t030c, t201, t120d, t120u, t120c, t210,
     * t300). */
   def directedClusteringStats(edges: DataFrame, srcCol: String, dstCol: String,
                               broadcastClosureThreshold: Long = 10000000L): DataFrame = {
-    // census-only consumers never see the bundle handle, so free its
-    // persisted interim frames HERE: the census is a single row —
-    // materialize it, unpersist the bundle, return a local relation
-    // (otherwise every call leaks the wedge-pass frames for the session)
+    // census-only consumers never see the bundle handle: materialize the
+    // single census row, free the bundle, return a local relation
     val b = directedClusteringBundle(edges, srcCol, dstCol, broadcastClosureThreshold)
     sealRows(b.census.get, b)
   }
@@ -1416,44 +1324,32 @@ object Iterate {
   /** The DIRECTED clustering bundle: [[directedClusteringStats]]' census
     * row PLUS the undirected-projection [[triangleCounts]] table and
     * [[clusteringStats]] row, all off ONE wedge pass (the classified
-    * triangle listing and the pair table are persisted and shared) — the
+    * triangle listing and the pair table are cached and shared) — the
     * i05/i15/i17 analytics without recomputing the wedge join per
     * consumer. */
   def directedClusteringBundle(edges: DataFrame, srcCol: String, dstCol: String,
-                               broadcastClosureThreshold: Long = 10000000L): ClusteringBundle = {
-    val de = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                               broadcastClosureThreshold: Long = 10000000L): ClusteringBundle =
+    CacheScope.handOver { s =>
+    val de = s.keep(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      .filter(col("src") =!= col("dst")).distinct())
     // pair table (u < v): fw = u→v present, bw = v→u present
-    val pairs = de.select(least(col("src"), col("dst")).as("u"),
+    val pairs = s.keep(de.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"),
         (col("src") < col("dst")).cast("int").as("isFw"))
       .groupBy("u", "v")
-      .agg(max(col("isFw")).as("fw"), max(lit(1) - col("isFw")).as("bw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(max(col("isFw")).as("fw"), max(lit(1) - col("isFw")).as("bw")))
     val nPairs = pairs.count() // materialize; gates the closure broadcast
-    // persisted for the same multi-consumer reason as triangleCounts' deg
-    // (orientation broadcasts + vstats + the per-vertex tail); freed with
-    // the bundle's interim frames
-    val deg = pairs.select(explode(array(col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // out- and in-degree in ONE pass over the cached simple digraph (r20,
-    // guide §2.4): the former separate outd/ind aggregates scanned `de`
-    // twice and cost vstats two keyed left joins; the tagged explode is one
-    // aggregate and one join, same counts (a vertex of the pair table
-    // always appears in `de`, so the left join semantics are unchanged)
-    val dstats = de.select(explode(array(
-        struct(col("src").as("id"), lit(1L).as("od"), lit(0L).as("ind")),
-        struct(col("dst").as("id"), lit(0L).as("od"), lit(1L).as("ind")))).as("x"))
-      .groupBy(col("x.id").as("id"))
-      .agg(sum(col("x.od")).as("od"), sum(col("x.ind")).as("indeg"))
-    val vstats = deg.join(dstats, Seq("id"), "left_outer")
+    // cached for the same multi-consumer reason as triangleCounts' deg
+    // (orientation broadcasts + vstats + the per-vertex tail)
+    val deg = s.keep(degrees(pairs))
+    // a vertex of the pair table always appears in `de`, so the left join
+    // semantics are those of the former separate outd/ind joins
+    val vstats = s.keep(deg.join(inOutDegrees(de), Seq("id"), "left_outer")
       .select(col("id"), col("deg"),
         (col("deg") - coalesce(col("indeg"), lit(0L))).as("us"),
         (col("deg") - coalesce(col("od"), lit(0L))).as("ut"),
-        (coalesce(col("indeg"), lit(0L)) + coalesce(col("od"), lit(0L)) - col("deg")).as("bi"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (coalesce(col("indeg"), lit(0L)) + coalesce(col("od"), lit(0L)) - col("deg")).as("bi")))
     val rawAgg = vstats.agg(
       count(lit(1)).as("vc"),
       expr("sum(us + ut) div 2").as("uec"),
@@ -1479,7 +1375,7 @@ object Iterate {
         dirTo(col(w), col(b), col(fwWB), col(bwWB))
       when(s === 2, "120d").when(s === 0, "120u").otherwise("120c")
     }
-    val trip = flaggedTriangles(pairs, deg, nPairs, broadcastClosureThreshold)
+    val trip = s.keep(flaggedTriangles(s, pairs, deg, nPairs, broadcastClosureThreshold)
       .withColumn("bixy", col("fwxy") * col("bwxy"))
       .withColumn("bixz", col("fwxz") * col("bwxz"))
       .withColumn("biyz", col("fwyz") * col("bwyz"))
@@ -1502,8 +1398,7 @@ object Iterate {
                 dirTo(col("y"), col("z"), col("fwyz"), col("bwyz")),
               dirTo(col("z"), col("x"), col("fwxz"), col("bwxz")) +
                 dirTo(col("z"), col("y"), col("fwyz"), col("bwyz"))) === 1,
-            "030c").otherwise("030t")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            "030c").otherwise("030t"))))
     def tcount(t: String) =
       coalesce(sum(when(col("ttype") === t, 1L).otherwise(0L)), lit(0L))
     val triAgg = trip.agg(
@@ -1513,20 +1408,19 @@ object Iterate {
       tcount("300").as("t300"))
     // directed LCC numerator: each triangle adds its OPPOSITE pair's
     // directed-edge count (1 or 2) at each vertex
-    // ONE corner-explode pass over the persisted triangle listing yields
+    // ONE corner-explode pass over the cached triangle listing yields
     // BOTH per-vertex tables: the triangle count (the undirected bundle
     // member) and the directed-LCC numerator — each triangle contributes
     // its OPPOSITE pair's 1-or-2 directed-edge count at each corner.
     // (The former shape scanned trip four times: a 3-way union for the
     // numerators plus perVertexTriangles' own explode.)
-    val corner = trip.select(explode(array(
+    val corner = s.keep(trip.select(explode(array(
         struct(col("x").as("id"), (col("fwyz") + col("bwyz")).cast("long").as("w")),
         struct(col("y").as("id"), (col("fwxz") + col("bwxz")).cast("long").as("w")),
         struct(col("z").as("id"), (col("fwxy") + col("bwxy")).cast("long").as("w"))))
         .as("c"))
       .groupBy(col("c.id").as("id"))
-      .agg(count(lit(1)).as("tri"), sum(col("c.w")).cast("long").as("numer"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("tri"), sum(col("c.w")).cast("long").as("numer")))
     val lccAgg = vstats.join(corner.select(col("id"), col("numer")),
         Seq("id"), "left_outer")
       .select(col("deg"), coalesce(col("numer"), lit(0L)).as("numer"))
@@ -1573,14 +1467,13 @@ object Iterate {
         col("t021c"), col("t111d"), col("t111u"), col("t030t"), col("t030c"),
         col("t201"), col("t120d"), col("t120u"), col("t120c"), col("t210"),
         col("t300"))
-    // trip (the classified triangle listing) and pairs are persisted, so
+    // trip (the classified triangle listing) and pairs are cached, so
     // evaluating census, triangles, and stats together runs the wedge
     // join ONCE; deg here is the undirected-projection distinct-neighbor
     // degree — exactly what triangleCounts computes on that projection
-    val perVertex = perVertexFromCounts(corner.select(col("id"), col("tri")), deg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val perVertex = s.keep(perVertexFromCounts(corner.select(col("id"), col("tri")), deg))
     ClusteringBundle(perVertex, clusteringStatsOf(perVertex), Some(census),
-      interim = Seq(corner, trip, vstats, pairs, de, deg))
+      interim = s.frames)
   }
 
   /** DIRECTED whole-graph VERTEX METRICS — the Gelly analytic (reference
@@ -1601,19 +1494,9 @@ object Iterate {
   def directedVertexMetrics(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val de = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = de.select(least(col("src"), col("dst")).as("u"),
       greatest(col("src"), col("dst")).as("v")).distinct()
-    val deg = pairs.select(explode(array(col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    // out/in-degree in ONE cached pass + ONE join (the
-    // directedClusteringBundle shape — see its comment)
-    val dstats = de.select(explode(array(
-        struct(col("src").as("id"), lit(1L).as("od"), lit(0L).as("ind")),
-        struct(col("dst").as("id"), lit(0L).as("od"), lit(1L).as("ind")))).as("x"))
-      .groupBy(col("x.id").as("id"))
-      .agg(sum(col("x.od")).as("od"), sum(col("x.ind")).as("indeg"))
-    deg.join(dstats, Seq("id"), "left_outer")
+    degrees(pairs).join(inOutDegrees(de), Seq("id"), "left_outer")
       .select(col("deg"),
         coalesce(col("od"), lit(0L)).as("od"),
         coalesce(col("indeg"), lit(0L)).as("indeg"),
@@ -1662,7 +1545,6 @@ object Iterate {
     def fold(c: Column): Column = (c % M).cast("long")
     val e = edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(explode(array(col("u"), col("v"))).as("id")).distinct()
     val vc = verts.agg(count(lit(1)).as("n_vertices"),
       fold(sum(h(col("id")).cast("decimal(38,0)"))).as("vertex_checksum"))

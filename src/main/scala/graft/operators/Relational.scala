@@ -41,14 +41,14 @@ object Relational {
     * metadata-sized, its running sum may sit in one partition) broadcast
     * back. `order` must be a UNIQUE total order (ties straddling a range
     * boundary would otherwise make the index partitioning-dependent).
-    * The input is persisted so the offset aggregate and the output read
-    * the SAME range partitioning (boundaries come from sampling);
+    * The input is cached (past the call, see [[CacheScope]]) so the offset
+    * aggregate and the output read the SAME range partitioning (boundaries
+    * come from sampling);
     * `idx` is 1-based, matching `row_number() OVER (ORDER BY ...)`. */
   def zipWithIndex(df: DataFrame, order: Seq[Column],
-                   idxCol: String = "idx"): DataFrame = {
-    val parted = df.repartitionByRange(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
+                   idxCol: String = "idx"): DataFrame = CacheScope { s =>
+    val parted = s.pin(df.repartitionByRange(order: _*)
+      .withColumn("__pid", spark_partition_id()), "zipWithIndex.parted")
     val local = parted.withColumn("__local", row_number().over(
       Window.partitionBy(col("__pid")).orderBy(order: _*)))
     // offsets: rows in all EARLIER range partitions — the tiny

@@ -92,10 +92,10 @@ object AnalyticsQueries {
   // offsets + a PARTITIONED per-bucket row_number. No relation-sized data
   // ever sits in one partition; the only driver-side state is the bucket
   // boundary/offset metadata (bounded by the bucket parameter).
-  private val a04: Q = (s, dir) => {
+  private val a04: Q = (s, dir) => graft.operators.CacheScope { scope =>
     import graft.operators.Relational.globalNtiles
-    val rfm = rfmBase(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // read by globalNtiles' two driver actions and by the returned plan
+    val rfm = scope.pin(rfmBase(s, dir), "a04.rfm")
     // the three scores are mutually independent (each reads only its own
     // rfm column), so ONE fused globalNtiles call runs one boundary action,
     // one counts action and a single three-window plan — the r20 shape
@@ -108,9 +108,6 @@ object AnalyticsQueries {
       (col("recency_days"), false, "r_score"),
       (col("frequency"), true, "f_score"),
       (col("monetary"), true, "m_score")), col("o_custkey"))
-    // rfm stays cached for the returned (lazy) window plan — its third and
-    // final read happens at the consumer's sink; customer-sized rows, the
-    // session-lifetime persist convention (jaccardIndex's `n`)
     scored.select("o_custkey", "recency_days", "frequency", "monetary",
       "r_score", "f_score", "m_score")
   }

@@ -103,11 +103,10 @@ object LlmQueries {
   // ---------- d04: exact 3-gram Jaccard on LSH candidates ----------
   private val d04: Q = (s, dir) => {
     val cand = TextDedup.minhashCandidates(docs(s, dir), "doc_id", "text", 5, Bands, RowsPerBand)
-    // distinct 3-gram sets are computed ONCE PER DOC and persisted; computing
-    // them after the pair join would redo the work once per candidate pair
+    // distinct 3-gram sets are computed ONCE PER DOC; computing them after
+    // the pair join would redo the work once per candidate pair
     val grams = docs(s, dir)
       .select(col("doc_id"), array_distinct(TextDedup.shingles(col("text"), 3)).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ga = grams.select(col("doc_id").as("doc_a"), col("g").as("ga"))
     val gb = grams.select(col("doc_id").as("doc_b"), col("g").as("gb"))
     cand.join(ga, "doc_a").join(gb, "doc_b")
@@ -169,13 +168,10 @@ object LlmQueries {
   private val d05Planes = Similarity.planes(D05Bands * D05PlanesPerBand, 64)
   private val d05: Q = (s, dir) => {
     val e = Similarity.prep(emb(s, dir), "vec_id", "embedding")
-    // tiny bucket projection (id + 4 ints) persisted — the join re-reads it
-    // for both sides instead of re-running 16 dot products per row per side
     val bucketed = e.select(col("id") +: (0 until D05Bands).map { j =>
         Similarity.srpBucket(col("v"),
           d05Planes.slice(j * D05PlanesPerBand, (j + 1) * D05PlanesPerBand)).as(s"bb$j")
       }: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = bucketed.select(col("id") +:
       (0 until D05Bands).map(j => col(s"bb$j")) :+
       explode(array((0 until D05Bands).map(j =>
@@ -254,7 +250,6 @@ object LlmQueries {
     val e = Similarity.prep(emb(s, dir), "vec_id", "embedding")
     val eb = e.select(col("id") +: (0 until SrpTables).map(t =>
         Similarity.srpBucket(col("v"), srpTablePlanes(t)).as(s"bkt$t")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cands = eb.select(col("id"),
       explode(array((0 until SrpTables).map(t =>
         struct(lit(t).as("t"), col(s"bkt$t").as("bucket"))): _*)).as("tb"))

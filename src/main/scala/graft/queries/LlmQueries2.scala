@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Iterate, TextDedup}
+import graft.operators.{CacheScope, Iterate, TextDedup}
 import graft.sources.Tables
 
 /** §2.3/§2.5 continued — duplicate-cluster extraction and text cleaning.
@@ -20,24 +20,19 @@ object LlmQueries2 {
   private val JaccardMin = 0.5
 
   // ---------- d07: near-dup clusters via connected components ----------
-  private val d07: Q = (s, dir) => {
+  private val d07: Q = (s, dir) => CacheScope { scope =>
     val cand = TextDedup.minhashCandidates(docs(s, dir), "doc_id", "text",
       5, LlmQueries.Bands, LlmQueries.RowsPerBand)
-    // persisted: joined as BOTH sides (ga/gb) below, so without it the
-    // shingle+distinct lineage would run once per side (same pattern as d04)
-    val grams = docs(s, dir)
-      .select(col("doc_id"), array_distinct(TextDedup.shingles(col("text"), 3)).as("g"))
-      .persist()
+    // cached: joined as BOTH sides (ga/gb) below, so without it the
+    // shingle+distinct lineage would run once per side
+    val grams = scope.keep(docs(s, dir)
+      .select(col("doc_id"), array_distinct(TextDedup.shingles(col("text"), 3)).as("g")))
     val ga = grams.select(col("doc_id").as("doc_a"), col("g").as("ga"))
     val gb = grams.select(col("doc_id").as("doc_b"), col("g").as("gb"))
     val edges = cand.join(ga, "doc_a").join(gb, "doc_b")
       .filter(TextDedup.jaccardOfDistinct(col("ga"), col("gb")) >= JaccardMin)
       .select(col("doc_a"), col("doc_b"))
     val cc = Iterate.connectedComponents(edges, "doc_a", "doc_b")
-    // connectedComponents localCheckpoints the edge pipeline eagerly, so the
-    // gram cache is consumed by the time it returns — release it here rather
-    // than letting caches accumulate across a 150-query bench run
-    grams.unpersist()
     cc.select(col("id").as("doc_id"), col("component"))
   }
   private val d07Sql =
@@ -241,38 +236,32 @@ object LlmQueries2 {
   // the generic combinator produces bit-identical results to the
   // dedicated library operator (fixpoint early-exit is safe for min-plus:
   // once a Bellman-Ford round changes nothing, nothing ever changes).
-  private val i22: Q = (s, dir) => {
+  private val i22: Q = (s, dir) => CacheScope { scope =>
     val li = Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
     val o = Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
     val base = li.join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_suppkey").as("s"), (col("o_custkey") + 100000L).as("c"))
-    // persisted: the builder consumes this frame several times (vertex
+    // cached: the builder consumes this frame several times (vertex
     // derivation + the combinator's own edge materialization) — without
-    // the persist each consumer re-runs the lineitem⋈orders join. The
-    // combinator's superstep loop is EAGER (localCheckpoint), so the
-    // unpersist below runs after everything derived from it is
-    // materialized.
-    val edges = base.select(explode(array(
+    // the cache each consumer re-runs the lineitem⋈orders join
+    val edges = scope.keep(base.select(explode(array(
         struct(col("s").as("src"), col("c").as("dst")),
         struct(col("c").as("src"), col("s").as("dst")))).as("e"))
       .select(col("e.src").cast("long").as("src"), col("e.dst").cast("long").as("dst"))
       .distinct()
-      .withColumn("w", lit(1.0) + (col("dst") % 8).cast("double") * lit(0.125))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("w", lit(1.0) + (col("dst") % 8).cast("double") * lit(0.125)))
     // one cached pass (tagged explode) instead of a two-select union —
     // identical distinct id set (the r20 Iterate-internal verts convention)
     val verts = edges.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct()
       .select(col("id"), when(col("id") === 1L, lit(0.0))
         .otherwise(lit(null).cast("double")).as("dist"))
-    val out = Iterate.vertexCentric(edges, "src", "dst", verts, "id", "dist",
+    Iterate.vertexCentric(edges, "src", "dst", verts, "id", "dist",
         message = _ => col("state") + col("w"),
         merge = min(col("msg")),
         update = _ => least(col("state"), col("msg")),
         maxSupersteps = SsspIters)
       .select(col("id"), col("state").as("dist"))
-    edges.unpersist()
-    out
   }
 
   // ---------- i23: vertex-centric PageRank (updateAlways mode) ----------
@@ -286,22 +275,20 @@ object LlmQueries2 {
   // — i02's exact per-round arithmetic, so the oracle is i02's
   // unrolled-CTE chain verbatim. haltOnFixpoint stays OFF: PageRank is a
   // fixed-round schedule, not a monotone fixpoint.
-  private val i23: Q = (s, dir) => {
+  private val i23: Q = (s, dir) => CacheScope { scope =>
     val li = Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
     val o = Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
     val base = li.join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_suppkey").as("s"), (col("o_custkey") + 100000L).as("c"))
-    // persisted: outd, the odeg-carrying edge frame, the vertex set, the
+    // cached: outd, the odeg-carrying edge frame, the vertex set, the
     // driver count AND the combinator's edge materialization all consume
-    // this frame — unpersisted, each re-runs the lineitem⋈orders join
-    // (~2× the whole query's cost, A/B-measured). The combinator's loop
-    // is EAGER, so the unpersist below is safe.
-    val edges0 = base.select(explode(array(
+    // this frame — uncached, each re-runs the lineitem⋈orders join
+    // (~2× the whole query's cost, A/B-measured)
+    val edges0 = scope.keep(base.select(explode(array(
         struct(col("s").as("src"), col("c").as("dst")),
         struct(col("c").as("src"), col("s").as("dst")))).as("e"))
       .select(col("e.src").cast("long").as("src"), col("e.dst").cast("long").as("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val outd = edges0.groupBy("src").agg(count(lit(1)).as("odeg"))
     val edges = edges0.join(outd, "src")
     // one cached pass (tagged explode) instead of a two-select union —
@@ -311,15 +298,13 @@ object LlmQueries2 {
     val n = verts.count()
     val init = verts.select(col("id"),
       round(lit(1.0) / lit(n), 9).as("rank"))
-    val out = Iterate.vertexCentric(edges, "src", "dst", init, "id", "rank",
+    Iterate.vertexCentric(edges, "src", "dst", init, "id", "rank",
         message = _ => col("state") / col("odeg"),
         merge = sum(col("msg")),
         update = _ => round(lit(1.0 - PrDamping) / lit(n) +
           lit(PrDamping) * coalesce(col("msg"), lit(0.0)), 9),
         maxSupersteps = PrIters, haltOnFixpoint = false, updateAlways = true)
       .select(col("id"), round(col("state"), 6).as("pagerank"))
-    edges0.unpersist()
-    out
   }
 
   // ---------- shared co-purchase part-graph edge builders ----------

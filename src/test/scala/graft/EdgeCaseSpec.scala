@@ -108,6 +108,88 @@ class EdgeCaseSpec extends AnyFunSuite with SparkTest {
     }
     val left = spark.sparkContext.getPersistentRDDs.filter(kv => !before(kv._1))
     assert(left.isEmpty, left.values.map(_.toDebugString).mkString("\n"))
+    // ...and so does every operator: each runs twice in one session, its
+    // result is consumed and the result's own checkpoint released; what
+    // stays cached is exactly its entries on CacheScope's outliving-frame
+    // list, once each (a repeated call reuses them). Every input has its
+    // own ids so no two plans share a cache entry.
+    def g(off: Long) = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L))
+      .map { case (a, b) => (a + off, b + off) }.toDF("src", "dst")
+    def gw(off: Long) = g(off).withColumn("w", lit(0.5))
+    def pts(off: Long) = Seq((1L, Seq(0.0, 0.0)), (2L, Seq(0.5, 0.0)), (3L, Seq(5.0, 5.0)))
+      .map { case (i, v) => (i + off, v) }.toDF("id", "v")
+    def vv(off: Long) = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b"), (5L, "c"))
+      .map { case (i, v) => (i + off, v) }.toDF("id", "vv")
+    def vc(off: Long) = Iterate.vertexCentric(gw(off), "src", "dst",
+      g(off).select(explode(array($"src", $"dst")).as("id")).distinct()
+        .select($"id", when($"id" === off + 1, 0.0).otherwise(lit(null).cast("double")).as("d")),
+      "id", "d", message = _ => col("state") + col("w"), merge = min(col("msg")),
+      update = _ => least(col("state"), col("msg")), maxSupersteps = 3)
+    val docs = Seq((1L, "the quick brown fox jumps over"), (2L, "the quick brown fox jumped over"),
+      (3L, "lorem ipsum dolor sit amet")).toDF("doc_id", "text")
+    val odir = java.nio.file.Files.createTempDirectory("graft_a04").toString
+    Seq((1L, 7L, "2024-01-03", 10.5), (2L, 7L, "2024-02-01", 3.25), (3L, 8L, "2024-01-20", 7.0))
+      .toDF("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
+      .withColumn("o_orderdate", to_date(col("o_orderdate")))
+      .write.parquet(s"$odir/orders.parquet")
+    val ops: Seq[(String, Seq[String], () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("kmeansCentroids", Nil, () => Iterate.kmeansCentroids(pts(100), "id", "v", 2, 2)),
+      ("kmeans", Nil, () => Iterate.kmeans(pts(200), "id", "v", 2, 2)),
+      ("connectedComponents (local)", Nil, () => Iterate.connectedComponents(g(300), "src", "dst")),
+      ("connectedComponents", Nil,
+        () => Iterate.connectedComponents(g(400), "src", "dst", localThreshold = 0L)),
+      ("pageRank", Nil, () => Iterate.pageRank(g(500), "src", "dst", iters = 2)),
+      ("labelPropagation", Nil, () => Iterate.labelPropagation(g(600), "src", "dst", 2)),
+      ("jaccardIndex", Seq("jaccardIndex.incidence", "jaccardIndex.degrees"),
+        () => Iterate.jaccardIndex(g(700), "src", "dst")),
+      ("adamicAdar", Seq("adamicAdar.incidence"), () => Iterate.adamicAdar(g(800), "src", "dst")),
+      ("hits", Nil, () => Iterate.hits(g(900), "src", "dst", 2)),
+      ("sssp", Nil, () => Iterate.sssp(gw(1000), "src", "dst", "w", 1001L, 2)),
+      ("ssspWorkset", Nil, () => Iterate.ssspWorkset(gw(1100), "src", "dst", "w", 1101L, 2)),
+      ("vertexCentric", Nil, () => vc(1200)),
+      ("triangleCounts", Seq("triangleCounts.edges", "triangleCounts.degrees",
+        "triangleCounts.oriented", "triangleCounts.adjacency"),
+        () => Iterate.triangleCounts(g(1300), "src", "dst")),
+      ("summarization", Nil, () => Iterate.summarization(vv(1400),
+        "id", "vv", gw(1400), "src", "dst", "w")),
+      ("summarizationVertices", Nil, () => Iterate.summarizationVertices(vv(1500), "id", "vv")),
+      ("communityDetection", Nil, () => Iterate.communityDetection(g(1600), "src", "dst", 2)),
+      ("vertexMetrics", Nil, () => Iterate.vertexMetrics(g(1700), "src", "dst")),
+      ("edgeMetrics", Seq("edgeMetrics.edges", "edgeMetrics.degrees"),
+        () => Iterate.edgeMetrics(g(1800), "src", "dst")),
+      ("clusteringStats", Seq("triangleCounts.edges", "triangleCounts.degrees",
+        "triangleCounts.oriented", "triangleCounts.adjacency"),
+        () => Iterate.clusteringStats(g(1900), "src", "dst")),
+      ("clusteringStatsOf", Nil, () => Iterate.clusteringStatsOf(
+        Seq((2001L, 2L, 1L, 1.0)).toDF("id", "degree", "n_triangles", "lcc"))),
+      ("directedClusteringStats", Nil,
+        () => Iterate.directedClusteringStats(g(2100), "src", "dst")),
+      ("directedVertexMetrics", Nil, () => Iterate.directedVertexMetrics(g(2200), "src", "dst")),
+      ("checksum", Nil, () => Iterate.checksum(g(2300), "src", "dst")),
+      ("minhashCandidates", Nil, () => TextDedup.minhashCandidates(docs, "doc_id", "text")),
+      ("zipWithIndex", Seq("zipWithIndex.parted"),
+        () => graft.operators.Relational.zipWithIndex(g(2500), Seq(col("src"), col("dst")))),
+      ("a04 (query-level)", Seq("a04.rfm"),
+        () => graft.SparkEntry.queries("a04_rfm_scalable")(spark, odir)))
+    ops.foreach { case (op, outliving, run) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      (1 to 2).foreach { _ =>
+        val r = run()
+        r.collect()
+        r.queryExecution.logical.foreach {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+          case _ => ()
+        }
+      }
+      val left = spark.sparkContext.getPersistentRDDs.filter(kv => !before(kv._1))
+      assert(left.values.map(_.name).toSeq.sorted ==
+        outliving.map(n => s"In-memory table $n").sorted,
+        s"$op left cached:\n" + left.values.map(_.toDebugString).mkString("\n"))
+      val stored = spark.sparkContext.getRDDStorageInfo.map(_.id).filterNot(before)
+      assert(stored.forall(left.contains), s"$op left blocks of RDDs ${stored.mkString(",")}")
+    }
+    assert(ops.flatMap(_._2).toSet == graft.operators.CacheScope.Outliving)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(odir))
   }
 
   test("vertexMetrics on an empty or self-loop-only graph reports 0 edges") {

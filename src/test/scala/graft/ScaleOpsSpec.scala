@@ -395,6 +395,29 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTest {
       assert(new java.io.File(dir).listFiles != null &&
         new java.io.File(dir).listFiles.nonEmpty,
         "no checkpoint files written — reliable path did not engage")
+      // the reliable cut really truncates lineage: each returned plan reads
+      // a checkpoint written to the dir and no scan of the input edges
+      val edgeLeaves = edges.queryExecution.logical.collectLeaves().toSet
+      Seq(
+        "sssp" -> Iterate.sssp(edges, "src", "dst", "w", 1L, 3),
+        "vertexCentric" -> Iterate.vertexCentric(edges, "src", "dst",
+          edges.select(explode(array($"src", $"dst")).as("id")).distinct()
+            .select($"id", when($"id" === 1L, 0.0).otherwise(lit(null)
+              .cast("double")).as("d")),
+          "id", "d",
+          message = _ => col("state") + col("w"), merge = min(col("msg")),
+          update = _ => least(col("state"), col("msg")), maxSupersteps = 3),
+        "connectedComponents" -> Iterate.connectedComponents(edges, "src", "dst",
+          localThreshold = 0L)
+      ).foreach { case (op, df) =>
+        val leaves = df.queryExecution.logical.collectLeaves()
+        assert(leaves.exists {
+          case lr: org.apache.spark.sql.execution.LogicalRDD =>
+            lr.rdd.getCheckpointFile.exists(_.contains(new java.io.File(dir).getName))
+          case _ => false
+        }, s"$op: no reliable checkpoint in\n${df.queryExecution.logical}")
+        assert(!leaves.exists(edgeLeaves), s"$op still scans its input edges")
+      }
     } finally {
       spark.conf.set("graft.iterate.reliableCheckpoint", "false")
       // SparkContext has no way to unset the checkpoint dir, so the shared
