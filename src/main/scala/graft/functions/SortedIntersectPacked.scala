@@ -98,10 +98,13 @@ case class SortedIntersectPacked(left: Expression, right: Expression,
       val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
       val kx = ctx.freshName("kx"); val ky = ctx.freshName("ky")
       val mask = (1L << flagBits) - 1L
+      // when the expression is not nullable, nullSafeCodeGen declares no
+      // ${ev.isNull}: neither the walk nor the store may read it
       val nullCheck =
         if (nullable)
           s"if ($a.isNullAt($i) || $b.isNullAt($j)) { ${ev.isNull} = true; break; }"
         else ""
+      val ifNotNull = if (nullable) s"if (!${ev.isNull})" else ""
       s"""
          |int $na = $a.numElements();
          |int $nb = $b.numElements();
@@ -120,7 +123,7 @@ case class SortedIntersectPacked(left: Expression, right: Expression,
          |    $i++; $j++;
          |  }
          |}
-         |if (!${ev.isNull}) {
+         |$ifNotNull {
          |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
          |    .fromPrimitiveArray(java.util.Arrays.copyOf($buf, $c));
          |}

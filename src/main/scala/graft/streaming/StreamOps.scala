@@ -1,9 +1,15 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming analogs of the reference's DataStream API:
   *  - windowed aggregates: flink-streaming-java/.../windowing/assigners
@@ -11,7 +17,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - ProcessFunction + keyed state + timers:
   *    flink-streaming-java/.../functions/KeyedProcessFunction.java →
   *    flatMapGroupsWithState with event-time timeout
-  *  - intervalJoin: KeyedStream#intervalJoin → watermarked stream-stream join
+  *  - intervalJoin: KeyedStream#intervalJoin (IntervalJoinOperator) → both
+  *    sides' buffers in one flatMapGroupsWithState, evicted by event time
   *  - CEP followed-by: flink-libraries/flink-cep NFA → NFA-lite in keyed state
   *
   * State scale: every op keys its state by the grouping columns, and the
@@ -321,6 +328,110 @@ case class TemporalAcc(facts: List[TjFact], versions: List[TjVersion])
 case class TemporalOut(user_id: Long, fact_ts: Timestamp, fact_type: String,
                        fact_value: Double, version_ts: Option[Timestamp],
                        version_value: Option[Double])
+
+/** One side's rows as UnsafeRow bytes and back, for the interval join's
+  * state. Not thread-safe: each task builds its own. */
+private final class RowCodec(schema: StructType) {
+  private val enc = ExpressionEncoder(schema, lenient = true).resolveAndBind()
+  private val ser = enc.createSerializer()
+  private val de = enc.createDeserializer()
+  private val unsafe = new UnsafeRow(schema.size)
+  def bytes(r: Row): Array[Byte] = ser(r).asInstanceOf[UnsafeRow].copy().getBytes
+  def row(b: Array[Byte]): Row = { unsafe.pointTo(b, b.length); de(unsafe) }
+}
+
+/** One buffered row of [[StreamOps.streamStreamIntervalJoin]]: its `ts` and
+  * the time after which it can pair no more (µs), whether it has paired,
+  * and the row itself, decoded or encoded only when needed. */
+private final class JoinBuf(val t: Long, val until: Long, var matched: Boolean,
+                            codec: RowCodec, private var b: Array[Byte], private var r: Row) {
+  def row: Row = { if (r == null) r = codec.row(b); r }
+  def bytes: Array[Byte] = { if (b == null) b = codec.bytes(r); b }
+}
+
+/** The per-key step of [[StreamOps.streamStreamIntervalJoin]]. Input rows
+  * are (k, ts, hi, l, r) with exactly one of `l`/`r` set. The state is one
+  * binary buffer per side of (t, until, matched, row bytes) records: an
+  * array of structs would make Spark generate and compile its state
+  * decoder afresh on every trigger (a new lambda variable id each time). */
+private final class IntervalJoinBuffers(semi: Boolean, keepL: Boolean, keepR: Boolean,
+                                        lSchema: StructType, rSchema: StructType)
+    extends Serializable {
+  // built in each task, which gets its own copy of this object
+  @transient private lazy val codecs = (new RowCodec(lSchema), new RowCodec(rSchema))
+
+  private def micros(v: Any): Long = v match {
+    case t: Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+    case i: java.time.Instant => DateTimeUtils.instantToMicros(i)
+    case d: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(d)
+  }
+
+  private def load(a: Array[Byte], codec: RowCodec): ArrayBuffer[JoinBuf] = {
+    val in = ByteBuffer.wrap(a)
+    val buf = ArrayBuffer.empty[JoinBuf]
+    while (in.hasRemaining) {
+      val (t, until, matched) = (in.getLong, in.getLong, in.get != 0)
+      val b = new Array[Byte](in.getInt); in.get(b)
+      buf += new JoinBuf(t, until, matched, codec, b, null)
+    }
+    buf
+  }
+
+  private def save(buf: ArrayBuffer[JoinBuf]): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    buf.foreach { b =>
+      out.writeLong(b.t); out.writeLong(b.until); out.writeBoolean(b.matched)
+      out.writeInt(b.bytes.length); out.write(b.bytes)
+    }
+    bytes.toByteArray
+  }
+
+  def apply(key: Row, rows: Iterator[Row], state: GroupState[Row]): Iterator[Row] = {
+    val (lc, rc) = codecs
+    val (ls, rs) = state.getOption.fold((ArrayBuffer.empty[JoinBuf], ArrayBuffer.empty[JoinBuf]))(
+      s => (load(s.getAs[Array[Byte]](0), lc), load(s.getAs[Array[Byte]](1), rc)))
+    val out = ArrayBuffer.empty[Row]
+    val keyed = !key.isNullAt(0)
+    def pair(l: JoinBuf, r: JoinBuf): Unit = if (l.t < r.t && r.t <= l.until) {
+      if (!semi) out += Row.fromSeq(l.row.toSeq ++ r.row.toSeq)
+      else if (!l.matched) out += l.row
+      l.matched = true; r.matched = true
+    }
+    // new right rows meet the buffered left rows; new left rows then meet
+    // every right row, buffered and new, so each pair is made once
+    val newL = ArrayBuffer.empty[JoinBuf]
+    rows.foreach { v =>
+      val t = micros(v.get(1))
+      if (v.isNullAt(3)) {
+        val b = new JoinBuf(t, t, false, rc, null, v.getStruct(4))
+        if (keyed) ls.foreach(pair(_, b))
+        rs += b
+      } else newL += new JoinBuf(t, micros(v.get(2)), false, lc, null, v.getStruct(3))
+    }
+    newL.foreach { b => if (keyed) rs.foreach(pair(b, _)); ls += b }
+    val wm = state.getCurrentWatermarkMs() * 1000L
+    // a semi join is done with a left row once it has matched
+    def evict(buf: ArrayBuffer[JoinBuf], done: JoinBuf => Boolean, outer: Boolean,
+              extend: Row => Row) = buf.filter { b =>
+      val live = b.until > wm && !done(b)
+      if (!live && outer && !b.matched) out += extend(b.row)
+      live
+    }
+    val keptL = evict(ls, semi && _.matched, keepL,
+      l => Row.fromSeq(l.toSeq ++ Seq.fill(rSchema.size)(null)))
+    val keptR = evict(rs, _ => false, keepR,
+      r => Row.fromSeq(Seq.fill(lSchema.size)(null) ++ r.toSeq))
+    if (keptL.isEmpty && keptR.isEmpty) state.remove()
+    else {
+      state.update(Row(save(keptL), save(keptR)))
+      // fires once the watermark (ms) reaches the earliest `until` (µs)
+      val next = (keptL.iterator ++ keptR.iterator).map(_.until).min
+      state.setTimeoutTimestamp(math.max(1L, -Math.floorDiv(-next, 1000L) - 1))
+    }
+    out.iterator
+  }
+}
 
 object StreamOps {
   type Event = graft.streaming.Event
@@ -640,18 +751,96 @@ object StreamOps {
       }
   }
 
-  /** Flink intervalJoin on streams: right rows within (left.ts, left.ts+upper].
-    * joinType "left_outer"/"full_outer" gives Flink's outer interval-join
-    * semantics: the unmatched side is emitted null-extended once the
-    * watermark proves no in-window partner can still arrive. */
+  /** Flink intervalJoin on streams (reference flink-streaming-java/.../
+    * api/operators/co/IntervalJoinOperator.java): each left row pairs with
+    * the right rows of the same `user_id` whose `ts` lies in
+    * (left.ts, left.ts + upper].
+    *
+    * One keyed operator holds both sides' buffers, as Flink's does. The two
+    * watermarked sides are tagged, unioned and keyed by `user_id` into one
+    * `flatMapGroupsWithState` (Append, event-time timeout) whose state is
+    * the key's left and right buffers, so each trigger commits one state
+    * store per partition where Spark's symmetric hash join commits four. A
+    * new left row is matched against the buffered and the new right rows, a
+    * new right row against the buffered left rows, so rows of one batch pair
+    * once; a null key never matches. Eviction: a left row leaves once
+    * `ts + upper` ≤ the watermark and a right row once its `ts` ≤ the
+    * watermark, when no row that can still arrive could pair with it. The
+    * timeout is set to the key's earliest eviction, so a key that gets no
+    * more data is still cleaned up. Late rows are dropped by Spark's
+    * late-event filter on the watermarked `ts`, against the same global
+    * watermark (the min of the two sides') the native join uses.
+    *
+    * `joinType` is `inner`, `left_outer`, `right_outer`, `full_outer` or
+    * `left_semi` (Spark's spellings of these, such as "left", work too);
+    * any other type is rejected by name. An outer type emits a row that
+    * never matched, null-extended, when it is evicted; `left_semi` emits a
+    * left row once, at its first match.
+    *
+    * The output is the native join's: `l.*` then `r.*` (`l.*` alone for
+    * `left_semi`), qualified `l` and `r`, and the same rows as a multiset,
+    * with one exception: Spark's native full outer join pairs a null
+    * `user_id` with a null `user_id`, and this one does not. To keep both
+    * watermarks equal, a side that is not preserved drops its null-key rows
+    * before its watermark, as Spark's inferred `isnotnull` filter does.
+    * Unlike the native join's output, this one cannot feed a stateful
+    * operator in the same query: Spark's global-watermark check rejects
+    * one downstream of `flatMapGroupsWithState`.
+    *
+    * State layout: one row per key holding both buffers, each a binary run
+    * of (ts, eviction time, matched, UnsafeRow bytes) records. A checkpoint
+    * written by the native join, with its four stores per partition, cannot
+    * be resumed by this operator. */
   def streamStreamIntervalJoin(left: DataFrame, right: DataFrame,
                                leftWm: String, rightWm: String, upper: String,
                                joinType: String = "inner"): DataFrame = {
-    val l = left.withWatermark("ts", leftWm).as("l")
-    val r = right.withWatermark("ts", rightWm).as("r")
-    l.join(r, expr(
-      s"l.user_id = r.user_id AND r.ts > l.ts AND r.ts <= l.ts + INTERVAL $upper"),
-      joinType)
+    import org.apache.spark.sql.catalyst.analysis.TypeCoercion
+    import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftOuter, LeftSemi, RightOuter}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.types.{BinaryType, Metadata, StructField}
+    val jt = JoinType(joinType)
+    require(Seq(Inner, LeftOuter, RightOuter, FullOuter, LeftSemi).contains(jt),
+      s"streamStreamIntervalJoin does not support join type '$joinType' " +
+        "(supported: inner, left_outer, right_outer, full_outer, left_semi)")
+    val keepL = jt == LeftOuter || jt == FullOuter
+    val keepR = jt == RightOuter || jt == FullOuter
+    def side(df: DataFrame, wm: String, kept: Boolean) =
+      (if (kept) df else df.filter(col("user_id").isNotNull))
+        .withWatermark("ts", wm).filter(col("ts").isNotNull)
+    def whole(df: DataFrame) = struct(df.columns.toIndexedSeq.map(c => col(s"`${c.replace("`", "``")}`")): _*)
+    val l = side(left, leftWm, keepL)
+    val r = side(right, rightWm, keepR)
+    val lt = l.select(col("user_id").as("k"), col("ts"),
+      (col("ts") + expr(s"INTERVAL $upper")).as("hi"), whole(l).as("l"))
+    val rt = r.select(col("user_id").as("k"), col("ts"), whole(r).as("r"))
+    val (lk, rk) = (lt.schema("k").dataType, rt.schema("k").dataType)
+    val kt = TypeCoercion.findWiderTypeForTwo(lk, rk).getOrElse(throw new IllegalArgumentException(
+      s"streamStreamIntervalJoin: user_id types ${lk.simpleString} and ${rk.simpleString} do not compare"))
+    val lType = lt.schema("l").dataType.asInstanceOf[StructType]
+    val rType = rt.schema("r").dataType.asInstanceOf[StructType]
+    val tagged = lt.select(col("k").cast(kt).as("k"), col("ts"), col("hi"), col("l"),
+        lit(null).cast(rType).as("r"))
+      .union(rt.select(col("k").cast(kt).as("k"), col("ts"),
+        lit(null).cast(lt.schema("hi").dataType).as("hi"), lit(null).cast(lType).as("l"), col("r")))
+    val stateSchema = StructType(Seq(StructField("left", BinaryType, false),
+      StructField("right", BinaryType, false)))
+    def outFields(t: StructType, tag: String, nullable: Boolean) =
+      t.fields.zipWithIndex.map { case (f, i) =>
+        f.copy(name = s"$tag$i", nullable = f.nullable || nullable, metadata = Metadata.empty)
+      }
+    val lOut = outFields(lType, "l", keepR)
+    val rOut = if (jt == LeftSemi) Array.empty[StructField] else outFields(rType, "r", keepL)
+    val step = new IntervalJoinBuffers(jt == LeftSemi, keepL, keepR, lType, rType)
+    val out = tagged.groupBy(col("k"))
+      .as[Row, Row](Encoders.row(StructType(Seq(tagged.schema("k")))), Encoders.row(tagged.schema))
+      .flatMapGroupsWithState[Row, Row](OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        step.apply _)(Encoders.row(stateSchema), Encoders.row(StructType(lOut ++ rOut)))
+    // each column gets back its side's name, qualifier and metadata (the
+    // `ts` columns keep their event-time marker, as the native join's do)
+    val named = lOut.zip(l.schema.fields).map((_, "l")) ++ rOut.zip(r.schema.fields).map((_, "r"))
+    out.select(named.toIndexedSeq.map { case ((o, f), q) =>
+      ColumnBridge.qualifiedAlias(col(o.name), f.name, q, f.metadata)
+    }: _*)
   }
 
   /** The ALL-MATCHES streaming twin of

@@ -17,6 +17,14 @@ object ColumnBridge {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** `c AS name` whose output attribute carries `qualifier` and
+    * `metadata`, so `qualifier.name` resolves on the projection as it would
+    * on a `Dataset.as(qualifier)` side of a join. */
+  def qualifiedAlias(c: Column, name: String, qualifier: String,
+                     metadata: org.apache.spark.sql.types.Metadata): Column =
+    column(org.apache.spark.sql.catalyst.expressions.Alias(expression(c), name)(
+      qualifier = Seq(qualifier), explicitMetadata = Some(metadata)))
+
   /** Build a DataFrame from a custom LogicalPlan (Dataset.ofRows is
     * private[sql]). */
   def ofRows(spark: org.apache.spark.sql.SparkSession,

@@ -111,4 +111,24 @@ class SortedIntersectSpec extends AnyFunSuite with SparkTest {
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
   }
+
+  test("generated code compiles when the inputs are non-nullable") {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    // flaggedTriangles' collect_list adjacency: non-null arrays of non-null
+    // elements, so the expression itself is not nullable
+    val t = ArrayType(LongType, containsNull = false)
+    val e = SortedIntersectPacked(BoundReference(0, t, nullable = false),
+      BoundReference(1, t, nullable = false), 2)
+    assert(!e.nullable)
+    // compiled directly, without the interpreted fallback that whole-stage
+    // codegen takes silently, so a compile error fails the test
+    val proj = GenerateUnsafeProjection.generate(Seq(e))
+    val in = new GenericInternalRow(Array[Any](
+      UnsafeArrayData.fromPrimitiveArray(Array(5L * 4 + 3, 9L * 4, 12L * 4 + 1)),
+      UnsafeArrayData.fromPrimitiveArray(Array(2L * 4 + 2, 5L * 4 + 1, 9L * 4 + 2))))
+    assert(proj(in).getArray(0).toLongArray().toSeq ===
+      Seq((5L << 4) | (3L << 2) | 1L, (9L << 4) | (0L << 2) | 2L))
+  }
 }

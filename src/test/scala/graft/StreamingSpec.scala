@@ -7,6 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamOps
 import graft.streaming.StreamOps.Event
 
+/** The two sides of the interval-join parity spec: different schemas and
+  * column orders, nullable keys. Top level so the encoders need no outer
+  * pointer. */
+case class IvjLeft(user_id: Option[Long], ts: Timestamp, tag: String)
+case class IvjRight(amount: Double, user_id: Option[Long], ts: Timestamp)
+
 /** §2.6 — Structured Streaming analogs of the DataStream API, driven through
   * MemoryStream with real watermarks (late "flush" rows advance event time).
   */
@@ -634,5 +640,122 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         Option(e.getCause).exists(_.getMessage.contains("feedback not drained")),
         e.toString)
     } finally q2.stop()
+  }
+
+  test("streamStreamIntervalJoin emits the native stream-stream join's rows on all five join types") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.expr
+    // micro-batch b spans event time [400b, 400b + 400) s; watermarks lag
+    // 2 min (left) and 3 min (right), so an event up to 60 s before its
+    // batch's span is out of order but on time, and one 1000 s before it
+    // is behind the watermark
+    def ts(sec: Long, us: Int = 0) = { val t = at(sec); t.setNanos(us * 1000); t }
+    val rnd = new scala.util.Random(23)
+    var n = 0
+    def lrow(k: Option[Long], t: Timestamp) = { n += 1; IvjLeft(k, t, s"l$n") }
+    def rrow(k: Option[Long], t: Timestamp) = { n += 1; IvjRight(n.toDouble, k, t) }
+    def key = Some(1L + rnd.nextInt(3))
+    var prev = (Seq.empty[IvjLeft], Seq.empty[IvjRight])
+    val replay = (0 until 4).map { b =>
+      val base = 400L * b
+      val fresh = (Seq.fill(10)(lrow(key, ts(base + rnd.nextInt(400), rnd.nextInt(1000000)))),
+        Seq.fill(10)(rrow(key, ts(base + rnd.nextInt(400), rnd.nextInt(1000000)))))
+      val early = if (b == 0) (Nil, Nil)
+        else (Seq.fill(2)(lrow(key, ts(base - 1 - rnd.nextInt(60)))),
+          Seq.fill(2)(rrow(key, ts(base - 1 - rnd.nextInt(60)))))
+      val late = if (b < 2) (Nil, Nil)
+        else (Seq(lrow(key, ts(base - 1000))), Seq(rrow(key, ts(base - 1000))))
+      // exact redeliveries, from this batch or the one before
+      val again = (rnd.shuffle(fresh._1 ++ prev._1).take(2), rnd.shuffle(fresh._2 ++ prev._2).take(2))
+      val nulls = (Seq(lrow(None, ts(base + 100))), Seq(rrow(None, ts(base + 150))))
+      // the bounds: right ts == left ts (out), == left ts + 10 min (in),
+      // and 1 µs past it (out)
+      val bounds = b match {
+        case 1 => (Seq(lrow(Some(1L), ts(450)), lrow(Some(2L), ts(500, 1))),
+          Seq(rrow(Some(1L), ts(450)), rrow(Some(2L), ts(500, 1))))
+        case 2 => (Nil, Seq(rrow(Some(1L), ts(1050)), rrow(Some(2L), ts(1100, 1)),
+          rrow(Some(2L), ts(1100, 2))))
+        case _ => (Nil, Nil)
+      }
+      prev = fresh
+      val parts = Seq(fresh, early, late, again, nulls, bounds)
+      (rnd.shuffle(parts.flatMap(_._1)), rnd.shuffle(parts.flatMap(_._2)))
+    } ++ Seq(
+      // the flush moves both watermarks past every row above; the last
+      // batch is late on both sides and runs the evictions that move allows
+      (Seq(lrow(Some(999L), at(100000))), Seq(rrow(Some(999L), at(100000)))),
+      (Seq(lrow(Some(1L), at(0))), Seq(rrow(Some(1L), at(0)))))
+
+    val types = Seq("inner", "left_outer", "right_outer", "full_outer", "left_semi")
+    def native(l: DataFrame, r: DataFrame, jt: String) =
+      l.withWatermark("ts", "2 minutes").as("l").join(r.withWatermark("ts", "3 minutes").as("r"),
+        expr("l.user_id = r.user_id AND r.ts > l.ts AND r.ts <= l.ts + INTERVAL 10 minutes"), jt)
+    def graft(l: DataFrame, r: DataFrame, jt: String) =
+      StreamOps.streamStreamIntervalJoin(l, r, "2 minutes", "3 minutes", "10 minutes", jt)
+    // one state partition per query: the ten queries share the cores, and
+    // the native join commits four stores per partition on every trigger
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val runs = try {
+      for (jt <- types; (name, build) <- Seq("native" -> native _, "graft" -> graft _)) yield {
+        val l = MemoryStream[IvjLeft]; val r = MemoryStream[IvjRight]
+        val q = build(l.toDF(), r.toDF(), jt).writeStream.format("memory")
+          .queryName(s"s_ivj_${name}_$jt").outputMode("append").start()
+        (jt, name, l, r, q)
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    try {
+      replay.foreach { case (lb, rb) =>
+        runs.foreach { case (_, _, l, r, _) => l.addData(lb); r.addData(rb) }
+        runs.foreach(_._5.processAllAvailable())
+      }
+    } finally runs.foreach(_._5.stop())
+
+    def rows(name: String) = spark.table(name).collect().map(_.toSeq).toSeq
+    def bag(rs: Seq[Seq[Any]]) = rs.groupBy(identity).view.mapValues(_.size).toMap
+    for (jt <- types) {
+      val want = rows(s"s_ivj_native_$jt")
+      val got = rows(s"s_ivj_graft_$jt")
+      // Spark's native full outer join pairs a null key with a null key;
+      // here each of those rows comes out unmatched, null-extended
+      val expected = if (jt != "full_outer") want else {
+        // columns: l.user_id, l.ts, tag, amount, r.user_id, r.ts
+        val (nullPairs, rest) = want.partition(w =>
+          w(0) == null && w(1) != null && w(4) == null && w(5) != null)
+        assert(nullPairs.nonEmpty, "the replay pairs null keys in time")
+        rest ++ nullPairs.map(_.take(3) ++ Seq(null, null, null)).distinct ++
+          nullPairs.map(Seq(null, null, null) ++ _.drop(3)).distinct
+      }
+      val (g, w) = (bag(got), bag(expected))
+      if (g != w) fail(s"$jt: ${got.size} rows against the native ${want.size}; " +
+        s"only here: ${g.toSet -- w.toSet}; only native: ${w.toSet -- g.toSet}")
+      assert(got.nonEmpty, jt)
+    }
+    // the bounds: (450, 1050] and (500 s + 1 µs, 1100 s + 1 µs]
+    val inner = rows("s_ivj_graft_inner")
+    def partners(t: Timestamp) = inner.filter(_(1) == t).map(_(5)).toSet
+    assert(partners(ts(450)).contains(ts(1050)) && !partners(ts(450)).contains(ts(450)))
+    assert(partners(ts(500, 1)).contains(ts(1100, 1)) &&
+      !partners(ts(500, 1)).contains(ts(1100, 2)) && !partners(ts(500, 1)).contains(ts(500, 1)))
+    // one state store per trigger; late rows are counted (the last batch's
+    // two, and over the run at least the four of batches 2 and 3); once the
+    // watermark has passed every row, only the flush rows that moved it
+    // hold state: one key
+    for ((jt, name, _, _, q) <- runs) {
+      val ops = q.lastProgress.stateOperators
+      val dropped = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+      if (name == "graft") {
+        assert(ops.length == 1, s"$jt: ${ops.length} stateful operators")
+        assert(ops.head.numRowsDroppedByWatermark == 2 && dropped >= 6, s"$jt: ${ops.head.json}")
+        assert(ops.head.numRowsTotal == 1, s"$jt: ${ops.head.json}")
+      }
+      val native = runs.find(o => o._1 == jt && o._2 == "native").get._5
+      assert(dropped == native.recentProgress.flatMap(_.stateOperators)
+        .map(_.numRowsDroppedByWatermark).sum, s"$jt $name: late drops differ")
+    }
+    val e = intercept[IllegalArgumentException](
+      StreamOps.streamStreamIntervalJoin(spark.range(1).toDF(), spark.range(1).toDF(),
+        "1 minute", "1 minute", "1 minute", "left_anti"))
+    assert(e.getMessage.contains("left_anti"), e.getMessage)
   }
 }
