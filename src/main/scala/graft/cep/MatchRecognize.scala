@@ -2308,11 +2308,11 @@ object MatchRecognize {
   // unbounded frame. The lowering routes the parsed Spec onto the
   // StreamOps.cepPattern* twins by PATTERN shape:
   //
-  //   linear (plain / '?' / '{n}' / '{n,m}' / unquantified alternation)
-  //     → cepPatternSteps (ExMatch step_ts/step_cls indexing)
-  //   linear, all plain + AFTER MATCH SKIP PAST LAST ROW
-  //     → cepPattern(skipPastLast = true)
-  //   linear, all plain + value measures → cepPatternIter (step_value)
+  //   linear (plain / '?' / '{n}' / '{n,m}' / unquantified alternation;
+  //   relative DEFINEs, value measures and AFTER MATCH SKIP PAST LAST ROW
+  //   on plain unquantified variables)
+  //     → cepLinear, one call (ExMatch step_ts/step_cls/step_value
+  //       indexing; relative DEFINEs ride its per-step prior conditions)
   //   S R+ U / S R* U / S R{n,} U (plain or alternation run)
   //     → cepPatternOneOrMore (run boundaries, count, value aggregates,
   //       per-branch counts)
@@ -2577,8 +2577,8 @@ object MatchRecognize {
     val selfRuns = selfRunDefs(spec)
     val altVars = spec.vars.filter(_.alts.nonEmpty).map(_.name).toSet
     // compile every DEFINE; iterative (relative) residuals compose with
-    // the plain linear shape (lowered onto cepPatternIter below) and
-    // refuse by name elsewhere
+    // the plain linear shape (the linear walk's prior conditions below)
+    // and refuse by name elsewhere
     val residVars = scala.collection.mutable.LinkedHashSet.empty[String]
     val residRefs = scala.collection.mutable.LinkedHashSet.empty[String]
     val compiled: Map[String, Column] =
@@ -2703,35 +2703,29 @@ object MatchRecognize {
       case v => Seq(v)
     }
     val nestedVar = expanded.find(_.inner2Seq.nonEmpty)
-    // iterative-step closures for the linear twin: each step's bitmask
-    // pre-filter AND (when the var carries a relative DEFINE) its residual
-    // threshold evaluated over the PRIOR bound values — the m06-class
-    // `P.value > 2 * S.value` shape, compiled once to an RPN program
-    def iterSteps(): Seq[(SEvent, List[SEvent]) => Boolean] = {
-      val expIdx = expanded.map(_.name).zipWithIndex.toMap
-      val vc = valueFields.headOption.getOrElse("value")
-      expanded.map { v =>
-        val p = slotPred(v.name)
-        residuals.get(v.name) match {
-          case None => (e: SEvent, prior: List[SEvent]) => p(e)
-          case Some((_, op, rhs)) =>
-            val prog = compileResidualArith(rhs, tok =>
-              expIdx.collectFirst { case (n, i) if tok == s"${n}_$vc" => i }
-                .getOrElse(sys.error(s"streaming residual for ${v.name}: " +
-                  s"reference '$tok' — thresholds on a streaming frame may " +
-                  s"only use earlier variables' '$vc' bindings and numeric " +
-                  "literals (timestamp thresholds are batch-only)")))
-            val cmp: (Double, Double) => Boolean = op match {
-              case "<" => _ < _
-              case "<=" => _ <= _
-              case ">" => _ > _
-              case _ => _ >= _
-            }
-            (e: SEvent, prior: List[SEvent]) =>
-              p(e) && cmp(e.value, prog(prior.map(_.value).toIndexedSeq))
+    // relative conditions for the linear walk: a variable with a relative
+    // DEFINE also compares its value with its residual threshold over the
+    // PRIOR bound values — the m06-class `P.value > 2 * S.value` shape,
+    // compiled once to an RPN program
+    val expIdx = expanded.map(_.name).zipWithIndex.toMap
+    def relOf(v: PatternVar): Option[StreamOps.Prior] =
+      residuals.get(v.name).map { case (_, op, rhs) =>
+        val vc = valueFields.headOption.getOrElse("value")
+        val prog = compileResidualArith(rhs, tok =>
+          expIdx.collectFirst { case (n, i) if tok == s"${n}_$vc" => i }
+            .getOrElse(sys.error(s"streaming residual for ${v.name}: " +
+              s"reference '$tok' — thresholds on a streaming frame may " +
+              s"only use earlier variables' '$vc' bindings and numeric " +
+              "literals (timestamp thresholds are batch-only)")))
+        val cmp: (Double, Double) => Boolean = op match {
+          case "<" => _ < _
+          case "<=" => _ <= _
+          case ">" => _ > _
+          case _ => _ >= _
         }
+        (e: SEvent, prior: List[SEvent]) =>
+          cmp(e.value, prog(prior.map(_.value).toIndexedSeq))
       }
-    }
     // anchor-relative residual closure for the run/nested twins (r20 —
     // reference flink-cep IterativeCondition.java composes with every
     // quantifier): the threshold tuple is the ANCHOR's value binding,
@@ -2771,37 +2765,60 @@ object MatchRecognize {
         val s = VarSlots(v, next until (next + n)); next += n; s
       }
       val byName = varSlots.map(s => s.v.name -> s).toMap
-      val nSlots = next
       val valueMeasures = spec.measures.exists(m =>
         !m.fn.contains("CLASSIFIER") && m.field != "ts" &&
           !(altVars(m.varName) && m.field == "cls") &&
           !spec.absentVars.contains(m.varName))
       val allPlainUnquant = expanded.forall(v => isPlainVar(v) && v.quant.isEmpty)
-      if (spec.allRows) {
-        // ALL ROWS over a plain linear match: one output row per bound
-        // step with RUNNING measures (null before the referenced variable
-        // binds — the batch static-explode semantics). Value measures ride
-        // the iterative twin's step_value array.
+      if (spec.allRows)
         require(allPlainUnquant && !spec.skipPastLast,
           "streaming ALL ROWS PER MATCH composes with plain unquantified " +
             "variables (and final nested groups) — quantifiers, " +
             "alternations and SKIP PAST LAST ROW are batch-only under " +
             "ALL ROWS on a stream")
-        val varIdx = expanded.map(_.name).zipWithIndex.toMap
-        val mdf =
-          if (valueMeasures || residVars.nonEmpty) {
-            val steps = iterSteps() // allocates slots BEFORE tagged()
-            StreamOps.cepPatternIter(tagged(), wmDelay, steps, withinMs,
-              maxPartials).toDF()
-          } else {
-            val steps = expanded.map(v => StreamOps.CepStep(slotPred(v.name)))
-            StreamOps.cepPatternSteps(tagged(), wmDelay, steps, withinMs,
-              maxPartials).toDF()
+      else if (spec.skipPastLast) {
+        requireNoResiduals()
+        require(allPlainUnquant && !valueMeasures,
+          "AFTER MATCH SKIP PAST LAST ROW on a streaming frame composes " +
+            "with plain unquantified variables and timestamp measures only")
+      } else if (residVars.nonEmpty)
+        require(allPlainUnquant,
+          "streaming iterative (relative) DEFINEs compose with plain " +
+            "unquantified variables (cepPatternIter) — not with " +
+            "'?'/'{n}' quantifiers or alternations")
+      // relative DEFINEs and all-plain value measures read a plain
+      // variable's one bound event: no aggregates over it
+      val oneBinding = !spec.allRows && !spec.skipPastLast &&
+        (residVars.nonEmpty || (valueMeasures && allPlainUnquant))
+      val steps = expanded.map { v =>
+        val step = if (v.alts.nonEmpty)
+          StreamOps.CepStep(_ => false, branches = v.alts.map(b => b -> slotPred(b)))
+        else {
+          val p = slotPred(v.name)
+          v.quant match {
+            case None => StreamOps.CepStep(p)
+            case Some("?") => StreamOps.CepStep(p, optional = true)
+            case Some(q) =>
+              val b = q.stripPrefix("{").stripSuffix("}").split(",")
+              if (b.length == 2)
+                StreamOps.CepStep(p, times = b(0).toInt, timesTo = b(1).toInt)
+              else StreamOps.CepStep(p, times = b(0).toInt)
           }
+        }
+        (step, relOf(v))
+      }
+      implicit val exEnc = org.apache.spark.sql.Encoders.product[graft.streaming.ExMatch]
+      // slots are all allocated above, BEFORE tagged()
+      val m = StreamOps.cepLinear(tagged(), wmDelay, steps, withinMs, maxPartials,
+        skipPastLast = spec.skipPastLast)(identity).toDF()
+      if (spec.allRows) {
+        // ALL ROWS over a plain linear match: one output row per bound
+        // step with RUNNING measures (null before the referenced variable
+        // binds — the batch static-explode semantics)
         def runningAt(mm: Measure, p: Int): Column = {
           if (mm.fn.contains("CLASSIFIER")) return lit(expanded(p).name)
           if (spec.absentVars.contains(mm.varName)) return absentMeasure(mm)
-          val q = varIdx.getOrElse(mm.varName,
+          val q = expIdx.getOrElse(mm.varName,
             sys.error(s"measure over unknown variable ${mm.varName}"))
           val visible = q <= p
           if (mm.field == "ts") mm.fn match {
@@ -2830,129 +2847,80 @@ object MatchRecognize {
             spec.measures.map(m => runningAt(m, p).as(m.alias)): _*)
         }
         val rowCols = Seq("cls", "ts") ++ spec.measures.map(_.alias)
-        return mdf.select(keyBack :+ explode(array(structs: _*)).as("__r"): _*)
+        return m.select(keyBack :+ explode(array(structs: _*)).as("__r"): _*)
           .select(spec.partitionBy.map(col) ++
             rowCols.map(n => col(s"__r.$n").as(n)): _*)
       }
-      if (spec.skipPastLast) {
-        // SKIP PAST LAST ROW rides cepPattern's greedy start-order
-        // finalization — plain unquantified steps, timestamp measures
-        requireNoResiduals()
-        require(allPlainUnquant && !valueMeasures,
-          "AFTER MATCH SKIP PAST LAST ROW on a streaming frame composes " +
-            "with plain unquantified variables and timestamp measures only")
-        val steps = expanded.map(v => slotPred(v.name))
-        val m = StreamOps.cepPattern(tagged(), wmDelay, steps, withinMs,
-          maxPartials, skipPastLast = true)
-        measureOut(m.toDF(), lit(expanded.last.name)) { mm =>
+      def classifierCol: Column = {
+        val last = expanded.last
+        require(!last.quant.contains("?"),
+          "CLASSIFIER(): the final PATTERN element is optional — " +
+            "data-dependent last-row variable (batch ALL ROWS only)")
+        if (last.alts.nonEmpty)
+          element_at(col("step_cls"), byName(last.name).idxs.head + 1)
+        else lit(last.name)
+      }
+      measureOut(m, classifierCol) { mm =>
+        if (spec.skipPastLast)
           require(mm.field == "ts" && (mm.fn.isEmpty ||
             mm.fn.exists(f => f == "FIRST" || f == "LAST")),
             s"${mm.varName}.${mm.field}: plain timestamp measures only " +
               "under streaming SKIP PAST LAST ROW")
-          element_at(col("step_ts"), byName(mm.varName).idxs.head + 1)
-        }
-      } else if (residVars.nonEmpty || (valueMeasures && allPlainUnquant)) {
-        // relative DEFINEs (and all-plain value measures) ride the
-        // iterative twin, which carries each bound event's value and sees
-        // the prior bindings; quantified-shape value measures take the
-        // cepPatternSteps path below (per-slot step_value)
-        require(allPlainUnquant,
-          "streaming iterative (relative) DEFINEs compose with plain " +
-            "unquantified variables (cepPatternIter) — not with " +
-            "'?'/'{n}' quantifiers or alternations")
-        val steps = iterSteps() // allocates slots BEFORE tagged()
-        val m = StreamOps.cepPatternIter(tagged(), wmDelay, steps,
-          withinMs, maxPartials)
-        measureOut(m.toDF(), lit(expanded.last.name)) { mm =>
-          val idx = byName(mm.varName).idxs.head + 1
+        if (oneBinding)
           require(mm.fn.isEmpty || mm.fn.exists(f => f == "FIRST" || f == "LAST"),
             s"${fnName(mm)}(${mm.varName}.${mm.field}): a plain variable " +
               "binds one event — aggregates need a quantified run")
-          if (mm.field == "ts") element_at(col("step_ts"), idx)
-          else unNaN(element_at(col("step_value"), idx))
-        }
-      } else {
-        val steps: Seq[StreamOps.CepStep] = expanded.map { v =>
-          if (v.alts.nonEmpty)
-            StreamOps.CepStep(_ => false,
-              branches = v.alts.map(b => b -> slotPred(b)))
-          else {
-            val p = slotPred(v.name)
-            v.quant match {
-              case None => StreamOps.CepStep(p)
-              case Some("?") => StreamOps.CepStep(p, optional = true)
-              case Some(q) =>
-                val b = q.stripPrefix("{").stripSuffix("}").split(",")
-                if (b.length == 2)
-                  StreamOps.CepStep(p, times = b(0).toInt, timesTo = b(1).toInt)
-                else StreamOps.CepStep(p, times = b(0).toInt)
-            }
+        if (altVars(mm.varName) && mm.field == "cls") {
+          element_at(col("step_cls"), byName(mm.varName).idxs.head + 1)
+        } else if (mm.field != "ts") {
+          // value measures over the expansion slots (the m11-class
+          // `SUM(B.value)` on `B{n,m}` — the walk carries per-slot
+          // bound values; skipped optional slots read null)
+          require(!altVars(mm.varName),
+            s"${mm.varName}.${mm.field}: alternation-group value " +
+              "measures are not materialized on a stream (use the " +
+              "branch classifiers / counts)")
+          val idxs = byName(mm.varName).idxs
+          def v(i: Int) = unNaN(element_at(col("step_value"), i + 1))
+          def cnt = idxs.map(i => when(v(i).isNotNull, lit(1L))
+            .otherwise(lit(0L))).reduce(_ + _)
+          mm.fn match {
+            case None =>
+              require(idxs.size == 1, s"${mm.varName}.${mm.field}: a " +
+                "quantified variable needs FIRST/LAST/SUM/MIN/MAX/AVG/COUNT")
+              v(idxs.head)
+            case Some("FIRST") => v(idxs.head)
+            case Some("LAST") => coalesce(idxs.reverse.map(v): _*)
+            case Some("SUM") =>
+              idxs.map(v).reduce((a, b) => a + coalesce(b, lit(0.0)))
+            case Some("MIN") =>
+              if (idxs.size == 1) v(idxs.head) else least(idxs.map(v): _*)
+            case Some("MAX") =>
+              if (idxs.size == 1) v(idxs.head) else greatest(idxs.map(v): _*)
+            case Some("AVG") =>
+              idxs.map(v).reduce((a, b) => a + coalesce(b, lit(0.0))) / cnt
+            case Some("COUNT") => cnt
+            case other => sys.error(s"${fnName(mm)}(${mm.varName}." +
+              s"${mm.field}): unsupported measure function")
           }
-        }
-        val m = StreamOps.cepPatternSteps(tagged(), wmDelay, steps, withinMs,
-          maxPartials)
-        def classifierCol: Column = {
-          val last = expanded.last
-          require(!last.quant.contains("?"),
-            "CLASSIFIER(): the final PATTERN element is optional — " +
-              "data-dependent last-row variable (batch ALL ROWS only)")
-          if (last.alts.nonEmpty)
-            element_at(col("step_cls"), byName(last.name).idxs.head + 1)
-          else lit(last.name)
-        }
-        measureOut(m.toDF(), classifierCol) { mm =>
-          if (altVars(mm.varName) && mm.field == "cls") {
-            element_at(col("step_cls"), byName(mm.varName).idxs.head + 1)
-          } else if (mm.field != "ts") {
-            // value measures over the expansion slots (the m11-class
-            // `SUM(B.value)` on `B{n,m}` — the twin carries per-slot
-            // bound values; skipped optional slots read null)
-            require(!altVars(mm.varName),
-              s"${mm.varName}.${mm.field}: alternation-group value " +
-                "measures are not materialized on a stream (use the " +
-                "branch classifiers / counts)")
-            val idxs = byName(mm.varName).idxs
-            def v(i: Int) = unNaN(element_at(col("step_value"), i + 1))
-            def cnt = idxs.map(i => when(v(i).isNotNull, lit(1L))
-              .otherwise(lit(0L))).reduce(_ + _)
-            mm.fn match {
-              case None =>
-                require(idxs.size == 1, s"${mm.varName}.${mm.field}: a " +
-                  "quantified variable needs FIRST/LAST/SUM/MIN/MAX/AVG/COUNT")
-                v(idxs.head)
-              case Some("FIRST") => v(idxs.head)
-              case Some("LAST") => coalesce(idxs.reverse.map(v): _*)
-              case Some("SUM") =>
-                idxs.map(v).reduce((a, b) => a + coalesce(b, lit(0.0)))
-              case Some("MIN") =>
-                if (idxs.size == 1) v(idxs.head) else least(idxs.map(v): _*)
-              case Some("MAX") =>
-                if (idxs.size == 1) v(idxs.head) else greatest(idxs.map(v): _*)
-              case Some("AVG") =>
-                idxs.map(v).reduce((a, b) => a + coalesce(b, lit(0.0))) / cnt
-              case Some("COUNT") => cnt
-              case other => sys.error(s"${fnName(mm)}(${mm.varName}." +
-                s"${mm.field}): unsupported measure function")
-            }
-          } else {
-            val idxs = byName(mm.varName).idxs
-            mm.fn match {
-              case None =>
-                require(idxs.size == 1, s"${mm.varName}.ts: a quantified " +
-                  "variable needs FIRST/LAST/COUNT")
-                element_at(col("step_ts"), idxs.head + 1)
-              case Some("FIRST") => element_at(col("step_ts"), idxs.head + 1)
-              case Some("LAST") =>
-                // '{n,m}': the optional tail is a nullable SUFFIX — the
-                // last bound expansion is the first non-null from the right
-                coalesce(idxs.reverse.map(i =>
-                  element_at(col("step_ts"), i + 1)): _*)
-              case Some("COUNT") =>
-                idxs.map(i => when(element_at(col("step_ts"), i + 1).isNotNull,
-                  lit(1L)).otherwise(lit(0L))).reduce(_ + _)
-              case other => sys.error(s"${fnName(mm)}(${mm.varName}.ts): " +
-                "FIRST/LAST/COUNT only over quantified timestamps")
-            }
+        } else {
+          val idxs = byName(mm.varName).idxs
+          mm.fn match {
+            case None =>
+              require(idxs.size == 1, s"${mm.varName}.ts: a quantified " +
+                "variable needs FIRST/LAST/COUNT")
+              element_at(col("step_ts"), idxs.head + 1)
+            case Some("FIRST") => element_at(col("step_ts"), idxs.head + 1)
+            case Some("LAST") =>
+              // '{n,m}': the optional tail is a nullable SUFFIX — the
+              // last bound expansion is the first non-null from the right
+              coalesce(idxs.reverse.map(i =>
+                element_at(col("step_ts"), i + 1)): _*)
+            case Some("COUNT") =>
+              idxs.map(i => when(element_at(col("step_ts"), i + 1).isNotNull,
+                lit(1L)).otherwise(lit(0L))).reduce(_ + _)
+            case other => sys.error(s"${fnName(mm)}(${mm.varName}.ts): " +
+              "FIRST/LAST/COUNT only over quantified timestamps")
           }
         }
       }

@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.ByteBuffer
 import java.sql.Timestamp
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -25,6 +25,20 @@ import org.apache.spark.sql.types.StructType
   * watermark bounds state retention — at 100 TB/day the state store holds
   * only the watermark horizon per key, exactly like Flink's keyed state
   * backend with TTL.
+  *
+  * Cap policies. The keyed operators that cap what a key holds use one of
+  * two policies, chosen by what the operator promises to match:
+  *  - Partial-match twins (`cepLinear` under cepPattern, cepPatternSteps
+  *    and cepPatternIter, and the run, group, nested, timeout and two-run
+  *    twins) keep the NEWEST starts: past `maxPartials` open partials the
+  *    oldest is dropped. Every start owes its own match, and the oldest
+  *    starts are the closest to window expiry, so they have the least
+  *    window left to complete in.
+  *  - `cepFollowedBy` and `coProcessMatch` drop the NEWEST arrival once
+  *    `maxPending` entries wait. They pair an arrival with the EARLIEST
+  *    waiting entry, so the retained earliest entries are exactly the ones
+  *    a later arrival matches first, and the matching degrades predictably.
+  * The per-operator scaladocs name the cap and refer here.
   */
 // State/row types live at package level: Janino-generated encoder code cannot
 // construct nested-in-object (outer-pointer) case classes.
@@ -46,7 +60,9 @@ case class TopNOut(user_id: Long, rank: Int, value: Double, ts: Timestamp)
 case class Tagged(user_id: Long, ts: Timestamp, side: String)
 case class CoAcc(leftMs: List[Long], rightMs: List[Long])
 case class MatchOut(user_id: Long, left_ts: Timestamp, right_ts: Timestamp)
-case class Partial(boundMs: List[Long]) // bound step times, newest first
+// the savepoint seed format of cepPattern (epoch ms): an open partial's
+// bound step times, newest first
+case class Partial(boundMs: List[Long])
 // pending = completed matches held for SKIP_PAST_LAST finalization (newest-
 // first bound times); lastEndMs = the last emitted match's final bound time
 case class CepPatternAcc(partials: List[Partial],
@@ -54,33 +70,34 @@ case class CepPatternAcc(partials: List[Partial],
                          lastEndMs: Long = Long.MinValue)
 case class PatternMatch(user_id: Long, step_ts: Seq[Timestamp],
                         skey: String = "")
-// general-step partials: bound times + branch classifiers (newest first;
-// Long.MinValue marks a SKIPPED optional step) and, for a pending STRICT
-// step, the successor event time observed so far (-1 = none yet). `guards`
-// record each skipped step: the skip branch is killed if any event matching
-// that step arrives in (fromMs, start + within] — the batch lowering binds
-// an optional whenever a candidate exists anywhere in the window
-case class Guard(step: Int, fromMs: Long)
+// The state of StreamOps.cepLinear, all times in µs.
+// A partial: bound times + branch classifiers (newest first; Long.MinValue
+// marks a SKIPPED optional step) and, for a pending STRICT step, the
+// successor event time observed so far (-1 = none yet). `guards` record
+// each skipped step: the skip branch is killed if any event matching that
+// step arrives in (fromUs, start + within] — the batch lowering binds an
+// optional whenever a candidate exists anywhere in the window
+case class Guard(step: Int, fromUs: Long)
 // succKilled: for a STRICT-negative pending, whether an event AT the
 // currently-known first successor time satisfied the negative predicate —
-// the decision is only FINAL once the watermark passes succMs (an
+// the decision is only FINAL once the watermark passes succUs (an
 // out-of-order event at or before it can still arrive and change both)
-// vals: the bound events' values, parallel to boundMs (newest-first; a
+// vals: the bound events' values, parallel to boundUs (newest-first; a
 // skipped optional's slot holds a placeholder — the Skip timestamp decides
-// nullability on output)
-case class ExPartial(boundMs: List[Long], cls: List[String], succMs: Long,
+// nullability on output); tpes: their event types, kept only when some step
+// is relative (the key supplies the rest of each prior event)
+case class ExPartial(boundUs: List[Long], cls: List[String], succUs: Long,
                      guards: List[Guard] = Nil, succKilled: Boolean = false,
-                     vals: List[Double] = Nil)
-// pending = completed matches containing a skipped optional: they emit only
-// once the watermark passes the window end (no guard event can then arrive)
-case class CepExAcc(partials: List[ExPartial], pending: List[ExPartial] = Nil)
+                     vals: List[Double] = Nil, tpes: List[String] = Nil)
+// pending = completed matches held until their window closes (a skipped
+// optional or a negative terminal: no guard event can then arrive; under
+// skip-past-last, every match); lastEndUs = the last kept match's final
+// bound time under skip-past-last
+case class CepExAcc(partials: List[ExPartial], pending: List[ExPartial] = Nil,
+                    lastEndUs: Long = Long.MinValue)
 case class ExMatch(user_id: Long, step_ts: Seq[Timestamp], step_cls: Seq[String],
                    step_value: Seq[Option[Double]] = Nil,
                    skey: String = "")
-// iterative-condition partials carry the full bound events (newest first) so
-// later step predicates can reference them — O(steps) state per partial
-case class IterPartial(bound: List[Event])
-case class CepIterAcc(partials: List[IterPartial])
 case class IterMatch(user_id: Long, step_ts: Seq[Timestamp], step_value: Seq[Double],
                      skey: String = "")
 // oneOrMore runs carry only first/last/count plus running value aggregates
@@ -695,12 +712,8 @@ object StreamOps {
     * documented parity op.
     *
     * Bounds (mirroring [[coProcessMatch]]): at most `maxPending` unmatched
-    * first-events per key are retained; when the buffer is full the NEWEST
-    * arrival is dropped (documented policy — the retained earliest events
-    * are exactly the ones a future second-event matches first, so
-    * earliest-match semantics degrade predictably; note the
-    * cepPattern/cepPatternSteps/cepPatternIter family makes the OPPOSITE
-    * choice, keeping the newest starts). Pending firsts whose
+    * first-events per key are retained, dropping the newest arrival when
+    * full (the header's cap policies). Pending firsts whose
     * window closed at-or-before the watermark are pruned each batch, and an
     * event-time timeout releases a dormant key's state entirely once every
     * pending window has passed (Flink NFA pruning + state-TTL analog). */
@@ -967,11 +980,9 @@ object StreamOps {
     * of the second side. State holds only unmatched timestamps.
     *
     * Bounds: at most `maxPending` unmatched timestamps per key AND side are
-    * retained; when the buffer is full the NEWEST arrival is dropped
-    * (documented policy — earliest-pending semantics degrade predictably,
-    * because the retained earliest events are exactly the ones the contract
-    * promises to match first). Keys idle past `idleTtlMs` of event time are
-    * evicted wholesale (Flink state-TTL analog). */
+    * retained, dropping the newest arrival when full (the header's cap
+    * policies). Keys idle past `idleTtlMs` of event time are evicted
+    * wholesale (Flink state-TTL analog). */
   def coProcessMatch(left: Dataset[Event], right: Dataset[Event],
                      watermark: String, maxPending: Int = 1024,
                      idleTtlMs: Long = 86400000L): Dataset[MatchOut] = {
@@ -1021,13 +1032,8 @@ object StreamOps {
     * later step binds the first following event matching its predicate
     * within `withinMs` of the start. Completed matches emit immediately.
     * Negative (notFollowedBy) endings need window-expiry emission — use
-    * [[cepPatternSteps]] with a terminal `negative` step for those. State
-    * per key is bounded two ways: at most `maxPartials`
-    * open partial matches survive a micro-batch (newest starts kept — the
-    * oldest are closest to expiry anyway), and expired partials are pruned
-    * against the watermark with an event-time timeout, so a key that stops
-    * sending events still releases its state once its window passes (Flink
-    * NFA pruning + state-TTL analog).
+    * [[cepPatternSteps]] with a terminal `negative` step for those. Runs on
+    * [[cepLinear]], whose scaladoc gives the state bounds and cap.
     *
     * `skipPastLast` is `Pattern.afterMatchSkipPastLastEvent`'s twin
     * (AfterMatchSkipStrategy.skipPastLastEvent): kept matches must start
@@ -1036,98 +1042,31 @@ object StreamOps {
     * matches are HELD until the watermark passes their window end (no
     * earlier-starting match can then still complete) and finalized in
     * (start, end) order against the per-key last-end — emission latency is
-    * one window, inherent to the semantics. */
+    * one window, inherent to the semantics.
+    *
+    * `initialState`: BootstrapTransformation analog for the CEP shape —
+    * each (key, CepPatternAcc), in epoch ms, seeds that key's OPEN PARTIAL
+    * MATCHES and skip-past-last frontier (`pending`, `lastEndMs`) before
+    * the first batch, as if restored from a prior run's checkpoint: a
+    * seeded partial completes from live events exactly where the prior run
+    * left off. Seeded keys emit on their next event; seeding alone
+    * schedules no timer (checkpoint-restore parity). Composite keys have no
+    * savepoint surface: seeds are long-keyed. */
   def cepPattern(events: Dataset[Event], watermark: String,
                  steps: Seq[Event => Boolean], withinMs: Long,
                  maxPartials: Int = 256,
                  skipPastLast: Boolean = false,
                  initialState: Option[Dataset[(Long, CepPatternAcc)]] = None): Dataset[PatternMatch] = {
-    require(steps.size >= 2, "a pattern needs at least two steps")
     implicit val outEnc = Encoders.product[PatternMatch]
-    implicit val accEnc = Encoders.product[CepPatternAcc]
-    implicit val keyEnc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    // `initialState`: BootstrapTransformation analog for the CEP shape —
-    // each (key, CepPatternAcc) seeds that key's OPEN PARTIAL MATCHES (and
-    // skip-past-last frontier) before the first batch, as if restored from
-    // a prior run's checkpoint: a seeded partial completes from live events
-    // exactly where the prior run left off. Seeded keys emit on their next
-    // event; seeding alone schedules no timer (checkpoint-restore parity).
-    val fn = (gkey: (Long, String), rows: Iterator[Event], state: GroupState[CepPatternAcc]) => {
-          val userId = gkey._1
-          var partials = state.getOption.map(_.partials).getOrElse(Nil)
-          var pending = state.getOption.map(_.pending).getOrElse(Nil)
-          var lastEnd = state.getOption.map(_.lastEndMs).getOrElse(Long.MinValue)
-          val out = Seq.newBuilder[PatternMatch]
-          // deterministic within-batch order on equal timestamps (mirrors
-          // coProcessMatch's tie-break; batch Pattern.detect resolves ties by
-          // min-aggregation, so equal-ts processing order must be stable)
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.event_type, e.value)).foreach { e =>
-            val t = e.ts.getTime
-            // advance every open partial expecting its next step (earliest binds:
-            // events arrive time-sorted, so the first candidate wins)
-            partials = partials.flatMap { p =>
-              val i = p.boundMs.length
-              val start = p.boundMs.last
-              if (t <= start + withinMs && t > p.boundMs.head && steps(i)(e)) {
-                val bound = t :: p.boundMs
-                if (bound.length == steps.size) {
-                  if (skipPastLast) pending = Partial(bound) :: pending
-                  else out += PatternMatch(userId,
-                    bound.reverse.map(new Timestamp(_)))
-                  None // completed
-                } else Some(Partial(bound))
-              } else if (start + withinMs < t) None // expired
-              else Some(p)
-            }
-            if (steps.head(e)) partials = (Partial(List(t)) :: partials).take(maxPartials)
-          }
-          // watermark pruning: a partial whose window closed at-or-before the
-          // watermark can never complete (no event <= watermark will arrive)
-          val wm = state.getCurrentWatermarkMs()
-          partials = partials.filter(_.boundMs.last + withinMs > wm)
-          // SKIP_PAST_LAST finalization: matches whose window closed are
-          // final in start order (no earlier-starting match can appear);
-          // keep those starting strictly after the previous kept match's end
-          if (skipPastLast) {
-            val (ripe, held) = pending.partition(_.boundMs.last + withinMs <= wm)
-            ripe.map(p => (p.boundMs.last, p.boundMs.max, p))
-              .sortBy { case (s, en, _) => (s, en) }
-              .foreach { case (s, en, p) =>
-                if (s > lastEnd) {
-                  lastEnd = en
-                  out += PatternMatch(userId, p.boundMs.reverse.map(new Timestamp(_)))
-                }
-              }
-            pending = held
-          }
-          // the greedy frontier only constrains starts <= lastEnd; once the
-          // watermark passes it no admissible start can violate it, so the
-          // state fully releases
-          if (partials.isEmpty && pending.isEmpty && lastEnd <= wm) state.remove()
-          else if (partials.isEmpty && pending.isEmpty) {
-            state.update(CepPatternAcc(Nil, Nil, lastEnd))
-            state.setTimeoutTimestamp(lastEnd + 1) // > wm by the branch guard
-          } else {
-            state.update(CepPatternAcc(partials, pending, lastEnd))
-            state.setTimeoutTimestamp(
-              (partials.map(_.boundMs.last + withinMs) ++
-                pending.map(_.boundMs.last + withinMs)).min)
-          }
-          if (gkey._2.isEmpty) out.result().iterator
-          else out.result().map(_.copy(skey = gkey._2)).iterator
-    }
-    val grouped = tsWatermarked(events, watermark)
-      .groupByKey(e => (e.user_id, e.skey))
-    initialState match {
-      case Some(init) =>
-        // savepoint-seeded state is long-keyed (composite keys have no
-        // savepoint surface)
-        grouped.flatMapGroupsWithState[CepPatternAcc, PatternMatch](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout,
-          init.groupByKey(r => (r._1, "")).mapValues(_._2))(fn)
-      case None =>
-        grouped.flatMapGroupsWithState[CepPatternAcc, PatternMatch](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    def seeded(p: Partial) = ExPartial(p.boundMs.map(_ * 1000L),
+      p.boundMs.map(_ => ""), -1L, vals = p.boundMs.map(_ => 0.0))
+    val seed = initialState.map(_.map { case (k, a) =>
+      (k, CepExAcc(a.partials.map(seeded), a.pending.map(seeded),
+        if (a.lastEndMs == Long.MinValue) Long.MinValue else a.lastEndMs * 1000L))
+    }(Encoders.tuple(Encoders.scalaLong, Encoders.product[CepExAcc])))
+    cepLinear(events, watermark, steps.map(p => (CepStep(p), None)), withinMs,
+        maxPartials, skipPastLast, seed) { m =>
+      PatternMatch(m.user_id, m.step_ts, m.skey)
     }
   }
 
@@ -1183,52 +1122,133 @@ object StreamOps {
     * successive occurrences, and a terminal `negative` step
     * (notFollowedBy) holds the completed positive prefix the same way —
     * killed by any matching event before the window closes, emitted via
-    * the event-time timeout otherwise. Within-batch processing order is deterministic
-    * on (ts, type, value); state is bounded by `maxPartials` + watermark
-    * pruning + event-time eviction exactly as [[cepPattern]]. Partial-cap
-    * policy (shared by the cepPattern/cepPatternSteps/cepPatternIter
-    * family): when a key exceeds `maxPartials`, the NEWEST starts are kept —
-    * the opposite of [[cepFollowedBy]], which keeps its oldest pending
-    * starts; both are documented choices, pick the op accordingly. */
+    * the event-time timeout otherwise. Runs on [[cepLinear]]. */
   def cepPatternSteps(events: Dataset[Event], watermark: String,
                       steps: Seq[CepStep], withinMs: Long,
                       maxPartials: Int = 256): Dataset[ExMatch] = {
-    require(steps.count(_.negative) <= 1 && !steps.dropRight(1).exists(_.negative),
+    implicit val outEnc = Encoders.product[ExMatch]
+    cepLinear(events, watermark, steps.map(s => (s, None)), withinMs,
+      maxPartials)(identity)
+  }
+
+  /** Streaming linear CEP with ITERATIVE conditions — the unbounded
+    * counterpart of `graft.cep.Pattern.followedByIterative` (reference
+    * flink-libraries/flink-cep/.../pattern/conditions/IterativeCondition
+    * .java:65, `ctx.getEventsForPattern`): each step predicate sees the
+    * candidate event AND the prior bound events (oldest first), so relative
+    * conditions like "purchase.value > 2 × signup.value" work on streams.
+    * Emits both timestamps and values of the bound events. `steps.head` is
+    * called with an empty prior list. Runs on [[cepLinear]]. */
+  def cepPatternIter(events: Dataset[Event], watermark: String,
+                     steps: Seq[(Event, List[Event]) => Boolean], withinMs: Long,
+                     maxPartials: Int = 256): Dataset[IterMatch] = {
+    implicit val outEnc = Encoders.product[IterMatch]
+    cepLinear(events, watermark, steps.map(f => (CepStep(_ => true), Some(f))),
+        withinMs, maxPartials) { m =>
+      IterMatch(m.user_id, m.step_ts, m.step_value.map(_.get), m.skey)
+    }
+  }
+
+  /** A relative (iterative) step condition: the candidate event and the
+    * partial's prior bound events, oldest first, skipped optionals left out. */
+  private[graft] type Prior = (Event, List[Event]) => Boolean
+
+  // Spark keeps event time in µs: the linear walk compares and emits in µs,
+  // and rounds its event-time timeouts (ms) up so they never fall before the
+  // watermark
+  private def micros(ts: Timestamp): Long = DateTimeUtils.fromJavaTimestamp(ts)
+  private def tsOf(us: Long): Timestamp = DateTimeUtils.toJavaTimestamp(us)
+  private def ceilMs(us: Long): Long = Math.floorDiv(us + 999L, 1000L)
+
+  /** The one linear streaming CEP walk: [[cepPattern]], [[cepPatternSteps]],
+    * [[cepPatternIter]] and MATCH_RECOGNIZE's linear streaming lowering all
+    * run on it. `steps` are [[CepStep]]s (strict, optional, `times`,
+    * alternation, terminal negative), each with an optional relative
+    * condition ([[Prior]]) that must hold as well when the step binds;
+    * `toOut` shapes each match for its caller.
+    *
+    * Times are compared and emitted in µs, the precision Spark keeps; the
+    * window bound is inclusive (`t <= start + withinMs`). Within a batch,
+    * rows are processed in (ts, type, value) order. The walk DECIDES ON
+    * ARRIVAL: a step binds the first matching event the key has seen so
+    * far. So an event that reaches a key after later events of that key,
+    * still inside the watermark, can bind differently from batch (where it
+    * would have bound first). The run, group and nested twins decide on the
+    * watermark-finalized prefix instead (see [[BufEv]]).
+    *
+    * Without skip-past-last, a match with no skipped optional and no
+    * negative terminal emits as soon as its last step binds; the others are
+    * held until the watermark passes their window end (a strict negative
+    * decides as soon as the watermark passes its first successor time).
+    * With `skipPastLast` every completed match is held until its window
+    * closes, then the ripe ones are finalized greedily in (start, end)
+    * order against the key's last kept end (`CepExAcc.lastEndUs`).
+    *
+    * State per key: the open partials and held matches, at most
+    * `maxPartials` open partials (newest starts kept: the header's cap
+    * policies), pruned against the watermark, with an event-time timeout at
+    * the earliest window end so a key that stops sending events still
+    * releases its state (Flink NFA pruning + state-TTL analog). A partial
+    * carries its bound times, branch classes and values (and the bound
+    * event types when some step is relative: with the key, that rebuilds
+    * the prior events). `initialState` seeds keys as if restored from a
+    * checkpoint.
+    *
+    * State layout: one `CepExAcc` per (key, skey), times in µs. A checkpoint
+    * written by the earlier per-entry-point walks of cepPattern,
+    * cepPatternSteps and cepPatternIter (`CepPatternAcc`, `CepExAcc` and
+    * `CepIterAcc` states in ms) cannot be resumed by this operator. */
+  private[graft] def cepLinear[O: Encoder](events: Dataset[Event], watermark: String,
+      steps: Seq[(CepStep, Option[Prior])], withinMs: Long, maxPartials: Int,
+      skipPastLast: Boolean = false,
+      initialState: Option[Dataset[(Long, CepExAcc)]] = None)(
+      toOut: ExMatch => O): Dataset[O] = {
+    require(steps.count(_._1.negative) <= 1 && !steps.dropRight(1).exists(_._1.negative),
       "a negative step must be the single terminal step")
-    val negStep: Option[CepStep] = steps.lastOption.filter(_.negative)
-    negStep.foreach(s => require(s.branches.isEmpty && !s.optional && s.times == 1,
-      "a negative step is unquantified and branch-free"))
+    val negStep: Option[CepStep] = steps.lastOption.map(_._1).filter(_.negative)
+    negStep.foreach(s => require(s.branches.isEmpty && !s.optional && s.times == 1 &&
+      steps.last._2.isEmpty, "a negative step is unquantified, branch-free and not relative"))
     // strict negative (notNext twin): only the key's FIRST event time after
     // the last binding decides — any satisfying event at that time kills,
     // otherwise the match emits as soon as that time passes (vacuous pass
     // at window expiry when no successor arrives)
     val negStrict = negStep.exists(_.strict)
-    val positives: Seq[CepStep] = steps.filterNot(_.negative).flatMap { s =>
-      require(s.times >= 1, "times must be >= 1")
-      require(!(s.optional && s.times > 1), "optional and times(n) are exclusive")
-      require(!(s.optional && s.strict), "optional and strict are exclusive")
-      require(!(s.optional && s.branches.nonEmpty), "optional and branches are exclusive")
-      if (s.timesTo > 0) {
-        // {from, to} range: from mandatory + (to - from) optional copies —
-        // the skip-guard machinery supplies the greedy semantics
-        require(s.timesTo > s.times, "timesTo must exceed times")
-        require(!s.optional && !s.strict && s.branches.isEmpty,
-          "a range step is plain (no optional/strict/branches)")
-        Seq.fill(s.times)(s.copy(times = 1, timesTo = 0)) ++
-          Seq.fill(s.timesTo - s.times)(s.copy(times = 1, timesTo = 0, optional = true))
-      } else Seq.fill(s.times)(s.copy(times = 1))
+    val positives: Seq[(CepStep, Option[Prior])] = steps.filterNot(_._1.negative).flatMap {
+      case (s, rel) =>
+        require(s.times >= 1, "times must be >= 1")
+        require(!(s.optional && s.times > 1), "optional and times(n) are exclusive")
+        require(!(s.optional && s.strict), "optional and strict are exclusive")
+        require(!(s.optional && s.branches.nonEmpty), "optional and branches are exclusive")
+        if (s.timesTo > 0) {
+          // {from, to} range: from mandatory + (to - from) optional copies —
+          // the skip-guard machinery supplies the greedy semantics
+          require(s.timesTo > s.times, "timesTo must exceed times")
+          require(!s.optional && !s.strict && s.branches.isEmpty,
+            "a range step is plain (no optional/strict/branches)")
+          Seq.fill(s.times)((s.copy(times = 1, timesTo = 0), rel)) ++
+            Seq.fill(s.timesTo - s.times)((s.copy(times = 1, timesTo = 0, optional = true), rel))
+        } else Seq.fill(s.times)((s.copy(times = 1), rel))
     }
     // the negative step (if any) sits at index nPos so guards address it
-    val expanded: IndexedSeq[CepStep] = (positives ++ negStep).toIndexedSeq
+    val expanded: IndexedSeq[CepStep] = (positives.map(_._1) ++ negStep).toIndexedSeq
+    val rels: IndexedSeq[Option[Prior]] = positives.map(_._2).toIndexedSeq
+    val hasRel = rels.exists(_.nonEmpty)
     val nPos = positives.size
     require(nPos >= 1 && expanded.size >= 2, "a pattern needs at least two steps")
     require(!expanded.head.strict, "the first step has no predecessor to be strict after")
     require(!expanded.head.optional, "the first step cannot be optional")
+    val withinUs = withinMs * 1000L
     val Skip = Long.MinValue
     def predOf(s: CepStep): Event => Boolean =
       if (s.branches.nonEmpty) e => s.branches.exists(_._2(e)) else s.pred
     def clsOf(s: CepStep, e: Event): String =
       s.branches.find(_._2(e)).map(_._1).getOrElse("")
+    // one more binding: the bound time, class, value and (for relative
+    // steps) event type, newest first
+    def bind(p: ExPartial, t: Long, cls: String, e: Event): ExPartial =
+      p.copy(boundUs = t :: p.boundUs, cls = cls :: p.cls, succUs = -1L,
+        vals = e.value :: p.vals,
+        tpes = if (hasRel) e.event_type :: p.tpes else Nil)
     // skip-fork: while the next unbound step is optional, branch off a
     // partial that marks it skipped and guards against any candidate
     // arriving later in the window
@@ -1237,13 +1257,14 @@ object StreamOps {
       open += p0
       var cur = p0
       var more = true
-      while (more && cur.boundMs.length < nPos &&
-             expanded(cur.boundMs.length).optional) {
-        val i = cur.boundMs.length
-        val from = cur.boundMs.find(_ != Skip).get
-        cur = ExPartial(Skip :: cur.boundMs, "" :: cur.cls, -1L,
-          Guard(i, from) :: cur.guards, vals = 0.0 :: cur.vals)
-        if (cur.boundMs.length == nPos) {
+      while (more && cur.boundUs.length < nPos &&
+             expanded(cur.boundUs.length).optional) {
+        val i = cur.boundUs.length
+        val from = cur.boundUs.find(_ != Skip).get
+        cur = ExPartial(Skip :: cur.boundUs, "" :: cur.cls, -1L,
+          Guard(i, from) :: cur.guards, vals = 0.0 :: cur.vals,
+          tpes = if (hasRel) "" :: cur.tpes else Nil)
+        if (cur.boundUs.length == nPos) {
           // completed through skips: a negative terminal adds its own guard
           // (no matching event from the last REAL binding to window end)
           pend += cur.copy(guards =
@@ -1253,195 +1274,158 @@ object StreamOps {
       }
       (open.result(), pend.result())
     }
-    def toMatch(userId: Long, p: ExPartial): ExMatch =
-      ExMatch(userId, p.boundMs.reverse.map(ms =>
-        if (ms == Skip) null else new Timestamp(ms)), p.cls.reverse,
-        p.boundMs.reverse.lazyZip(p.vals.reverse).map((ms, v) =>
-          if (ms == Skip) None else Some(v)))
-    implicit val outEnc = Encoders.product[ExMatch]
+    val unbound = ExPartial(Nil, Nil, -1L)
+    val fn = (gkey: (Long, String), rows: Iterator[Event], state: GroupState[CepExAcc]) => {
+      val acc = state.getOption.getOrElse(CepExAcc(Nil))
+      var partials = acc.partials
+      var pending = acc.pending
+      var lastEnd = acc.lastEndUs
+      val out = Seq.newBuilder[O]
+      def emit(p: ExPartial): Unit = out += toOut(ExMatch(gkey._1,
+        p.boundUs.reverse.map(us => if (us == Skip) null else tsOf(us)), p.cls.reverse,
+        p.boundUs.reverse.lazyZip(p.vals.reverse).map((us, v) =>
+          if (us == Skip) None else Some(v)), gkey._2))
+      // the partial's bound events, oldest first (the list is newest first)
+      def priors(p: ExPartial): List[Event] = {
+        var prior = List.empty[Event]
+        p.boundUs.lazyZip(p.tpes).lazyZip(p.vals).foreach { (us, tpe, v) =>
+          if (us != Skip) prior = Event(gkey._1, tsOf(us), tpe, v, gkey._2) :: prior
+        }
+        prior
+      }
+      def binds(i: Int, e: Event, p: ExPartial): Boolean =
+        predOf(expanded(i))(e) && rels(i).forall(_(e, priors(p)))
+      rows.map(e => (micros(e.ts), e)).toSeq
+        .sortBy { case (t, e) => (t, e.event_type, e.value) }.foreach { case (t, e) =>
+        // guard pass FIRST: an in-window candidate for a skipped optional
+        // invalidates the skip branch (the main branch binds it instead);
+        // a STRICT negative guard is excluded here — only the first
+        // successor time decides it (handled below)
+        def guardHit(p: ExPartial): Boolean =
+          p.guards.exists(g => !(negStrict && g.step == nPos) &&
+            t > g.fromUs &&
+            t <= p.boundUs.last + withinUs && predOf(expanded(g.step))(e))
+        partials = partials.filterNot(guardHit)
+        pending = pending.filterNot(guardHit)
+        if (negStrict) {
+          val negPred = predOf(expanded(nPos))
+          pending = pending.map { p =>
+            val start = p.boundUs.last
+            val from = p.guards.find(_.step == nPos).get.fromUs
+            if (t > from && t <= start + withinUs) {
+              // track the EARLIEST successor time seen and whether any
+              // event AT it satisfies the negative predicate; nothing is
+              // emitted or killed here — an out-of-order event at or
+              // before succUs can arrive in a later micro-batch (still
+              // ahead of the watermark) and change the decision, so it
+              // finalizes only once the watermark passes succUs
+              if (p.succUs < 0 || t < p.succUs)
+                p.copy(succUs = t, succKilled = negPred(e))
+              else if (t == p.succUs && negPred(e)) p.copy(succKilled = true)
+              else p
+            } else p
+          }
+        }
+        partials = partials.flatMap { p =>
+          val i = p.boundUs.length
+          val start = p.boundUs.last
+          val step = expanded(i)
+          val prevReal = p.boundUs.find(_ != Skip).get
+          if (start + withinUs < t) Nil // window expired
+          else if (t <= prevReal) List(p) // not after the previous binding
+          else {
+            val succKnown = p.succUs >= 0
+            val succ = if (succKnown) p.succUs else t
+            if (step.strict && t > succ) Nil // successor time passed unbound
+            else if ((!step.strict || t == succ) && binds(i, e, p)) {
+              val b = bind(p, t, clsOf(step, e), e)
+              if (b.boundUs.length == nPos) {
+                // a negative terminal guards (lastBinding, window end]
+                val done = b.copy(guards = negStep.map(_ => Guard(nPos, t)).toList ++ p.guards)
+                // a match with skips or a negative terminal, and every
+                // match under skip-past-last, emits only at window expiry
+                if (done.guards.isEmpty && !skipPastLast) emit(done)
+                else pending = done :: pending
+                Nil
+              } else {
+                val (open, pend) = forkFrom(b)
+                pending = pend ++ pending
+                open
+              }
+            } else if (step.strict && !succKnown) List(p.copy(succUs = t))
+            else List(p)
+          }
+        }
+        if (binds(0, e, unbound)) {
+          val sp = bind(unbound, t, clsOf(expanded.head, e), e)
+          if (nPos == 1) {
+            // single positive step + negative terminal: the start IS the
+            // completed prefix — straight to pending with its guard
+            pending = sp.copy(guards = negStep.map(_ => Guard(nPos, t)).toList) ::
+              pending
+          } else {
+            val (open, pend) = forkFrom(sp)
+            pending = pend ++ pending
+            partials = (open ++ partials).take(maxPartials)
+          }
+        }
+      }
+      // watermark pruning: a partial whose window closed at-or-before the
+      // watermark can never complete (no event <= watermark will arrive)
+      val wm = state.getCurrentWatermarkMs() * 1000L
+      partials = partials.filter(_.boundUs.last + withinUs > wm)
+      // a strict-negative pending is decided early, at its successor time,
+      // once the watermark has STRICTLY passed that time (flatMapGroupsWithState
+      // still delivers events at ts == wm, so `<= wm` could finalize before a
+      // same-timestamp out-of-order killer arrives) — and only when no
+      // skip guard could still fire against it. Skip-past-last waits for
+      // the window end, which start-order finality needs.
+      def decidesEarly(p: ExPartial): Boolean =
+        !skipPastLast && negStrict && p.succUs >= 0 &&
+          p.guards.forall(_.step == nPos) && p.succUs < p.boundUs.last + withinUs
+      // held matches whose window closed can no longer be invalidated;
+      // succKilled: an event AT the final successor time satisfied the
+      // negative predicate — the match is dead, drop it silently
+      val (ripe, wait) = pending.partition(p =>
+        p.boundUs.last + withinUs <= wm || (decidesEarly(p) && p.succUs < wm))
+      val live = ripe.filterNot(_.succKilled)
+      // SKIP_PAST_LAST finalization: matches whose window closed are final
+      // in start order (no earlier-starting match can appear); keep those
+      // starting strictly after the previous kept match's end
+      if (skipPastLast)
+        live.sortBy(p => (p.boundUs.last, p.boundUs.max)).foreach { p =>
+          if (p.boundUs.last > lastEnd) { lastEnd = p.boundUs.max; emit(p) }
+        }
+      else live.foreach(emit)
+      pending = wait
+      // the greedy frontier only constrains starts <= lastEnd; once the
+      // watermark passes it no admissible start can violate it, so the
+      // state fully releases
+      if (partials.isEmpty && pending.isEmpty && lastEnd <= wm) state.remove()
+      else if (partials.isEmpty && pending.isEmpty) {
+        state.update(CepExAcc(Nil, Nil, lastEnd))
+        state.setTimeoutTimestamp(ceilMs(lastEnd + 1)) // > wm by the branch guard
+      } else {
+        state.update(CepExAcc(partials, pending, lastEnd))
+        // wake early when a strict-negative decision will be final at its
+        // successor time (which is >= wm here, else it was ripe above)
+        state.setTimeoutTimestamp(ceilMs((partials.map(_.boundUs.last + withinUs) ++
+          pending.map(p => if (decidesEarly(p)) p.succUs else p.boundUs.last + withinUs)).min))
+      }
+      out.result().iterator
+    }
     implicit val accEnc = Encoders.product[CepExAcc]
     implicit val keyEnc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    tsWatermarked(events, watermark)
-      .groupByKey(e => (e.user_id, e.skey))
-      .flatMapGroupsWithState[CepExAcc, ExMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (gkey: (Long, String), rows: Iterator[Event], state: GroupState[CepExAcc]) =>
-          val userId = gkey._1
-          var partials = state.getOption.map(_.partials).getOrElse(Nil)
-          var pending = state.getOption.map(_.pending).getOrElse(Nil)
-          val out = Seq.newBuilder[ExMatch]
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.event_type, e.value)).foreach { e =>
-            val t = e.ts.getTime
-            // guard pass FIRST: an in-window candidate for a skipped optional
-            // invalidates the skip branch (the main branch binds it instead);
-            // a STRICT negative guard is excluded here — only the first
-            // successor time decides it (handled below)
-            def guardHit(p: ExPartial): Boolean =
-              p.guards.exists(g => !(negStrict && g.step == nPos) &&
-                t > g.fromMs &&
-                t <= p.boundMs.last + withinMs && predOf(expanded(g.step))(e))
-            partials = partials.filterNot(guardHit)
-            pending = pending.filterNot(guardHit)
-            if (negStrict) {
-              val negPred = predOf(expanded(nPos))
-              pending = pending.map { p =>
-                val start = p.boundMs.last
-                val from = p.guards.find(_.step == nPos).get.fromMs
-                if (t > from && t <= start + withinMs) {
-                  // track the EARLIEST successor time seen and whether any
-                  // event AT it satisfies the negative predicate; nothing is
-                  // emitted or killed here — an out-of-order event at or
-                  // before succMs can arrive in a later micro-batch (still
-                  // ahead of the watermark) and change the decision, so it
-                  // finalizes only once the watermark passes succMs
-                  if (p.succMs < 0 || t < p.succMs)
-                    p.copy(succMs = t, succKilled = negPred(e))
-                  else if (t == p.succMs && negPred(e)) p.copy(succKilled = true)
-                  else p
-                } else p
-              }
-            }
-            partials = partials.flatMap { p =>
-              val i = p.boundMs.length
-              val start = p.boundMs.last
-              val step = expanded(i)
-              val prevReal = p.boundMs.find(_ != Skip).get
-              if (start + withinMs < t) Nil // window expired
-              else if (t <= prevReal) List(p) // not after the previous binding
-              else {
-                val succKnown = p.succMs >= 0
-                val succ = if (succKnown) p.succMs else t
-                if (step.strict && t > succ) Nil // successor time passed unbound
-                else if ((!step.strict || t == succ) && predOf(step)(e)) {
-                  val bound = t :: p.boundMs
-                  val cls = clsOf(step, e) :: p.cls
-                  val vals2 = e.value :: p.vals
-                  if (bound.length == nPos) {
-                    // a negative terminal guards (lastBinding, window end]
-                    val guards = negStep.map(_ => Guard(nPos, t)).toList ++ p.guards
-                    val done = ExPartial(bound, cls, -1L, guards, vals = vals2)
-                    // a match with skips or a negative terminal emits only
-                    // at window expiry
-                    if (guards.isEmpty) out += toMatch(userId, done)
-                    else pending = done :: pending
-                    Nil
-                  } else {
-                    val (open, pend) = forkFrom(
-                      ExPartial(bound, cls, -1L, p.guards, vals = vals2))
-                    pending = pend ++ pending
-                    open
-                  }
-                } else if (step.strict && !succKnown) List(p.copy(succMs = t))
-                else List(p)
-              }
-            }
-            if (predOf(expanded.head)(e)) {
-              val sp = ExPartial(List(t), List(clsOf(expanded.head, e)), -1L,
-                Nil, vals = List(e.value))
-              if (nPos == 1) {
-                // single positive step + negative terminal: the start IS the
-                // completed prefix — straight to pending with its guard
-                pending = sp.copy(guards = negStep.map(_ => Guard(nPos, t)).toList) ::
-                  pending
-              } else {
-                val (open, pend) = forkFrom(sp)
-                pending = pend ++ pending
-                partials = (open ++ partials).take(maxPartials)
-              }
-            }
-          }
-          val wm = state.getCurrentWatermarkMs()
-          partials = partials.filter(_.boundMs.last + withinMs > wm)
-          // a strict-negative pending whose successor time the watermark has
-          // STRICTLY passed is DECIDED early (flatMapGroupsWithState still
-          // delivers events at ts == wm, so `<= wm` could finalize before a
-          // same-timestamp out-of-order killer arrives) — and only when no
-          // skip guard could still fire against it
-          def negDecided(p: ExPartial): Boolean =
-            negStrict && p.succMs >= 0 && p.succMs < wm &&
-              p.guards.forall(_.step == nPos)
-          // skip-matches whose window closed can no longer be invalidated
-          val (ripe, wait) = pending.partition(p =>
-            p.boundMs.last + withinMs <= wm || negDecided(p))
-          // succKilled: an event AT the final successor time satisfied the
-          // negative predicate — the match is dead, drop it silently
-          ripe.foreach(p => if (!p.succKilled) out += toMatch(userId, p))
-          pending = wait
-          if (partials.isEmpty && pending.isEmpty) state.remove()
-          else {
-            state.update(CepExAcc(partials, pending))
-            state.setTimeoutTimestamp(
-              (partials.map(_.boundMs.last + withinMs) ++
-                pending.map { p =>
-                  val end = p.boundMs.last + withinMs
-                  // wake early when a strict-negative decision will be final
-                  // at succMs (which is > wm here, else it was ripe above)
-                  if (negStrict && p.succMs >= 0 &&
-                      p.guards.forall(_.step == nPos) && p.succMs < end)
-                    p.succMs
-                  else end
-                }).min)
-          }
-          if (gkey._2.isEmpty) out.result().iterator
-          else out.result().map(_.copy(skey = gkey._2)).iterator
-      }
-  }
-
-  /** Streaming linear CEP with ITERATIVE conditions — the unbounded
-    * counterpart of `graft.cep.Pattern.followedByIterative` (reference
-    * flink-libraries/flink-cep/.../pattern/conditions/IterativeCondition
-    * .java:65, `ctx.getEventsForPattern`): each step predicate sees the
-    * candidate event AND the prior bound events (oldest first), so relative
-    * conditions like "purchase.value > 2 × signup.value" work on streams.
-    * Partials carry the bound events themselves (O(steps) state per partial,
-    * still bounded by `maxPartials` + watermark pruning + event-time state
-    * eviction exactly as [[cepPattern]]). Emits both timestamps and values
-    * of the bound events. `steps.head` is called with an empty prior list. */
-  def cepPatternIter(events: Dataset[Event], watermark: String,
-                     steps: Seq[(Event, List[Event]) => Boolean], withinMs: Long,
-                     maxPartials: Int = 256): Dataset[IterMatch] = {
-    require(steps.size >= 2, "a pattern needs at least two steps")
-    implicit val outEnc = Encoders.product[IterMatch]
-    implicit val accEnc = Encoders.product[CepIterAcc]
-    implicit val keyEnc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    tsWatermarked(events, watermark)
-      .groupByKey(e => (e.user_id, e.skey))
-      .flatMapGroupsWithState[CepIterAcc, IterMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (gkey: (Long, String), rows: Iterator[Event], state: GroupState[CepIterAcc]) =>
-          val userId = gkey._1
-          var partials = state.getOption.map(_.partials).getOrElse(Nil)
-          val out = Seq.newBuilder[IterMatch]
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.event_type, e.value)).foreach { e =>
-            val t = e.ts.getTime
-            partials = partials.flatMap { p =>
-              val i = p.bound.length
-              val start = p.bound.last.ts.getTime
-              if (t <= start + withinMs && t > p.bound.head.ts.getTime &&
-                  steps(i)(e, p.bound.reverse)) {
-                val bound = e :: p.bound
-                if (bound.length == steps.size) {
-                  val inOrder = bound.reverse
-                  out += IterMatch(userId, inOrder.map(_.ts), inOrder.map(_.value))
-                  None // completed
-                } else Some(IterPartial(bound))
-              } else if (start + withinMs < t) None // expired
-              else Some(p)
-            }
-            if (steps.head(e, Nil))
-              partials = (IterPartial(List(e)) :: partials).take(maxPartials)
-          }
-          val wm = state.getCurrentWatermarkMs()
-          partials = partials.filter(_.bound.last.ts.getTime + withinMs > wm)
-          if (partials.isEmpty) state.remove()
-          else {
-            state.update(CepIterAcc(partials))
-            state.setTimeoutTimestamp(
-              partials.map(_.bound.last.ts.getTime + withinMs).min)
-          }
-          if (gkey._2.isEmpty) out.result().iterator
-          else out.result().map(_.copy(skey = gkey._2)).iterator
-      }
+    val grouped = tsWatermarked(events, watermark).groupByKey(e => (e.user_id, e.skey))
+    initialState match {
+      case Some(init) =>
+        grouped.flatMapGroupsWithState[CepExAcc, O](
+          OutputMode.Append, GroupStateTimeout.EventTimeTimeout,
+          init.groupByKey(r => (r._1, "")).mapValues(_._2))(fn)
+      case None =>
+        grouped.flatMapGroupsWithState[CepExAcc, O](
+          OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    }
   }
 
   /** Late-data side output + allowedLateness analog (reference
@@ -1600,6 +1584,23 @@ object StreamOps {
       }
   }
 
+  /** The finalized prefix of the twins that decide on it (see [[BufEv]]):
+    * the key's buffer and the new rows split at the watermark `wm` (ms).
+    * Rows before it come back as events in (ms, type, tie, value) order;
+    * the rest stay buffered. */
+  private def finalizedPrefix(userId: Long, buf: List[BufEv], rows: Iterator[Event],
+                              wm: Long, tieOf: Event => Double = _.value): (List[Event], List[BufEv]) = {
+    val (ready, held) = (buf ++ rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value)))
+      .partition(_.ms < wm)
+    (ready.map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
+      .sortBy(e => (e.ts.getTime, e.event_type, tieOf(e), e.value)), held)
+  }
+
+  /** A finalized-prefix twin's event-time timeout: its earliest due time,
+    * floored at `wm + 1` (a buffered row at `wm` finalizes only once the
+    * watermark passes it). */
+  private def wakeAt(wm: Long, due: Seq[Long]): Long = math.max(wm + 1, due.min)
+
   /** Streaming counterpart of `Pattern.oneOrMore()`: A B+ C — a first
     * event opens a partial, B-run occurrences accumulate as O(1) stats
     * (first/last/count plus the `bindRun` value aggregates: running
@@ -1689,16 +1690,12 @@ object StreamOps {
           // event-time order — a late member/close event still ahead of the
           // watermark can therefore never arrive after a decision it should
           // have preceded (run membership, gap-stops-run, close binding)
-          val buf0 = state.getOption.map(_.buf).getOrElse(Nil) ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (readyB, held) = buf0.partition(_.ms < wm)
           // equal-ts processing order (ms, type, tie, value): tieOf is the
           // composite-ORDER-BY tiebreak twin — first/last member VALUES
           // follow arrival order at the boundary timestamps, reproducing
           // the batch min_by/max_by((tie, value)) boundary reads
-          val sorted = readyB
-            .map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
-            .sortBy(e => (e.ts.getTime, e.event_type, tieOf(e), e.value))
+          val (sorted, held) = finalizedPrefix(userId,
+            state.getOption.map(_.buf).getOrElse(Nil), rows, wm, tieOf)
           if (consecutive) sorted.groupBy(_.ts.getTime).toSeq.sortBy(_._1)
             .foreach { case (t, evs) =>
               val anyMember = evs.exists(runPred)
@@ -1811,10 +1808,10 @@ object StreamOps {
           if (partials.isEmpty && emptyPending.isEmpty && held.isEmpty) state.remove()
           else {
             state.update(RunAcc(partials, emptyPending, held))
-            state.setTimeoutTimestamp(math.max(wm + 1,
-              (partials.map(_.firstMs + withinMs) ++
+            state.setTimeoutTimestamp(wakeAt(wm,
+              partials.map(_.firstMs + withinMs) ++
                 emptyPending.map(_.firstMs + withinMs) ++
-                held.map(_.ms)).min))
+                held.map(_.ms)))
           }
           if (gkey._2.isEmpty) out.result().iterator
           else out.result().map(_.copy(skey = gkey._2)).iterator
@@ -1836,8 +1833,8 @@ object StreamOps {
     * D could extend the run past it and invalidate it) is HELD as a
     * pending close and emitted when the run closes — at the first
     * violation, or at window expiry via the event-time timeout. O(1) state
-    * per partial; `maxPartials` cap (newest starts kept, the cepPattern
-    * family policy), watermark pruning and event-time eviction as in
+    * per partial; `maxPartials` cap (newest starts kept: the header's cap
+    * policies), watermark pruning and event-time eviction as in
     * [[cepPattern]]. Equal-timestamp events follow the deterministic
     * (ts, type, value) processing order — keep step predicates disjoint
     * for exact batch parity. */
@@ -1875,11 +1872,9 @@ object StreamOps {
           // causal only in event-time order — a late D still ahead of the
           // watermark must extend the run before any later violation/close
           // is decided, so events are buffered until the watermark passes
-          val buf0 = state.getOption.map(_.buf).getOrElse(Nil) ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (readyB, held) = buf0.partition(_.ms < wm)
-          readyB.sortBy(b => (b.ms, b.tpe, b.value))
-            .map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value)).foreach { e =>
+          val (ready, held) = finalizedPrefix(userId,
+            state.getOption.map(_.buf).getOrElse(Nil), rows, wm)
+          ready.foreach { e =>
             val t = e.ts.getTime
             // key-global segmentation update for offset-n runs: the walk's
             // restart rule (first n members of a segment unchecked, then
@@ -1933,8 +1928,8 @@ object StreamOps {
           if (partials.isEmpty && held.isEmpty) state.remove()
           else {
             state.update(VRunAcc(partials, held, segId, segLen, recent))
-            state.setTimeoutTimestamp(math.max(wm + 1,
-              (partials.map(_.firstMs + withinMs) ++ held.map(_.ms)).min))
+            state.setTimeoutTimestamp(wakeAt(wm,
+              partials.map(_.firstMs + withinMs) ++ held.map(_.ms)))
           }
           if (gkey._2.isEmpty) out.result().iterator
           else out.result().map(_.copy(skey = gkey._2)).iterator
@@ -1956,9 +1951,10 @@ object StreamOps {
     * still admit another repetition is HELD and emitted at window expiry —
     * any later repetition completion invalidates it (the batch chain is
     * greedy-maximal, so the U must follow the FINAL repetition). Watermark
-    * pruning, event-time eviction, `maxPartials` (newest kept) and the
-    * deterministic (ts, type, value) processing order follow the cepPattern
-    * family; keep step predicates disjoint for exact batch parity.
+    * pruning, event-time eviction, the `maxPartials` cap (the header's cap
+    * policies) and the deterministic (ts, type, value) processing order
+    * follow the cepPattern family; keep step predicates disjoint for exact
+    * batch parity.
     * `allowEmpty` is the `(sub)*` twin (`followedByGroup(...).zeroOrMore()`):
     * a close seen while NO repetition has completed is held as an
     * empty-chain candidate — any completion kills it (the chain then
@@ -2016,11 +2012,9 @@ object StreamOps {
           // tieOf is the composite-ORDER-BY tiebreak twin — the first
           // in-order event advancing a sub-step is the one whose value
           // BINDS, matching the batch min_by((tie, value)) member binding
-          val buf0 = state.getOption.map(_.buf).getOrElse(Nil) ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (readyB, held) = buf0.partition(_.ms < wm)
-          readyB.map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
-            .sortBy(e => (e.ts.getTime, e.event_type, tieOf(e), e.value)).foreach { e =>
+          val (ready, held) = finalizedPrefix(userId,
+            state.getOption.map(_.buf).getOrElse(Nil), rows, wm, tieOf)
+          ready.foreach { e =>
             val t = e.ts.getTime
             partials = partials.flatMap { p =>
               if (t > p.firstMs + withinMs) {
@@ -2100,8 +2094,8 @@ object StreamOps {
           if (partials.isEmpty && held.isEmpty) state.remove()
           else {
             state.update(GrpAcc(partials, held))
-            state.setTimeoutTimestamp(math.max(wm + 1,
-              (partials.map(_.firstMs + withinMs) ++ held.map(_.ms)).min))
+            state.setTimeoutTimestamp(wakeAt(wm,
+              partials.map(_.firstMs + withinMs) ++ held.map(_.ms)))
           }
           if (gkey._2.isEmpty) out.result().iterator
           else out.result().map(_.copy(skey = gkey._2)).iterator
@@ -2140,11 +2134,9 @@ object StreamOps {
               p.bound.reverse.map(new Timestamp(_)), timed_out = true,
               Some(new Timestamp(p.firstMs + withinMs)))
           val wm = state.getCurrentWatermarkMs()
-          val buf0 = state.getOption.map(_.buf).getOrElse(Nil) ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (readyB, held) = buf0.partition(_.ms < wm)
-          readyB.map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
-            .sortBy(e => (e.ts.getTime, e.event_type, tieOf(e), e.value)).foreach { e =>
+          val (ready, held) = finalizedPrefix(userId,
+            state.getOption.map(_.buf).getOrElse(Nil), rows, wm, tieOf)
+          ready.foreach { e =>
             val t = e.ts.getTime
             partials = partials.flatMap { p =>
               if (t > p.firstMs + withinMs) { emitTimeout(p); None }
@@ -2169,8 +2161,8 @@ object StreamOps {
           if (partials.isEmpty && held.isEmpty) state.remove()
           else {
             state.update(TimeoutAcc(partials, held))
-            state.setTimeoutTimestamp(math.max(wm + 1,
-              (partials.map(_.firstMs + withinMs) ++ held.map(_.ms)).min))
+            state.setTimeoutTimestamp(wakeAt(wm,
+              partials.map(_.firstMs + withinMs) ++ held.map(_.ms)))
           }
           out.result().iterator
       }
@@ -2409,11 +2401,9 @@ object StreamOps {
               },
               if (!bindValues) Nil else p.cVals)
           val wm = state.getCurrentWatermarkMs()
-          val buf0 = state.getOption.map(_.buf).getOrElse(Nil) ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (readyB, held) = buf0.partition(_.ms < wm)
-          readyB.map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
-            .sortBy(e => (e.ts.getTime, e.event_type, tieOf(e), e.value)).foreach { e =>
+          val (ready, held) = finalizedPrefix(userId,
+            state.getOption.map(_.buf).getOrElse(Nil), rows, wm, tieOf)
+          ready.foreach { e =>
             val t = e.ts.getTime
             partials = partials.flatMap { p =>
               if (t > p.firstMs + withinMs) {
@@ -2581,8 +2571,8 @@ object StreamOps {
           if (partials.isEmpty && held.isEmpty) state.remove()
           else {
             state.update(NestNAcc(partials, held))
-            state.setTimeoutTimestamp(math.max(wm + 1,
-              (partials.map(_.firstMs + withinMs) ++ held.map(_.ms)).min))
+            state.setTimeoutTimestamp(wakeAt(wm,
+              partials.map(_.firstMs + withinMs) ++ held.map(_.ms)))
           }
           if (gkey._2.isEmpty) out.result().iterator
           else out.result().map(_.copy(skey = gkey._2)).iterator
@@ -2638,20 +2628,15 @@ object StreamOps {
         (userId: Long, rows: Iterator[Event], state: GroupState[LagAcc]) =>
           val wm = state.getCurrentWatermarkMs()
           val acc = state.getOption.getOrElse(LagAcc())
-          val buf0 = acc.buf ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (ready, held) = buf0.partition(_.ms < wm)
+          val (ready, held) = finalizedPrefix(userId, acc.buf, rows, wm, tieOf)
           var recent = acc.recent // newest-first, length <= n
-          val out = ready
-            .map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
-            .sortBy(e => (e.ts.getTime, e.event_type, tieOf(e), e.value))
-            .map { e =>
-              val lagV = recent.lift(n - 1)
-              recent = (e.value :: recent).take(n)
-              LagEv(userId, e.ts, e.event_type, e.value, lagV)
-            }
+          val out = ready.map { e =>
+            val lagV = recent.lift(n - 1)
+            recent = (e.value :: recent).take(n)
+            LagEv(userId, e.ts, e.event_type, e.value, lagV)
+          }
           if ((held.isEmpty && recent.isEmpty) ||
-              (state.hasTimedOut && buf0.isEmpty)) {
+              (state.hasTimedOut && ready.isEmpty && held.isEmpty)) {
             // idle-TTL expiry (the dedupKeepLast convention): the grace
             // timer fired with NOTHING buffered — a pure idle firing —
             // so drop the n-value tail instead of re-arming forever
@@ -2664,7 +2649,7 @@ object StreamOps {
             // held rows) keeps its n-value tail for a bounded grace period,
             // then evicts — the dedupKeepLast idle-TTL convention
             if (held.nonEmpty)
-              state.setTimeoutTimestamp(math.max(wm + 1, held.map(_.ms).min))
+              state.setTimeoutTimestamp(wakeAt(wm, held.map(_.ms)))
             else state.setTimeoutTimestamp(wm + 24L * 3600 * 1000)
           }
           out.iterator
@@ -2699,11 +2684,9 @@ object StreamOps {
           var partials = state.getOption.map(_.partials).getOrElse(Nil)
           val out = Seq.newBuilder[TwoRunMatch]
           val wm = state.getCurrentWatermarkMs()
-          val buf0 = state.getOption.map(_.buf).getOrElse(Nil) ++
-            rows.map(e => BufEv(e.ts.getTime, e.event_type, e.value))
-          val (readyB, held) = buf0.partition(_.ms < wm)
-          readyB.map(b => Event(userId, new Timestamp(b.ms), b.tpe, b.value))
-            .sortBy(e => (e.ts.getTime, e.event_type, e.value)).foreach { e =>
+          val (ready, held) = finalizedPrefix(userId,
+            state.getOption.map(_.buf).getOrElse(Nil), rows, wm)
+          ready.foreach { e =>
             val t = e.ts.getTime
             partials = partials.flatMap { p =>
               if (t > p.firstMs + withinMs) None // window expired
@@ -2736,8 +2719,8 @@ object StreamOps {
           if (partials.isEmpty && held.isEmpty) state.remove()
           else {
             state.update(TwoRunAcc(partials, held))
-            state.setTimeoutTimestamp(math.max(wm + 1,
-              (partials.map(_.firstMs + withinMs) ++ held.map(_.ms)).min))
+            state.setTimeoutTimestamp(wakeAt(wm,
+              partials.map(_.firstMs + withinMs) ++ held.map(_.ms)))
           }
           out.result().iterator
       }

@@ -3238,4 +3238,34 @@ class CepPatternSpec extends AnyFunSuite with SparkTest {
     assert(u3.member_vals.head.sum.contains(303.0) &&
       u3.n_inner == 1L && u3.level_counts == Seq(1L, 1L), u3.toString)
   }
+
+  test("streaming linear cap: with maxPartials = 2 only the two newest " +
+       "starts match, through cepPattern, cepPatternSteps and cepPatternIter") {
+    import graft.streaming.{Event, StreamOps}
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    // three signups inside the window, then one purchase: the cap drops the
+    // oldest open partial, so the signup at 0 never matches
+    val evs = Seq(Event(1L, at(0), "signup", 0.0), Event(1L, at(1), "signup", 0.0),
+      Event(1L, at(2), "signup", 0.0), Event(1L, at(3), "purchase", 0.0))
+    val signup: Event => Boolean = _.event_type == "signup"
+    val purchase: Event => Boolean = _.event_type == "purchase"
+    def run(name: String)(op: Dataset[Event] => DataFrame): Set[Seq[Timestamp]] = {
+      val in = MemoryStream[Event]
+      val q = op(in.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try { in.addData(evs); q.processAllAvailable() } finally q.stop()
+      spark.table(name).select($"step_ts").as[Seq[Timestamp]].collect().toSet
+    }
+    val want = Set(Seq(at(1), at(3)), Seq(at(2), at(3)))
+    assert(run("cap_pattern")(StreamOps.cepPattern(_, "10 seconds",
+      Seq(signup, purchase), HOUR, maxPartials = 2).toDF()) == want)
+    assert(run("cap_steps")(StreamOps.cepPatternSteps(_, "10 seconds",
+      Seq(StreamOps.CepStep(signup), StreamOps.CepStep(purchase)), HOUR,
+      maxPartials = 2).toDF()) == want)
+    assert(run("cap_iter")(StreamOps.cepPatternIter(_, "10 seconds",
+      Seq((e, _) => signup(e), (e, _) => purchase(e)), HOUR,
+      maxPartials = 2).toDF()) == want)
+  }
 }

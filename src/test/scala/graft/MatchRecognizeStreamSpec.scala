@@ -721,6 +721,30 @@ class MatchRecognizeStreamSpec extends AnyFunSuite with SparkTest {
         Seq(ev(1, 15, "view"), ev(1, 20, "purchase"))))
   }
 
+  // --- microseconds: the linear walk compares and emits event time in
+  // µs, as the batch compile does ---
+  test("stream parity: sub-millisecond timestamps, with a pair exactly on " +
+       "the WITHIN bound") {
+    def us(min: Long, micros: Int) = { val t = at(min); t.setNanos(micros * 1000); t }
+    parity("mrs_micros",
+      """MATCH_RECOGNIZE (
+        |  PARTITION BY user_id ORDER BY ts
+        |  MEASURES A.ts AS a_ts, B.ts AS b_ts
+        |  PATTERN (A B)
+        |  WITHIN INTERVAL '1' HOUR
+        |  DEFINE A AS event_type = 'view', B AS event_type = 'purchase'
+        |)""".stripMargin,
+      Seq(
+        // user 1: B exactly one hour after A (in the window); user 2: B
+        // 300 µs past the hour (outside it, though the two times cut to ms
+        // are one hour apart); user 3: A and B inside one millisecond, B
+        // later
+        Seq(Event(1, us(0, 400), "view", 0.0), Event(2, us(0, 600), "view", 0.0),
+          Event(3, us(5, 200), "view", 0.0), Event(3, us(5, 700), "purchase", 0.0)),
+        Seq(Event(1, us(60, 400), "purchase", 0.0),
+          Event(2, us(60, 900), "purchase", 0.0))))
+  }
+
   // --- NULL member values through the twins (r20, lifting the former
   // null-reads-as-0.0 boundary): SQL NULL rides the NaN channel inside
   // the state machines — positional FIRST/LAST freeze on null bindings,

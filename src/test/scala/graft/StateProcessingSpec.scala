@@ -339,4 +339,37 @@ class StateProcessingSpec extends AnyFunSuite with SparkTest {
     // state restored AND the pre-existing files replayed from offset -1
     assert(out == Set((1L, at(0), 3L, 7.0), (2L, at(75), 1L, 1.0)), out.toString)
   }
+
+  test("bootstrapped cepPattern under skipPastLast: greedy selection resumes " +
+       "from the seeded held matches and last kept end") {
+    import graft.streaming.{CepPatternAcc, Partial}
+    // key 1 restored with two completed matches still held for
+    // finalization and a last kept end of 15s: (10s, 20s) starts before
+    // that end and is dropped; (18s, 30s) starts after it and is kept,
+    // which moves the end to 30s
+    val initial = Seq((1L, CepPatternAcc(Nil,
+      pending = List(Partial(List(at(20).getTime, at(10).getTime)),
+        Partial(List(at(30).getTime, at(18).getTime))),
+      lastEndMs = at(15).getTime))).toDS()
+    val steps: Seq[Event => Boolean] = Seq(_.event_type == "view", _.event_type == "buy")
+    val in = MemoryStream[Event]
+    val q = StreamOps.cepPattern(in.toDF().as[Event], "5 seconds", steps,
+        withinMs = 60000L, skipPastLast = true, initialState = Some(initial))
+      .writeStream.format("memory").queryName("sp_boot_skip")
+      .outputMode("append").start()
+    try {
+      // live: (25s, 35s) starts before the resumed end (30s) and is
+      // dropped; (40s, 45s) starts after it and is kept
+      in.addData(Event(1, at(25), "view", 0.0), Event(1, at(35), "buy", 0.0),
+        Event(1, at(40), "view", 0.0), Event(1, at(45), "buy", 0.0))
+      q.processAllAvailable()
+      in.addData(Event(9, at(500), "flush", 0.0)); q.processAllAvailable()
+      in.addData(Event(9, at(900), "flush", 0.0)); q.processAllAvailable()
+    } finally q.stop()
+    val out = spark.table("sp_boot_skip")
+      .selectExpr("user_id", "step_ts").collect()
+      .map(r => (r.getLong(0), r.getSeq[Timestamp](1).toList)).toSet
+    assert(out == Set((1L, List(at(18), at(30))), (1L, List(at(40), at(45)))),
+      out.toString)
+  }
 }
