@@ -61,10 +61,9 @@ import org.apache.spark.sql.types._
   *    persistence, which is also why `IF NOT EXISTS` is effectively
   *    createOrReplace here).
   *
-  * Same eager contract as [[MatchRecognizeSqlParser]]: the statement takes
-  * effect at parse time and the statement's plan is a one-row confirmation
-  * (`created_table`). Only statements with the Flink-specific quoted-key
-  * `WITH ('k' = 'v')` options block are intercepted — Spark's own DDL
+  * The statement takes effect at parse time, and its plan is a one-row
+  * confirmation (`created_table`). Only statements with the Flink-specific
+  * quoted-key `WITH ('k' = 'v')` options block are intercepted — Spark's own DDL
   * (`USING`/`OPTIONS`/`TBLPROPERTIES`) never matches and passes through. */
 class FlinkDdlSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
@@ -84,7 +83,7 @@ class FlinkDdlSqlParser(session: SparkSession, delegate: ParserInterface)
     } else if (FlinkDdl.isAlter(session, sqlText)) {
       val n = FlinkDdl.executeAlter(session, sqlText)
       s"SELECT '$n' AS altered_table"
-    } else FlinkDdl.rewriteStatement(session, sqlText)
+    } else FlinkDdl.rewriteStatement(sqlText)
   override def parsePlan(sqlText: String): LogicalPlan =
     delegate.parsePlan(run(sqlText))
   override def parseQuery(sqlText: String): LogicalPlan =
@@ -139,15 +138,11 @@ object FlinkDdl {
     * parser extension and `runScript`; `executeInsert` routes its inner
     * SELECT through it too): USE CATALOG rejection → database DDL →
     * CREATE FUNCTION → CREATE VIEW → lookup-join clause → group-window
-    * spellings. String-literal masking follows the session's actual
-    * escape semantics (`spark.sql.parser.escapedStringLiterals`). */
-  private[plans] def rewriteStatement(spark: SparkSession, stmt: String): String = {
-    val bs = !spark.conf.getOption("spark.sql.parser.escapedStringLiterals")
-      .contains("true")
+    * spellings. */
+  private[plans] def rewriteStatement(stmt: String): String =
     GroupWindowSql.rewrite(LookupJoinSql.rewrite(
       rewriteCreateView(rewriteCreateFunction(
-        rewriteDatabaseDdl(rejectUseCatalog(stmt)))), bs), bs)
-  }
+        rewriteDatabaseDdl(rejectUseCatalog(stmt))))))
 
   /** A Flink DDL statement = CREATE TABLE whose trailing options block is
     * the Flink-specific `WITH ('key' = 'value', …)` quoted-key form. */
@@ -496,7 +491,7 @@ object FlinkDdl {
     // the inner SELECT goes through the SAME rewrite chain as a standalone
     // statement — group windows and lookup-join spellings work inside
     // INSERT INTO on every path, parser extension or runScript
-    val selected = spark.sql(rewriteStatement(spark, m.group(2).trim.stripSuffix(";")))
+    val selected = spark.sql(rewriteStatement(m.group(2).trim.stripSuffix(";")))
     require(selected.columns.length == schema.length,
       s"INSERT INTO $name: query has ${selected.columns.length} columns, " +
         s"table declares ${schema.length} (alignment is by position)")
@@ -685,7 +680,7 @@ object FlinkDdl {
     * whole multi-statement script — DDL, views, INSERTs, queries — in
     * order, on ANY session (no parser extension required; each statement
     * routes through the same dispatch the extension uses). Statements
-    * split on `;` outside quotes; `--` line comments are stripped.
+    * split on `;` in code ([[SqlText]]); `--` line comments are stripped.
     * Returns the result of each statement (confirmation rows for DDL). */
   def runScript(spark: SparkSession, script: String): Seq[DataFrame] = {
     splitStatements(script).map { stmt =>
@@ -697,34 +692,19 @@ object FlinkDdl {
         val n = executeDrop(spark, stmt); spark.sql(s"SELECT '$n' AS dropped_table")
       } else if (isAlter(spark, stmt)) {
         val n = executeAlter(spark, stmt); spark.sql(s"SELECT '$n' AS altered_table")
-      } else spark.sql(rewriteStatement(spark, stmt))
+      } else spark.sql(rewriteStatement(stmt))
     }
   }
 
-  /** Split a script on `;` at top level (outside single-quoted strings),
-    * with `--` line comments removed first. */
+  /** Split a script on `;` in code ([[SqlText]]), with `--` line
+    * comments removed first. */
   private[plans] def splitStatements(script: String): Seq[String] = {
-    val noComments = script.split('\n')
-      .map { line =>
-        // strip -- comments, but not a -- inside a quoted string
-        var inStr = false; var i = 0; var cut = line.length
-        while (i < line.length - 1 && cut == line.length) {
-          if (line(i) == '\'') inStr = !inStr
-          else if (!inStr && line(i) == '-' && line(i + 1) == '-') cut = i
-          i += 1
-        }
-        line.substring(0, cut)
-      }.mkString("\n")
+    val kind = SqlText.classify(script)
     val out = Seq.newBuilder[String]
     val cur = new StringBuilder
-    var inStr = false
-    noComments.foreach { c =>
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case ';' => out += cur.result(); cur.clear()
-        case _ => cur += c
-      }
+    for (i <- script.indices if kind(i) != SqlText.LineComment) {
+      if (kind(i) == SqlText.Code && script(i) == ';') { out += cur.result(); cur.clear() }
+      else cur += script(i)
     }
     out += cur.result()
     out.result().map(_.trim).filter(_.nonEmpty)
@@ -941,7 +921,9 @@ object FlinkDdl {
   }
 
   /** Index just past the balanced-paren span opening at `open` (must be a
-    * '('), honoring single-quoted strings; -1 if unbalanced. */
+    * '('), honoring single-quoted strings; -1 if unbalanced. The DDL is
+    * Flink text, where a quote doubles to escape itself and a backslash is
+    * a plain character, so this scan is not [[SqlText]]'s. */
   private def skipBalanced(s: String, open: Int): Int = {
     var depth = 0; var i = open; var inStr = false
     while (i < s.length) {

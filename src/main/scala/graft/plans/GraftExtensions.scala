@@ -1,11 +1,14 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression,
+  ExpressionInfo, FunctionTableSubqueryArgumentExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationDef, CTERelationRef,
+  LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.functions.ArrayDotProduct
 
 /** SparkSessionExtensions integration — the library's native pieces become
@@ -51,9 +54,14 @@ object GraftExtensions {
       pageRankPlan _))
     ext.injectOptimizerRule(_ => DotProductFusion)
     ext.injectPlannerStrategy(_ => TopNPerKeyStrategy)
-    // FROM <table> MATCH_RECOGNIZE (...) in spark.sql text — see
-    // MatchRecognizeSqlParser
-    ext.injectParser((session, parser) => new MatchRecognizeSqlParser(session, parser))
+    // FROM <source> MATCH_RECOGNIZE (...) in spark.sql text: the parser
+    // rewrites it to this table function, the rule expands its node
+    ext.injectParser((_, parser) => new MatchRecognizeSqlParser(parser))
+    ext.injectTableFunction((
+      new FunctionIdentifier(MatchRecognizeSqlParser.Function),
+      new ExpressionInfo("graft", MatchRecognizeSqlParser.Function),
+      matchRecognizePlan _))
+    ext.injectResolutionRule(ExpandMatchRecognize)
     // Flink-dialect CREATE TABLE … WITH ('connector' = …) + WATERMARK FOR —
     // the DDL front door; see FlinkDdl
     ext.injectParser((session, parser) => new FlinkDdlSqlParser(session, parser))
@@ -67,7 +75,7 @@ object GraftExtensions {
     * fixpoint materializes when the enclosing query is analyzed — the
     * supersteps run as Spark jobs exactly as the combinator path, since an
     * iteration cannot be expressed as a single lazy plan. */
-  private def pageRankPlan(args: Seq[Expression]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+  private def pageRankPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length == 4,
       "graph_pagerank('<table>', '<src_col>', '<dst_col>', <iters>)")
     def str(e: Expression): String = e.eval() match {
@@ -78,7 +86,20 @@ object GraftExtensions {
     val spark = org.apache.spark.sql.SparkSession.active
     val ranked = graft.operators.Iterate.pageRank(
       spark.table(str(args(0))), str(args(1)), str(args(2)), iters)
-    org.apache.spark.sql.graftbridge.ColumnBridge.logicalPlan(ranked)
+    ColumnBridge.logicalPlan(ranked)
+  }
+
+  /** `graft_match_recognize(X'<clause>', TABLE(<source>))`, the call
+    * [[MatchRecognizeSqlParser]] writes: the clause as UTF-8 bytes over the
+    * source's plan. */
+  private def matchRecognizePlan(args: Seq[Expression]): LogicalPlan = args match {
+    case Seq(clause, source: FunctionTableSubqueryArgumentExpression) if clause.foldable =>
+      MatchRecognizeRelation(
+        new String(clause.eval().asInstanceOf[Array[Byte]], StandardCharsets.UTF_8),
+        source.plan)
+    case _ => sys.error(s"${MatchRecognizeSqlParser.Function}(X'<clause>', " +
+      "TABLE(<source>)) is written by the MATCH_RECOGNIZE parser — write " +
+      "FROM <source> MATCH_RECOGNIZE (...) instead")
   }
 
   /** `graft_sorted_intersect(a, b[, flagBits])` — the codegen'd merge
@@ -119,11 +140,11 @@ object GraftExtensions {
     * construction): function via the registry, rule via the public
     * `experimental.extraOptimizations` hook. */
   def installInto(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(spark, "array_dot",
+    ColumnBridge.registerFunction(spark, "array_dot",
       children => ArrayDotProduct(children(0), children(1)))
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
+    ColumnBridge.registerFunction(
       spark, "graft_sorted_intersect", sortedIntersect _)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerTableFunction(
+    ColumnBridge.registerTableFunction(
       spark, "graph_pagerank", pageRankPlan _)
     if (!spark.experimental.extraOptimizations.contains(DotProductFusion))
       spark.experimental.extraOptimizations =
@@ -132,6 +153,45 @@ object GraftExtensions {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopNPerKeyStrategy
   }
+}
+
+/** A MATCH_RECOGNIZE clause over its source's plan, as
+  * `graft_match_recognize` returns it. It stays unresolved until
+  * [[ExpandMatchRecognize]] replaces it with the matches. */
+case class MatchRecognizeRelation(clause: String, child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = Nil
+  override lazy val resolved: Boolean = false
+  override protected def withNewChildInternal(newChild: LogicalPlan): MatchRecognizeRelation =
+    copy(child = newChild)
+}
+
+/** Replaces each [[MatchRecognizeRelation]] whose source Spark has
+  * resolved with the plan of [[graft.cep.MatchRecognize.detect]] over that
+  * source. The source may reference CTEs of the enclosing statement, whose
+  * definitions sit outside it: each reference is inlined first, as a
+  * projection over the definition that keeps the reference's attributes.
+  * The analyzer resolves a subquery on its own before the statement around
+  * it, so a node whose CTE definitions are not in the plan at hand waits
+  * for the statement's pass, which reaches into subqueries. */
+case class ExpandMatchRecognize(session: SparkSession) extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (plan.collectWithSubqueries { case m: MatchRecognizeRelation => m }.isEmpty) plan
+    else {
+      val ctes = plan.collectWithSubqueries { case d: CTERelationDef => d.id -> d }.toMap
+      plan.transformUpWithSubqueries {
+        case MatchRecognizeRelation(clause, child) if child.resolved &&
+            child.collectWithSubqueries { case r: CTERelationRef => r.cteId }
+              .forall(ctes.contains) =>
+          val source = child.transformDownWithSubqueries {
+            case ref: CTERelationRef =>
+              val cte = ctes(ref.cteId)
+              Project(ref.output.zip(cte.output).map { case (r, d) =>
+                Alias(d, r.name)(exprId = r.exprId) }, cte.child)
+          }
+          ColumnBridge.logicalPlan(graft.cep.MatchRecognize.detect(
+            ColumnBridge.ofRows(session, source), clause))
+      }
+    }
 }
 
 /** Rewrites aggregate(zip_with(a, b, _*_), 0.0, _+_) → ArrayDotProduct(a, b).

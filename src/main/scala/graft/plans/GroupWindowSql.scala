@@ -32,10 +32,11 @@ import scala.util.matching.Regex
   * functions). The `_PROCTIME` auxiliaries remain NAMED rejections:
   * processing time has no deterministic value to re-export.
   *
-  * Matches that START inside a single-quoted string literal are left
-  * untouched (the interval quotes INSIDE a match are part of the match
-  * itself, so they never mask it). Auxiliary-vs-GROUP-BY validation
-  * normalizes the time argument to its last identifier segment, so
+  * Matches that START inside a string literal, quoted identifier or
+  * comment ([[SqlText]]) are left untouched (the interval quotes INSIDE a
+  * match are part of the match itself, so they never mask it).
+  * Auxiliary-vs-GROUP-BY validation normalizes the time argument to its
+  * last identifier segment, so
   * `TUMBLE_START(t.ts, …)` matches `GROUP BY TUMBLE(ts, …)` exactly as
   * Flink's semantic validator resolves both to the same column. */
 object GroupWindowSql {
@@ -59,51 +60,17 @@ object GroupWindowSql {
   private def dur(n: String, unit: String): String =
     s"$n ${unit.toLowerCase.stripSuffix("s")}s"
 
-  /** position → inside a single-quoted SQL string literal ('' escapes;
-    * backslash escapes too when `backslashEscapes` — Spark's DEFAULT
-    * parser accepts `\'` inside a literal, and treating it as the closing
-    * quote would flip the mask mid-literal and let the rewrite corrupt
-    * the statement. Under the legacy
-    * `spark.sql.parser.escapedStringLiterals=true` config backslash is a
-    * plain character — pass `backslashEscapes = false` there (FlinkDdl
-    * reads the session conf). */
-  private[plans] def literalMask(s: String, backslashEscapes: Boolean = true): Array[Boolean] = {
-    val mask = new Array[Boolean](s.length)
-    // Spark's default parser accepts BOTH '...' and "..." as string
-    // literals (double-quote-as-identifier needs ANSI double_quoted_
-    // identifiers) — a TUMBLE/HOP/SESSION/FOR SYSTEM_TIME spelling inside
-    // either must not be rewritten or validated. q tracks which quote
-    // opened the current literal; the doubled-quote escape applies to
-    // each kind, the OTHER quote char is plain content inside a literal.
-    var i = 0; var q: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (backslashEscapes && q != 0 && c == '\\' && i + 1 < s.length) {
-        mask(i) = true; mask(i + 1) = true; i += 2
-      } else if (c == '\'' || c == '"') {
-        if (q == c && i + 1 < s.length && s.charAt(i + 1) == c) {
-          mask(i) = true; mask(i + 1) = true; i += 2
-        } else if (q == 0) { mask(i) = true; q = c; i += 1 }
-        else if (q == c) { mask(i) = true; q = 0; i += 1 }
-        else { mask(i) = true; i += 1 }
-      } else { mask(i) = q != 0; i += 1 }
-    }
-    mask
+  private def matchesOutside(rx: Regex, s: String): List[Regex.Match] = {
+    val kind = SqlText.classify(s)
+    rx.findAllMatchIn(s).filter(m => kind(m.start) == SqlText.Code).toList
   }
 
-  private def matchesOutside(rx: Regex, s: String,
-                             backslashEscapes: Boolean = true): List[Regex.Match] = {
-    val mask = literalMask(s, backslashEscapes)
-    rx.findAllMatchIn(s).filterNot(m => mask(m.start)).toList
-  }
-
-  /** replaceAllIn, skipping matches that start inside a string literal. */
-  private[plans] def replaceOutside(rx: Regex, s: String,
-                                    backslashEscapes: Boolean = true)(
+  /** replaceAllIn, skipping matches that start inside a literal or comment. */
+  private[plans] def replaceOutside(rx: Regex, s: String)(
       f: Regex.Match => String): String = {
-    val mask = literalMask(s, backslashEscapes)
+    val kind = SqlText.classify(s)
     rx.replaceAllIn(s, m =>
-      Regex.quoteReplacement(if (mask(m.start)) m.matched else f(m)))
+      Regex.quoteReplacement(if (kind(m.start) != SqlText.Code) m.matched else f(m)))
   }
 
   /** Rewrite every group-window spelling in `sql`; text without them
@@ -112,8 +79,8 @@ object GroupWindowSql {
     * rewrite maps it to `window.start/end` of the GROUP BY's window, so a
     * silent mismatch would return the wrong window's bound (Flink's
     * validator rejects the same mismatch). */
-  def rewrite(sql: String, backslashEscapes: Boolean = true): String = {
-    matchesOutside(ProctimeRx, sql, backslashEscapes).headOption.foreach { m =>
+  def rewrite(sql: String): String = {
+    matchesOutside(ProctimeRx, sql).headOption.foreach { m =>
       sys.error(s"${m.group(1)}_PROCTIME() re-exports a PROCESSING-time " +
         "attribute, which has no deterministic value — use the rowtime " +
         "auxiliary (mapped to window.end - 1ms) or an explicit timestamp")
@@ -130,16 +97,16 @@ object GroupWindowSql {
     def sig2(kind: String, arg: String, n1: String, u1: String, n2: String, u2: String) =
       (arg.toLowerCase, s"$kind ${dur(n1, u1)} ${dur(n2, u2)}")
     val winSigs =
-      matchesOutside(TumbleRx, sql, backslashEscapes).map(m => sig1("tumble", m.group(1), m.group(2), m.group(3))) ++
-        matchesOutside(HopRx, sql, backslashEscapes).map(m => sig2("hop", m.group(1), m.group(2), m.group(3), m.group(4), m.group(5))) ++
-        matchesOutside(SessionRx, sql, backslashEscapes).map(m => sig1("session", m.group(1), m.group(2), m.group(3)))
+      matchesOutside(TumbleRx, sql).map(m => sig1("tumble", m.group(1), m.group(2), m.group(3))) ++
+        matchesOutside(HopRx, sql).map(m => sig2("hop", m.group(1), m.group(2), m.group(3), m.group(4), m.group(5))) ++
+        matchesOutside(SessionRx, sql).map(m => sig1("session", m.group(1), m.group(2), m.group(3)))
     val auxSigs =
-      matchesOutside(TumbleAuxRx, sql, backslashEscapes).map(m => sig1("tumble", m.group(2), m.group(3), m.group(4))) ++
-        matchesOutside(HopAuxRx, sql, backslashEscapes).map(m => sig2("hop", m.group(2), m.group(3), m.group(4), m.group(5), m.group(6))) ++
-        matchesOutside(SessionAuxRx, sql, backslashEscapes).map(m => sig1("session", m.group(2), m.group(3), m.group(4))) ++
-        matchesOutside(TumbleRowtimeRx, sql, backslashEscapes).map(m => sig1("tumble", m.group(1), m.group(2), m.group(3))) ++
-        matchesOutside(HopRowtimeRx, sql, backslashEscapes).map(m => sig2("hop", m.group(1), m.group(2), m.group(3), m.group(4), m.group(5))) ++
-        matchesOutside(SessionRowtimeRx, sql, backslashEscapes).map(m => sig1("session", m.group(1), m.group(2), m.group(3)))
+      matchesOutside(TumbleAuxRx, sql).map(m => sig1("tumble", m.group(2), m.group(3), m.group(4))) ++
+        matchesOutside(HopAuxRx, sql).map(m => sig2("hop", m.group(2), m.group(3), m.group(4), m.group(5), m.group(6))) ++
+        matchesOutside(SessionAuxRx, sql).map(m => sig1("session", m.group(2), m.group(3), m.group(4))) ++
+        matchesOutside(TumbleRowtimeRx, sql).map(m => sig1("tumble", m.group(1), m.group(2), m.group(3))) ++
+        matchesOutside(HopRowtimeRx, sql).map(m => sig2("hop", m.group(1), m.group(2), m.group(3), m.group(4), m.group(5))) ++
+        matchesOutside(SessionRowtimeRx, sql).map(m => sig1("session", m.group(1), m.group(2), m.group(3)))
     def argsAgree(a: String, w: String): Boolean =
       a == w ||
         (!a.contains('.') && w.split('.').last == a) ||
@@ -153,18 +120,18 @@ object GroupWindowSql {
         "repeat the GROUP BY window's exact arguments (Flink validates the " +
         "same way)")
     var out = sql
-    out = replaceOutside(TumbleRowtimeRx, out, backslashEscapes)(_ => "(window.end - INTERVAL '0.001' SECOND)")
-    out = replaceOutside(HopRowtimeRx, out, backslashEscapes)(_ => "(window.end - INTERVAL '0.001' SECOND)")
-    out = replaceOutside(SessionRowtimeRx, out, backslashEscapes)(_ => "(session_window.end - INTERVAL '0.001' SECOND)")
-    out = replaceOutside(TumbleAuxRx, out, backslashEscapes)(m => s"window.${m.group(1).toLowerCase}")
-    out = replaceOutside(HopAuxRx, out, backslashEscapes)(m => s"window.${m.group(1).toLowerCase}")
-    out = replaceOutside(SessionAuxRx, out, backslashEscapes)(m => s"session_window.${m.group(1).toLowerCase}")
-    out = replaceOutside(TumbleRx, out, backslashEscapes)(m =>
+    out = replaceOutside(TumbleRowtimeRx, out)(_ => "(window.end - INTERVAL '0.001' SECOND)")
+    out = replaceOutside(HopRowtimeRx, out)(_ => "(window.end - INTERVAL '0.001' SECOND)")
+    out = replaceOutside(SessionRowtimeRx, out)(_ => "(session_window.end - INTERVAL '0.001' SECOND)")
+    out = replaceOutside(TumbleAuxRx, out)(m => s"window.${m.group(1).toLowerCase}")
+    out = replaceOutside(HopAuxRx, out)(m => s"window.${m.group(1).toLowerCase}")
+    out = replaceOutside(SessionAuxRx, out)(m => s"session_window.${m.group(1).toLowerCase}")
+    out = replaceOutside(TumbleRx, out)(m =>
       s"window(${m.group(1)}, '${dur(m.group(2), m.group(3))}')")
     // Flink HOP args are (slide, size); Spark window args are (size, slide)
-    out = replaceOutside(HopRx, out, backslashEscapes)(m =>
+    out = replaceOutside(HopRx, out)(m =>
       s"window(${m.group(1)}, '${dur(m.group(4), m.group(5))}', '${dur(m.group(2), m.group(3))}')")
-    out = replaceOutside(SessionRx, out, backslashEscapes)(m =>
+    out = replaceOutside(SessionRx, out)(m =>
       s"session_window(${m.group(1)}, '${dur(m.group(2), m.group(3))}')")
     out
   }

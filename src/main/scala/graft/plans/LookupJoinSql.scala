@@ -28,8 +28,8 @@ object LookupJoinSql {
   private val Rx =
     """(?i)\bFOR\s+SYSTEM_TIME\s+AS\s+OF\s+([\w.]+(?:\(\s*\))?)""".r
 
-  def rewrite(sql: String, backslashEscapes: Boolean = true): String =
-    GroupWindowSql.replaceOutside(Rx, sql, backslashEscapes) { m =>
+  def rewrite(sql: String): String =
+    GroupWindowSql.replaceOutside(Rx, sql) { m =>
       val operand = m.group(1)
       val attr = operand.toLowerCase.stripSuffix("()").trim
       val last = attr.split('.').last

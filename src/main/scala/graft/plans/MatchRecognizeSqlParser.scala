@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.ParserInterface
@@ -9,44 +9,35 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parser extension making MATCH_RECOGNIZE reachable from `spark.sql` text —
   * the way Flink SQL users reach CEP (reference flink-table-planner-blink
-  * StreamExecMatch.scala plans the clause from Calcite's parse tree; fixtures
-  * MatchRecognizeITCase.scala). Installed via
+  * StreamExecMatch.scala plans the clause as a node of the query plan;
+  * fixtures MatchRecognizeITCase.scala). Installed via
   * `GraftExtensions` (`spark.sql.extensions=graft.plans.GraftExtensions` or
   * `.withExtensions(GraftExtensions.install)`).
   *
-  * Strategy: textual pre-rewrite, then delegate. A FROM-clause segment
-  * {{{ FROM <table> MATCH_RECOGNIZE ( ... ) }}}
-  * is compiled through [[graft.cep.MatchRecognize.detect]] (the same subset
-  * grammar), registered as a temp view, and the segment is replaced by the
-  * view name — so any enclosing SELECT / WHERE / GROUP BY / JOIN / alias
-  * parses unchanged through Spark's own parser. Multiple MATCH_RECOGNIZE
-  * segments rewrite recursively.
+  * The parser is a pure text rewrite: each FROM-clause segment
+  * {{{ FROM <source> MATCH_RECOGNIZE ( ... ) }}}
+  * becomes a call of the internal table function
+  * {{{ FROM graft_match_recognize(X'<clause as UTF-8 hex>', TABLE(<source>)) }}}
+  * and the statement goes on to Spark's own parser. `<source>` is a table,
+  * view or CTE name, or a parenthesized subquery (`FROM (SELECT …) [AS a]
+  * MATCH_RECOGNIZE (…)`; the subquery's alias is dropped). The hex literal
+  * carries the clause byte-exact, with no quoting to escape.
   *
-  * Contract:
-  *  - The FROM source may be a catalog table / temp view, a PARENTHESIZED
-  *    SUBQUERY (`FROM (SELECT …) [AS a] MATCH_RECOGNIZE (…)` — the
-  *    subquery runs through the session parser, so nested
-  *    MATCH_RECOGNIZE inside it composes), or a TOP-LEVEL CTE ALIAS of
-  *    the same statement (r16, lifting the former named rejections): the
-  *    statement's WITH prefix re-runs with `SELECT * FROM <alias>`
-  *    appended, so chained CTEs resolve per SQL scope rules and a CTE
-  *    alias shadowing a catalog name correctly binds to the CTE. A CTE
-  *    with a column list falls back to catalog resolution (named error
-  *    if unresolvable).
-  *  - The pattern compiles EAGERLY at parse time: `EXPLAIN` (and any
-  *    plan-only path) runs the pattern compilation, though match rows are
-  *    only computed when the plan executes. (A full LogicalPlan lowering
-  *    like the `graph_pagerank` TVF bridge would lift this.)
-  *  - Each distinct (table, clause) pair registers one `__graft_mr_*` temp
-  *    view in the session catalog; re-parsing the same text reuses it
-  *    (createOrReplace), so views do not grow with repetition, only with
-  *    distinct patterns. */
-class MatchRecognizeSqlParser(session: SparkSession, delegate: ParserInterface)
-    extends ParserInterface {
+  * The table function returns a [[MatchRecognizeRelation]] over the
+  * source's plan, and [[ExpandMatchRecognize]] compiles it through
+  * [[graft.cep.MatchRecognize.detect]] once Spark's analyzer has resolved
+  * the source. So CTE scoping (a CTE shadowing a view, chained CTEs, a
+  * WITH after INSERT INTO), subqueries, nested clauses, `EXPLAIN` and
+  * unresolvable names (`TABLE_OR_VIEW_NOT_FOUND`) behave as for any other
+  * relation, the session catalog is left untouched, and a streaming
+  * source keeps its watermark (`detect` routes it to `detectStream`). The
+  * pattern compiles during analysis: `EXPLAIN` compiles it too, and runs
+  * no job. */
+class MatchRecognizeSqlParser(delegate: ParserInterface) extends ParserInterface {
   override def parsePlan(sqlText: String): LogicalPlan =
-    delegate.parsePlan(MatchRecognizeSqlParser.rewrite(session, sqlText))
+    delegate.parsePlan(MatchRecognizeSqlParser.rewrite(sqlText))
   override def parseQuery(sqlText: String): LogicalPlan =
-    delegate.parseQuery(MatchRecognizeSqlParser.rewrite(session, sqlText))
+    delegate.parseQuery(MatchRecognizeSqlParser.rewrite(sqlText))
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
   override def parseTableIdentifier(sqlText: String): TableIdentifier =
@@ -64,191 +55,43 @@ class MatchRecognizeSqlParser(session: SparkSession, delegate: ParserInterface)
 }
 
 object MatchRecognizeSqlParser {
-  private val FromRx = "(?is)\\bFROM\\s+([\\w.]+)\\s+MATCH_RECOGNIZE\\s*\\(".r
-  private val FromSubRx = "(?is)\\bFROM\\s*\\(".r
+  /** The internal table function each segment rewrites to. */
+  val Function = "graft_match_recognize"
 
-  /** Index of the parenthesis closing the one at `open`, skipping
-    * single- and double-quoted SQL string literals (with both the
-    * doubled-quote AND the backslash escape — Spark's default lexer
-    * accepts `\'`/`\"` inside literals unless escapedStringLiterals is
-    * on), backquoted identifiers, `--` line comments and bracketed
-    * comments including Spark's NESTED `/* /* */ */` form (SPARK-28880)
-    * — a '(' or ')' inside any of those must not count toward nesting. */
-  private def closeParen(s: String, open: Int): Int = {
-    var depth = 0; var i = open
-    var done = false
-    def skipQuoted(q: Char): Unit = {
-      i += 1
-      var closed = false
-      while (i < s.length && !closed) {
-        if (s(i) == '\\' && i + 1 < s.length) i += 2 // backslash escape
-        else if (s(i) == q && i + 1 < s.length && s(i + 1) == q) i += 2 // doubled
-        else if (s(i) == q) closed = true
-        else i += 1
-      }
-    }
-    while (i < s.length && !done) {
-      s(i) match {
-        case '\'' => skipQuoted('\'')
-        case '"' => skipQuoted('"')
-        case '`' =>
-          i += 1
-          while (i < s.length && s(i) != '`') i += 1
-        case '-' if i + 1 < s.length && s(i + 1) == '-' =>
-          while (i < s.length && s(i) != '\n') i += 1
-          i -= 1 // the shared increment below steps past the newline
-        case '/' if i + 1 < s.length && s(i + 1) == '*' =>
-          var cdepth = 1
-          i += 2
-          while (i + 1 < s.length && cdepth > 0) {
-            if (s(i) == '/' && s(i + 1) == '*') { cdepth += 1; i += 2 }
-            else if (s(i) == '*' && s(i + 1) == '/') { cdepth -= 1; i += 2 }
-            else i += 1
-          }
-          i -= 1 // the shared increment steps past the final character
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) done = true
-        case _ =>
-      }
-      if (!done) i += 1
-    }
-    require(done, "unbalanced MATCH_RECOGNIZE parentheses")
-    i
-  }
+  private val KeywordRx = "(?i)MATCH_RECOGNIZE".r
+  private val TableRx = "(?is)\\bFROM\\s+([\\w.]+)\\s+MATCH_RECOGNIZE\\s*\\(".r
+  private val SubqueryRx = "(?is)\\bFROM\\s*\\(".r
+  // optional `[AS] alias` between a subquery and the clause; the negative
+  // lookahead keeps the keyword from parsing as the alias
+  private val SubqueryTailRx =
+    "(?is)^\\s*(?:(?:AS\\s+)?(?!MATCH_RECOGNIZE\\b)\\w+\\s+)?MATCH_RECOGNIZE\\s*\\(".r
 
-  /** Resolve a top-level CTE alias of this statement to a DataFrame — the
-    * SQL scoping a textual rewrite would otherwise break (r16, lifting the
-    * former named rejection): the statement's WITH prefix (through the
-    * last top-level CTE body) re-runs with `SELECT * FROM <alias>`
-    * appended, so chained CTE references — and nested MATCH_RECOGNIZE
-    * inside CTE bodies, via parser re-entry — resolve exactly as the SQL
-    * scope rules say. None when the statement has no top-level WITH, the
-    * alias is not among its CTEs, or the prefix has a shape this textual
-    * scan does not parse (a CTE column list) — the caller then falls back
-    * to catalog resolution. */
-  private def cteFrame(session: SparkSession, sql: String,
-                       alias: String): Option[org.apache.spark.sql.DataFrame] = {
-    val w = "(?is)^\\s*WITH\\b(\\s+RECURSIVE\\b)?".r.findFirstMatchIn(sql)
-      .getOrElse(return None)
-    val itemRx = "(?is)^\\s*(\\w+)\\s+AS\\s*\\(".r
-    var i = w.end
-    var names = List.empty[String]
-    var lastEnd = i
-    var more = true
-    while (more) {
-      itemRx.findFirstMatchIn(sql.substring(i)) match {
-        case Some(it) =>
-          val close = closeParen(sql, i + it.end - 1)
-          names ::= it.group(1)
-          lastEnd = close + 1
-          "(?s)^\\s*,".r.findFirstMatchIn(sql.substring(close + 1)) match {
-            case Some(cm) => i = close + 1 + cm.end
-            case None => more = false
-          }
-        case None => return None
-      }
-    }
-    if (!names.exists(_.equalsIgnoreCase(alias))) None
-    // parser re-entry: a MATCH_RECOGNIZE inside a CTE body rewrites here
-    // too (each pass eliminates one clause — the recursion terminates)
-    else Some(session.sql(sql.substring(0, lastEnd) + s" SELECT * FROM $alias"))
-  }
-
-  /** `FROM ( <subquery> ) [AS alias] MATCH_RECOGNIZE (...)` — the subquery
-    * runs through the session parser (nested MATCH_RECOGNIZE included) and
-    * the segment rewrites like the table form. None when no such segment
-    * exists. */
-  private def rewriteSubquery(session: SparkSession,
-                              sql: String): Option[String] = {
-    // plain statements must never pay (or risk) the paren scan — the
-    // pre-r16 behavior for every statement without the clause
-    if ("(?i)MATCH_RECOGNIZE".r.findFirstIn(sql).isEmpty) return None
-    for (m <- FromSubRx.findAllMatchIn(sql)) {
-      val open = m.end - 1
-      val close = closeParen(sql, open)
-      // optional `AS alias` between the subquery and the clause; the
-      // negative lookahead keeps the keyword from parsing as the alias
-      val tailRx = ("(?is)^\\s*(?:(?:AS\\s+)?(?!MATCH_RECOGNIZE\\b)\\w+\\s+)?" +
-        "MATCH_RECOGNIZE\\s*\\(").r
-      tailRx.findFirstMatchIn(sql.substring(close + 1)).foreach { t =>
-        val subSql = sql.substring(open + 1, close)
-        val mrOpen = close + 1 + t.end - 1
-        val mrClose = closeParen(sql, mrOpen)
-        val clause = "MATCH_RECOGNIZE " + sql.substring(mrOpen, mrClose + 1)
-        val matches = graft.cep.MatchRecognize.detect(session.sql(subSql), clause)
-        val view = s"__graft_mr_${Integer.toHexString(subSql.hashCode * 31 + clause.hashCode)}"
-        matches.createOrReplaceTempView(view)
-        return Some(sql.substring(0, m.start) + s"FROM $view" +
-          sql.substring(mrClose + 1))
-      }
-    }
-    None
-  }
-
-  /** Replace every `FROM <source> MATCH_RECOGNIZE (...)` segment — source a
-    * catalog table/temp view, a top-level CTE alias of this statement, or a
-    * parenthesized subquery — with a temp view holding the compiled
-    * matches; other statements pass through.
-    *
-    * Lexer assumption: the paren scan honors the DEFAULT Spark lexer, where
-    * backslash escapes (`\'`/`\"`) are live inside string literals. Under
-    * `spark.sql.parser.escapedStringLiterals=true` a literal ENDING in a
-    * backslash (e.g. `'dir\'`) is complete SQL, but the scan would read the
-    * `\'` as an escaped quote and swallow the close — statements combining
-    * that config, a trailing-backslash literal inside MATCH_RECOGNIZE
-    * arguments, and parentheses after it can mis-nest (documented
-    * limitation; the config is off by default and the MATCH_RECOGNIZE
-    * clause grammar itself has no string-literal position where a trailing
-    * backslash is meaningful). */
-  def rewrite(session: SparkSession, sqlText: String): String = {
-    rewriteSubquery(session, sqlText) match {
-      case Some(s) => return rewrite(session, s)
-      case None =>
-    }
-    FromRx.findFirstMatchIn(sqlText) match {
+  /** Rewrite every `FROM <source> MATCH_RECOGNIZE (...)` segment, one per
+    * pass in text order: a subquery source carries its nested segments
+    * into the call, and the next pass rewrites them. Statements without
+    * the keyword pass through untouched. */
+  def rewrite(sqlText: String): String = {
+    if (KeywordRx.findFirstIn(sqlText).isEmpty) return sqlText
+    val kind = SqlText.classify(sqlText)
+    def inCode(m: scala.util.matching.Regex.Match) = kind(m.start) == SqlText.Code
+    // (segment start, source text, index of the clause's open paren)
+    val named = TableRx.findAllMatchIn(sqlText).find(inCode)
+      .map(m => (m.start, m.group(1), m.end - 1))
+    val subquery = SubqueryRx.findAllMatchIn(sqlText).filter(inCode).flatMap { m =>
+      val close = SqlText.closeParen(sqlText, m.end - 1)
+      if (close < 0) None
+      else SubqueryTailRx.findFirstMatchIn(sqlText.substring(close + 1)).map(t =>
+        (m.start, sqlText.substring(m.end - 1, close + 1), close + t.end))
+    }.nextOption()
+    (named ++ subquery).minByOption(_._1) match {
       case None => sqlText
-      case Some(m) =>
-        val table = m.group(1)
-        val open = m.end - 1 // the regex ends at the clause's open paren
-        val i = closeParen(sqlText, open)
-        val clause = "MATCH_RECOGNIZE " + sqlText.substring(open, i + 1)
-        // SQL scoping: a top-level CTE alias of THIS statement wins over a
-        // same-named catalog object (the former shadowing named rejection,
-        // lifted r16)
-        val (source, srcKey) = cteFrame(session, sqlText, table) match {
-          case Some(df) => (df, sqlText.hashCode * 31 + table.hashCode)
-          case None =>
-            // the source is STILL defined as a CTE somewhere this textual
-            // scan cannot evaluate (a WITH after INSERT INTO, a CTE column
-            // list): binding the catalog object would silently shadow the
-            // CTE — keep the named rejection for exactly those shapes
-            val cteRx = (s"(?is)(?:\\bWITH\\b(?:\\s+RECURSIVE\\b)?|,)\\s*" +
-              s"${java.util.regex.Pattern.quote(table)}\\s+AS\\s*\\(").r
-            if (cteRx.findFirstIn(sqlText).isDefined)
-              throw new IllegalArgumentException(
-                s"MATCH_RECOGNIZE front door: FROM source '$table' is " +
-                  "defined as a CTE in a position this textual rewrite " +
-                  "cannot evaluate (a WITH clause not at statement start, " +
-                  "or a CTE with a column list) — createOrReplaceTempView " +
-                  "the input instead")
-            (try session.table(table)
-             catch {
-               case e: org.apache.spark.sql.AnalysisException =>
-                 throw new IllegalArgumentException(
-                   s"MATCH_RECOGNIZE front door: FROM source '$table' is " +
-                     "not a resolvable table/temp view or a top-level CTE " +
-                     "alias of this statement", e)
-             }, table.hashCode)
-        }
-        val matches = graft.cep.MatchRecognize.detect(source, clause)
-        // deterministic per (source, clause): re-parsing the same text
-        // reuses the same view name (createOrReplace makes it idempotent);
-        // CTE sources key on the full statement so same-alias different-body
-        // statements never share a view
-        val view = s"__graft_mr_${Integer.toHexString(srcKey * 31 + clause.hashCode)}"
-        matches.createOrReplaceTempView(view)
-        rewrite(session,
-          sqlText.substring(0, m.start) + s"FROM $view" + sqlText.substring(i + 1))
+      case Some((start, source, open)) =>
+        val close = SqlText.closeParen(sqlText, open)
+        require(close >= 0, "unbalanced MATCH_RECOGNIZE parentheses")
+        val clause = "MATCH_RECOGNIZE " + sqlText.substring(open, close + 1)
+        val hex = clause.getBytes(UTF_8).map(b => f"${b & 0xff}%02X").mkString
+        rewrite(sqlText.substring(0, start) +
+          s"FROM $Function(X'$hex', TABLE($source))" + sqlText.substring(close + 1))
     }
   }
 }
