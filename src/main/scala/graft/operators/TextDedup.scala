@@ -2,94 +2,82 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.MinhashChunks
+import graft.functions.TextShingles
 
 /** Text deduplication: exact hash, MinHash+LSH, SimHash, n-gram Jaccard.
   *
-  * Everything is composed from codegen'd Catalyst builtins
-  * (`sequence`/`transform`/`aggregate`/`md5`) — no UDFs — so whole-stage
-  * codegen applies and the same logic is expressible in the DuckDB oracle.
+  * Shingling and MinHash run in one native kernel,
+  * [[graft.functions.TextShingles]]: one pass over a text's UTF-8 bytes
+  * finds its code points, and the band keys hash each distinct window
+  * straight from the bytes. Its results are those of the composable
+  * `sequence`/`transform`/`substr`/`md5` forms ([[minhash]] keeps the
+  * definition), so the same logic stays expressible in the DuckDB oracle.
+  * SimHash and Jaccard are codegen'd Catalyst builtins, with no UDFs.
   *
-  * Scale design: candidate generation is an equi-join on band keys, so the
-  * shuffle is O(candidates), not O(n²). Hash cost is O(chars × numHashes)
+  * Scale design: candidates come from grouping band keys, so the shuffle is
+  * O(band rows + candidates), not O(n²). Hash cost is O(bytes × md5 seeds)
   * per document and fully parallel. Band/row counts tuned so bucket sizes
   * stay small (2 bands × 4 rows ⇒ ~0.1% pair rate on the test corpus).
   */
 object TextDedup {
 
-  /** Character k-shingles of a string column (always ≥1 shingle). */
-  def shingles(c: Column, k: Int): Column =
-    transform(sequence(lit(1), greatest(length(c) - lit(k - 1), lit(1))),
-      i => c.substr(i, lit(k)))
+  /** Character k-shingles of a string column (always ≥1 shingle; a null
+    * text gives `[null]`). */
+  def shingles(c: Column, k: Int): Column = TextShingles(c, k)
 
   /** One MinHash value: lexicographic min of a seeded 32-bit hash over the
     * shingles. Hash function i is the i%4-th 8-hex-char chunk of
     * md5(shingle || ":" || i/4) — one md5 digest yields FOUR independent
     * hash functions, quartering digest cost. Hex strings compare
     * lexicographically, so Spark and any ANSI-SQL oracle stay bit-identical
-    * with no integer conversion. */
+    * with no integer conversion. [[lshBands]] computes these values in its
+    * kernel; this composable form is their definition. */
   def minhash(shingleArr: Column, i: Int): Column =
     array_min(transform(shingleArr,
       s => substring(md5(concat(s, lit(":" + (i / 4)))), 1 + 8 * (i % 4), 8)))
 
-  /** (doc_id, band, bkey) rows: `bands` bands of `rowsPerBand` minhashes. */
+  /** (doc_id, band, bkey) rows: `bands` bands of `rowsPerBand` minhashes,
+    * the key being the band's values joined with "|". A doc with a null
+    * text has no rows, so it never pairs (the oracle's NULL key never
+    * joins). */
   def lshBands(docs: DataFrame, idCol: String, textCol: String,
-               shingleK: Int, bands: Int, rowsPerBand: Int): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val numDigests = (numHashes + 3) / 4
-    // min over the distinct shingle SET == min over the multiset, and the
-    // small-vocab corpus repeats shingles heavily — hash each one once
-    val sh = docs.select(col(idCol), array_distinct(shingles(col(textCol), shingleK)).as("sh"))
-    // native one-pass signature (graft.functions.MinhashChunks): hash each
-    // shingle once per seed, track chunk minima byte-wise — semantically the
-    // composable minhash() below, minus the per-(shingle,hash) allocation
-    val sig = sh
-      .select(col(idCol), MinhashChunks(col("sh"), numDigests).as("mh"))
-      .select(col(idCol) +:
-        (0 until numHashes).map(i => element_at(col("mh"), i + 1).as(s"h$i")): _*)
-    val bandStructs = (0 until bands).map { b =>
-      val key = concat_ws("|", (0 until rowsPerBand).map(j => col(s"h${b * rowsPerBand + j}")): _*)
-      struct(lit(b).as("band"), key.as("bkey"))
-    }
-    sig.select(col(idCol), explode(array(bandStructs: _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-  }
+               shingleK: Int, bands: Int, rowsPerBand: Int): DataFrame =
+    docs.select(col(idCol),
+      posexplode(TextShingles.bandKeys(col(textCol), shingleK, bands, rowsPerBand))
+        .as(Seq("band", "bkey")))
 
   /** MinHash-LSH candidate pairs (doc_a < doc_b), deduplicated across bands.
     *
-    * The band projection is NOT cached: only the returned plan reads it (see
-    * [[CacheScope]]), so a cache would outlive the call. Both join sides then
-    * compute the shingle+hash lineage (no `ReusedExchange`), yet a warm
-    * no-op write with the cache cleared between calls measured no slower
-    * without it (4 cores, JDK 17, Spark 4.1.2; identical pairs, 90 at
-    * sf0.005 and 6392 at sf0.1): jobs per call 7 → 5, median wall 479 →
-    * 444 ms at sf0.005 and 1362 → 1333 ms at sf0.1, inside the spread.
+    * One aggregate per (band, bkey) bucket collects its ids and counts its
+    * rows; every `a < b` pair of a kept bucket is emitted from the sorted
+    * id list, and one `distinct` merges the pairs the bands share. That is
+    * two shuffles, and the band lineage is computed once, so nothing is
+    * cached: only the returned plan reads the bands (see [[CacheScope]]).
     *
-    * Hot-bucket cap: buckets holding more than `maxBucketSize` docs are
-    * DROPPED before the self-join. A degenerate bucket (empty docs, site
-    * boilerplate, exact spam copies) would otherwise make the band join
-    * quadratic in that bucket — 1M identical docs is 5·10^11 pairs from one
-    * key. Dropping is the standard policy: members of a hot bucket are
-    * near-identical, so the exact-hash dedup pass (d01) already collapses
-    * them, and genuinely-distinct pairs still meet in their other bands.
-    * The size count is an aggregation on the SAME (band,bkey) key as the
-    * join, so the filter reuses the join's shuffle partitioning. */
+    * Hot-bucket cap: buckets holding more than `maxBucketSize` band rows are
+    * DROPPED before any pair is made. A degenerate bucket (empty docs, site
+    * boilerplate, exact spam copies) would otherwise be quadratic in that
+    * bucket — 1M identical docs is 5·10^11 pairs from one key. Dropping is
+    * the standard policy: members of a hot bucket are near-identical, so the
+    * exact-hash dedup pass (d01) already collapses them, and
+    * genuinely-distinct pairs still meet in their other bands. The count
+    * runs over the same rows as the id list, so a null id counts toward the
+    * cap but never pairs. Memory: `collect_list` holds a bucket's ids until
+    * the cap drops the bucket, so a hot bucket costs one boxed id per member
+    * in the task that owns its key (and per map task, in the partial
+    * aggregate), never a row per member pair. */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
                         shingleK: Int = 5, bands: Int = 2, rowsPerBand: Int = 4,
-                        maxBucketSize: Int = 100): DataFrame = {
-    // the cap is a windowed count over EXACTLY the join key, so the one
-    // shuffle that sizes the buckets also co-partitions both join sides —
-    // cheaper than a count-aggregate + semi-join back
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bkey")
-    val bk = lshBands(docs, idCol, textCol, shingleK, bands, rowsPerBand)
-      .withColumn("__bsz", count(lit(1)).over(w))
-      .filter(col("__bsz") <= maxBucketSize).drop("__bsz")
-    val a = bk.select(col(idCol).as("doc_a"), col("band"), col("bkey"))
-    val b = bk.select(col(idCol).as("doc_b"), col("band").as("band_b"), col("bkey").as("bkey_b"))
-    a.join(b, col("band") === col("band_b") && col("bkey") === col("bkey_b") &&
-        col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-  }
+                        maxBucketSize: Int = 100): DataFrame =
+    lshBands(docs, idCol, textCol, shingleK, bands, rowsPerBand)
+      .groupBy("band", "bkey")
+      .agg(count(lit(1)).as("n"), sort_array(collect_list(col(idCol))).as("ids"))
+      .filter(col("n") > 1 && col("n") <= maxBucketSize)
+      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "doc_a")))
+      .select(col("doc_a"),
+        explode(slice(col("ids"), col("i") + 2, size(col("ids")) - col("i") - 1)).as("doc_b"))
+      .filter(col("doc_a") < col("doc_b"))
+      .distinct()
 
   /** Hex chars of an md5 digest whose bit `bitInNibble` is set — lets both
     * engines test hash bits with a set-membership check instead of

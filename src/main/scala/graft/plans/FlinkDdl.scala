@@ -921,39 +921,30 @@ object FlinkDdl {
   }
 
   /** Index just past the balanced-paren span opening at `open` (must be a
-    * '('), honoring single-quoted strings; -1 if unbalanced. The DDL is
+    * '('), counting only parentheses in code; -1 if unbalanced. The DDL is
     * Flink text, where a quote doubles to escape itself and a backslash is
-    * a plain character, so this scan is not [[SqlText]]'s. */
+    * a plain character, so the scan is [[SqlText]]'s Flink form: quotes
+    * and `--` or `/* */` comments are skipped. */
   private def skipBalanced(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var inStr = false
-    while (i < s.length) {
-      val c = s(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    -1
+    val close = SqlText.closeParen(s, open, backslashEscapes = false)
+    if (close < 0) -1 else close + 1
   }
 
-  /** Split on commas at paren/angle-bracket depth 0, outside quotes. A `<`
-    * counts as a generic opener only when glued to a type word
+  /** Split on commas at paren/angle-bracket depth 0, in code (the Flink
+    * form of [[SqlText]], as in [[skipBalanced]]); each comment becomes one
+    * space. A `<` counts as a generic opener only when glued to a type word
     * (`ARRAY<…`) — so a computed column `flag AS a < b` (spaced, as SQL is
     * conventionally written) does not unbalance the scan. */
   private def splitTopLevel(s: String): Seq[String] = {
+    val kind = SqlText.classify(s, backslashEscapes = false)
     val out = Seq.newBuilder[String]
     val cur = new StringBuilder
-    var depth = 0; var angle = 0; var inStr = false
+    var depth = 0; var angle = 0
     s.zipWithIndex.foreach { case (c, i) =>
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
+      val comment = kind(i) == SqlText.LineComment || kind(i) == SqlText.BlockComment
+      if (comment) { if (i == 0 || kind(i - 1) != kind(i)) cur += ' ' }
+      else if (kind(i) != SqlText.Code) cur += c
       else c match {
-        case '\'' => inStr = true; cur += c
         case '(' => depth += 1; cur += c
         case ')' => depth -= 1; cur += c
         case '<' if i > 0 && s(i - 1).isLetter => angle += 1; cur += c

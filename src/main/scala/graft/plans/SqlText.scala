@@ -17,7 +17,11 @@ package graft.plans
   *    first matching quote;
   *  - `` `…` `` is a quoted identifier, with a doubled backquote as escape;
   *  - `--` starts a comment that runs to the end of the line (a backslash
-  *    before the newline continues it); `/* … */` comments nest. */
+  *    before the newline continues it); `/* … */` comments nest.
+  *
+  * Flink DDL text ([[FlinkDdl]]'s column and WITH blocks) is scanned with
+  * `backslashEscapes = false`: there a backslash is a plain character
+  * (`'C:\data\'` is one literal). */
 private[plans] object SqlText {
   val Code: Byte = 0
   val Quoted: Byte = 1
@@ -26,7 +30,7 @@ private[plans] object SqlText {
 
   /** The class of every character of `s`: [[Code]], [[Quoted]],
     * [[LineComment]] or [[BlockComment]]. Delimiters belong to their span. */
-  def classify(s: String): Array[Byte] = {
+  def classify(s: String, backslashEscapes: Boolean = true): Array[Byte] = {
     val kind = new Array[Byte](s.length)
     val n = s.length
     def at(i: Int): Char = if (i < n) s.charAt(i) else '\u0000'
@@ -45,7 +49,7 @@ private[plans] object SqlText {
         var j = i + 1
         var open = true
         while (j < n && open) {
-          if (c != '`' && s.charAt(j) == '\\') j += 2
+          if (c != '`' && backslashEscapes && s.charAt(j) == '\\') j += 2
           else if (s.charAt(j) == c && at(j + 1) == c) j += 2
           else if (s.charAt(j) == c) { open = false; j += 1 }
           else j += 1
@@ -71,8 +75,8 @@ private[plans] object SqlText {
 
   /** Index of the `)` closing the `(` at `open`, counting only code
     * parentheses; -1 when the text ends first. */
-  def closeParen(s: String, open: Int): Int = {
-    val kind = classify(s)
+  def closeParen(s: String, open: Int, backslashEscapes: Boolean = true): Int = {
+    val kind = classify(s, backslashEscapes)
     var depth = 0
     (open until s.length).find { i =>
       if (kind(i) == Code) s.charAt(i) match {

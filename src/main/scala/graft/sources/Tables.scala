@@ -59,17 +59,19 @@ object Tables {
     new java.util.WeakHashMap[SparkSession, TrieMap[String, (FileIdentity, StructType)]]()
 
   /** (name, length, modification time) of every file under `path`, or None
-    * when the file system cannot say. */
+    * when the file system cannot say. Read through `listStatus`, not
+    * `listFiles`: the latter builds a `LocatedFileStatus`, whose constructor
+    * reads the permissions, and the local file system without its native
+    * library reads them by starting an `ls -ld` process per file. */
   private def fileStatus(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
     Try {
       val p = new Path(path)
-      val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val out = Seq.newBuilder[(String, Long, Long)]
-      while (files.hasNext) {
-        val f = files.next()
-        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def walk(dir: Path): Seq[(String, Long, Long)] = fs.listStatus(dir).toSeq.flatMap { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
       }
-      out.result().sorted
+      walk(p).sorted
     }.toOption
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {

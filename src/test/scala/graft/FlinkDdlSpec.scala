@@ -851,4 +851,30 @@ class FlinkDdlSpec extends AnyFunSuite with SparkTest {
       SparkSession.setActiveSession(prev)
     }
   }
+
+  test("comments in the column list and WITH block are skipped through spark.sql") {
+    val prev = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder().withExtensions(GraftExtensions.install).getOrCreate()
+    try {
+      val conf = s2.sql(
+        s"""CREATE TABLE ddl_commented (
+           |  k BIGINT, -- it's the key
+           |  n_name STRING /* a name, (not a key */,
+           |  -- key (primary
+           |  r BIGINT
+           |) WITH (
+           |  'connector' = 'filesystem', -- the user's files
+           |  'path' = '$sfDir/nation.parquet', /* ' */
+           |  'format' = 'parquet'
+           |)""".stripMargin).head()
+      assert(conf.getString(0) == "ddl_commented")
+      assert(s2.table("ddl_commented").schema.fieldNames.toSeq == Seq("k", "n_name", "r"))
+      assert(s2.sql("SELECT count(*) FROM ddl_commented").head().getLong(0) == 25L)
+    } finally {
+      SparkSession.setDefaultSession(prev)
+      SparkSession.setActiveSession(prev)
+    }
+  }
 }
