@@ -434,12 +434,9 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * sub-sequence count across all outer repetitions).
     *
     * Lowering: the depth-1 case of [[followedByNestedNGroup]] — one
-    * closing level holding the tails. The inner sub-group compiles ONCE to
-    * the per-key sub-match table (one row per first-inner-step event with
-    * its earliest completion via keyed min-binding joins — completion
-    * MONOTONE in start), tail candidates are per-step pre-filtered (key,
-    * ts) tables, and the two-level chain walk is one cogroup over (prefix
-    * matches × pre-reduced candidates) per key. [[bindGroup]],
+    * closing level holding the tails, walked in the same one keyed pass
+    * (each inner sub-match is a first-inner-step event with its earliest
+    * completion — completion MONOTONE in start). [[bindGroup]],
     * [[tieBreak]], the residual binders and [[materializeNestedRows]]
     * compose; [[materializeGroupRows]] is a named error. */
   /** `innerOptional` (r15, upgrading the former inner-`*` named
@@ -493,19 +490,16 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * repetitions across outer repetitions) and `<name>_inner_n` (total
     * inner sub-sequences).
     *
-    * Lowering: the innermost sub-group compiles ONCE to the per-key
-    * sub-match table (completion monotone in start), mid and outer-tail
-    * candidates are per-step pre-filtered (key, ts) tables, and the
-    * THREE-level chain walk is one cogroup per key — the level-1
-    * repetition probe (`r1After`) is a function the outer chain calls
-    * both to punctuate and to absorb, so nothing is recomputed and the
-    * walk stays O(total bindings · log candidates) per key, bounded by
+    * Lowering: [[followedByNestedNGroup]]'s one keyed pass; the
+    * level-1 repetition probe is a function the outer chain calls both
+    * to punctuate and to absorb, so nothing is recomputed and the walk
+    * stays O(total bindings · log candidates) per key, bounded by
     * `maxEventsPerKey`. [[bindGroup]] composes (r16 — member VALUE
-    * measures: inner values join the sub-match table, mid/tail values
-    * ride their candidate rows, and the walk folds values through TWO
+    * measures: each member's value is read at its bound timestamp, and
+    * the walk folds values through TWO
     * pending levels — a level-1 repetition's values commit into the
     * outer attempt only when it is absorbed, the attempt's only when the
-    * outer repetition completes); [[tieBreak]] steers the value tables
+    * outer repetition completes); [[tieBreak]] steers the bound values
     * at every level (r17 — the shared tieMinAgg builder);
     * [[materializeNestedRows]] composes, including with bindGroup (r18 —
     * per-row vsum/vcnt value snapshots at every depth). */
@@ -540,11 +534,9 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * (outer), `<name>_mid2_n` (total level-2 repetitions),
     * `<name>_mid_n` (total level-1) and `<name>_inner_n`.
     *
-    * Lowering: the SAME inner sub-match table and tagged candidate union
-    * as [[followedByNested2Group]] (mid2 steps slot between the mids and
-    * the outer tails), and the chain walk gains one recursion level —
-    * `rep2After` chains `r1After` exactly as the outer chain chains
-    * `rep2After`. [[bindGroup]] values, [[bindTailResidual]] on mid/mid2/
+    * Lowering: the SAME one keyed pass as [[followedByNested2Group]]
+    * (mid2 steps slot between the mids and the outer tails), and the
+    * chain walk gains one recursion level. [[bindGroup]] values, [[bindTailResidual]] on mid/mid2/
     * tail members, [[tieBreak]], an inner `*` and (r18)
     * [[materializeNestedRows]] all compose through the same machinery.
     * Depth ≥ 4 is [[followedByNestedNGroup]] (r18 — the former named
@@ -580,10 +572,15 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * level 1 keeps the historical `<name>_mid_n` spelling) and
     * `<name>_inner_n`.
     *
-    * Lowering: the SAME inner sub-match table and tagged candidate union
-    * at every depth; the chain walk is ONE recursive per-level probe
-    * inside one cogroup per key — depth adds probe levels, never shuffle
-    * patterns, and per-key state stays bounded by `maxEventsPerKey`.
+    * Lowering: ONE keyed pass at every depth — the per-key event walk of
+    * the reference NFA (flink-cep/.../nfa/NFA.java). One scan of the
+    * events emits a row per (event, member it satisfies), plus the anchor
+    * rows when the group directly follows the begin step; one grouping on
+    * the key hands each key's rows to the walk, which builds the inner
+    * sub-matches itself and runs ONE recursive per-level probe — depth
+    * adds probe levels, never scans or shuffles, and per-key state stays
+    * bounded by `maxEventsPerKey`. A longer prefix before the group joins
+    * the walk as the second side of a cogroup.
     * [[bindGroup]] values, [[bindTailResidual]] on any closing-level
     * member, [[bindInnerResidual]], [[tieBreak]], an inner `*`
     * (`innerOptional`) and [[materializeNestedRows]] (r18 — at every
@@ -633,9 +630,8 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
       "bindGroup() requires followedByGroup()/followedByNestedGroup()/" +
         "followedByNested2Group() as the last step")
     // on a NESTED group (r15, upgrading the former named rejection) the
-    // member may be an inner sub-step OR a tail step: inner values join
-    // onto the sub-match table at the member's bound time, tail values
-    // ride the tail candidate rows, and the two-level walk folds completed
+    // member may be an inner sub-step OR a tail step: each is read at the
+    // member's bound time, and the walk folds completed
     // repetitions into the same running sum/min/max/first/last/cnt state
     // the one-level chain keeps
     require((steps.last.group ++ steps.last.inner2 ++
@@ -671,12 +667,8 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * Depth-2 MID members compose too (r17): the mid BINDING and the
     * inner-chain PUNCTUATION share the satisfying scan — exactly the
     * tail convention one level down (a failing mid candidate neither
-    * binds nor punctuates the inner chain). INNER members stay named
-    * rejections: their predicate shapes the pre-compiled sub-match
-    * table, which is shared across anchors — an anchor-dependent
-    * residual there would need one sub-match table per match (rewrite:
-    * move the condition to a mid/tail step, or split the pattern). One
-    * residual per member; does not compose with [[bindGroup]] on the
+    * binds nor punctuates the inner chain). INNER members take
+    * [[bindInnerResidual]]. One residual per member; does not compose with [[bindGroup]] on the
     * same member (the per-(key, ts) reduction differs). */
   def bindTailResidual(member: String, valueCol: String, op: String,
                        threshold: Column): Pattern = {
@@ -705,20 +697,15 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * inside a GroupPattern's inner sub-pattern): the inner member binds
     * the earliest candidate whose `valueCol` satisfies `<op> threshold`,
     * where `threshold` is a Column over the EARLIER plain steps' bound
-    * columns — so the whole inner SUB-MATCH TABLE becomes anchor-
-    * dependent. Lowering: the sub-match compile is parametrized by the
-    * DISTINCT per-key threshold tuples of the anchor frame (one chain of
-    * keyed min-joins per distinct threshold value, not per anchor — the
-    * fan-out is `|first-inner events| x |distinct thresholds per key|`,
-    * bounded by `maxEventsPerKey` in the walk), candidates pre-reduce to
-    * per-(key, ts) op-appropriate value extremes, and the chain walk
-    * selects each anchor's own sub array by its threshold tuple. A null
-    * threshold never binds (SQL 3VL — that anchor has NO completable
-    * subs). One residual per inner member; does not compose with
-    * [[bindGroup]] on the same member. Composes with DEPTH-2 and DEPTH-3
-    * groups too (r17 — the innermost sub-match table is the same compile
-    * at every depth, so the per-tuple parametrization carries through
-    * the deeper walks unchanged; mid/mid2/tail members take
+    * columns — so the inner sub-matches become anchor-dependent.
+    * Lowering: the walk reduces the member's candidates to per-(key, ts)
+    * op-appropriate value extremes and builds the sub-matches once per
+    * DISTINCT threshold tuple among the key's anchors (not per anchor);
+    * each anchor walks the sub-matches of its own tuple. A null threshold
+    * never binds (SQL 3VL — that anchor has NO completable subs). One
+    * residual per inner member; does not compose with [[bindGroup]] on
+    * the same member. Composes at every depth (the inner sub-matches are
+    * built the same way at every depth; mid/mid2/tail members take
     * [[bindTailResidual]]). */
   def bindInnerResidual(member: String, valueCol: String, op: String,
                         threshold: Column): Pattern = {
@@ -1034,110 +1021,6 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     *
     * Both are parallel in the key space and shuffle only on the key —
     * the same scale shape as [[detect]]'s first-match joins. */
-  /** [[bindInnerResidual]] compile-side machinery — ONE implementation
-    * shared by the nested (m49) and depth-2/3 (m50) branches so the
-    * threshold conventions cannot diverge (the tieMinAgg/commitPending
-    * precedent): the distinct-tuple table (null tuples dropped — SQL 3VL),
-    * the candidate-side condition and per-(key, ts) op-appropriate extreme
-    * builders, the tag-0 tuple column, and the anchor-frame column adder.
-    * Every threshold double is normalized by `+ 0.0` on BOTH sides
-    * (-0.0 → 0.0, IEEE) — `distinct()` may canonicalize signed zeros in
-    * its aggregation keys while the anchor frame carries the raw
-    * projection, and the walk's boxed-Double tuple lookup distinguishes
-    * -0.0 from 0.0, so an unnormalized signed zero would silently hand
-    * the anchor an EMPTY sub array. The anchor frame feeding both sides
-    * is persisted by the caller (the compile re-reads it under the
-    * candidate plan). */
-  private final class InnerResCompile(
-      innerRes: Seq[(String, String, String, Column)]) {
-    val has: Boolean = innerRes.nonEmpty
-    private val byMember: Map[String, Int] =
-      innerRes.map(_._1).zipWithIndex.toMap
-    private def norm(c: Column): Column = c.cast("double") + lit(0.0)
-    def thrTable(out: DataFrame): DataFrame = {
-      val d0 = innerRes.zipWithIndex.foldLeft(out) {
-        case (d, ((_, _, _, thr), r)) => d.withColumn(s"__thr$r", norm(thr))
-      }
-      // null thresholds never bind (SQL 3VL): no chain is compiled for
-      // them — the anchor finds no subs under its tuple
-      d0.select(col("__k").as("__tk") +:
-          innerRes.indices.map(r => col(s"__thr$r")): _*)
-        .filter(innerRes.indices
-          .map(r => col(s"__thr$r").isNotNull).reduce(_ && _))
-        .distinct()
-    }
-    def cond(member: String, candValue: Column): Column =
-      byMember.get(member) match {
-        case None => lit(true)
-        case Some(r) =>
-          val op = innerRes(r)._3
-          val thr = col(s"__thr$r")
-          op match {
-            case "<" => candValue < thr
-            case "<=" => candValue <= thr
-            case ">" => candValue > thr
-            case _ => candValue >= thr
-          }
-      }
-    def extreme(member: String): Option[Column] =
-      byMember.get(member).map { r =>
-        val (_, c, op, _) = innerRes(r)
-        if (op == ">" || op == ">=") max(col(c).cast("double"))
-        else min(col(c).cast("double"))
-      }
-    /** tag-0 rows carry the sub's threshold tuple; the walk selects each
-      * anchor's own subs by it */
-    def thrsCol: Column =
-      if (!has) lit(null).cast("array<double>")
-      else array(innerRes.indices.map(r => col(s"__thr$r")): _*)
-    /** the anchor's own tuple, same normalization as the table side */
-    def anchorThrs(d: DataFrame, prefix: String): DataFrame =
-      innerRes.zipWithIndex.foldLeft(d) {
-        case (acc, ((_, _, _, thr), r)) =>
-          acc.withColumn(s"$prefix$r", norm(thr))
-      }
-  }
-
-  /** The innermost sub-match min-join chain, shared by the nested and
-    * depth-2/3 branches: one row per first-inner-step event (× threshold
-    * tuple under inner residuals) with the earliest SATISFYING completion
-    * per chained member. Returns (isubs, final completion column). */
-  private def compileInnerSubs(inner: Seq[(String, Column)],
-      ir: InnerResCompile, thrTable: DataFrame, events: DataFrame,
-      key: Column, ts: Column, win: Column): (DataFrame, Column) = {
-    var isubs = {
-      val firstName = inner.head._1
-      val base0 = ir.extreme(firstName) match {
-        case None => events.filter(inner.head._2)
-          .select(key.as("__gk"), ts.as("__gb"))
-        case Some(ext) => events.filter(inner.head._2)
-          .groupBy(key.as("__gk"), ts.as("__gb")).agg(ext.as("__gv0"))
-      }
-      if (!ir.has) base0
-      else base0.join(thrTable, col("__gk") === col("__tk") &&
-          ir.cond(firstName, col("__gv0")))
-        .drop("__tk", "__gv0")
-    }
-    var prevSub: Column = col("__gb")
-    inner.tail.zipWithIndex.foreach { case ((mn, p), j) =>
-      val cand = ir.extreme(mn) match {
-        case None => events.filter(p)
-          .select(key.as("__gk2"), ts.as(s"__gc$j"))
-        case Some(ext) => events.filter(p)
-          .groupBy(key.as("__gk2"), ts.as(s"__gc$j"))
-          .agg(ext.as(s"__gcv$j"))
-      }
-      val kept0 = isubs.columns.map(col)
-      isubs = isubs.join(cand, col("__gk") === col("__gk2") &&
-          col(s"__gc$j") > prevSub && col(s"__gc$j") <= col("__gb") + win &&
-          ir.cond(mn, col(s"__gcv$j")))
-        .groupBy(kept0.toIndexedSeq: _*)
-        .agg(min(col(s"__gc$j")).as(s"__ge$j"))
-      prevSub = col(s"__ge$j")
-    }
-    (isubs, prevSub)
-  }
-
   private def detectAllMatches(events: DataFrame, key: Column, ts: Column): DataFrame = {
     require(windowMs.nonEmpty, "call within(...) before detect")
     require(notStep.isEmpty && !skipPastLast && skipTo.isEmpty,
@@ -1314,8 +1197,12 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * sequential walks (group/nested chains, PREV(n>1) segmentation, AFTER
     * MATCH greedy selection) — a hot key past the ceiling refuses by name
     * instead of OOMing an executor (see [[Pattern.DefaultMaxEventsPerKey]]).
-    * The purely declarative paths never materialize per-key state and
-    * ignore the bound. */
+    * What it counts per walk: the candidate rows of a key. For a nested
+    * group that is one row per (event, group member it satisfies), plus
+    * one row per begin-step event when the group directly follows the
+    * begin step (the anchors ride the same scan) — an event that
+    * satisfies k members counts k times. The purely declarative paths
+    * never materialize per-key state and ignore the bound. */
   def detect(events: DataFrame, key: Column, ts: Column,
              maxEventsPerKey: Int = Pattern.DefaultMaxEventsPerKey): DataFrame = {
     require(windowMs.nonEmpty, "call within(...) before detect")
@@ -1357,9 +1244,12 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
           (evCols.map(c => col(c).as(s"__c_$c")) ++ clsCol)): _*)
     }
     val first = expanded.head
-    var out = events.filter(first.pred)
-      .select((key.as("__k") +: ts.as(s"${first.name}_ts") +:
-        first.keep.map(c => col(c).as(s"${first.name}_$c"))): _*)
+    val anchorProj = key.as("__k") +: ts.as(s"${first.name}_ts") +:
+      first.keep.map(c => col(c).as(s"${first.name}_$c"))
+    // the first step's frame: a nested group right after it folds this
+    // frame into its own event scan
+    val out0 = events.filter(first.pred).select(anchorProj: _*)
+    var out = out0
     val startTs = s"${first.name}_ts"
     // the "time of the previous binding": for optional steps this falls back
     // to the binding before them when the step was skipped
@@ -1520,156 +1410,105 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
         prevTs = col(s"${s.name}_last_ts")
       } else if (s.inner2.nonEmpty) {
         // --- nested group at ANY depth (...((I...)+ L1...)+ ... LD...)+
-        // (followedByNested{,2,3,N}Group; depth 1 is ((I...)+ T...)+):
-        // ONE recursive level probe serves every depth. The innermost
-        // sub-group lowers to the same declarative sub-match table, every
-        // closing level's candidates are pre-filtered (key, ts) tables,
-        // and the (depth+1)-level chain walks per key inside ONE cogroup: a
-        // level-l repetition is a greedy chain of level-(l-1) repetitions
-        // (level 0 = one inner sub-match) punctuated by the earliest
-        // SATISFYING first-level-l-closer candidate, then the level-l
-        // closing steps bound sequentially — reluctant close and
-        // greedy-no-backtracking at every level. The probe is called once
-        // per decision (punctuate OR absorb), never recomputed, so the
-        // walk stays O(total bindings · log candidates · depth) per key,
-        // bounded by `maxEventsPerKey`.
+        // (followedByNested{,2,3,N}Group; depth 1 is ((I...)+ T...)+),
+        // lowered onto ONE keyed pass — the per-key event walk of the
+        // reference NFA (flink-cep/.../nfa/NFA.java). One scan of `events`
+        // emits one row per (event, pattern member it satisfies) carrying
+        // only the columns the walk reads, plus one anchor row per
+        // first-step event when the anchor frame is that step alone (a
+        // longer prefix stays a second cogroup side). One grouping on the
+        // key hands each key's rows to the walk, which reduces every member's rows
+        // to distinct (ts, values) candidates, builds the inner sub-matches
+        // itself (the earliest satisfying completion per first-inner
+        // event, by the same binary search the closing levels use) and
+        // walks the (depth+1)-level chain: a level-l repetition is a
+        // greedy chain of level-(l-1) repetitions (level 0 = one inner
+        // sub-match) punctuated by the earliest SATISFYING
+        // first-level-l-closer candidate, then the level-l closing steps
+        // bound sequentially — reluctant close and greedy-no-backtracking
+        // at every level. The probe is called once per decision (punctuate
+        // OR absorb), never recomputed, so the walk stays O(total bindings
+        // · log candidates · depth) per key, bounded by `maxEventsPerKey`.
         require(s.oneOrMore,
           s"depth-${s.closings.size} nested group ${s.name}: quantify with " +
             "oneOrMore()/zeroOrMore()")
         val depthD = s.closings.size
-        // bindInnerResidual (r17 — the m49 recipe at any depth): an
-        // anchor-relative condition on an INNER member parametrizes the
-        // sub-match compile by the anchor frame's DISTINCT threshold
-        // tuples; candidates pre-reduce to per-(key, ts) op-appropriate
-        // extremes and the walk selects each anchor's own sub array by
-        // exact-double tuple lookup (both sides evaluate the same Catalyst
-        // expression on the same anchor rows)
-        val iRes2 = new InnerResCompile(s.innerRes)
-        val hasIRes2 = iRes2.has
-        // the anchor frame feeds BOTH sides of the cogroup under an inner
-        // residual. Deliberately NOT persisted (r18, superseding the r17
-        // persist after a three-way A/B at sf0.1): re-evaluating the
-        // anchor prefix for the threshold table costs ~0.1 s (m49
-        // 0.98 vs 0.85 s in r17's own numbers), a never-released persist
-        // pins executor memory for the application lifetime (the r17
-        // advice item), and the release-via-eager-localCheckpoint fix
-        // measured 1.4-1.6x on the residual queries (two extra scheduler
-        // round-trips + a store/read of the walk output). At scale the
-        // anchor prefix is an embarrassingly parallel scan; a pinned
-        // cache is cluster memory — double evaluation is the right
-        // trade everywhere.
-        val thrTable2 = if (!hasIRes2) null else iRes2.thrTable(out)
-        var (isubs, prevSub) = compileInnerSubs(s.inner2, iRes2, thrTable2,
-          events, key, ts, win)
-        // bindGroup VALUE measures through the chain (r16, the m36 recipe
-        // recursed): INNER member values join the sub-match table at the
-        // member's bound time; closing-level values ride their candidate
-        // rows as per-(key, ts) min-value tables — the engine's equal-ts
-        // (value) min tie-break, doubles for O(1) running state
         val inner2Names = s.inner2.map(_._1)
-        val gkInner = s.groupKeep.zipWithIndex.filter {
-          case ((m, _), _) => inner2Names.contains(m) }
         // closing steps flattened in level order: closings(0) = the mids
         // (close level-1), ..., closings.last = the outer tails
         val closing2 = s.closings.flatten
-        val gkByStep: Map[Int, Seq[((String, String), Int)]] =
-          closing2.zipWithIndex.map { case ((tn, _), j) =>
-            j -> s.groupKeep.zipWithIndex.filter { case ((m, _), _) => m == tn }
-          }.toMap
-        // bindTailResidual on any closing-level member (r16/r17): per
-        // (key, ts) the op-appropriate value extreme; the walk scans to
-        // the first satisfying candidate and punctuation shares the scan
-        // at EVERY level (a failing closer neither binds nor punctuates
-        // its level's chain). Keyed by the step's position in the
-        // flattened closing order.
-        def resIdx2(m: String): Int = closing2.indexWhere(_._1 == m)
-        val resByStep2: Map[Int, (String, String)] = s.tailRes.map {
-          case (m, c, op, _) => resIdx2(m) -> ((c, op))
+        val nInner = s.inner2.size
+        val nClosing = closing2.size
+        // member tags: inner members, then the closing levels flattened
+        val members = s.inner2 ++ closing2
+        val nTags = members.size
+        // the event columns the walk reads as doubles: bindGroup columns
+        // and residual value columns. The tiebreak steers bindGroup values
+        // only (membership and succession stay time-level)
+        val valNames = (s.groupKeep.map(_._2) ++ s.tailRes.map(_._2) ++
+          s.innerRes.map(_._2)).distinct
+        val ties = if (s.groupKeep.isEmpty) Nil else s.tieCols
+        // per tag: (value position, groupKeep index) of its bindGroup
+        // columns, in groupKeep order
+        val gkByTag: Array[Array[(Int, Int)]] = Array.tabulate(nTags)(t =>
+          s.groupKeep.zipWithIndex.collect {
+            case ((m, c), gi) if m == members(t)._1 => (valNames.indexOf(c), gi)
+          }.toArray)
+        // per tag: the residual's value position and op code (0 none, 1 <,
+        // 2 <=, 3 >, 4 >=) — bindTailResidual on a closing member,
+        // bindInnerResidual on an inner one — and its per-anchor threshold
+        // (a Column over EARLIER bound columns, evaluated on the anchor
+        // frame as `__thr<tag>`)
+        val residuals = (s.tailRes ++ s.innerRes).map { case (m, c, op, thr) =>
+          members.indexWhere(_._1 == m) -> ((valNames.indexOf(c), op match {
+            case "<" => 1; case "<=" => 2; case ">" => 3; case _ => 4
+          }, thr))
         }.toMap
-        // ONE aggregate + join per MEMBER (all its kept columns together).
-        // Equal-ts candidates: (value) min by default, (ties..., value)
-        // argmin under a composite ORDER BY tiebreak (r17 — the shared
-        // tieMinAgg builder)
-        gkInner.groupBy(_._1._1).foreach { case (m, entries) =>
-          val im = inner2Names.indexOf(m)
-          val boundTs = if (im == 0) col("__gb") else col(s"__ge${im - 1}")
-          val aggs = entries.map { case ((_, c), i) =>
-            Pattern.tieMinAgg(c, s.tieCols).as(s"__nv$i") }
-          val vt = events.filter(s.inner2(im)._2)
-            .groupBy(key.as("__vk"), ts.as("__vts"))
-            .agg(aggs.head, aggs.tail: _*)
-          isubs = isubs.join(vt, col("__gk") === col("__vk") &&
-              boundTs === col("__vts"))
-            .drop("__vk", "__vts")
+        val resVal: Array[Int] = Array.tabulate(nTags)(t =>
+          residuals.get(t).fold(-1)(_._1))
+        val resOp: Array[Int] = Array.tabulate(nTags)(t =>
+          residuals.get(t).fold(0)(_._2))
+        val thrNames = residuals.keys.toSeq.sorted.map(t => s"__thr$t")
+        def withAnchorCols(d: DataFrame): DataFrame =
+          residuals.toSeq.sortBy(_._1).foldLeft(d) { case (acc, (t, (_, _, thr))) =>
+            acc.withColumn(s"__thr$t", thr.cast("double"))
+          }.withColumn("__gprev", prevTs).withColumn("__gwend", col(startTs) + win)
+        val anchNames = out.columns.toSeq ++ thrNames ++ Seq("__gprev", "__gwend")
+        // the anchor rides the member scan when it is the first step's
+        // frame and its column names cannot shadow an event column
+        val oneSide = (out eq out0) && {
+          val evNames = events.columns.map(_.toLowerCase).toSet
+          !anchNames.exists(n => evNames(n.toLowerCase))
         }
-        val innerValsCol: Column =
-          if (gkInner.isEmpty) lit(null).cast("array<double>")
-          else array(gkInner.map { case (_, i) => col(s"__nv$i") }: _*)
-        // materializeNestedRows: each sub-match carries its MEMBER binding
-        // times in member order (start + chained completion times)
-        val memTs: Seq[Column] = col("__gb") +:
-          (0 until s.inner2.size - 1).map(j => col(s"__ge$j"))
-        val memsCol: Column =
-          if (s.groupRows) array(memTs: _*)
-          else lit(null).cast("array<timestamp>")
-        // tagged candidate union: inner sub-matches (tag 0: start + end +
-        // inner bound values + member times + threshold tuple under inner
-        // residuals), then each closing step's candidates in level order
-        // (tags 1..nClosing) — all pre-reduced, with that step's bound
-        // values when asked
-        val thrsCol2: Column = iRes2.thrsCol
-        val nullThrs2 = lit(null).cast("array<double>").as("__thrs")
-        val tagged = closing2.zipWithIndex.foldLeft(
-          isubs.select(col("__gk"), lit(0).as("__tag"),
-            col("__gb").as("__t1"), prevSub.as("__t2"),
-            innerValsCol.as("__vals"), memsCol.as("__mems"),
-            thrsCol2.as("__thrs"))) {
-          case (acc, ((_, p), j)) =>
-            val tks = gkByStep(j)
-            val cand = resByStep2.get(j) match {
-              case Some((c, op)) =>
-                val agg0 = if (op == ">" || op == ">=")
-                  max(col(c).cast("double")) else min(col(c).cast("double"))
-                events.filter(p).groupBy(key.as("__gk"), ts.as("__t1"))
-                  .agg(agg0.as("__tvres"))
-                  .select(col("__gk"), lit(j + 1).as("__tag"), col("__t1"),
-                    lit(null).cast("timestamp").as("__t2"),
-                    array(col("__tvres")).as("__vals"),
-                    lit(null).cast("array<timestamp>").as("__mems"), nullThrs2)
-              case None if tks.isEmpty => events.filter(p).select(key.as("__gk"),
-                lit(j + 1).as("__tag"), ts.as("__t1"),
-                lit(null).cast("timestamp").as("__t2"),
-                lit(null).cast("array<double>").as("__vals"),
-                lit(null).cast("array<timestamp>").as("__mems"), nullThrs2)
-              case None =>
-                // closing-level member values tie-steer too (the shared
-                // tieMinAgg builder — the r16 one-level convention)
-                val aggs = tks.map { case ((_, c), i) =>
-                  Pattern.tieMinAgg(c, s.tieCols).as(s"__tv$i") }
-                events.filter(p).groupBy(key.as("__gk"), ts.as("__t1"))
-                  .agg(aggs.head, aggs.tail: _*)
-                  .select(col("__gk"), lit(j + 1).as("__tag"), col("__t1"),
-                    lit(null).cast("timestamp").as("__t2"),
-                    array(tks.map { case (_, i) => col(s"__tv$i") }: _*).as("__vals"),
-                    lit(null).cast("array<timestamp>").as("__mems"), nullThrs2)
-            }
-            acc.unionByName(cand)
-        }
-        // per-anchor residual thresholds: Columns over EARLIER bound
-        // columns, evaluated once on the anchor frame
-        val outRes2 = s.tailRes.foldLeft(out) { case (d, (m, _, _, thr)) =>
-          d.withColumn(s"__tres${resIdx2(m)}", thr.cast("double"))
-        }
-        // bindInnerResidual: the anchor's own threshold tuple — the walk
-        // selects its sub array by it (exact-double lookup, normalization
-        // shared with the table side via InnerResCompile)
-        val outResI2 = iRes2.anchorThrs(outRes2, "__ires")
-        val anch = outResI2.withColumn("__gprev", prevTs)
-          .withColumn("__gwend", col(startTs) + win)
-        val aSchema = anch.schema
-        val keyIdx = aSchema.fieldIndex("__k")
+        val scanBase =
+          if (oneSide) withAnchorCols(events.select(col("*") +: anchorProj: _*))
+          else events
+        val tagCol = explode(array((members.zipWithIndex.map { case ((_, p), t) =>
+          when(p, lit(t)) } ++ (if (oneSide) Seq(when(first.pred, lit(-1))) else Nil)): _*))
+        val memberRows = scanBase.filter(if (oneSide) s.pred || first.pred else s.pred)
+          .select((Seq(key.as("__gk"), tagCol.as("__tag"), ts.as("__t")) ++
+            valNames.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__v$i") } ++
+            ties.zipWithIndex.map { case (c, i) => col(c).as(s"__tie$i") } ++
+            (if (oneSide) Seq(when(first.pred, struct(anchNames.map(col): _*)).as("__anc"))
+             else Nil)): _*)
+          .filter(col("__tag").isNotNull)
+        val anch = if (oneSide) null else withAnchorCols(out)
+        val aSchema = if (!oneSide) anch.schema else memberRows.schema("__anc")
+          .dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
         val prevIdx = aSchema.fieldIndex("__gprev")
         val wendIdx = aSchema.fieldIndex("__gwend")
+        val thrIdx: Array[Int] = Array.tabulate(nTags)(t =>
+          if (resOp(t) != 0) aSchema.fieldIndex(s"__thr$t") else -1)
+        val ancIdx = if (oneSide) memberRows.schema.fieldIndex("__anc") else -1
+        val nVals = valNames.size
+        // the equal-ts tiebreak order: Spark's own ordering of struct(ties
+        // ..., value), nulls first — what the min_by the flat group chain
+        // aggregates with compares
+        val tieTypes: Seq[org.apache.spark.sql.types.DataType] =
+          ties.indices.map(i => memberRows.schema(3 + nVals + i).dataType) :+
+            org.apache.spark.sql.types.DoubleType
+        val winUs = windowMs.get * 1000L
+        val nTies = ties.size
         // per-level repetition totals, outermost-first in the output: the
         // historical names — mid_n for level 1, mid{l}_n above it
         def lvlColName(l: Int): String =
@@ -1736,9 +1575,6 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
             org.apache.spark.sql.types.StructField(s"${s.name}_inner_n",
               org.apache.spark.sql.types.LongType)) ++
           Pattern.groupValFields(s.name, s.groupKeep) ++ rowsFields)
-        val strEnc = org.apache.spark.sql.Encoders.STRING
-        val anchKV = anch.groupByKey(r => Pattern.keyString(r.get(keyIdx)))(strEnc)
-        val candKV = tagged.groupByKey(r => Pattern.keyString(r.get(0)))(strEnc)
         // primitive closure copies — the Step itself (whose Columns are
         // not serializable) must never be captured
         val optGroup = s.opt
@@ -1746,18 +1582,24 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
         val lvlSizes: Array[Int] = s.closings.map(_.size).toArray
         // closing2 offset of level (l+1)'s first closing step
         val lvlOff: Array[Int] = lvlSizes.scanLeft(0)(_ + _).init
-        val nClosing = closing2.size
         val matRows = s.groupRows
         val innerOptFlag = s.innerOpt
-        // all member names in tag order: inner members, then the closing
-        // levels flattened
-        val clsNames = (s.inner2.map(_._1) ++ closing2.map(_._1)).toArray
-        val nInner = s.inner2.size
+        // all member names in tag order
+        val clsNames = members.map(_._1).toArray
         val gkN = s.groupKeep.size
+        // bindGroup columns of INNER members in groupKeep order: each sub
+        // carries their values (`_3`), read at the member's bound ts
+        val gkInner = s.groupKeep.zipWithIndex.filter {
+          case ((m, _), _) => inner2Names.contains(m) }
         val gkInnerPos = gkInner.map(_._2).toArray
-        val gkStepPos = Array.tabulate(nClosing)(j => gkByStep(j).map(_._2).toArray)
+        // per entry: (inner tag, position in that tag's value array)
+        val gkInnerSrc: Array[(Int, Int)] = gkInner.map { case ((m, _), gi) =>
+          val im = inner2Names.indexOf(m)
+          (im, gkByTag(im).indexWhere(_._2 == gi))
+        }.toArray
+        val gkStepPos = Array.tabulate(nClosing)(j => gkByTag(nInner + j).map(_._2))
         // per-row value snapshots: on whenever BOTH surfaces are on; per
-        // inner member j the (index into the sub's __vals array, gk pos)
+        // inner member j the (index into the sub's value array, gk pos)
         // contributions
         val rowVals = matRows && gkN > 0
         val gkInnerByMember: Array[Array[(Int, Int)]] =
@@ -1765,76 +1607,102 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
             gkInner.zipWithIndex.collect {
               case (((m, _), gi), vi) if m == inner2Names(j) => (vi, gi)
             }.toArray)
-        // bindTailResidual: per step an op code (0 none, 1 <, 2 <=, 3 >,
-        // 4 >=) and the anchor-frame field index of its threshold column
-        val resOps2: Array[Int] = Array.tabulate(nClosing)(j =>
-          resByStep2.get(j).map(_._2 match {
-            case "<" => 1; case "<=" => 2; case ">" => 3; case _ => 4
-          }).getOrElse(0))
-        val resThrIdx2: Array[Int] = Array.tabulate(nClosing)(j =>
-          if (resOps2(j) != 0) aSchema.fieldIndex(s"__tres$j") else -1)
-        // bindInnerResidual: anchor-frame field indexes of the threshold
-        // tuple (closure copies)
-        val hasIResW2 = hasIRes2
-        val iResThrIdx2: Array[Int] = Array.tabulate(s.innerRes.size)(r =>
-          aSchema.fieldIndex(s"__ires$r"))
-        // diagnostic label parametrized on the ACTUAL depth (r17 advice:
-        // the shared branch used to say "depth-2 ... three-level" even for
-        // depth-3 groups)
+        val resOps2: Array[Int] = Array.tabulate(nClosing)(j => resOp(nInner + j))
+        val resThrIdx2: Array[Int] = Array.tabulate(nClosing)(j => thrIdx(nInner + j))
+        val innerThr = (0 until nInner).filter(resOp(_) != 0).toArray
+        // diagnostic label parametrized on the ACTUAL depth
         val walkLabel2 = s"depth-$depthD nested group ${s.name} " +
           s"${depthD + 1}-level chain walk"
-        val chained = anchKV.cogroup(candKV) { (_, as, cs) =>
-          val all = Pattern.boundedRows(cs, maxPK, walkLabel2)
-          val subsAll = all.filter(_.getInt(1) == 0)
-            .map(r => (Pattern.tsOf(r, 2), Pattern.tsOf(r, 3),
-              if (gkInnerPos.length > 0) Pattern.dblsOf(r, 4) else null,
-              if (matRows) r.getSeq[Any](5).map(Pattern.anyToTs) else null,
-              if (hasIResW2) Pattern.dblsOf(r, 6).toList else null))
-          // per-threshold-tuple sorted sub arrays (one shared array when
-          // no inner residual is bound — the m49 convention)
-          val emptySubs2 = Array.empty[(java.sql.Timestamp, java.sql.Timestamp,
-            Array[java.lang.Double], Seq[java.sql.Timestamp])]
-          def sorted2(xs: Array[(java.sql.Timestamp, java.sql.Timestamp,
-              Array[java.lang.Double], Seq[java.sql.Timestamp],
-              List[java.lang.Double])]) =
-            xs.map(x => (x._1, x._2, x._3, x._4))
-              .sortWith((p, q) => p._1.before(q._1))
-          val subsDefault = if (hasIResW2) emptySubs2 else sorted2(subsAll)
-          val subsByThr2: Map[List[java.lang.Double], Array[(java.sql.Timestamp,
-              java.sql.Timestamp, Array[java.lang.Double],
-              Seq[java.sql.Timestamp])]] =
-            if (!hasIResW2) Map.empty
-            else subsAll.groupBy(_._5).map { case (k, xs) => k -> sorted2(xs) }
-          // closing-step candidates in level order: sorted (time, values)
-          val cands = Array.tabulate(nClosing) { j =>
-            all.filter(_.getInt(1) == j + 1).map(r => (Pattern.tsOf(r, 2),
-              if (gkStepPos(j).length > 0 || resOps2(j) != 0)
-                Pattern.dblsOf(r, 4) else null))
-              .sortWith((p, q) => p._1.before(q._1))
-          }
-          def candAfter(j: Int, t: java.sql.Timestamp): Int = {
-            val arr = cands(j)
-            var lo = 0; var hi = arr.length
-            while (lo < hi) { val mid = (lo + hi) >>> 1
-              if (arr(mid)._1.after(t)) hi = mid else lo = mid + 1 }
-            lo
-          }
+        type Sub = (java.sql.Timestamp, java.sql.Timestamp,
+          Array[java.lang.Double], Seq[java.sql.Timestamp])
+        // one key's walk: `as` its anchor rows, `all` its member rows
+        val walk = (nullKey: Boolean, as: Iterator[org.apache.spark.sql.Row],
+                    all: Array[org.apache.spark.sql.Row]) => {
+          // every member's rows reduced to distinct-ts candidates, sorted:
+          // (ts, values) — the residual's per-ts extreme under a residual,
+          // else the tie-broken bindGroup values, else null
+          val tieOrd = if (nTies == 0) null
+            else org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+              .forSchema(tieTypes)
+          val byTag = Array.fill(nTags)(
+            scala.collection.mutable.ArrayBuffer.empty[(java.sql.Timestamp,
+              org.apache.spark.sql.Row)])
+          all.foreach(r => byTag(r.getInt(1)) += ((Pattern.tsOf(r, 2), r)))
+          val cand: Array[Array[(java.sql.Timestamp, Array[java.lang.Double])]] =
+            Array.tabulate(nTags) { t =>
+              val rs = byTag(t).sortWith((p, q) => p._1.before(q._1))
+              val out = scala.collection.mutable.ArrayBuffer.empty[
+                (java.sql.Timestamp, Array[java.lang.Double])]
+              var i = 0
+              while (i < rs.length) {
+                var e = i + 1
+                while (e < rs.length && rs(e)._1.equals(rs(i)._1)) e += 1
+                val grp = rs.slice(i, e).map(_._2)
+                val vs: Array[java.lang.Double] =
+                  if (resOp(t) != 0)
+                    Array(Pattern.extremeOf(grp, 3 + resVal(t), resOp(t) >= 3))
+                  else if (gkByTag(t).isEmpty) null
+                  else gkByTag(t).map { case (vi, _) =>
+                    Pattern.tieMinOf(grp, 3 + vi, 3 + nVals, nTies, tieOrd) }
+                out += ((rs(i)._1, vs))
+                i = e
+              }
+              out.toArray
+            }
+          // the inner sub-matches for one threshold tuple (indexed by
+          // inner tag; null without inner residuals): per first-inner
+          // candidate, each next member binds its earliest SATISFYING
+          // candidate strictly after the previous binding, within the
+          // window from the sub's start. A null key never completes one
+          // (PARTITION BY keys equi-join).
+          def subsFor(thr: Array[java.lang.Double]): Array[Sub] =
+            if (nullKey) Array.empty[Sub] else {
+              def ok(t: Int, x: Int): Boolean = resOp(t) == 0 ||
+                Pattern.satisfies(resOp(t), cand(t)(x)._2(0), thr(t), sqlOrder = true)
+              val c0 = cand(0)
+              val res = scala.collection.mutable.ArrayBuffer.empty[Sub]
+              val idx = new Array[Int](nInner)
+              var i = 0
+              while (i < c0.length) {
+                if (ok(0, i)) {
+                  val b = c0(i)._1
+                  val bw = org.apache.spark.sql.catalyst.util.DateTimeUtils
+                    .toJavaTimestamp(org.apache.spark.sql.catalyst.util
+                      .DateTimeUtils.fromJavaTimestamp(b) + winUs)
+                  idx(0) = i
+                  var prev = b; var j = 1
+                  while (j > 0 && j < nInner) {
+                    val arr = cand(j)
+                    var x = Pattern.firstAfter(arr, prev)
+                    while (x < arr.length && !arr(x)._1.after(bw) && !ok(j, x)) x += 1
+                    if (x >= arr.length || arr(x)._1.after(bw)) j = -1
+                    else { idx(j) = x; prev = arr(x)._1; j += 1 }
+                  }
+                  if (j > 0) res += ((b, prev,
+                    if (gkInnerSrc.isEmpty) null
+                    else gkInnerSrc.map { case (im, p) => cand(im)(idx(im))._2(p) },
+                    if (matRows) (0 until nInner).map(m => cand(m)(idx(m))._1)
+                    else null))
+                }
+                i += 1
+              }
+              res.toArray
+            }
+          val subsDefault = if (innerThr.isEmpty) subsFor(null) else null
+          val subsByThr = scala.collection.mutable.HashMap.empty[
+            List[java.lang.Double], Array[Sub]]
+          // closing-step candidates in level order
+          val cands = Array.tabulate(nClosing)(j => cand(nInner + j))
           as.flatMap { a =>
             val tau = Pattern.tsOf(a, prevIdx)
             val wEnd = Pattern.tsOf(a, wendIdx)
-            // bindInnerResidual: this anchor's sub array is the one
-            // compiled for ITS threshold tuple; a null threshold has no
-            // compiled chain (SQL 3VL: never binds)
-            val subs = if (!hasIResW2) subsDefault else {
-              var anyNull = false
-              var k: List[java.lang.Double] = Nil
-              var r = iResThrIdx2.length - 1
-              while (r >= 0) {
-                if (a.isNullAt(iResThrIdx2(r))) { anyNull = true; k = null :: k }
-                else k = java.lang.Double.valueOf(a.getDouble(iResThrIdx2(r))) :: k
-                r -= 1
-              }
-              if (anyNull) emptySubs2 else subsByThr2.getOrElse(k, emptySubs2)
+            // bindInnerResidual: this anchor's subs are the ones built for
+            // ITS threshold tuple (a null threshold never binds — SQL 3VL)
+            val subs = if (innerThr.isEmpty) subsDefault else {
+              val thr = new Array[java.lang.Double](nInner)
+              innerThr.foreach(t => if (!a.isNullAt(thrIdx(t)))
+                thr(t) = java.lang.Double.valueOf(a.getDouble(thrIdx(t))))
+              subsByThr.getOrElseUpdate(thr.toList, subsFor(thr))
             }
             def subAfter(t: java.sql.Timestamp): Int = {
               var lo = 0; var hi = subs.length
@@ -1851,17 +1719,11 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
                 if (resThrIdx2(j) < 0 || a.isNullAt(resThrIdx2(j))) null
                 else java.lang.Double.valueOf(a.getDouble(resThrIdx2(j))))
             def candBind(j: Int, t: java.sql.Timestamp): Int = {
-              var x = candAfter(j, t)
-              if (resOps2(j) != 0) {
-                val arr = cands(j); val thr = resThr2(j)
-                def sat(v: java.lang.Double): Boolean =
-                  thr != null && v != null && (resOps2(j) match {
-                    case 1 => v < thr; case 2 => v <= thr
-                    case 3 => v > thr; case _ => v >= thr
-                  })
-                while (x < arr.length &&
-                    !sat(if (arr(x)._2 == null) null else arr(x)._2(0))) x += 1
-              }
+              val arr = cands(j)
+              var x = Pattern.firstAfter(arr, t)
+              if (resOps2(j) != 0)
+                while (x < arr.length && !Pattern.satisfies(resOps2(j),
+                    arr(x)._2(0), resThr2(j), sqlOrder = false)) x += 1
               x
             }
             // === the depth-parametric repetition probe ===
@@ -2188,10 +2050,23 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
               a.toSeq ++ Seq(first, lastEnd, n) ++ lvlTotCols ++
                 Seq(totals(0)) ++ valCols ++ rowsCols))
           }
-        }(org.apache.spark.sql.Encoders.row(outSchema))
-        out = chained.toDF().drop("__gprev", "__gwend")
-          .drop(resByStep2.keys.map(j => s"__tres$j").toSeq: _*)
-          .drop(s.innerRes.indices.map(r => s"__ires$r"): _*)
+        }
+        // grouped on the key column itself: no key function to project
+        def byKey(d: DataFrame, k: String) = d.groupBy(col(k)).as[
+          org.apache.spark.sql.Row, org.apache.spark.sql.Row](
+          org.apache.spark.sql.Encoders.row(
+            org.apache.spark.sql.types.StructType(Seq(d.schema(k)))),
+          org.apache.spark.sql.Encoders.row(d.schema))
+        val outEnc = org.apache.spark.sql.Encoders.row(outSchema)
+        val chained = if (oneSide) byKey(memberRows, "__gk").flatMapGroups { (k, it) =>
+            val (as, ms) = Pattern.boundedRows(it, maxPK, walkLabel2)
+              .partition(_.getInt(1) < 0)
+            walk(k.isNullAt(0), as.iterator.map(_.getStruct(ancIdx)), ms)
+          }(outEnc)
+          else byKey(anch, "__k").cogroup(byKey(memberRows, "__gk")) { (k, as, ms) =>
+            walk(k.isNullAt(0), as, Pattern.boundedRows(ms, maxPK, walkLabel2))
+          }(outEnc)
+        out = chained.toDF().drop(("__gprev" +: "__gwend" +: thrNames): _*)
         prevTs = if (s.opt) coalesce(col(s"${s.name}_last_ts"), prevTs)
                  else col(s"${s.name}_last_ts")
       } else if (s.group.nonEmpty) {
@@ -2763,6 +2638,65 @@ object Pattern extends Serializable {
     if (tieCols.isEmpty) min(col(c).cast("double"))
     else min_by(col(c).cast("double"),
       struct(tieCols.map(col) :+ col(c).cast("double"): _*))
+
+  /** Index of the first entry strictly after `t` in a ts-sorted array. */
+  private[cep] def firstAfter[V](arr: Array[(java.sql.Timestamp, V)],
+                                 t: java.sql.Timestamp): Int = {
+    var lo = 0; var hi = arr.length
+    while (lo < hi) { val mid = (lo + hi) >>> 1
+      if (arr(mid)._1.after(t)) hi = mid else lo = mid + 1 }
+    lo
+  }
+
+  private def cmpD(a: Double, b: Double): Int =
+    org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
+
+  /** SQL `max` (`hi`) or `min` of double column `i` over `rows`, nulls
+    * ignored, in Spark's double order (NaN largest) — a residual member's
+    * per-(key, ts) value extreme. */
+  private[cep] def extremeOf(rows: scala.collection.Seq[org.apache.spark.sql.Row], i: Int,
+                             hi: Boolean): java.lang.Double = {
+    var best: java.lang.Double = null
+    rows.foreach { r =>
+      if (!r.isNullAt(i)) {
+        val v = r.getDouble(i)
+        if (best == null || (if (hi) cmpD(v, best) > 0 else cmpD(v, best) < 0))
+          best = java.lang.Double.valueOf(v)
+      }
+    }
+    best
+  }
+
+  /** [[tieMinAgg]] over one (key, ts)'s rows of a member: the min of double
+    * column `i` (nulls ignored) or, under a tiebreak (`ord` over the tie
+    * columns at `tieAt..` plus the value), the value of the row least by
+    * (ties..., value) — `min_by` over that struct, nulls first. */
+  private[cep] def tieMinOf(rows: scala.collection.Seq[org.apache.spark.sql.Row],
+      i: Int, tieAt: Int, nTies: Int,
+      ord: org.apache.spark.sql.catalyst.expressions.InterpretedOrdering): java.lang.Double =
+    if (ord == null) extremeOf(rows, i, hi = false)
+    else {
+      def key(r: org.apache.spark.sql.Row) = org.apache.spark.sql.catalyst.InternalRow.fromSeq(
+        (tieAt until tieAt + nTies).map(k => org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .convertToCatalyst(r.get(k))) :+ (if (r.isNullAt(i)) null else r.getDouble(i)))
+      val best = rows.minBy(key)(ord)
+      if (best.isNullAt(i)) null else java.lang.Double.valueOf(best.getDouble(i))
+    }
+
+  /** `v <op> thr` for the residual op codes (1 <, 2 <=, 3 >, 4 >=); a null
+    * side never satisfies (SQL 3VL). `sqlOrder` compares in Spark's double
+    * order (NaN largest), as the SQL predicate of an inner residual does;
+    * otherwise IEEE comparison, as the closing-level scan always has. */
+  private[cep] def satisfies(op: Int, v: java.lang.Double, thr: java.lang.Double,
+                             sqlOrder: Boolean): Boolean =
+    thr != null && v != null && {
+      if (sqlOrder) {
+        val c = cmpD(v, thr)
+        op match { case 1 => c < 0; case 2 => c <= 0; case 3 => c > 0; case _ => c >= 0 }
+      } else op match {
+        case 1 => v < thr; case 2 => v <= thr; case 3 => v > thr; case _ => v >= thr
+      }
+    }
 
   /** Fold a pending (groupKeep-index, value) list into the running
     * bindGroup state — ONE implementation shared by the nested and

@@ -5,7 +5,8 @@ import java.sql.Timestamp
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow,
+  InterpretedSafeProjection, InterpretedUnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -347,14 +348,29 @@ case class TemporalOut(user_id: Long, fact_ts: Timestamp, fact_type: String,
                        version_value: Option[Double])
 
 /** One side's rows as UnsafeRow bytes and back, for the interval join's
-  * state. Not thread-safe: each task builds its own. */
-private final class RowCodec(schema: StructType) {
-  private val enc = ExpressionEncoder(schema, lenient = true).resolveAndBind()
-  private val ser = enc.createSerializer()
-  private val de = enc.createDeserializer()
-  private val unsafe = new UnsafeRow(schema.size)
-  def bytes(r: Row): Array[Byte] = ser(r).asInstanceOf[UnsafeRow].copy().getBytes
-  def row(b: Array[Byte]): Row = { unsafe.pointTo(b, b.length); de(unsafe) }
+  * state. The encoder is resolved once, where the operator is built
+  * ([[RowCodec.apply]]); a task evaluates the resolved serializer and
+  * deserializer with interpreted projections, so no trigger analyses or
+  * compiles them again. Not thread-safe: each task deserializes its own
+  * copy, and with it its own projections. */
+private final class RowCodec(serializer: Seq[Expression], deserializer: Expression,
+                             width: Int) extends Serializable {
+  @transient private lazy val ser = InterpretedUnsafeProjection.createProjection(serializer)
+  @transient private lazy val de = InterpretedSafeProjection.createProjection(Seq(deserializer))
+  @transient private lazy val in = new GenericInternalRow(1)
+  @transient private lazy val unsafe = new UnsafeRow(width)
+  def bytes(r: Row): Array[Byte] = { in.update(0, r); ser(in).copy().getBytes }
+  def row(b: Array[Byte]): Row = {
+    unsafe.pointTo(b, b.length)
+    de(unsafe).get(0, deserializer.dataType).asInstanceOf[Row]
+  }
+}
+
+private object RowCodec {
+  def apply(schema: StructType): RowCodec = {
+    val enc = ExpressionEncoder(schema, lenient = true).resolveAndBind()
+    new RowCodec(enc.serializer, enc.deserializer, schema.size)
+  }
 }
 
 /** One buffered row of [[StreamOps.streamStreamIntervalJoin]]: its `ts` and
@@ -374,8 +390,8 @@ private final class JoinBuf(val t: Long, val until: Long, var matched: Boolean,
 private final class IntervalJoinBuffers(semi: Boolean, keepL: Boolean, keepR: Boolean,
                                         lSchema: StructType, rSchema: StructType)
     extends Serializable {
-  // built in each task, which gets its own copy of this object
-  @transient private lazy val codecs = (new RowCodec(lSchema), new RowCodec(rSchema))
+  // resolved here, where the operator is built
+  private val codecs = (RowCodec(lSchema), RowCodec(rSchema))
 
   private def micros(v: Any): Long = v match {
     case t: Timestamp => DateTimeUtils.fromJavaTimestamp(t)

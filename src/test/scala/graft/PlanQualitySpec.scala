@@ -57,6 +57,20 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("m39 nested group is one keyed pass: one events scan, one shuffle, no join") {
+    // the depth-2 nested-group walk reads its sub-matches and candidates
+    // from ONE scan of events (one row per event and member it satisfies)
+    // through ONE grouping on the key — no relational sub-match pre-pass
+    val full = planOf("m39_depth2_nested_group")
+    val p = full.split("== Initial Plan ==").head
+    val scans = "FileScan parquet".r.findAllIn(p).length
+    val shuffles = "(?m)^[\\s:+-]*Exchange ".r.findAllIn(p).length
+    assert(scans == 1, s"expected one events scan, got $scans:\n$p")
+    assert(!p.contains("BroadcastExchange"), s"no broadcast expected:\n$p")
+    assert(!p.contains("Join"), s"no join expected:\n$p")
+    assert(shuffles == 1, s"expected one shuffle exchange, got $shuffles:\n$p")
+  }
+
   test("r9 CEP additions stay cartesian-free (m19-m23)") {
     // m19 group-value chain, m20 tiebreak refinement, m21 alternation-run
     // aggregate, m22 offset-run scan+segments, m23 ALL-ROWS member
