@@ -330,7 +330,7 @@ object MatchRecognize {
             // reluctant '(B C)+?' collapses to exactly ONE repetition
             // (minimal binding always wins), which is also the bare
             // '(B C)' inline-sequence semantics — both lower to the
-            // single-repetition declarative sub-match join.
+            // group walk stopped after one repetition.
             val q = q0 match {
               case Some("+?") => None
               case q1 @ (None | Some("+") | Some("*")) => q1
@@ -1020,7 +1020,7 @@ object MatchRecognize {
         // composite ORDER BY: member value bindings argmin by (tie, value)
         if (spec.orderTies.nonEmpty) pat = pat.tieBreak(spec.orderTies: _*)
         // quant None = the bare/reluctant-collapsed SINGLE repetition —
-        // the declarative sub-match join, no chain
+        // the group walk stopped after one repetition
         v.quant.foreach(q =>
           pat = if (q == "*") pat.zeroOrMore() else pat.oneOrMore())
       } else if (v.alts.nonEmpty) {

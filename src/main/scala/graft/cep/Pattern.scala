@@ -31,7 +31,6 @@ final case class Step(name: String, pred: Column, reps: Int = 1,
                       alts: Seq[(String, Column)] = Nil, strict: Boolean = false,
                       runOn: Option[String] = None,
                       runAccept: Option[(Column, Column) => Column] = None,
-                      group: Seq[(String, Column)] = Nil,
                       consec: Boolean = false,
                       groupKeep: Seq[(String, String)] = Nil,
                       runOffset: Int = 1,
@@ -42,15 +41,15 @@ final case class Step(name: String, pred: Column, reps: Int = 1,
                       combinations: Boolean = false,
                       maxComb: Int = 20,
                       innerOpt: Boolean = false,
-                      // nested group at any depth (followedByNested{,2,3,N}
-                      // Group): `inner2` is the INNERMOST quantified
-                      // sub-sequence and `closings` its closing-step levels
-                      // in level order — closings(0) closes each LEVEL-1
-                      // repetition (the "mids"), closings(1) each level-2
-                      // repetition, ..., closings.last each OUTER repetition
-                      // (the tails). Depth = closings.size >= 1. (r18 — one
-                      // field per nesting level replaced the mid2/mid2b/tail2
-                      // triple whose off-by-one naming invited index bugs.)
+                      // group at any depth (followedByGroup at depth 0,
+                      // followedByNested{,2,3,N}Group above it): `inner2` is
+                      // the INNERMOST sub-sequence and `closings` its
+                      // closing-step levels in level order — closings(0)
+                      // closes each LEVEL-1 repetition (the "mids"),
+                      // closings(1) each level-2 repetition, ...,
+                      // closings.last each OUTER repetition (the tails).
+                      // Depth = closings.size >= 0; a step is a group iff
+                      // `inner2` is non-empty.
                       inner2: Seq[(String, Column)] = Nil,
                       closings: Seq[Seq[(String, Column)]] = Nil,
                       tailRes: Seq[(String, String, String, Column)] = Nil,
@@ -124,7 +123,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * such guard and simply blows up. */
   def allowCombinations(maxCombinationMembers: Int = 20): Pattern = {
     require(steps.size == 2 && steps.last.oneOrMore &&
-      steps.last.group.isEmpty && steps.last.inner2.isEmpty &&
+      steps.last.inner2.isEmpty &&
       !steps.last.opt && !steps.last.consec &&
       steps.last.keep.isEmpty && steps.last.until.isEmpty &&
       steps.last.alts.isEmpty && steps.last.minRun == 1,
@@ -197,8 +196,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     // optional and ranged steps may bind too: a skipped expansion's payload
     // is null (the refinement tables join left) — only runs aggregate
     // instead of binding, via bindRun()
-    require(steps.nonEmpty && !steps.last.oneOrMore && steps.last.group.isEmpty &&
-      steps.last.inner2.isEmpty,
+    require(steps.nonEmpty && !steps.last.oneOrMore && steps.last.inner2.isEmpty,
       "bind() applies to plain/optional/times(n)/timesRange steps — use bindRun() for runs")
     new Pattern(steps.init :+ steps.last.copy(keep = cols.toVector), notStep, windowMs, skipPastLast, skipTo)
   }
@@ -303,7 +301,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * empty zeroOrMore run yields nulls (count stays 0). */
   def bindRun(cols: String*): Pattern = {
     require(steps.nonEmpty && (steps.last.oneOrMore || steps.last.runOn.nonEmpty) &&
-      steps.last.group.isEmpty && steps.last.inner2.isEmpty,
+      steps.last.inner2.isEmpty,
       "bindRun() requires oneOrMore()/zeroOrMore()/followedByRun() on a non-group step")
     new Pattern(steps.init :+ steps.last.copy(keep = cols.toVector), notStep, windowMs, skipPastLast, skipTo)
   }
@@ -366,8 +364,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * lag + one running sum — the same segmentation shape as the V-shape),
     * then the run is one keyed equi-join on the segment id. */
   def consecutive(): Pattern = {
-    require(steps.nonEmpty && steps.last.oneOrMore && steps.last.group.isEmpty &&
-      steps.last.inner2.isEmpty &&
+    require(steps.nonEmpty && steps.last.oneOrMore && steps.last.inner2.isEmpty &&
       !steps.last.opt && steps.last.keep.isEmpty && steps.last.until.isEmpty,
       "consecutive() requires a plain oneOrMore() step " +
         "(excludes zeroOrMore/bindRun/until/groups)")
@@ -388,24 +385,28 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * repetition's final sub-binding) and, under oneOrMore, `<name>_n`
     * (repetition count).
     *
-    * Lowering: the sub-pattern compiles ONCE to a per-key sub-match table
-    * (one row per first-sub-step event: its earliest completion, via the
-    * same keyed min-binding joins as top-level steps). A sub-match's end is
-    * MONOTONE in its start (each stage is a min over a shrinking candidate
-    * set), so "earliest start after τ" is completable iff ANY repetition is
-    * — single-repetition binding stays one declarative join + min-agg. The
-    * `(sub)+` repetition chain is greedy-sequential per key (each
-    * repetition anchors on the previous one's end), the same inherently
-    * sequential shape as AFTER MATCH SKIP: it runs as one cogroup over
-    * (prefix matches × sub-matches) per key — parallel in the key space,
-    * per-key lists bounded by the key's sub-match count, with the
-    * pre-reduced sub-match table (never raw events) in state. */
+    * Lowering: a sequence group is the DEPTH-0 nested group — the same
+    * [[Step]] as [[followedByNestedNGroup]] with the sub-sequence as its
+    * innermost level and no closing levels, walked by the same one keyed
+    * pass. One scan of the events emits a row per (event, member it
+    * satisfies), plus the anchor rows when the group directly follows the
+    * begin step (a longer prefix joins as the second side of a cogroup);
+    * one grouping on the key hands each key's rows to the walk, which
+    * builds the sub-matches (per first-member event, its earliest
+    * completion) and chains them greedily, each repetition the earliest
+    * sub-match starting strictly after the previous one's end. A
+    * sub-match's end is MONOTONE in its start (each stage is an
+    * earliest-after over a shrinking candidate set), so the chain stops
+    * at the first sub-match that ends past the window. Without `+`/`*`
+    * (bare, [[optional]], each [[times]] expansion) the chain stops after
+    * one repetition. Per-key state is the key's member rows, bounded by
+    * `maxEventsPerKey`. */
   def followedByGroup(name: String, sub: (String, Column)*): Pattern = {
     require(notStep.isEmpty, "notFollowedBy must be the terminal step")
     require(steps.nonEmpty, "followedByGroup() follows a begin step")
-    require(sub.size >= 2, "a group sub-pattern needs at least two steps")
+    require(sub.size >= 2, Pattern.TwoStepSubGroup)
     new Pattern(steps :+ Step(name, sub.map(_._2).reduce(_ || _),
-      group = sub.toVector), notStep, windowMs, skipPastLast, skipTo)
+      inner2 = sub.toVector), notStep, windowMs, skipPastLast, skipTo)
   }
 
   /** NESTED group pattern — one level of group-in-group composition,
@@ -454,9 +455,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
                             innerOptional: Boolean = false): Pattern = {
     require(notStep.isEmpty, "notFollowedBy must be the terminal step")
     require(steps.nonEmpty, "followedByNestedGroup() follows a begin step")
-    require(inner.size >= 2,
-      "the inner sub-group needs at least two steps (a single-variable " +
-        "inner '+' is a plain run — use followedByGroup with oneOrMore)")
+    require(inner.size >= 2, Pattern.TwoStepSubGroup)
     require(tail.nonEmpty,
       "the nested group needs at least one tail step after the inner " +
         "sub-group (a tail-less ((A B)+)+ collapses to (A B)+ — use " +
@@ -500,7 +499,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * pending levels — a level-1 repetition's values commit into the
     * outer attempt only when it is absorbed, the attempt's only when the
     * outer repetition completes); [[tieBreak]] steers the bound values
-    * at every level (r17 — the shared tieMinAgg builder);
+    * at every level (r17 — the shared per-(key, ts) tie-break);
     * [[materializeNestedRows]] composes, including with bindGroup (r18 —
     * per-row vsum/vcnt value snapshots at every depth). */
   /** `innerOptional` (r16, the m37 recipe recursed): the innermost
@@ -592,9 +591,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
                              innerOptional: Boolean = false): Pattern = {
     require(notStep.isEmpty, "notFollowedBy must be the terminal step")
     require(steps.nonEmpty, "followedByNestedNGroup() follows a begin step")
-    require(inner.size >= 2,
-      "the innermost sub-group needs at least two steps (a single-variable " +
-        "inner '+' is a plain run — use followedByNestedGroup)")
+    require(inner.size >= 2, Pattern.TwoStepSubGroup)
     require(closingLevels.nonEmpty,
       "a nested group needs at least one closing level")
     require(closingLevels.forall(_.nonEmpty),
@@ -625,8 +622,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * same shape as [[bindRun]]'s run aggregates. An empty `(sub)*` chain
     * yields nulls with count 0. */
   def bindGroup(member: String, cols: String*): Pattern = {
-    require(steps.nonEmpty && (steps.last.group.nonEmpty ||
-        steps.last.inner2.nonEmpty),
+    require(steps.nonEmpty && steps.last.inner2.nonEmpty,
       "bindGroup() requires followedByGroup()/followedByNestedGroup()/" +
         "followedByNested2Group() as the last step")
     // on a NESTED group (r15, upgrading the former named rejection) the
@@ -634,8 +630,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     // member's bound time, and the walk folds completed
     // repetitions into the same running sum/min/max/first/last/cnt state
     // the one-level chain keeps
-    require((steps.last.group ++ steps.last.inner2 ++
-        steps.last.closings.flatten)
+    require((steps.last.inner2 ++ steps.last.closings.flatten)
         .exists(_._1 == member),
       s"bindGroup($member): not a member of group ${steps.last.name}")
     require(!steps.last.tailRes.exists(_._1 == member),
@@ -672,7 +667,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * same member (the per-(key, ts) reduction differs). */
   def bindTailResidual(member: String, valueCol: String, op: String,
                        threshold: Column): Pattern = {
-    require(steps.nonEmpty && steps.last.inner2.nonEmpty,
+    require(steps.nonEmpty && steps.last.closings.nonEmpty,
       "bindTailResidual() requires followedByNestedGroup()/" +
         "followedByNested2Group()/followedByNested3Group()/" +
         "followedByNestedNGroup() as the last step")
@@ -709,7 +704,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * [[bindTailResidual]]). */
   def bindInnerResidual(member: String, valueCol: String, op: String,
                         threshold: Column): Pattern = {
-    require(steps.nonEmpty && steps.last.inner2.nonEmpty,
+    require(steps.nonEmpty && steps.last.closings.nonEmpty,
       "bindInnerResidual() requires followedByNestedGroup()/" +
         "followedByNested2Group()/followedByNested3Group() as the last step")
     require(steps.last.inner2.exists(_._1 == member),
@@ -767,7 +762,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * ABSORB time and commit with the outer repetition, exactly like the
     * running counts. */
   def materializeNestedRows(): Pattern = {
-    require(steps.nonEmpty && steps.last.inner2.nonEmpty,
+    require(steps.nonEmpty && steps.last.closings.nonEmpty,
       "materializeNestedRows() requires followedByNestedGroup()/" +
         "followedByNested2Group()/followedByNested3Group()/" +
         "followedByNestedNGroup() as the last step")
@@ -776,12 +771,12 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
   }
 
   def materializeGroupRows(): Pattern = {
-    // nested groups first: their steps carry no `group`, and the named
-    // error must point at the nested-group surface
-    require(steps.isEmpty || steps.last.inner2.isEmpty,
+    // nested groups first: the named error must point at the nested-group
+    // surface
+    require(steps.isEmpty || steps.last.closings.isEmpty,
       "materializeGroupRows() does not compose with followedByNestedGroup()" +
         " — use materializeNestedRows()")
-    require(steps.nonEmpty && steps.last.group.nonEmpty,
+    require(steps.nonEmpty && steps.last.inner2.nonEmpty,
       "materializeGroupRows() requires followedByGroup() as the last step")
     new Pattern(steps.init :+ steps.last.copy(groupRows = true),
       notStep, windowMs, skipPastLast, skipTo)
@@ -812,8 +807,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
   def tieBreak(cs: String*): Pattern = {
     require(cs.nonEmpty, "tieBreak() needs at least one column")
     require(steps.nonEmpty &&
-      (steps.last.oneOrMore || steps.last.group.nonEmpty ||
-        steps.last.inner2.nonEmpty ||
+      (steps.last.oneOrMore || steps.last.inner2.nonEmpty ||
         (steps.last.alts.nonEmpty && !steps.last.oneOrMore)),
       "tieBreak() applies to a oneOrMore()/zeroOrMore() run, a group step, " +
         "or a plain alternation step")
@@ -827,8 +821,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * those before the EARLIEST such stop event. The first occurrence and the
     * following steps are unaffected. */
   def until(cond: Column): Pattern = {
-    require(steps.nonEmpty && steps.last.oneOrMore && steps.last.group.isEmpty &&
-      steps.last.inner2.isEmpty,
+    require(steps.nonEmpty && steps.last.oneOrMore && steps.last.inner2.isEmpty,
       "until() requires oneOrMore() on a non-group step")
     new Pattern(steps.init :+ steps.last.copy(until = Some(cond)), notStep, windowMs, skipPastLast, skipTo)
   }
@@ -915,7 +908,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     require(windowMs.nonEmpty, "call within(...) before detectWithTimeouts")
     require(notStep.isEmpty && !skipPastLast && skipTo.isEmpty &&
       steps.forall(s => s.reps == 1 && !s.opt && !s.oneOrMore &&
-        s.alts.isEmpty && s.group.isEmpty && s.inner2.isEmpty &&
+        s.alts.isEmpty && s.inner2.isEmpty &&
         s.runOn.isEmpty && !s.strict && s.until.isEmpty &&
         !s.anyBranch && !s.combinations),
       "detectWithTimeouts() supports linear plain followedBy patterns " +
@@ -1031,7 +1024,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     // the anchor must be a PLAIN begin step: quantifiers/alternation on it
     // are first-match machinery the all-matches compile would silently drop
     require(first.reps == 1 && first.optTail == 0 && !first.opt &&
-      !first.oneOrMore && first.alts.isEmpty && first.group.isEmpty &&
+      !first.oneOrMore && first.alts.isEmpty && first.inner2.isEmpty &&
       first.iter.isEmpty && first.runOn.isEmpty && first.until.isEmpty &&
       !first.strict,
       "all-matches mode needs a plain begin step — quantifiers/alternation/" +
@@ -1046,7 +1039,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
       // modifiers attached AFTER allowCombinations() would otherwise be
       // silently ignored — re-validate the shape at compile time
       require(b.combinations && !b.consec && b.until.isEmpty && b.keep.isEmpty &&
-        b.reps == 1 && b.minRun == 1 && b.alts.isEmpty && b.group.isEmpty &&
+        b.reps == 1 && b.minRun == 1 && b.alts.isEmpty && b.inner2.isEmpty &&
         !b.opt && !b.strict && b.iter.isEmpty && b.runOn.isEmpty,
         "allowCombinations() composes with a PLAIN oneOrMore run only — " +
           "consecutive/until/bindRun/times/timesOrMore/alternation added " +
@@ -1059,8 +1052,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
       trailing.foreach { s =>
         require(!s.anyBranch && !s.oneOrMore && !s.combinations && s.reps == 1 &&
           s.optTail == 0 && !s.opt && s.alts.isEmpty && !s.strict &&
-          s.group.isEmpty && s.inner2.isEmpty && s.iter.isEmpty &&
-          s.runOn.isEmpty &&
+          s.inner2.isEmpty && s.iter.isEmpty && s.runOn.isEmpty &&
           s.until.isEmpty && s.keep.isEmpty,
           s"allowCombinations trailing step '${s.name}': only a plain " +
             "followedBy composes after the combinations run — quantifiers/" +
@@ -1160,8 +1152,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     } else {
       require(steps.tail.forall(s => s.anyBranch && !s.oneOrMore &&
         s.reps == 1 && !s.opt && s.alts.isEmpty && !s.strict &&
-        s.group.isEmpty && s.inner2.isEmpty && s.iter.isEmpty &&
-        s.runOn.isEmpty &&
+        s.inner2.isEmpty && s.iter.isEmpty && s.runOn.isEmpty &&
         s.until.isEmpty && s.optTail == 0),
         "followedByAny chains compose only with plain followedByAny steps " +
           "(quantifiers/alternation/groups/iterative conditions are " +
@@ -1194,15 +1185,18 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
   }
 
   /** `maxEventsPerKey` bounds the PER-KEY row materialization of the
-    * sequential walks (group/nested chains, PREV(n>1) segmentation, AFTER
-    * MATCH greedy selection) — a hot key past the ceiling refuses by name
-    * instead of OOMing an executor (see [[Pattern.DefaultMaxEventsPerKey]]).
-    * What it counts per walk: the candidate rows of a key. For a nested
-    * group that is one row per (event, group member it satisfies), plus
-    * one row per begin-step event when the group directly follows the
-    * begin step (the anchors ride the same scan) — an event that
-    * satisfies k members counts k times. The purely declarative paths
-    * never materialize per-key state and ignore the bound. */
+    * sequential walks (group chains at every depth, PREV(n>1)
+    * segmentation, AFTER MATCH greedy selection) — a hot key past the
+    * ceiling refuses by name instead of OOMing an executor (see
+    * [[Pattern.DefaultMaxEventsPerKey]]). What it counts per walk: the
+    * candidate rows of a key. For a group — the sequence group of
+    * [[followedByGroup]], quantified or not, as much as a nested one —
+    * that is one row per (event, group member it satisfies), plus one row
+    * per begin-step event when the group directly follows the begin step
+    * (the anchors ride the same scan) — an event that satisfies k members
+    * counts k times. A sequence group therefore counts its member rows,
+    * not pre-reduced sub-matches. The purely declarative paths never
+    * materialize per-key state and ignore the bound. */
   def detect(events: DataFrame, key: Column, ts: Column,
              maxEventsPerKey: Int = Pattern.DefaultMaxEventsPerKey): DataFrame = {
     require(windowMs.nonEmpty, "call within(...) before detect")
@@ -1409,9 +1403,10 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
           .drop("__rseg")
         prevTs = col(s"${s.name}_last_ts")
       } else if (s.inner2.nonEmpty) {
-        // --- nested group at ANY depth (...((I...)+ L1...)+ ... LD...)+
-        // (followedByNested{,2,3,N}Group; depth 1 is ((I...)+ T...)+),
-        // lowered onto ONE keyed pass — the per-key event walk of the
+        // --- group at ANY depth: the sequence group (I...)+ of
+        // followedByGroup is depth 0, followedByNested{,2,3,N}Group's
+        // (...((I...)+ L1...)+ ... LD...)+ is depth D = closings.size.
+        // Lowered onto ONE keyed pass — the per-key event walk of the
         // reference NFA (flink-cep/.../nfa/NFA.java). One scan of `events`
         // emits one row per (event, pattern member it satisfies) carrying
         // only the columns the walk reads, plus one anchor row per
@@ -1421,18 +1416,27 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
         // to distinct (ts, values) candidates, builds the inner sub-matches
         // itself (the earliest satisfying completion per first-inner
         // event, by the same binary search the closing levels use) and
-        // walks the (depth+1)-level chain: a level-l repetition is a
-        // greedy chain of level-(l-1) repetitions (level 0 = one inner
-        // sub-match) punctuated by the earliest SATISFYING
+        // walks the (D+1)-level chain: a level-0 repetition is one inner
+        // sub-match, a level-l repetition a greedy chain of level-(l-1)
+        // repetitions punctuated by the earliest SATISFYING
         // first-level-l-closer candidate, then the level-l closing steps
         // bound sequentially — reluctant close and greedy-no-backtracking
-        // at every level. The probe is called once per decision (punctuate
+        // at every level. At depth 0 the outer chain takes the subs
+        // directly (no closer punctuates them), and a group without
+        // `+`/`*` (bare, optional(), each times(n) expansion) stops after
+        // one repetition. The probe is called once per decision (punctuate
         // OR absorb), never recomputed, so the walk stays O(total bindings
         // · log candidates · depth) per key, bounded by `maxEventsPerKey`.
-        require(s.oneOrMore,
-          s"depth-${s.closings.size} nested group ${s.name}: quantify with " +
-            "oneOrMore()/zeroOrMore()")
         val depthD = s.closings.size
+        require(s.oneOrMore || depthD == 0,
+          s"depth-$depthD nested group ${s.name}: quantify with " +
+            "oneOrMore()/zeroOrMore()")
+        // `<g>_n` under `+`/`*` only; the level totals and `<g>_inner_n`
+        // at depth >= 1 only
+        val counted = s.oneOrMore
+        require(!s.groupRows || counted,
+          s"materializeGroupRows on ${s.name}: only quantified ('+'/'*') " +
+            "group chains materialize repetition rows")
         val inner2Names = s.inner2.map(_._1)
         // closing steps flattened in level order: closings(0) = the mids
         // (close level-1), ..., closings.last = the outer tails
@@ -1486,7 +1490,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
         val tagCol = explode(array((members.zipWithIndex.map { case ((_, p), t) =>
           when(p, lit(t)) } ++ (if (oneSide) Seq(when(first.pred, lit(-1))) else Nil)): _*))
         val memberRows = scanBase.filter(if (oneSide) s.pred || first.pred else s.pred)
-          .select((Seq(key.as("__gk"), tagCol.as("__tag"), ts.as("__t")) ++
+          .select((Seq(key.as("__k"), tagCol.as("__tag"), ts.as("__t")) ++
             valNames.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__v$i") } ++
             ties.zipWithIndex.map { case (c, i) => col(c).as(s"__tie$i") } ++
             (if (oneSide) Seq(when(first.pred, struct(anchNames.map(col): _*)).as("__anc"))
@@ -1516,10 +1520,22 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
         val lvlFields = (depthD - 1 to 1 by -1).map(l =>
           org.apache.spark.sql.types.StructField(lvlColName(l),
             org.apache.spark.sql.types.LongType))
-        // ALL ROWS struct: (ts, cls, reps, mids{D-1}, ..., mids2, mids,
-        // subs[, vsum, vcnt]) — one running count per nesting level (r18:
-        // every depth), plus per-row value snapshots under bindGroup
-        val rowsFields = if (!s.groupRows) Nil else {
+        // ALL ROWS: at depth 0 (materializeGroupRows) each repetition's
+        // member timestamps and bindGroup values; above it
+        // (materializeNestedRows) the struct (ts, cls, reps, mids{D-1},
+        // ..., mids2, mids, subs[, vsum, vcnt]) — one running count per
+        // nesting level, plus per-row value snapshots under bindGroup
+        val rowsFields = if (!s.groupRows) Nil
+          else if (depthD == 0) Seq(
+            org.apache.spark.sql.types.StructField(s"${s.name}_reps",
+              org.apache.spark.sql.types.ArrayType(
+                org.apache.spark.sql.types.ArrayType(
+                  org.apache.spark.sql.types.TimestampType, true), false)),
+            org.apache.spark.sql.types.StructField(s"${s.name}_repvals",
+              org.apache.spark.sql.types.ArrayType(
+                org.apache.spark.sql.types.ArrayType(
+                  org.apache.spark.sql.types.DoubleType, true), false)))
+          else {
           val lvlRow = (depthD - 1 to 1 by -1).map(l =>
             org.apache.spark.sql.types.StructField(
               if (l == 1) "mids" else s"mids$l",
@@ -1568,10 +1584,10 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
             org.apache.spark.sql.types.StructField(s"${s.name}_first_ts",
               org.apache.spark.sql.types.TimestampType),
             org.apache.spark.sql.types.StructField(s"${s.name}_last_ts",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField(s"${s.name}_n",
-              org.apache.spark.sql.types.LongType)) ++
-          lvlFields ++ Seq(
+              org.apache.spark.sql.types.TimestampType)) ++
+          (if (counted) Seq(org.apache.spark.sql.types.StructField(
+            s"${s.name}_n", org.apache.spark.sql.types.LongType)) else Nil) ++
+          (if (depthD == 0) Nil else lvlFields :+
             org.apache.spark.sql.types.StructField(s"${s.name}_inner_n",
               org.apache.spark.sql.types.LongType)) ++
           Pattern.groupValFields(s.name, s.groupKeep) ++ rowsFields)
@@ -1611,8 +1627,10 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
         val resThrIdx2: Array[Int] = Array.tabulate(nClosing)(j => thrIdx(nInner + j))
         val innerThr = (0 until nInner).filter(resOp(_) != 0).toArray
         // diagnostic label parametrized on the ACTUAL depth
-        val walkLabel2 = s"depth-$depthD nested group ${s.name} " +
-          s"${depthD + 1}-level chain walk"
+        val walkLabel2 =
+          if (depthD == 0) s"group ${s.name} repetition chain walk"
+          else s"depth-$depthD nested group ${s.name} " +
+            s"${depthD + 1}-level chain walk"
         type Sub = (java.sql.Timestamp, java.sql.Timestamp,
           Array[java.lang.Double], Seq[java.sql.Timestamp])
         // one key's walk: `as` its anchor rows, `all` its member rows
@@ -1627,7 +1645,9 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
           val byTag = Array.fill(nTags)(
             scala.collection.mutable.ArrayBuffer.empty[(java.sql.Timestamp,
               org.apache.spark.sql.Row)])
-          all.foreach(r => byTag(r.getInt(1)) += ((Pattern.tsOf(r, 2), r)))
+          // a null-ts event binds nothing (the joins' range predicates)
+          all.foreach(r =>
+            if (!r.isNullAt(2)) byTag(r.getInt(1)) += ((Pattern.tsOf(r, 2), r)))
           val cand: Array[Array[(java.sql.Timestamp, Array[java.lang.Double])]] =
             Array.tabulate(nTags) { t =>
               val rs = byTag(t).sortWith((p, q) => p._1.before(q._1))
@@ -1693,7 +1713,9 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
             List[java.lang.Double], Array[Sub]]
           // closing-step candidates in level order
           val cands = Array.tabulate(nClosing)(j => cand(nInner + j))
-          as.flatMap { a =>
+          // an unquantified group binds once per distinct prefix row, as
+          // the plain steps' join-and-aggregate binding does
+          (if (counted) as else as.distinct).flatMap { a =>
             val tau = Pattern.tsOf(a, prevIdx)
             val wEnd = Pattern.tsOf(a, wendIdx)
             // bindInnerResidual: this anchor's subs are the ones built for
@@ -1967,12 +1989,12 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
             }
             // the match: a greedy chain of level-D (outer) repetitions to
             // window end — commit per completed repetition, with the
-            // committed bindGroup running state and committed rows in the
-            // one-level chain's shape
+            // committed bindGroup running state and committed rows. A
+            // null anchor time binds nothing (the joins' range predicates)
             var lastEnd = tau
             var first: java.sql.Timestamp = null
             val totals = new Array[Long](nD + 1)
-            var done = false
+            var done = tau == null || wEnd == null
             val vSum = new Array[java.lang.Double](gkN)
             val vMin = new Array[java.lang.Double](gkN)
             val vMax = new Array[java.lang.Double](gkN)
@@ -1980,10 +2002,40 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
             val vLast = new Array[java.lang.Double](gkN)
             val vCnt = new Array[Long](gkN)
             val vSeen = new Array[Boolean](gkN)
-            val allRows = if (matRows)
+            val allRows = if (matRows && nD > 0)
               scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
             else null
-            while (!done) {
+            // depth 0 (materializeGroupRows): each repetition's member
+            // timestamps and bindGroup values
+            val repTs = if (matRows && nD == 0)
+              scala.collection.mutable.ArrayBuffer.empty[Seq[java.sql.Timestamp]]
+            else null
+            val repVals = if (matRows && nD == 0)
+              scala.collection.mutable.ArrayBuffer.empty[Seq[java.lang.Double]]
+            else null
+            if (nD == 0) while (!done) {
+              // depth 0: a repetition is one inner sub-match, the earliest
+              // starting strictly after the previous one's end
+              val i = subAfter(lastEnd)
+              if (i >= subs.length || subs(i)._2.after(wEnd)) done = true
+              else {
+                val sb = subs(i)
+                if (totals(0) == 0) first = sb._1
+                lastEnd = sb._2
+                totals(0) += 1
+                var p = 0
+                while (p < gkInnerPos.length) {
+                  Pattern.commitVal(gkInnerPos(p), sb._3(p),
+                    vSum, vMin, vMax, vFirst, vLast, vCnt, vSeen)
+                  p += 1
+                }
+                if (matRows) {
+                  repTs += sb._4
+                  repVals += (if (sb._3 == null) Nil else sb._3.toSeq)
+                }
+                done = !counted
+              }
+            } else while (!done) {
               val r = repAt(nD, lastEnd)
               if (r == null) done = true
               else {
@@ -1992,7 +2044,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
                   // commit this repetition's rows: local counts resolve
                   // to global running counts, local value snapshots add
                   // the COMMITTED totals (the rows resolve before
-                  // commitPending folds this repetition's own values)
+                  // commitVal folds this repetition's own values)
                   val n0 = totals(nD)
                   var i = 0
                   while (i < r.rows.length) {
@@ -2029,26 +2081,28 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
                 lastEnd = r.end
                 var q = 0
                 while (q <= nD) { totals(q) += r.counts(q); q += 1 }
-                if (gkN > 0) Pattern.commitPending(r.pend,
-                  vSum, vMin, vMax, vFirst, vLast, vCnt, vSeen)
+                if (gkN > 0) r.pend.foreach { case (gi, v) =>
+                  Pattern.commitVal(gi, v, vSum, vMin, vMax, vFirst, vLast, vCnt, vSeen) }
               }
             }
             val n = totals(nD)
+            val nCols: Seq[Any] = if (counted) Seq(n) else Nil
+            val lvlCols: Seq[Any] = if (nD == 0) Nil
+              else (nD - 1 to 0 by -1).map(l => totals(l))
+            // an unbound optional() repetition leaves every value column
+            // null, cnt included, like an unbound optional step's payload
             val valCols: Seq[Any] = (0 until gkN).flatMap(j =>
-              Seq(vSum(j), vMin(j), vMax(j), vFirst(j), vLast(j), vCnt(j)))
-            val rowsCols: Seq[Any] = if (matRows) Seq(allRows.toSeq) else Nil
-            val lvlTotCols: Seq[Any] = (nD - 1 to 1 by -1).map(l => totals(l))
-            val lvlZeroCols: Seq[Any] = (nD - 1 to 1 by -1).map(_ => 0L)
-            // ((( ... )+ ...)* (opt): an empty chain keeps the match row
-            // with null boundaries and count 0 — the zeroOrMore convention
+              Seq(vSum(j), vMin(j), vMax(j), vFirst(j), vLast(j),
+                if (n == 0 && !counted) null else vCnt(j)))
+            val rowsCols: Seq[Any] = if (!matRows) Nil
+              else if (nD == 0) Seq(repTs.toSeq, repVals.toSeq)
+              else Seq(allRows.toSeq)
+            // an empty chain of a `*` or optional() group keeps the match
+            // row with null boundaries
             if (n == 0 && !optGroup) Iterator.empty
-            else if (n == 0) Iterator.single(org.apache.spark.sql.Row.fromSeq(
-              a.toSeq ++ Seq(null, null, 0L) ++ lvlZeroCols ++ Seq(0L) ++
-                (0 until gkN).flatMap(_ => Seq(null, null, null, null, null, 0L)) ++
-                (if (matRows) Seq(Seq.empty) else Nil)))
             else Iterator.single(org.apache.spark.sql.Row.fromSeq(
-              a.toSeq ++ Seq(first, lastEnd, n) ++ lvlTotCols ++
-                Seq(totals(0)) ++ valCols ++ rowsCols))
+              a.toSeq ++ Seq(first, if (n == 0) null else lastEnd) ++ nCols ++
+                lvlCols ++ valCols ++ rowsCols))
           }
         }
         // grouped on the key column itself: no key function to project
@@ -2058,216 +2112,17 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
             org.apache.spark.sql.types.StructType(Seq(d.schema(k)))),
           org.apache.spark.sql.Encoders.row(d.schema))
         val outEnc = org.apache.spark.sql.Encoders.row(outSchema)
-        val chained = if (oneSide) byKey(memberRows, "__gk").flatMapGroups { (k, it) =>
+        val chained = if (oneSide) byKey(memberRows, "__k").flatMapGroups { (k, it) =>
             val (as, ms) = Pattern.boundedRows(it, maxPK, walkLabel2)
               .partition(_.getInt(1) < 0)
             walk(k.isNullAt(0), as.iterator.map(_.getStruct(ancIdx)), ms)
           }(outEnc)
-          else byKey(anch, "__k").cogroup(byKey(memberRows, "__gk")) { (k, as, ms) =>
+          else byKey(anch, "__k").cogroup(byKey(memberRows, "__k")) { (k, as, ms) =>
             walk(k.isNullAt(0), as, Pattern.boundedRows(ms, maxPK, walkLabel2))
           }(outEnc)
         out = chained.toDF().drop(("__gprev" +: "__gwend" +: thrNames): _*)
         prevTs = if (s.opt) coalesce(col(s"${s.name}_last_ts"), prevTs)
                  else col(s"${s.name}_last_ts")
-      } else if (s.group.nonEmpty) {
-        // --- group sub-pattern (followedByGroup): compile the sub-match
-        // table ONCE (one row per first-sub-step event, its earliest
-        // completion via the same keyed min-binding joins), then bind one
-        // repetition declaratively or chain `(sub)+` repetitions per key
-        var subs = events.filter(s.group.head._2)
-          .select(key.as("__gk"), ts.as("__gb"))
-        var prevSub: Column = col("__gb")
-        s.group.tail.zipWithIndex.foreach { case ((_, p), j) =>
-          val cand = events.filter(p).select(key.as("__gk2"), ts.as(s"__gc$j"))
-          val kept0 = subs.columns.map(col)
-          // span-bounded by win: any repetition usable from any anchor has
-          // end - start < win (start > match start, end <= match start + win)
-          subs = subs.join(cand, col("__gk") === col("__gk2") &&
-              col(s"__gc$j") > prevSub && col(s"__gc$j") <= col("__gb") + win)
-            .groupBy(kept0.toIndexedSeq: _*)
-            .agg(min(col(s"__gc$j")).as(s"__ge$j"))
-          prevSub = col(s"__ge$j")
-        }
-        // bindGroup value columns: a per-(key, ts) min-value table of the
-        // member's candidates, equi-joined on the member's bound timestamp
-        // (the engine's lexicographic (ts, value) equal-ts tie-break), cast
-        // to double so the chain carries O(1) running state per column
-        s.groupKeep.zipWithIndex.foreach { case ((m, c), i) =>
-          val im = s.group.indexWhere(_._1 == m)
-          val boundTs = if (im == 0) col("__gb") else col(s"__ge${im - 1}")
-          // equal-ts candidates: (value) min by default, (ties..., value)
-          // argmin under a composite ORDER BY tiebreak — both hash aggregates
-          val vAgg = Pattern.tieMinAgg(c, s.tieCols)
-          val vt = events.filter(s.group(im)._2)
-            .groupBy(key.as("__vk"), ts.as("__vts"))
-            .agg(vAgg.as(s"__gv$i"))
-          subs = subs.join(vt, col("__gk") === col("__vk") &&
-              boundTs === col("__vts"))
-            .drop("__vk", "__vts")
-        }
-        val gvCols = s.groupKeep.indices.map(i => col(s"__gv$i"))
-        // materializeGroupRows: every member's bound timestamp per
-        // repetition, in member order (member 0 = the sub-match start, the
-        // rest the chained completion times) — the raw material for ALL ROWS
-        // PER MATCH expansion downstream
-        val memTsCols: Seq[Column] = col("__gb") +:
-          (0 until s.group.size - 1).map(j => col(s"__ge$j"))
-        val subPairs = subs.select(
-          ((col("__gk") +: col("__gb") +: prevSub.as("__gc") +: gvCols) ++
-            (if (s.groupRows) Seq(array(memTsCols: _*).as("__gmem")) else Nil)): _*)
-        if (!s.oneOrMore) {
-          require(!s.groupRows,
-            s"materializeGroupRows on ${s.name}: only quantified ('+'/'*') " +
-              "group chains materialize repetition rows")
-          // single repetition: the earliest sub-match strictly after the
-          // previous binding. Completion time is MONOTONE in start time
-          // (each sub-stage is a min over a shrinking candidate set), so
-          // the earliest start is completable iff any is — one declarative
-          // join + min-agg, no chain needed
-          val kept0 = out.columns.map(col)
-          out = out.join(subPairs,
-              col("__k") === col("__gk") && col("__gb") > prevTs &&
-                col("__gc") <= col(startTs) + win,
-              if (s.opt) "left_outer" else "inner")
-            .groupBy(kept0.toIndexedSeq: _*)
-            .agg(min(col("__gb")).as(s"${s.name}_first_ts"))
-          // one sub-match per (key, start): join back for the end timestamp
-          // (and, for a single repetition, the bindGroup value columns —
-          // sum = min = max = first = last = the one repetition's value)
-          val backCols = Seq(col("__gk").as("__gk3"), col("__gb").as("__gb3"),
-            col("__gc").as(s"${s.name}_last_ts")) ++
-            s.groupKeep.zipWithIndex.flatMap { case ((m, c), i) =>
-              val v = col(s"__gv$i")
-              Seq(v.as(s"${s.name}_sum_${m}_$c"), v.as(s"${s.name}_min_${m}_$c"),
-                v.as(s"${s.name}_max_${m}_$c"), v.as(s"${s.name}_first_${m}_$c"),
-                v.as(s"${s.name}_last_${m}_$c"),
-                when(v.isNotNull, 1L).otherwise(0L).as(s"${s.name}_cnt_${m}_$c"))
-            }
-          out = out.join(subPairs.select(backCols: _*),
-              col("__k") === col("__gk3") &&
-                col(s"${s.name}_first_ts") === col("__gb3"),
-              if (s.opt) "left_outer" else "inner")
-            .drop("__gk3", "__gb3")
-          prevTs = if (s.opt) coalesce(col(s"${s.name}_last_ts"), prevTs)
-                   else col(s"${s.name}_last_ts")
-        } else {
-          // (sub)+: GREEDY repetition chain — each repetition anchors on
-          // the previous one's end, inherently sequential per key (the
-          // AFTER MATCH SKIP precedent): one cogroup over prefix matches ×
-          // the pre-reduced sub-match table, parallel in the key space,
-          // per-key state bounded by the key's sub-match count
-          val anch = out.withColumn("__gprev", prevTs)
-            .withColumn("__gwend", col(startTs) + win)
-          val aSchema = anch.schema
-          val keyIdx = aSchema.fieldIndex("__k")
-          val prevIdx = aSchema.fieldIndex("__gprev")
-          val wendIdx = aSchema.fieldIndex("__gwend")
-          // per bound (member, col): sum/min/max/first/last + cnt (shared builder)
-          val valFields = Pattern.groupValFields(s.name, s.groupKeep)
-          val repFields = if (!s.groupRows) Nil else Seq(
-            org.apache.spark.sql.types.StructField(s"${s.name}_reps",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.TimestampType, true), false)),
-            org.apache.spark.sql.types.StructField(s"${s.name}_repvals",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.DoubleType, true), false)))
-          val outSchema = org.apache.spark.sql.types.StructType(
-            aSchema.fields ++ Seq(
-              org.apache.spark.sql.types.StructField(s"${s.name}_first_ts",
-                org.apache.spark.sql.types.TimestampType),
-              org.apache.spark.sql.types.StructField(s"${s.name}_last_ts",
-                org.apache.spark.sql.types.TimestampType),
-              org.apache.spark.sql.types.StructField(s"${s.name}_n",
-                org.apache.spark.sql.types.LongType)) ++ valFields ++ repFields)
-          val strEnc = org.apache.spark.sql.Encoders.STRING
-          val anchKV = anch.groupByKey(r => Pattern.keyString(r.get(keyIdx)))(strEnc)
-          val subKV = subPairs.groupByKey(r => Pattern.keyString(r.get(0)))(strEnc)
-          // primitive copy: the cogroup closure must not capture the Step
-          // (whose Columns drag in non-serializable plan state)
-          val optGroup = s.opt
-          val gkN = s.groupKeep.size
-          val matRows = s.groupRows
-          val sName = s.name
-          val chained = anchKV.cogroup(subKV) { (_, as, ss) =>
-            // full-precision Timestamp comparisons (compareTo includes
-            // nanos) — the declarative joins compare at full precision too
-            val pairs = Pattern.boundedRows(ss, maxPK,
-                s"group ${sName} repetition chain walk")
-              .map(r => (Pattern.tsOf(r, 1), Pattern.tsOf(r, 2),
-                Array.tabulate[java.lang.Double](gkN)(j =>
-                  if (r.isNullAt(3 + j)) null else r.getDouble(3 + j)),
-                if (matRows) r.getSeq[Any](3 + gkN).map(Pattern.anyToTs)
-                else null))
-              .sortWith((p, q) => p._1.before(q._1))
-            as.flatMap { a =>
-              val tau = Pattern.tsOf(a, prevIdx)
-              val wEnd = Pattern.tsOf(a, wendIdx)
-              var lastEnd = tau
-              var first: java.sql.Timestamp = null
-              var n = 0L; var i = 0; var stop = false
-              // O(1) running state per bound column, the bindRun shape:
-              // sum/min/max ignore nulls, first/last are positional, cnt
-              // counts non-null values (the AVG divisor)
-              val vSum = new Array[java.lang.Double](gkN)
-              val vMin = new Array[java.lang.Double](gkN)
-              val vMax = new Array[java.lang.Double](gkN)
-              val vFirst = new Array[java.lang.Double](gkN)
-              val vLast = new Array[java.lang.Double](gkN)
-              val vCnt = new Array[Long](gkN)
-              // per-repetition member bindings (materializeGroupRows only):
-              // bounded by the window's repetition count
-              val repTs = if (matRows)
-                scala.collection.mutable.ArrayBuffer.empty[Seq[java.sql.Timestamp]]
-              else null
-              val repVs = if (matRows)
-                scala.collection.mutable.ArrayBuffer.empty[Seq[java.lang.Double]]
-              else null
-              while (!stop && i < pairs.length) {
-                val (b, c, vs, mem) = pairs(i)
-                if (!b.after(lastEnd)) i += 1 // not strictly after: advance
-                else if (c.after(wEnd)) stop = true // monotone: none later completes
-                else {
-                  if (first == null) {
-                    first = b
-                    var j = 0; while (j < gkN) { vFirst(j) = vs(j); j += 1 }
-                  }
-                  var j = 0
-                  while (j < gkN) {
-                    vLast(j) = vs(j)
-                    if (vs(j) != null) {
-                      vCnt(j) += 1
-                      vSum(j) = if (vSum(j) == null) vs(j)
-                                else java.lang.Double.valueOf(vSum(j) + vs(j))
-                      if (vMin(j) == null || vs(j) < vMin(j)) vMin(j) = vs(j)
-                      if (vMax(j) == null || vs(j) > vMax(j)) vMax(j) = vs(j)
-                    }
-                    j += 1
-                  }
-                  if (matRows) { repTs += mem; repVs += vs.toSeq }
-                  lastEnd = c; n += 1
-                }
-              }
-              val vals = (0 until gkN).flatMap(j =>
-                Seq(vSum(j), vMin(j), vMax(j), vFirst(j), vLast(j), vCnt(j)))
-              val repCols: Seq[Any] =
-                if (!matRows) Nil else Seq(repTs.toSeq, repVs.toSeq)
-              // (sub)* (opt): an empty chain keeps the match row with null
-              // boundaries and count 0 — the zeroOrMore convention
-              if (n == 0 && !optGroup) Iterator.empty
-              else if (n == 0) Iterator.single(org.apache.spark.sql.Row.fromSeq(
-                a.toSeq ++ Seq(null, null, 0L) ++
-                  (0 until gkN).flatMap(_ => Seq(null, null, null, null, null, 0L)) ++
-                  (if (matRows) Seq(Seq.empty, Seq.empty) else Nil)))
-              else Iterator.single(org.apache.spark.sql.Row.fromSeq(
-                a.toSeq ++ Seq(first, lastEnd, n) ++ vals ++ repCols))
-            }
-          }(org.apache.spark.sql.Encoders.row(outSchema))
-          out = chained.toDF().drop("__gprev", "__gwend")
-          prevTs = if (s.opt) coalesce(col(s"${s.name}_last_ts"), prevTs)
-                   else col(s"${s.name}_last_ts")
-        }
       } else {
       if (s.strict) {
         // strict contiguity: the successor TIME (earliest event of any type
@@ -2389,8 +2244,8 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     // oneOrMore run aggregation: the chain above bound the FIRST occurrence;
     // one more keyed equi-join collects the run up to the next binding (or
     // the window end when the run ends the pattern)
-    expanded.zipWithIndex.filter(p => p._1.oneOrMore && p._1.group.isEmpty &&
-        p._1.inner2.isEmpty && !p._1.consec)
+    expanded.zipWithIndex.filter(p => p._1.oneOrMore && p._1.inner2.isEmpty &&
+        !p._1.consec)
       .foreach { case (st, i) =>
       val name = st.name
       val pred = st.pred
@@ -2546,7 +2401,7 @@ object Pattern extends Serializable {
       val vFs: Array[java.lang.Double], val vLs: Array[java.lang.Double],
       val vBn: Array[Long])
 
-  /** null-ignoring running extremes (the commitPending convention): null
+  /** null-ignoring running extremes (the commitVal convention): null
     * means "no non-null value yet", so merging is null-aware min/max. */
   private[cep] def nmin(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
     if (a == null) b else if (b == null) a else if (a <= b) a else b
@@ -2578,6 +2433,13 @@ object Pattern extends Serializable {
     * working budget at local[32] sizing, and a loud named error past it
     * (the maxComb precedent) instead of a silent executor OOM. */
   val DefaultMaxEventsPerKey: Int = 2000000
+
+  /** The rejection every group builder shares: the walk's repetition unit
+    * is a sub-sequence of at least two steps, at every depth. */
+  private[cep] val TwoStepSubGroup: String =
+    "a group's innermost sub-sequence needs at least two steps " +
+      "(followedByGroup and every followedByNested*Group alike); a " +
+      "single-variable inner '+' has no group lowering"
 
   /** Drain `it` into an array, refusing by name past `max` rows — the
     * skew guard for the per-key walks. */
@@ -2630,15 +2492,6 @@ object Pattern extends Serializable {
           org.apache.spark.sql.types.LongType)
     }
 
-  /** The equal-timestamp VALUE tie-break aggregate — plain (value) min,
-    * or (ties..., value) argmin under a composite ORDER BY tiebreak.
-    * ONE builder for every member-value table (flat group, nested inner,
-    * nested tail) so the convention cannot diverge between shapes. */
-  private[cep] def tieMinAgg(c: String, tieCols: Seq[String]): Column =
-    if (tieCols.isEmpty) min(col(c).cast("double"))
-    else min_by(col(c).cast("double"),
-      struct(tieCols.map(col) :+ col(c).cast("double"): _*))
-
   /** Index of the first entry strictly after `t` in a ts-sorted array. */
   private[cep] def firstAfter[V](arr: Array[(java.sql.Timestamp, V)],
                                  t: java.sql.Timestamp): Int = {
@@ -2667,10 +2520,11 @@ object Pattern extends Serializable {
     best
   }
 
-  /** [[tieMinAgg]] over one (key, ts)'s rows of a member: the min of double
-    * column `i` (nulls ignored) or, under a tiebreak (`ord` over the tie
-    * columns at `tieAt..` plus the value), the value of the row least by
-    * (ties..., value) — `min_by` over that struct, nulls first. */
+  /** The equal-timestamp VALUE tie-break over one (key, ts)'s rows of a
+    * member: the min of double column `i` (nulls ignored) or, under a
+    * tiebreak (`ord` over the tie columns at `tieAt..` plus the value),
+    * the value of the row least by (ties..., value) — SQL's `min_by` over
+    * that struct, nulls first. */
   private[cep] def tieMinOf(rows: scala.collection.Seq[org.apache.spark.sql.Row],
       i: Int, tieAt: Int, nTies: Int,
       ord: org.apache.spark.sql.catalyst.expressions.InterpretedOrdering): java.lang.Double =
@@ -2698,38 +2552,25 @@ object Pattern extends Serializable {
       }
     }
 
-  /** Fold a pending (groupKeep-index, value) list into the running
-    * bindGroup state — ONE implementation shared by the nested and
-    * depth-2 chain walks so null/FIRST-LAST semantics cannot diverge
-    * between the shapes. first/last are positional (nulls included),
-    * sum/min/max/cnt ignore nulls. */
-  private[cep] def commitPending(
-      pend: scala.collection.mutable.ArrayBuffer[(Int, java.lang.Double)],
+  /** Fold one bound (groupKeep-index, value) into the running bindGroup
+    * state — ONE implementation for every group depth so null/FIRST-LAST
+    * semantics cannot diverge between the shapes. first/last are
+    * positional (nulls included), sum/min/max/cnt ignore nulls. */
+  private[cep] def commitVal(gi: Int, v: java.lang.Double,
       vSum: Array[java.lang.Double], vMin: Array[java.lang.Double],
       vMax: Array[java.lang.Double], vFirst: Array[java.lang.Double],
       vLast: Array[java.lang.Double], vCnt: Array[Long],
-      vSeen: Array[Boolean]): Unit =
-    pend.foreach { case (gi, v) =>
-      if (!vSeen(gi)) { vFirst(gi) = v; vSeen(gi) = true }
-      vLast(gi) = v
-      if (v != null) {
-        vCnt(gi) += 1
-        vSum(gi) = if (vSum(gi) == null) v
-                   else java.lang.Double.valueOf(vSum(gi) + v)
-        if (vMin(gi) == null || v < vMin(gi)) vMin(gi) = v
-        if (vMax(gi) == null || v > vMax(gi)) vMax(gi) = v
-      }
+      vSeen: Array[Boolean]): Unit = {
+    if (!vSeen(gi)) { vFirst(gi) = v; vSeen(gi) = true }
+    vLast(gi) = v
+    if (v != null) {
+      vCnt(gi) += 1
+      vSum(gi) = if (vSum(gi) == null) v
+                 else java.lang.Double.valueOf(vSum(gi) + v)
+      if (vMin(gi) == null || v < vMin(gi)) vMin(gi) = v
+      if (vMax(gi) == null || v > vMax(gi)) vMax(gi) = v
     }
-
-  /** array<double> column as a boxed array (null elements preserved —
-    * a bound member whose source value is null stays distinguishable). */
-  private[cep] def dblsOf(r: org.apache.spark.sql.Row, i: Int): Array[java.lang.Double] =
-    if (r.isNullAt(i)) null
-    else r.getSeq[Any](i).map {
-      case null => null
-      case d: java.lang.Double => d
-      case n: java.lang.Number => java.lang.Double.valueOf(n.doubleValue())
-    }.toArray
+  }
 
   private[cep] def tsOf(r: org.apache.spark.sql.Row, i: Int): java.sql.Timestamp =
     anyToTs(r.get(i))

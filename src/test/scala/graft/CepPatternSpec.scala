@@ -344,6 +344,19 @@ class CepPatternSpec extends AnyFunSuite with SparkTest {
         Seq("v" -> ($"event_type" === "v")),
         Seq("w" -> ($"event_type" === "w")))
       .tieBreak("value")
+    // a one-step innermost sub-group is rejected by every group builder
+    // alike, and the message redirects to none of them
+    val one = Seq("b" -> ($"event_type" === "b"))
+    val begin = Pattern.begin("s", $"event_type" === "signup")
+    for (e <- Seq(
+        intercept[IllegalArgumentException](begin.followedByGroup("g", one: _*)),
+        intercept[IllegalArgumentException](begin.followedByNestedGroup("g", one,
+          Seq("v" -> ($"event_type" === "v")))),
+        intercept[IllegalArgumentException](begin.followedByNestedNGroup("g", one,
+          Seq(Seq("v" -> ($"event_type" === "v"))))))) {
+      assert(e.getMessage.contains("at least two steps"), e.getMessage)
+      assert(!e.getMessage.contains("use followedBy"), e.getMessage)
+    }
     // unquantified nested group: rejected at compile (detect) time
     val evs = Seq((1L, at(0), "signup")).toDF("user_id", "ts", "event_type")
     val e4 = intercept[IllegalArgumentException](

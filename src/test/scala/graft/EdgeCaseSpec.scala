@@ -235,6 +235,15 @@ class EdgeCaseSpec extends AnyFunSuite with SparkTest {
     assert(base.followedByOneOf("x", "b" -> (col("event_type") === "b"),
         "c" -> (col("event_type") === "c"))
       .within(1000L).detect(empty, col("user_id"), col("ts")).count() == 0)
+    // the group walk at depth 0 ((B C)+, (B C)*) and depth 1 (((B C)+ D)+)
+    val bc = Seq("b" -> (col("event_type") === "b"), "c" -> (col("event_type") === "c"))
+    assert(base.followedByGroup("g", bc: _*).bindGroup("b", "value").oneOrMore()
+      .within(1000L).detect(empty, col("user_id"), col("ts")).count() == 0)
+    assert(base.followedByGroup("g", bc: _*).zeroOrMore()
+      .within(1000L).detect(empty, col("user_id"), col("ts")).count() == 0)
+    assert(base.followedByNestedGroup("g", bc, Seq("d" -> (col("event_type") === "d")))
+      .oneOrMore()
+      .within(1000L).detect(empty, col("user_id"), col("ts")).count() == 0)
   }
 
   test("evictors keep everything when the window holds fewer elements than the bound") {

@@ -71,6 +71,26 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     assert(shuffles == 1, s"expected one shuffle exchange, got $shuffles:\n$p")
   }
 
+  test("m13 sequence group is the depth-0 walk: no join or aggregate " +
+       "below its key grouping, fewer joins than the relational chain") {
+    // `S (C V)+ P`: the group walk reads one scan of events through one
+    // grouping on the key; only the plain purchase step joins. The
+    // relational chain it replaced had two joins (one building the
+    // sub-match table, one for the purchase) and a cogroup over two sides
+    val p = planOf("m13_group_pattern").split("== Initial Plan ==").head
+    // the walk's subtree: every line indented deeper than its MapGroups
+    val lines = p.split("\n").toSeq
+    val at = lines.indexWhere(_.contains("MapGroups"))
+    assert(at >= 0, s"expected the group walk's MapGroups node:\n$p")
+    def depth(l: String) = l.indexWhere(ch => ch.isLetterOrDigit || ch == '*' || ch == '(')
+    val below = lines.drop(at + 1).takeWhile(l => depth(l) > depth(lines(at)))
+    assert(below.exists(_.contains("FileScan parquet")), s"no events scan below:\n$p")
+    assert(!below.exists(l => l.contains("Join") || l.contains("Aggregate")),
+      s"a join or aggregate below the walk's key grouping:\n$p")
+    val joins = "Join".r.findAllIn(p).length
+    assert(joins < 2, s"expected fewer joins than the relational chain's 2, got $joins:\n$p")
+  }
+
   test("r9 CEP additions stay cartesian-free (m19-m23)") {
     // m19 group-value chain, m20 tiebreak refinement, m21 alternation-run
     // aggregate, m22 offset-run scan+segments, m23 ALL-ROWS member
