@@ -50,7 +50,7 @@ class GroupWalkParitySpec extends AnyFunSuite with SparkTest {
   // ---- the relational reference ------------------------------------------
 
   /** One group step over the prefix frame `out` (key column `__k`): the
-    * relational chain's columns appended, as the parent lowering built
+    * relational chain's columns appended, as the former lowering built
     * them. Returns the new frame and the next step's previous binding. */
   private def refGroup(events: DataFrame, out: DataFrame, name: String,
       sub: Seq[(String, Column)], keep: Seq[(String, String)], ties: Seq[String],
@@ -313,7 +313,7 @@ class GroupWalkParitySpec extends AnyFunSuite with SparkTest {
 }
 
 object GroupWalkParitySpec extends Serializable {
-  /** The parent chain's collision-free per-key grouping string. */
+  /** The relational chain's collision-free per-key grouping string. */
   def keyString(v: Any): String = v match {
     case null => "N"
     case o => val s = String.valueOf(o); s"V${s.length}:$s"
