@@ -508,7 +508,7 @@ object MatchRecognize {
     * `PREV(col)` qualifies with the variable being defined, and a bare LHS
     * in the canonical `col < PREV(col)` comparison is qualified alongside so
     * the self-reference detector sees `V.col < LAST(V.col, n)`. Run-self
-    * offsets n >= 1 ride the run segmentation's n-back window
+    * offsets n >= 1 are the run walk's n-back comparison
     * ([[graft.cep.Pattern.followedByRun]]'s offset); every other PREV —
     * foreign variables and non-run self references, any offset — lowers to
     * a precomputed physical-lag column (see the scaladoc inside). */
@@ -2106,7 +2106,7 @@ object MatchRecognize {
     * MEMBER rows come from one keyed equi-join of the match table back
     * onto that run's candidates over [first_ts, last_ts] (runs are
     * contiguous candidate segments, so the span's pred-candidates ARE the
-    * members — the same argument that makes the lag segmentation correct),
+    * members — the same argument that makes the run segmentation correct),
     * with running measures as one window over each match's members.
     * Because a later run binds strictly after the previous run's last
     * member, run spans never overlap: on run k's member rows an EARLIER

@@ -1,6 +1,6 @@
 package graft.cep
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** CEP pattern API — the reference's flink-cep surface
@@ -297,7 +297,9 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * the run's single HASH aggregate (O(1) state per column); first/last
     * values come from a per-(key, ts) extremes table equi-joined back on the
     * boundary timestamps (the q38 pattern — no struct aggregate, so nothing
-    * falls back to SortAggregate and the member rows are never sorted). An
+    * falls back to SortAggregate and the member rows are never sorted). On
+    * a [[followedByRun]] run the walk computes all five from the members
+    * it binds, with the same tie rule, and sums numeric columns only. An
     * empty zeroOrMore run yields nulls (count stays 0). */
   def bindRun(cols: String*): Pattern = {
     require(steps.nonEmpty && (steps.last.oneOrMore || steps.last.runOn.nonEmpty) &&
@@ -317,23 +319,24 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * strictly after the run's LAST member (the run ends organically at the
     * first violation, not at the next step's binding).
     *
-    * Lowering: candidates are segmented per key into maximal accept-chains
-    * with one lag + one running-sum window (ordered by (ts, runOn) — ties
-    * beyond that make segmentation order-dependent, as in the reference),
-    * then the run is one keyed equi-join on the segment id: shuffles stay
-    * on the key, no cross product, no per-NFA state. The streaming twin is
-    * `graft.streaming.StreamOps.cepPatternRun` (the condition is causal on
-    * streams — O(1) run state), with a batch/streaming parity spec. */
+    * Lowering: one keyed pass, the walk of [[followedByGroup]]. One scan
+    * of the events emits the candidates (and the anchors, when the run
+    * follows the begin step); per key the walk sorts them by (ts, runOn,
+    * bindRun columns), nulls first, and segments them into maximal
+    * accept-chains, evaluating `accept` on each pair it compares. An
+    * UNKNOWN accept (a null runOn value) keeps the member at offset 1. The
+    * streaming twin is `graft.streaming.StreamOps.cepPatternRun` (the
+    * condition is causal on streams — O(1) run state), with a
+    * batch/streaming parity spec. */
   /** `offset` > 1 is the `PREV(col, n)` generalization (reference
     * flink-cep IterativeCondition over `ctx.getEventsForPattern` at
     * arbitrary depth, Calcite MATCH_RECOGNIZE `PREV(V.col, n)`): each run
     * member after the first `offset` must satisfy `accept(current, member
     * n back in the run)`; the first `offset` members are accepted on
-    * `pred` alone. Offset 1 keeps the pure window-lag segmentation; n > 1
-    * precomputes the lag-n accept declaratively and assigns run segments
-    * with a per-key linear scan (run restarts are a recursion no window
-    * expresses — the scan is the reference NFA's per-key order, parallel
-    * in the key space, O(members) per key). */
+    * `pred` alone. The walk restarts a segment at each member that fails
+    * accept against the candidate n back once the segment holds n members
+    * — a recursion no window expresses, O(candidates) per key. An UNKNOWN
+    * accept restarts the segment here. */
   def followedByRun(name: String, pred: Column, runOn: String,
                     accept: (Column, Column) => Column,
                     offset: Int = 1): Pattern = {
@@ -360,9 +363,9 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     * the flink-cep default, is this engine's default and is NOT changed by
     * this method.)
     *
-    * Lowering: gaps-and-islands over the key's distinct event times (one
-    * lag + one running sum — the same segmentation shape as the V-shape),
-    * then the run is one keyed equi-join on the segment id. */
+    * Lowering: the [[followedByRun]] walk over one row per distinct
+    * (key, ts) with its match flag — gaps and islands over the key's
+    * distinct event times. */
   def consecutive(): Pattern = {
     require(steps.nonEmpty && steps.last.oneOrMore && steps.last.inner2.isEmpty &&
       !steps.last.opt && steps.last.keep.isEmpty && steps.last.until.isEmpty,
@@ -936,54 +939,20 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     (all.filter(full), timeouts)
   }
 
-  /** Per-column run aggregates for [[bindRun]] columns — sum/min/max only:
-    * all primitive, so the run aggregate stays a HASH aggregate (a
-    * min/max-over-struct agg would fall back to SortAggregate and sort the
-    * whole member join output — the exact cost the q38/w17 guardrails ban). */
-  private def runValAggs(name: String, keep: Seq[String],
-                         src: String => Column): Seq[Column] =
-    keep.flatMap { c => Seq(
-      sum(src(c)).as(s"${name}_sum_$c"),
-      min(src(c)).as(s"${name}_min_$c"),
-      max(src(c)).as(s"${name}_max_$c")) }
-
-  /** First/last member VALUES via the q38 pattern: pre-aggregate the
-    * candidates' per-(key, ts[, seg]) value extremes once (hash aggregate),
-    * then equi-join that tiny table back on the run's boundary timestamps.
-    * first = min value at the first member's ts, last = max value at the
-    * last member's ts — the same deterministic (ts, value) tie-break the
-    * struct-min/max formulation had, with no Sort anywhere. `candVals` has
-    * columns (__vk, __vts[, __vseg], __mn_<c>, __mx_<c>); `seg` adds the
-    * segment-id equi-key for self-referential runs (candidates at one
-    * (key, ts) can belong to different segments). Left joins: a zeroOrMore
-    * empty run has null boundary ts and keeps null values. */
+  /** First/last member VALUES of a `oneOrMore()` run via the q38 pattern:
+    * pre-aggregate the candidates' (`cand`: __k3, __rts, __rm_<c>)
+    * per-(key, ts) value extremes once (hash aggregate), then equi-join
+    * that tiny table back on the run's boundary timestamps. first = min
+    * value at the first member's ts, last = max value at the last member's
+    * ts — the same deterministic (ts, value) tie-break the struct-min/max
+    * formulation had, with no Sort anywhere. With [[tieBreak]] columns
+    * (`ties`), the extremes are argmin/argmax by `(ties, value)` — the
+    * composite ORDER BY's intra-timestamp order; min_by/max_by keep the
+    * table a HASH aggregate. Left joins: a zeroOrMore empty run has null
+    * boundary ts and keeps null values. */
   private def joinBoundaryVals(out0: DataFrame, name: String, keep: Seq[String],
-                               candVals: => DataFrame, seg: Boolean): DataFrame = {
+                               cand: DataFrame, ties: Seq[Column]): DataFrame = {
     if (keep.isEmpty) return out0
-    val valCols = Seq("__vk", "__vts") ++ (if (seg) Seq("__vseg") else Nil) ++
-      keep.flatMap(c => Seq(s"__mn_$c", s"__mx_$c"))
-    def joined(d: DataFrame, tsCol: String,
-               outOf: String => (String, String)): DataFrame = {
-      val cond = col("__k") === col("__vk") && col(tsCol) === col("__vts") &&
-        (if (seg) col("__rseg") === col("__vseg") else lit(true))
-      keep.foldLeft(d.join(candVals, cond, "left")) { (dd, c) =>
-        val (alias, src) = outOf(c)
-        dd.withColumn(alias, col(src))
-      }.drop(valCols: _*)
-    }
-    val withFirst = joined(out0, s"${name}_first_ts",
-      c => (s"${name}_first_$c", s"__mn_$c"))
-    joined(withFirst, s"${name}_last_ts", c => (s"${name}_last_$c", s"__mx_$c"))
-  }
-
-  /** The per-(key, ts[, seg]) value-extremes table for [[joinBoundaryVals]].
-    * With a [[tieBreak]] column (`tie`), the extremes are argmin/argmax by
-    * `(tie, value)` — the composite ORDER BY's intra-timestamp order —
-    * instead of plain value extremes; min_by/max_by are declarative
-    * aggregates, so the table stays a HASH aggregate either way. */
-  private def boundaryValTable(cand: DataFrame, keep: Seq[String],
-                               segCol: Option[Column],
-                               ties: Seq[Column] = Nil): DataFrame = {
     val aggs = keep.flatMap { c =>
       val v = col(s"__rm_$c")
       if (ties.isEmpty) Seq(min(v).as(s"__mn_$c"), max(v).as(s"__mx_$c"))
@@ -991,9 +960,19 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
         min_by(v, struct(ties :+ v: _*)).as(s"__mn_$c"),
         max_by(v, struct(ties :+ v: _*)).as(s"__mx_$c"))
     }
-    cand.groupBy((col("__k3").as("__vk") +: col("__rts").as("__vts") +:
-        segCol.map(_.as("__vseg")).toSeq): _*)
+    val candVals = cand.groupBy(col("__k3").as("__vk"), col("__rts").as("__vts"))
       .agg(aggs.head, aggs.tail: _*)
+    val valCols = Seq("__vk", "__vts") ++ keep.flatMap(c => Seq(s"__mn_$c", s"__mx_$c"))
+    def joined(d: DataFrame, tsCol: String,
+               outOf: String => (String, String)): DataFrame =
+      keep.foldLeft(d.join(candVals,
+          col("__k") === col("__vk") && col(tsCol) === col("__vts"), "left")) { (dd, c) =>
+        val (alias, src) = outOf(c)
+        dd.withColumn(alias, col(src))
+      }.drop(valCols: _*)
+    val withFirst = joined(out0, s"${name}_first_ts",
+      c => (s"${name}_first_$c", s"__mn_$c"))
+    joined(withFirst, s"${name}_last_ts", c => (s"${name}_last_$c", s"__mx_$c"))
   }
 
   /** Compile to a DataFrame of matches: one row per match, one `<name>_ts`
@@ -1185,18 +1164,21 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
   }
 
   /** `maxEventsPerKey` bounds the PER-KEY row materialization of the
-    * sequential walks (group chains at every depth, PREV(n>1)
-    * segmentation, AFTER MATCH greedy selection) — a hot key past the
-    * ceiling refuses by name instead of OOMing an executor (see
-    * [[Pattern.DefaultMaxEventsPerKey]]). What it counts per walk: the
-    * candidate rows of a key. For a group — the sequence group of
+    * sequential walks (runs, group chains at every depth, AFTER MATCH
+    * greedy selection) — a hot key past the ceiling refuses by name
+    * instead of OOMing an executor (see [[Pattern.DefaultMaxEventsPerKey]]).
+    * What it counts per walk: the candidate rows of a key. For a
+    * [[followedByRun]] run that is every candidate event of the key; for a
+    * [[consecutive]] run, one row per distinct event time of the key,
+    * matching or not. For a group — the sequence group of
     * [[followedByGroup]], quantified or not, as much as a nested one —
-    * that is one row per (event, group member it satisfies), plus one row
-    * per begin-step event when the group directly follows the begin step
-    * (the anchors ride the same scan) — an event that satisfies k members
-    * counts k times. A sequence group therefore counts its member rows,
-    * not pre-reduced sub-matches. The purely declarative paths never
-    * materialize per-key state and ignore the bound. */
+    * that is one row per (event, group member it satisfies) — an event
+    * that satisfies k members counts k times. A sequence group therefore
+    * counts its member rows, not pre-reduced sub-matches. A run or group
+    * that directly follows the begin step adds one row per begin-step
+    * event (the anchors ride the same scan; per distinct anchor for
+    * consecutive()). The purely declarative paths never materialize
+    * per-key state and ignore the bound. */
   def detect(events: DataFrame, key: Column, ts: Column,
              maxEventsPerKey: Int = Pattern.DefaultMaxEventsPerKey): DataFrame = {
     require(windowMs.nonEmpty, "call within(...) before detect")
@@ -1248,159 +1230,108 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
     // the "time of the previous binding": for optional steps this falls back
     // to the binding before them when the step was skipped
     var prevTs: Column = col(startTs)
+    // --- ONE keyed pass for every run and group step, the per-key walk of
+    // the reference NFA (flink-cep/.../nfa/NFA.java). One scan of `events`
+    // emits a row per (event, member tag it satisfies), `(__k, __tag, __t,
+    // payload...)`. The anchors ride it (tag -1, struct `__anc`) when the
+    // prefix is the begin step alone and its names cannot shadow an event
+    // column; a longer prefix is the second side of a cogroup (the frame
+    // returned, else null). Anchors carry `__gprev`, `__gwend`, `extraAnch`.
+    def passScan(tags: Seq[Column], memberPred: Column, payload: Seq[Column],
+                 extraAnch: Seq[(String, Column)] = Nil)
+        : (DataFrame, DataFrame, org.apache.spark.sql.types.StructType) = {
+      def withAnchorCols(d: DataFrame): DataFrame =
+        extraAnch.foldLeft(d) { case (acc, (n, c)) => acc.withColumn(n, c) }
+          .withColumn("__gprev", prevTs).withColumn("__gwend", col(startTs) + win)
+      val anchNames = out.columns.toSeq ++ extraAnch.map(_._1) ++ Seq("__gprev", "__gwend")
+      val oneSide = (out eq out0) && {
+        val evNames = events.columns.map(_.toLowerCase).toSet
+        !anchNames.exists(n => evNames(n.toLowerCase))
+      }
+      val tagCol = explode(array((tags.zipWithIndex.map { case (p, t) => when(p, lit(t)) } ++
+        (if (oneSide) Seq(when(first.pred, lit(-1))) else Nil)): _*))
+      val rows = (if (oneSide) withAnchorCols(events.select(col("*") +: anchorProj: _*))
+          else events)
+        .filter(if (oneSide) memberPred || first.pred else memberPred)
+        .select((Seq(key.as("__k"), tagCol.as("__tag"), ts.as("__t")) ++ payload ++
+          (if (oneSide) Seq(struct(anchNames.map(col): _*).as("__anc")) else Nil)): _*)
+        .filter(col("__tag").isNotNull)
+      if (!oneSide) { val anch = withAnchorCols(out); (rows, anch, anch.schema) }
+      else (rows.withColumn("__anc", when(col("__tag") < 0, col("__anc"))), null,
+        rows.schema("__anc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType])
+    }
+    // One grouping on the key hands each key's anchors and its member rows
+    // (sorted by `order`, bounded by `maxEventsPerKey`) to the step's
+    // `walk(nullKey, anchors, members)`, whose rows replace the prefix frame
+    def walkByKey(rows: DataFrame, anch: DataFrame,
+                  outSchema: org.apache.spark.sql.types.StructType, label: String,
+                  order: Seq[String] = Nil)(
+        walk: (Boolean, Iterator[Row], Array[Row]) => Iterator[Row]): DataFrame = {
+      // grouped on the key column itself: no key function to project
+      def byKey(d: DataFrame) = d.groupBy(col("__k")).as[Row, Row](
+        org.apache.spark.sql.Encoders.row(
+          org.apache.spark.sql.types.StructType(Seq(d.schema("__k")))),
+        org.apache.spark.sql.Encoders.row(d.schema))
+      val outEnc = org.apache.spark.sql.Encoders.row(outSchema)
+      (if (anch == null) {
+        val ancIdx = rows.schema.fieldIndex("__anc")
+        byKey(rows).flatMapSortedGroups(order.map(col): _*) { (k, it) =>
+          val (as, ms) = Pattern.boundedRows(it, maxPK, label).partition(_.getInt(1) < 0)
+          walk(k.isNullAt(0), as.iterator.map(_.getStruct(ancIdx)), ms)
+        }(outEnc)
+      } else byKey(anch).cogroupSorted(byKey(rows))()(order.map(col): _*) { (k, as, ms) =>
+        walk(k.isNullAt(0), as, Pattern.boundedRows(ms, maxPK, label))
+      }(outEnc)).toDF().drop("__gprev", "__gwend")
+    }
     expanded.tail.foreach { s =>
-      if (s.runOn.isDefined) {
-        // --- self-referential run (followedByRun): segment candidates into
-        // maximal accept-chains per key, bind the earliest in-window segment
-        // member, then collect the run by segment id — the next step binds
-        // after the run's LAST member
-        require(s.reps == 1 && !s.opt && !s.oneOrMore && s.alts.isEmpty && !s.strict,
+      if (s.runOn.isDefined || s.consec) {
+        // --- RUN on the one keyed pass (Pattern.runWalk): followedByRun at
+        // any PREV offset, and consecutive() over one row per distinct
+        // (key, ts) with its match flag, reduced after a repartition on the
+        // key so the walk's grouping reuses that shuffle.
+        require(s.consec ||
+          (s.reps == 1 && !s.opt && !s.oneOrMore && s.alts.isEmpty && !s.strict),
           "followedByRun() composes with bindRun() only")
-        val vcol = s.runOn.get
-        val acc = s.runAccept.get
-        val ww = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__rk")).orderBy(col("__rts"), col("__rv"))
-        val base = events.filter(s.pred)
-          .select((key.as("__rk") +: ts.as("__rts") +: col(vcol).as("__rv") +:
-            s.keep.map(c => col(c).as(s"__rm_$c"))): _*)
-        val candSeg = if (s.runOffset == 1) {
-          base
-            .withColumn("__pv", lag(col("__rv"), 1).over(ww))
-            .withColumn("__viol",
-              when(col("__pv").isNull || !acc(col("__rv"), col("__pv")), 1L).otherwise(0L))
-            .withColumn("__seg", sum(col("__viol"))
-              .over(ww.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-            .drop("__pv", "__viol")
-        } else {
-          // PREV(col, n), n > 1: the accept-vs-n-back comparison is still
-          // declarative (one lag(n) window — runs are contiguous candidate
-          // segments, so the run-relative n-back IS the global n-back
-          // whenever the run already holds >= n members), but run RESTARTS
-          // are a recursion no window expresses: a per-key linear scan
-          // assigns segment ids — the reference NFA's per-key sequential
-          // order, parallel in the key space, O(members) per key, with
-          // only the pre-reduced candidate rows in memory
-          val n = s.runOffset
-          val okd = base
-            .withColumn("__pvN", lag(col("__rv"), n).over(ww))
-            .withColumn("__okN",
-              when(col("__pvN").isNotNull && acc(col("__rv"), col("__pvN")), true)
-                .otherwise(false))
-            .drop("__pvN")
-          val bSchema = okd.schema
-          val outSchema = org.apache.spark.sql.types.StructType(
-            bSchema.fields.filterNot(_.name == "__okN") :+
-              org.apache.spark.sql.types.StructField("__seg",
-                org.apache.spark.sql.types.LongType))
-          val tsIdx = bSchema.fieldIndex("__rts")
-          val rvIdx = bSchema.fieldIndex("__rv")
-          val okIdx = bSchema.fieldIndex("__okN")
-          val strEnc = org.apache.spark.sql.Encoders.STRING
-          // precomputed label: interpolating s.name inside the closure
-          // would capture the Step (whose Columns are not serializable)
-          val walkLabel = s"followedByRun(${s.name}, offset = $n) per-key segmentation"
-          okd.groupByKey(r => Pattern.keyString(r.get(0)))(strEnc)
-            .flatMapGroups { (_, it) =>
-              val rows = Pattern.boundedRows(it, maxPK, walkLabel)
-              // (ts, value) order — the same ordering as the lag window
-              java.util.Arrays.sort(rows, new java.util.Comparator[org.apache.spark.sql.Row] {
-                def compare(a: org.apache.spark.sql.Row, b: org.apache.spark.sql.Row): Int = {
-                  val c1 = Pattern.tsOf(a, tsIdx).compareTo(Pattern.tsOf(b, tsIdx))
-                  if (c1 != 0) c1
-                  else (a.get(rvIdx), b.get(rvIdx)) match {
-                    case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
-                    case _ => 0
-                  }
-                }
-              })
-              var start = 0
-              rows.iterator.zipWithIndex.map { case (r, i) =>
-                if (i > 0 && i - start >= n && !r.getBoolean(okIdx)) start = i
-                org.apache.spark.sql.Row.fromSeq(
-                  r.toSeq.patch(okIdx, Nil, 1) :+ start.toLong)
-              }
-            }(org.apache.spark.sql.Encoders.row(outSchema))
-            .toDF()
+        import org.apache.spark.sql.types._
+        val consec = s.consec
+        val keep = if (consec) Nil else s.keep
+        val vNames = keep.indices.map(i => s"__v$i")
+        val (rows0, anch, aSchema) =
+          if (consec) passScan(Seq(lit(true)), lit(true),
+            Seq(when(s.pred, 1).otherwise(0).as("__m")))
+          else passScan(Seq(s.pred), s.pred, col(s.runOn.get).as("__rv") +:
+            keep.zip(vNames).map { case (c, v) => col(c).as(v) })
+        val rows = if (!consec) rows0 else rows0.repartition(col("__k"))
+          .groupBy(rows0.columns.filter(_ != "__m").map(col).toIndexedSeq: _*)
+          .agg(max(col("__m")).as("__m"))
+        val (prevIdx, wendIdx) = (aSchema.fieldIndex("__gprev"), aSchema.fieldIndex("__gwend"))
+        val valTypes = vNames.map(rows.schema(_).dataType)
+        require(valTypes.forall(_.isInstanceOf[NumericType]),
+          s"bindRun on followedByRun ${s.name} aggregates numeric columns only")
+        val sumTypes = if (keep.isEmpty) Nil
+          else events.select(keep.map(c => sum(col(c))): _*).schema.map(_.dataType)
+        val accept = if (consec) null
+          else Pattern.pairPredicate(events, rows.schema("__rv").dataType, s.runAccept.get)
+        def field(a: String, i: Int, t: DataType) = StructField(s"${s.name}_${a}_${keep(i)}", t)
+        val outSchema = StructType(aSchema.fields ++ Seq(
+          StructField(s"${s.name}_first_ts", TimestampType),
+          StructField(s"${s.name}_last_ts", TimestampType),
+          StructField(s"${s.name}_n", LongType)) ++
+          keep.indices.flatMap(i => Seq(field("sum", i, sumTypes(i)),
+            field("min", i, valTypes(i)), field("max", i, valTypes(i)))) ++
+          Seq("first", "last").flatMap(a => keep.indices.map(i => field(a, i, valTypes(i)))))
+        val (offset, nKeep) = (s.runOffset, keep.size)
+        out = walkByKey(rows, anch, outSchema, s"run ${s.name} walk",
+            Seq("__tag", "__t") ++ (if (consec) Nil else "__rv" +: vNames)) {
+          (nullKey, as, all) =>
+            // a null key never binds (PARTITION BY keys equi-join)
+            if (nullKey) Iterator.empty else {
+              val bind = Pattern.runWalk(all, consec, offset, accept, nKeep)
+              as.toSeq.distinct.iterator.flatMap(a =>
+                bind(Pattern.tsOf(a, prevIdx), Pattern.tsOf(a, wendIdx))
+                  .map(vs => Row.fromSeq(a.toSeq ++ vs)))
+            }
         }
-        // binding = min candidate ts (HASH agg — a struct-min would fall to
-        // SortAggregate and sort the whole in-window join output), then the
-        // segment id from a tiny per-(key, ts) min-seg table. Equal-ts
-        // candidates: with a '<'-type accept the later-ordered tie always
-        // breaks the chain, so min seg IS the (ts, value)-min candidate's
-        // segment; with a '>'-type accept ties share one segment — either
-        // way the binding is deterministic and matches the (ts, value, seg)
-        // lexicographic-min the oracle replays.
-        val kept0 = out.columns.map(col)
-        out = out.join(candSeg.select(col("__rk"), col("__rts")),
-            col("__k") === col("__rk") && col("__rts") > prevTs &&
-              col("__rts") <= col(startTs) + win)
-          .groupBy(kept0.toIndexedSeq: _*)
-          .agg(min(col("__rts")).as(s"${s.name}_first_ts"))
-        val segAt = candSeg.groupBy(col("__rk").as("__sk"), col("__rts").as("__sts"))
-          .agg(min(col("__seg")).as("__rseg"))
-        out = out.join(segAt, col("__k") === col("__sk") &&
-            col(s"${s.name}_first_ts") === col("__sts"))
-          .drop("__sk", "__sts")
-        val mem = candSeg.select((col("__rk").as("__k3") +: col("__rts").as("__mts") +:
-          col("__seg").as("__mseg") +: s.keep.map(c => col(s"__rm_$c").as(s"__mm_$c"))): _*)
-        val kept1 = out.columns.map(col)
-        val memAggs = count(lit(1)).as(s"${s.name}_n") +:
-          runValAggs(s.name, s.keep, c => col(s"__mm_$c"))
-        out = out.join(mem, col("__k") === col("__k3") &&
-            col("__mseg") === col("__rseg") &&
-            col("__mts") >= col(s"${s.name}_first_ts") &&
-            col("__mts") <= col(startTs) + win)
-          .groupBy(kept1.toIndexedSeq: _*)
-          .agg(max(col("__mts")).as(s"${s.name}_last_ts"), memAggs: _*)
-        out = joinBoundaryVals(out, s.name, s.keep,
-          boundaryValTable(candSeg.withColumnRenamed("__rk", "__k3"),
-            s.keep, Some(col("__seg"))), seg = true)
-          .drop("__rseg")
-        prevTs = col(s"${s.name}_last_ts")
-      } else if (s.consec) {
-        // --- CONSECUTIVE run (oneOrMore().consecutive()): members occupy
-        // adjacent distinct event times; a time with no matching event
-        // closes the run. Gaps-and-islands over the key's distinct event
-        // times, then one keyed equi-join on the segment id (the
-        // followedByRun shape; the window over distinct times per key is
-        // inherent — the reference NFA also inspects every event per key)
-        val ww = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__rk")).orderBy(col("__rts"))
-        val candSeg = events
-          .select(key.as("__rk"), ts.as("__rts"),
-            when(s.pred, 1L).otherwise(0L).as("__isc0"))
-          .groupBy(col("__rk"), col("__rts"))
-          .agg(max(col("__isc0")).as("__isc"))
-          .withColumn("__pisc", lag(col("__isc"), 1).over(ww))
-          .withColumn("__viol", when(col("__isc") === 1L &&
-            (col("__pisc").isNull || col("__pisc") === 0L), 1L).otherwise(0L))
-          .withColumn("__seg", sum(col("__viol")).over(
-            ww.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-          .filter(col("__isc") === 1L)
-          .select(col("__rk"), col("__rts"), col("__seg"))
-        val kept0 = out.columns.map(col)
-        out = out.join(candSeg.select(col("__rk"), col("__rts")),
-            col("__k") === col("__rk") && col("__rts") > prevTs &&
-              col("__rts") <= col(startTs) + win)
-          .groupBy(kept0.toIndexedSeq: _*)
-          .agg(min(col("__rts")).as(s"${s.name}_first_ts"))
-        // distinct times per key: the segment id at the bound time is unique
-        val segAt = candSeg.select(col("__rk").as("__sk"),
-          col("__rts").as("__sts"), col("__seg").as("__rseg"))
-        out = out.join(segAt, col("__k") === col("__sk") &&
-            col(s"${s.name}_first_ts") === col("__sts"))
-          .drop("__sk", "__sts")
-        val mem = candSeg.select(col("__rk").as("__k3"),
-          col("__rts").as("__mts"), col("__seg").as("__mseg"))
-        val kept1 = out.columns.map(col)
-        out = out.join(mem, col("__k") === col("__k3") &&
-            col("__mseg") === col("__rseg") &&
-            col("__mts") >= col(s"${s.name}_first_ts") &&
-            col("__mts") <= col(startTs) + win)
-          .groupBy(kept1.toIndexedSeq: _*)
-          .agg(max(col("__mts")).as(s"${s.name}_last_ts"),
-            count(lit(1)).as(s"${s.name}_n"))
-          .drop("__rseg")
         prevTs = col(s"${s.name}_last_ts")
       } else if (s.inner2.nonEmpty) {
         // --- group at ANY depth: the sequence group (I...)+ of
@@ -1473,37 +1404,15 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
         val resOp: Array[Int] = Array.tabulate(nTags)(t =>
           residuals.get(t).fold(0)(_._2))
         val thrNames = residuals.keys.toSeq.sorted.map(t => s"__thr$t")
-        def withAnchorCols(d: DataFrame): DataFrame =
-          residuals.toSeq.sortBy(_._1).foldLeft(d) { case (acc, (t, (_, _, thr))) =>
-            acc.withColumn(s"__thr$t", thr.cast("double"))
-          }.withColumn("__gprev", prevTs).withColumn("__gwend", col(startTs) + win)
-        val anchNames = out.columns.toSeq ++ thrNames ++ Seq("__gprev", "__gwend")
-        // the anchor rides the member scan when it is the first step's
-        // frame and its column names cannot shadow an event column
-        val oneSide = (out eq out0) && {
-          val evNames = events.columns.map(_.toLowerCase).toSet
-          !anchNames.exists(n => evNames(n.toLowerCase))
-        }
-        val scanBase =
-          if (oneSide) withAnchorCols(events.select(col("*") +: anchorProj: _*))
-          else events
-        val tagCol = explode(array((members.zipWithIndex.map { case ((_, p), t) =>
-          when(p, lit(t)) } ++ (if (oneSide) Seq(when(first.pred, lit(-1))) else Nil)): _*))
-        val memberRows = scanBase.filter(if (oneSide) s.pred || first.pred else s.pred)
-          .select((Seq(key.as("__k"), tagCol.as("__tag"), ts.as("__t")) ++
-            valNames.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__v$i") } ++
-            ties.zipWithIndex.map { case (c, i) => col(c).as(s"__tie$i") } ++
-            (if (oneSide) Seq(when(first.pred, struct(anchNames.map(col): _*)).as("__anc"))
-             else Nil)): _*)
-          .filter(col("__tag").isNotNull)
-        val anch = if (oneSide) null else withAnchorCols(out)
-        val aSchema = if (!oneSide) anch.schema else memberRows.schema("__anc")
-          .dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+        val (memberRows, anch, aSchema) = passScan(members.map(_._2), s.pred,
+          valNames.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__v$i") } ++
+            ties.zipWithIndex.map { case (c, i) => col(c).as(s"__tie$i") },
+          residuals.toSeq.sortBy(_._1).map { case (t, (_, _, thr)) =>
+            s"__thr$t" -> thr.cast("double") })
         val prevIdx = aSchema.fieldIndex("__gprev")
         val wendIdx = aSchema.fieldIndex("__gwend")
         val thrIdx: Array[Int] = Array.tabulate(nTags)(t =>
           if (resOp(t) != 0) aSchema.fieldIndex(s"__thr$t") else -1)
-        val ancIdx = if (oneSide) memberRows.schema.fieldIndex("__anc") else -1
         val nVals = valNames.size
         // the equal-ts tiebreak order: Spark's own ordering of struct(ties
         // ..., value), nulls first — what the min_by the flat group chain
@@ -2105,22 +2014,7 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
                 lvlCols ++ valCols ++ rowsCols))
           }
         }
-        // grouped on the key column itself: no key function to project
-        def byKey(d: DataFrame, k: String) = d.groupBy(col(k)).as[
-          org.apache.spark.sql.Row, org.apache.spark.sql.Row](
-          org.apache.spark.sql.Encoders.row(
-            org.apache.spark.sql.types.StructType(Seq(d.schema(k)))),
-          org.apache.spark.sql.Encoders.row(d.schema))
-        val outEnc = org.apache.spark.sql.Encoders.row(outSchema)
-        val chained = if (oneSide) byKey(memberRows, "__k").flatMapGroups { (k, it) =>
-            val (as, ms) = Pattern.boundedRows(it, maxPK, walkLabel2)
-              .partition(_.getInt(1) < 0)
-            walk(k.isNullAt(0), as.iterator.map(_.getStruct(ancIdx)), ms)
-          }(outEnc)
-          else byKey(anch, "__k").cogroup(byKey(memberRows, "__k")) { (k, as, ms) =>
-            walk(k.isNullAt(0), as, Pattern.boundedRows(ms, maxPK, walkLabel2))
-          }(outEnc)
-        out = chained.toDF().drop(("__gprev" +: "__gwend" +: thrNames): _*)
+        out = walkByKey(memberRows, anch, outSchema, walkLabel2)(walk).drop(thrNames: _*)
         prevTs = if (s.opt) coalesce(col(s"${s.name}_last_ts"), prevTs)
                  else col(s"${s.name}_last_ts")
       } else {
@@ -2295,13 +2189,16 @@ final class Pattern private (steps: Vector[Step], notStep: Option[Step],
           if (st.opt) "left_outer" else "inner")
         .groupBy(kept.toIndexedSeq: _*)
         .agg(max(col("__rts")).as(s"${name}_last_ts"),
-          (count(col("__rts")).as(s"${name}_n") +:
-            (runValAggs(name, st.keep, c => col(s"__rm_$c")) ++ branchAggs)): _*)
+          // bindRun sum/min/max: primitive, so the run aggregate stays a
+          // HASH aggregate (a struct min/max would sort the member join)
+          (count(col("__rts")).as(s"${name}_n") +: (st.keep.flatMap { c => Seq(
+            sum(col(s"__rm_$c")).as(s"${name}_sum_$c"),
+            min(col(s"__rm_$c")).as(s"${name}_min_$c"),
+            max(col(s"__rm_$c")).as(s"${name}_max_$c")) } ++ branchAggs)): _*)
         .withColumnRenamed(s"${name}_ts", s"${name}_first_ts")
         .drop("__until_ts")
-      out = joinBoundaryVals(out, name, st.keep,
-        boundaryValTable(cand, st.keep, None,
-          st.tieCols.indices.map(i => col(s"__rtie$i"))), seg = false)
+      out = joinBoundaryVals(out, name, st.keep, cand,
+        st.tieCols.indices.map(i => col(s"__rtie$i")))
     }
     // timesOrMore(n): a start whose maximal run holds fewer than n members
     // never reaches the reference NFA's final state — drop it here, BEFORE
@@ -2424,8 +2321,8 @@ object Pattern extends Serializable {
       val vbn: Array[Long])
 
   /** Default per-key candidate ceiling for the sequential per-key walks
-    * (group/nested repetition chains, PREV(n>1) segmentation, AFTER MATCH
-    * greedy selection). The declarative join/agg steps never materialize a
+    * (runs, group/nested repetition chains, AFTER MATCH greedy
+    * selection). The declarative join/agg steps never materialize a
     * key's rows; only these walks do — and the reference's SharedBuffer
     * (flink-cep/.../sharedbuffer/SharedBuffer.java) grows per-key state
     * unboundedly there and simply falls over on a hot key. 2M rows ≈
@@ -2491,6 +2388,105 @@ object Pattern extends Serializable {
         org.apache.spark.sql.types.StructField(s"${name}_cnt_${m}_$c",
           org.apache.spark.sql.types.LongType)
     }
+
+  /** One key's run walk over its candidates sorted by (ts, runOn, values)
+    * — rows `(__k, __tag, __t, __rv, __v0, ...)`, or one row per distinct
+    * time with its match flag last for consecutive(). Offset 1 starts a
+    * segment where the previous runOn is null or `accept(current,
+    * previous)` is FALSE; offset n restarts where accept against the
+    * candidate n back is not TRUE, once the segment holds n;
+    * consecutive() segments the islands of adjacent matching times.
+    * Returns the binder of an anchor's run (the first candidate after
+    * `tau`, and its segment, within `wEnd`): `first_ts, last_ts, n`, per
+    * bindRun column sum/min/max, then the first values (least at the first
+    * time) and the last ones (greatest at the last time). */
+  private[cep] def runWalk(all: Array[Row], consec: Boolean, offset: Int,
+      accept: org.apache.spark.sql.catalyst.expressions.Expression, nKeep: Int)
+      : (java.sql.Timestamp, java.sql.Timestamp) => Option[Seq[Any]] = {
+    // the candidates with a time (a null time binds nothing) and their
+    // segment ids, non-decreasing
+    val (rows, seg) = if (consec) {
+      val times = all.filter(!_.isNullAt(2))
+      def hit(i: Int) = times(i).getInt(times(i).length - 1) == 1
+      var island = 0
+      times.indices.filter(hit).map { i =>
+        if (i == 0 || !hit(i - 1)) island += 1
+        (times(i), island)
+      }.toArray.unzip
+    } else {
+      def acc(i: Int, j: Int): Any = accept.eval(org.apache.spark.sql.catalyst.InternalRow(
+        org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(all(i).get(3)),
+        org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(all(j).get(3))))
+      val seg = new Array[Int](all.length)
+      var start = 0
+      for (i <- 1 until all.length) seg(i) =
+        if (offset == 1)
+          seg(i - 1) + (if (all(i - 1).isNullAt(3) || acc(i, i - 1) == false) 1 else 0)
+        else {
+          def ok = !all(i - offset).isNullAt(3) && acc(i, i - offset) == true
+          if (i - start >= offset && !ok) start = i
+          start
+        }
+      // null times sort first
+      val nn = all.count(_.isNullAt(2))
+      (all.drop(nn), seg.drop(nn))
+    }
+    val segs = rows.map(tsOf(_, 2)).zip(seg)
+    // Spark's order: NaN largest, -0.0 == 0.0
+    def cmp(a: Any, b: Any): Int = (a, b) match {
+      case (x: Double, y: Double) => cmpD(x, y)
+      case (x: Float, y: Float) => cmpD(x, y)
+      case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+    }
+    def vals(j: Int, from: Int, to: Int) = (from until to).map(rows(_).get(4 + j)).filter(_ != null)
+    def extreme(j: Int, from: Int, to: Int, hi: Boolean): Any =
+      vals(j, from, to).reduceOption { (a, b) =>
+        val c = cmp(a, b); if (if (hi) c >= 0 else c <= 0) a else b }.orNull
+    // the sum type: bigint, double or the wider decimal
+    def add(acc: Any, v: Any): Any = (acc, v) match {
+      case (null, d: java.math.BigDecimal) => d
+      case (null, d @ (_: java.lang.Double | _: java.lang.Float)) =>
+        d.asInstanceOf[Number].doubleValue
+      case (null, l: Number) => l.longValue
+      case (x: java.math.BigDecimal, d: java.math.BigDecimal) => x.add(d)
+      case (x: Double, d: Number) => x + d.doubleValue
+      case (x: Long, l: Number) => Math.addExact(x, l.longValue)
+    }
+    (tau, wEnd) => {
+      val f = if (tau == null || wEnd == null) segs.length else firstAfter(segs, tau)
+      if (f >= segs.length || segs(f)._1.after(wEnd)) None
+      else {
+        var e = f + 1
+        while (e < segs.length && segs(e)._2 == segs(f)._2 && !segs(e)._1.after(wEnd)) e += 1
+        val fEnd = (f until e).find(i => !segs(i)._1.equals(segs(f)._1)).getOrElse(e)
+        val lStart = (f until e).find(i => segs(i)._1.equals(segs(e - 1)._1)).get
+        Some(Seq(segs(f)._1, segs(e - 1)._1, (e - f).toLong) ++
+          (0 until nKeep).flatMap(j => Seq(vals(j, f, e).foldLeft(null: Any)(add),
+            extreme(j, f, e, hi = false), extreme(j, f, e, hi = true))) ++
+          (0 until nKeep).map(j => extreme(j, f, fEnd, hi = false)) ++
+          (0 until nKeep).map(j => extreme(j, lStart, e, hi = true)))
+      }
+    }
+  }
+
+  /** `p(current, previous)` over two values of type `t`, resolved against
+    * `frame`'s session and bound to a two-field row. */
+  private[cep] def pairPredicate(frame: DataFrame, t: org.apache.spark.sql.types.DataType,
+      p: (Column, Column) => Column): org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.types._
+    val probe = frame.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("__c", t), StructField("__p", t))))
+      .select(p(col("__c"), col("__p")))
+    val pl = org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
+      probe.queryExecution.analyzed)
+      .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Project]
+    val e = org.apache.spark.sql.catalyst.expressions.BindReferences
+      .bindReference(pl.projectList.head, pl.child.output)
+    require(e.dataType == BooleanType,
+      s"a run's accept must be a boolean condition (got ${e.dataType.simpleString})")
+    e
+  }
 
   /** Index of the first entry strictly after `t` in a ts-sorted array. */
   private[cep] def firstAfter[V](arr: Array[(java.sql.Timestamp, V)],

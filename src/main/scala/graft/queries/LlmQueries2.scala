@@ -318,6 +318,8 @@ object LlmQueries2 {
   private[graft] def partEdgesUndirected(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey").cast("long").as("pk"))
+      // a null order id pairs nothing, as in the join spelling
+      .filter(col("l_orderkey").isNotNull)
       .groupBy("l_orderkey").agg(collect_list(col("pk")).as("xs"))
       .select(explode(expr(
         "flatten(transform(xs, a -> filter(transform(xs, b -> " +

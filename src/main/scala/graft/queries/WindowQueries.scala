@@ -508,10 +508,9 @@ object WindowQueries {
   // LAST(DOWN.price, 1)`, the canonical MATCH_RECOGNIZE query): each D
   // occurrence after the first must have a LOWER value than the run's own
   // previous member; the purchase binds after the run's LAST member. Lowered
-  // onto Pattern.followedByRun: candidates segment into maximal descending
-  // chains per key (one lag + one running-sum window ordered (ts, value)),
-  // then the run is a keyed equi-join on the segment id. The oracle replays
-  // the identical lag-based segmentation in SQL.
+  // onto Pattern.followedByRun: the keyed walk segments each key's
+  // candidates, ordered (ts, value), into maximal descending chains. The
+  // oracle replays the same segmentation with a lag window in SQL.
   private val m10: Q = (s, dir) =>
     graft.cep.MatchRecognize.detect(ev(s, dir),
       """MATCH_RECOGNIZE (
@@ -1407,10 +1406,9 @@ object WindowQueries {
   // PREV offsets; flink-cep IterativeCondition at depth): each D member
   // after the first TWO must be below the member two back in the run; the
   // first two members are accepted on the pre-filter alone. Engine: the
-  // accept-vs-2-back comparison stays a declarative lag(2) window; run
-  // RESTARTS are assigned by a per-key linear scan (a recursion no window
-  // expresses). Oracle: the identical walk as a recursive CTE over
-  // row-numbered candidates.
+  // keyed walk restarts the run at each member that fails against the
+  // member two back (a recursion no window expresses). Oracle: the
+  // identical walk as a recursive CTE over row-numbered candidates.
   private val m22: Q = (s, dir) =>
     graft.cep.MatchRecognize.detect(ev(s, dir),
       """MATCH_RECOGNIZE (

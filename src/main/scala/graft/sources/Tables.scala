@@ -15,15 +15,15 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * as Spark DataSource V2 parquet reads so Catalyst gets predicate pushdown
   * and column pruning for free.
   *
-  * Each session infers a table's parquet schema once. Inference is a Spark
+  * The process infers a table's parquet schema once. Inference is a Spark
   * job per `spark.read.parquet`, and a file's schema cannot change while its
-  * files do not, so [[load]] memoises the inferred `StructType` per session
-  * (held weakly: a new session pays the cold load again). The key is the
-  * path, the name, length and modification time of every file under it
-  * (Hadoop `FileSystem` status), and the session confs that change what
-  * inference returns (`InferenceConfs`); a path keeps only its latest
-  * entry. A hit reads with the memoised schema, which launches no job; a
-  * path whose status cannot be read is inferred every time. Only the schema is kept, never a DataFrame: every
+  * files do not, so [[load]] memoises the inferred `StructType` for every
+  * session alike. The key is the path, the name, length and modification
+  * time of every file under it (Hadoop `FileSystem` status), and the
+  * session confs that change what inference returns (`InferenceConfs`); a
+  * path keeps only its latest entry. A hit reads with the memoised schema,
+  * which launches no job; a path whose status cannot be read is inferred
+  * every time. Only the schema is kept, never a DataFrame: every
   * load is a fresh relation with fresh attribute IDs, so self-joins of one
   * table stay correct, and the normalisation below runs on every load.
   */
@@ -48,15 +48,15 @@ object Tables {
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp")
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
 
   /** (files under a path, `InferenceConfs` values) */
   private type FileIdentity = (Seq[(String, Long, Long)], Seq[Option[String]])
 
-  /** session -> path -> the identity the schema was inferred at, and the
-    * schema; a rewrite replaces the path's entry */
-  private val schemas =
-    new java.util.WeakHashMap[SparkSession, TrieMap[String, (FileIdentity, StructType)]]()
+  /** path -> the identity the schema was inferred at, and the schema; a
+    * rewrite or a changed inference conf replaces the path's entry */
+  private val schemas = TrieMap.empty[String, (FileIdentity, StructType)]
 
   /** (name, length, modification time) of every file under `path`, or None
     * when the file system cannot say. Read through `listStatus`, not
@@ -78,12 +78,11 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val identity = fileStatus(spark, path).map(files =>
       (files, InferenceConfs.map(spark.conf.getOption)))
-    val memo = schemas.synchronized(schemas.computeIfAbsent(spark, _ => TrieMap.empty))
-    val raw = memo.get(path).collect { case (id, schema) if identity.contains(id) => schema } match {
+    val raw = schemas.get(path).collect { case (id, schema) if identity.contains(id) => schema } match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None =>
         val df = spark.read.parquet(path)
-        identity.foreach(id => memo.put(path, (id, df.schema)))
+        identity.foreach(id => schemas.put(path, (id, df.schema)))
         df
     }
     // Spark 4 cannot read parquet TIMESTAMP(NANOS) natively; sessions set

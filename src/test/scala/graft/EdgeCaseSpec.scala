@@ -244,6 +244,22 @@ class EdgeCaseSpec extends AnyFunSuite with SparkTest {
     assert(base.followedByNestedGroup("g", bc, Seq("d" -> (col("event_type") === "d")))
       .oneOrMore()
       .within(1000L).detect(empty, col("user_id"), col("ts")).count() == 0)
+    // the run walk: followedByRun at offsets 1 and 2, and consecutive(), on
+    // the empty log and on a key holding one event — no rows, full schema
+    val one = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "a", 1.0))
+      .toDF("user_id", "ts", "event_type", "value")
+    val runCols = Seq("key", "a_ts", "a_value", "b_first_ts", "b_last_ts", "b_n",
+      "b_sum_value", "b_min_value", "b_max_value", "b_first_value", "b_last_value")
+    for (log <- Seq(empty, one)) {
+      for (offset <- Seq(1, 2)) {
+        val m = base.followedByRun("b", col("event_type") === "b", "value", _ < _, offset)
+          .bindRun("value").within(1000L).detect(log, col("user_id"), col("ts"))
+        assert(m.columns.toSeq == runCols && m.count() == 0, s"offset $offset")
+      }
+      val c = base.followedBy("b", col("event_type") === "b").oneOrMore().consecutive()
+        .within(1000L).detect(log, col("user_id"), col("ts"))
+      assert(c.columns.toSeq == runCols.take(6) && c.count() == 0, "consecutive")
+    }
   }
 
   test("evictors keep everything when the window holds fewer elements than the bound") {

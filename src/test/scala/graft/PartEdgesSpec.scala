@@ -80,6 +80,23 @@ class PartEdgesSpec extends AnyFunSuite with SparkTest {
     assert(got.keys.forall { case (a, b) => a != null && b != null })
   }
 
+  test("a null order key pairs nothing in either builder") {
+    // two lines of one order, and two lines whose order key is null: the
+    // self-join (and the DuckDB oracles' JOIN ... ON) pairs only the order
+    val d = Files.createTempDirectory("graft-part-edges-null").toFile
+    d.deleteOnExit()
+    val schema = StructType(Seq(StructField("l_orderkey", LongType, true),
+      StructField("l_linenumber", IntegerType, false),
+      StructField("l_partkey", LongType, true)))
+    val rows = Seq(Row(1L, 1, 10L), Row(1L, 2, 11L), Row(null, 1, 20L), Row(null, 2, 21L),
+      Row(2L, 1, 30L), Row(null, 3, 22L))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .write.parquet(s"${d.getPath}/lineitem.parquet")
+    val want = Map((10L, 11L) -> 1)
+    assert(multiset(LlmQueries2.partEdgesUndirected(spark, d.getPath)) == want)
+    assert(multiset(LlmQueries2.partEdgesDirected(spark, d.getPath)) == want)
+  }
+
   test("the directed edge plan is a join without higher-order functions") {
     val p = LlmQueries2.partEdgesDirected(spark, dir).queryExecution.executedPlan.toString
     assert(p.contains("Join") && !p.contains("lambda") && !p.contains("ObjectHashAggregate"),

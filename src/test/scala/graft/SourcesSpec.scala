@@ -55,6 +55,30 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
     assert(back.count() == region.count())
   }
 
+  test("Tables.load honours spark.sql.parquet.mergeSchema on a memoised path") {
+    val d = tmp()
+    Seq((1L, 2L)).toDF("id", "x").write.parquet(s"$d/t.parquet")
+    Seq((3L, "y")).toDF("id", "y").write.mode("append").parquet(s"$d/t.parquet")
+    val key = "spark.sql.parquet.mergeSchema"
+    val before = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      Tables.load(spark, d, "t")
+      spark.conf.set(key, "true")
+      assert(Tables.load(spark, d, "t").columns.toSet == Set("id", "x", "y"))
+      assert(spark.read.parquet(s"$d/t.parquet").columns.toSet == Set("id", "x", "y"))
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("the schema memo is process-wide: a new session's warm load launches no job") {
+    val sc = spark.sparkContext
+    Tables.load(spark, sfDir, "customer") // cold, unless an earlier test warmed it
+    val other = spark.newSession()
+    sc.setJobGroup("graft-new-session-load", "load in a second session")
+    try Tables.load(other, sfDir, "customer") finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("graft-new-session-load").isEmpty)
+  }
+
   test("two loads of one table are distinct relations with fresh attribute IDs") {
     def ids() = Tables.load(spark, sfDir, "nation").queryExecution.analyzed.output
       .map(_.exprId).toSet
